@@ -12,9 +12,11 @@ Two parts:
    (default /root/testdata/sf0.1), each materialized via the noop sink
    so every column is computed.
 
-Env: SPARK_GRAFT_CPUS (default 32) sets local[N] — running this at two
-values (e.g. 8 and 32) on the same input is the two-cluster-size
-scaling protocol recorded in BENCH/BASELINE.md.
+Env: SPARK_GRAFT_CPUS (default: the cores of the CPU affinity mask)
+sets local[N] — running this at two values (e.g. 8 and 32) on the same
+input is the two-cluster-size scaling protocol recorded in
+BENCH/BASELINE.md. SPARK_GRAFT_HEAP_GB overrides the heap sized from
+the cores and MemAvailable (``host_size``).
 """
 
 from __future__ import annotations
@@ -127,16 +129,31 @@ def bench_queries(spark, sf_dir: str, results: dict) -> float:
     return total
 
 
+def host_size() -> tuple[int, int]:
+    """(cores, heap GB) for this host. Cores come from the CPU affinity
+    mask (what ``nproc`` reports), overridden by SPARK_GRAFT_CPUS. The
+    heap scales with cores (constant per-core memory, like a real
+    executor fleet) at 3 GB a core, capped below 32 GB so the JVM keeps
+    compressed oops (a >32g heap doubles reference width and measurably
+    collapses throughput) and at a third of MemAvailable, because it is
+    pre-touched and shares the host with the tmpfs scratch and the
+    Python workers; SPARK_GRAFT_HEAP_GB overrides."""
+    env = os.environ.get("SPARK_GRAFT_CPUS")
+    cpus = int(env) if env else len(os.sched_getaffinity(0))
+    if os.environ.get("SPARK_GRAFT_HEAP_GB"):
+        return cpus, int(os.environ["SPARK_GRAFT_HEAP_GB"])
+    with open("/proc/meminfo") as f:
+        avail_kb = next(
+            int(line.split()[1]) for line in f if line.startswith("MemAvailable:")
+        )
+    return cpus, max(1, min(3 * cpus, 28, avail_kb // (3 * 1024 * 1024)))
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     n_events = int(os.environ.get("SPARK_GRAFT_BENCH_EVENTS", "1500000"))
     os.makedirs(SCRATCH, exist_ok=True)
-    # heap scales with cores (constant per-core memory, like a real
-    # executor fleet); pre-touch avoids multi-second lazy-commit stalls;
-    # capped below 32g so the JVM keeps compressed oops (a >32g heap
-    # doubles reference width and measurably collapses throughput here)
-    heap_gb = int(os.environ.get("SPARK_GRAFT_HEAP_GB", str(min(3 * cpus, 28))))
+    cpus, heap_gb = host_size()
     os.environ.setdefault("SPARK_DRIVER_MEM", f"{heap_gb}g")
     spark = get_spark(
         "bench",
@@ -144,6 +161,7 @@ def main() -> None:
         shuffle_partitions=cpus,
         extra_conf={
             "spark.local.dir": os.path.join(SCRATCH, "spark-local"),
+            # pre-touch avoids multi-second lazy-commit stalls
             "spark.driver.extraJavaOptions": (
                 f"-XX:+UseG1GC -XX:+AlwaysPreTouch -Xms{heap_gb}g"
             ),

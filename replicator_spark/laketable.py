@@ -56,6 +56,7 @@ from __future__ import annotations
 
 import json
 import os
+import threading
 from collections.abc import Sequence
 from dataclasses import dataclass
 
@@ -75,7 +76,19 @@ def _widen_type(a: T.DataType, b: T.DataType) -> T.DataType:
         return T.DoubleType()
     return T.StringType()
 
-ENGINE_COLS = [LAST_SEQ_COL, "_deleted"]
+ENGINE_SCHEMA = T.StructType(
+    [
+        T.StructField(LAST_SEQ_COL, T.LongType(), True),
+        T.StructField("_deleted", T.BooleanType(), True),
+    ]
+)
+
+# A scan naming more paths than this makes Spark list them again with a
+# distributed job, one task per path (see LakeTable._scan_parquet).
+_LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+# Serializes the raise/restore of that session conf: the foreachBatch
+# thread and the application's main thread both scan tables.
+_LISTING_LOCK = threading.Lock()
 
 
 @dataclass
@@ -218,13 +231,7 @@ class LakeTable:
     # -- read ----------------------------------------------------------
     def _physical_schema(self, snap: cl.Snapshot) -> T.StructType:
         logical = T.StructType.fromJson(json.loads(snap.schema_json))
-        return T.StructType(
-            list(logical.fields)
-            + [
-                T.StructField(LAST_SEQ_COL, T.LongType(), True),
-                T.StructField("_deleted", T.BooleanType(), True),
-            ]
-        )
+        return T.StructType(list(logical.fields) + list(ENGINE_SCHEMA.fields))
 
     @staticmethod
     def _deltas(snap: cl.Snapshot) -> dict[str, list[str]]:
@@ -243,9 +250,45 @@ class LakeTable:
             log["0"] = snap.schema_json
         return sid, log
 
+    def _scan_parquet(self, schema: T.StructType, paths: list[str]) -> DataFrame:
+        """The parquet relation over an explicit file list, planned
+        without Spark's distributed leaf-file listing.
+
+        Spark lists the input paths while it builds the relation, and
+        once they outnumber ``parallelPartitionDiscovery.threshold``
+        (32 by default) it does so with a job of one task per path,
+        ~0.5 s on a 4-core host. Table paths come from the manifests, so
+        that job only re-stats files already known: the threshold is
+        raised to the path count for the duration of the (eager) listing,
+        which then runs in this process — local-FS stats, milliseconds for
+        the ≤ 8 × 32 delta files auto-compaction lets a scan see. The old
+        value (or its absence) is restored under a module lock, so
+        concurrent scans can never leave the session changed."""
+        reader = self.spark.read.schema(schema)
+        conf = self.spark.conf
+        with _LISTING_LOCK:
+            prior = conf.get(_LISTING_THRESHOLD, None)
+            if len(paths) <= int(conf.get(_LISTING_THRESHOLD)):
+                return reader.parquet(*paths)
+            conf.set(_LISTING_THRESHOLD, str(len(paths)))
+            try:
+                return reader.parquet(*paths)
+            finally:
+                if prior is None:
+                    conf.unset(_LISTING_THRESHOLD)
+                else:
+                    conf.set(_LISTING_THRESHOLD, prior)
+
     def _read_files(
         self, snap: cl.Snapshot, files: list[str]
     ) -> DataFrame:
+        """The one scan of a snapshot's data files: manifest paths → a
+        DataFrame under the snapshot's physical schema. Every table read
+        (read, read_changes, lookup, compaction, the partial upgrade and
+        the cow target) comes through here, and the relation is planned
+        from the manifest's paths by ``_scan_parquet`` — no listing job
+        per scan. Files written before a type widening scan in their own
+        group and are cast to the current types."""
         phys = self._physical_schema(snap)
         if not files:
             return self.spark.createDataFrame([], phys)
@@ -278,7 +321,7 @@ class LakeTable:
         if set(groups) == {()}:
             # Explicit schema: files written before an additive evolution
             # lack the new columns — the parquet reader fills them null.
-            return self.spark.read.schema(phys).parquet(*files)
+            return self._scan_parquet(phys, files)
         parts = []
         for ov, fs in groups.values():
             rs = T.StructType(
@@ -288,9 +331,7 @@ class LakeTable:
                 ]
             )
             parts.append(
-                self.spark.read.schema(rs)
-                .parquet(*fs)
-                .select(
+                self._scan_parquet(rs, fs).select(
                     *[
                         F.col(f.name).cast(f.dataType).alias(f.name)
                         for f in phys.fields
@@ -360,7 +401,7 @@ class LakeTable:
         if not include_deleted:
             df = df.where(~F.coalesce(F.col("_deleted"), F.lit(False)))
         if not include_engine_cols:
-            df = df.drop(*ENGINE_COLS)
+            df = df.drop(*ENGINE_SCHEMA.names)
         return df
 
     def bucket_of(self, key: str, snap: cl.Snapshot | None = None) -> int:
@@ -893,8 +934,8 @@ class LakeTable:
         ]
         if not buckets:
             return src.select(*proj)
-        tgt = self.read(
-            buckets=buckets, include_deleted=False, include_engine_cols=True
+        tgt = self._read_snapshot(
+            snap, buckets=buckets, include_deleted=False, include_engine_cols=True
         )
         sdict = {f.name: f.dataType for f in src.schema.fields}
         tdict = {f.name: f.dataType for f in tgt.schema.fields}
@@ -932,8 +973,8 @@ class LakeTable:
         type_changed=None,
     ):
         type_changed = type_changed or {}
-        tgt = self.read(
-            buckets=touched, include_deleted=True, include_engine_cols=True
+        tgt = self._read_snapshot(
+            snap, buckets=touched, include_deleted=True, include_engine_cols=True
         )
         for f_ in new_fields:
             tgt = tgt.withColumn(f_.name, F.lit(None).cast(f_.dataType))
@@ -1031,20 +1072,8 @@ class LakeTable:
         need_scan = int(m["deleted"] or 0) > 0 or any(
             str(b) not in prior or prior[str(b)][0] for b in touched
         )
-        if need_scan and any(new_files.values()):
-            tomb = (
-                self.spark.read.option("basePath", out_dir)
-                .parquet(out_dir)
-                .where(F.col("_deleted"))
-                .groupBy(BUCKET_COL)
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.min(LAST_SEQ_COL).alias("mn"),
-                )
-                .collect()
-            )
-            for r in tomb:
-                cow_tombstones[str(r[BUCKET_COL])] = [int(r["n"]), int(r["mn"])]
+        if need_scan:
+            cow_tombstones.update(self._tombstone_stats(new_files))
         stats = MergeStats(
             batch_key,
             None,
@@ -1182,7 +1211,8 @@ class LakeTable:
         if not todo:
             return snap.version
         table_keys = self.key_columns(snap)
-        resolved = self.read(
+        resolved = self._read_snapshot(
+            snap,
             buckets=[int(b) for b in todo],
             include_deleted=True,
             include_engine_cols=True,
@@ -1211,20 +1241,7 @@ class LakeTable:
         bucket_tombstones = dict((snap.props or {}).get("bucket_tombstones", {}))
         for b in todo:
             bucket_tombstones[b] = [0, None]
-        if any(new_files.values()):
-            tomb = (
-                self.spark.read.option("basePath", out_dir)
-                .parquet(out_dir)
-                .where(F.col("_deleted"))
-                .groupBy(BUCKET_COL)
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.min(LAST_SEQ_COL).alias("mn"),
-                )
-                .collect()
-            )
-            for r in tomb:
-                bucket_tombstones[str(r[BUCKET_COL])] = [int(r["n"]), int(r["mn"])]
+        bucket_tombstones.update(self._tombstone_stats(new_files))
         nsnap = cl.Snapshot(
             version=new_version,
             parent=snap.version,
@@ -1469,6 +1486,29 @@ class LakeTable:
         sids = {p: s for p, s in snap.file_schema_ids.items() if p in live}
         sids.update({p: schema_id for p in live - old_live})
         return {**inherited, **fresh}, sids
+
+    def _tombstone_stats(
+        self, new_files: dict[str, list[str]]
+    ) -> dict[str, list[int]]:
+        """Exact ``[count, min seq]`` of the tombstones in each bucket of
+        the files a write just produced (buckets without one are
+        absent): a scan of the two engine columns, each row's bucket read
+        off its file's ``repo_bucket=K`` directory."""
+        paths = [p for fs in new_files.values() for p in fs]
+        if not paths:
+            return {}
+        rows = (
+            self._scan_parquet(ENGINE_SCHEMA, paths)
+            .where(F.col("_deleted"))
+            .groupBy(
+                F.regexp_extract(
+                    F.input_file_name(), f"{BUCKET_COL}=(\\d+)/", 1
+                ).alias("b")
+            )
+            .agg(F.count(F.lit(1)).alias("n"), F.min(LAST_SEQ_COL).alias("mn"))
+            .collect()
+        )
+        return {r["b"]: [int(r["n"]), int(r["mn"])] for r in rows}
 
     def _list_bucket_files(self, out_dir: str) -> dict[str, list[str]]:
         out: dict[str, list[str]] = {}

@@ -10,8 +10,20 @@ from replicator_spark.session import get_spark  # noqa: E402
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark("replicator-spark-tests", cores=8, shuffle_partitions=8)
+    # cores=None: SPARK_GRAFT_CPUS when set, else every core of the host
+    s = get_spark("replicator-spark-tests", cores=None, shuffle_partitions=8)
     yield s
+
+
+def formatted_plan(df, execute: bool = False) -> str:
+    """``df.explain("formatted")`` as a string. AQE finalizes the
+    physical plan only at execution, so ``execute=True`` collects first."""
+    if execute:
+        df.collect()
+    jqe = df._jdf.queryExecution()
+    return df.sparkSession._jvm.org.apache.spark.sql.api.python.PythonSQLUtils.explainString(
+        jqe, "formatted"
+    )
 
 
 SF_DIR = os.environ.get("SPARK_GRAFT_TEST_SF", "/root/testdata/sf0.001")

@@ -13,6 +13,8 @@ from replicator_spark.laketable import LakeTable
 from replicator_spark.model import REPOS_SCHEMA
 from replicator_spark.pipeline import replay_feed
 
+from .conftest import formatted_plan
+
 
 @pytest.fixture(scope="module")
 def events(spark):
@@ -169,10 +171,7 @@ def test_filter_pushdown_to_feed_scan(spark, events, tmp_path):
     df = EventFilter(include_operations=["insert"]).apply(
         spark.read.parquet(f"{feed}/batch_id=0")
     )
-    jqe = df._jdf.queryExecution()
-    plan = spark._jvm.org.apache.spark.sql.api.python.PythonSQLUtils.explainString(
-        jqe, "formatted"
-    )
+    plan = formatted_plan(df)
     assert "PushedFilters: [" in plan
     assert "In(op" in plan or "EqualTo(op,insert)" in plan, plan[:1500]
 

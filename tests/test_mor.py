@@ -10,6 +10,7 @@ from replicator_spark.laketable import LakeTable
 from replicator_spark.model import REPOS_SCHEMA
 from replicator_spark.pipeline import replay_feed
 
+from .conftest import formatted_plan
 from .oracle import content_sha, sequential_apply
 
 
@@ -390,12 +391,6 @@ def test_mor_read_unresolved_append_only(spark, tmp_path):
     sound for append-only tables."""
     from pyspark.sql import types as T
 
-    def _explain(df):
-        jqe = df._jdf.queryExecution()
-        return df.sparkSession._jvm.org.apache.spark.sql.api.python.PythonSQLUtils.explainString(
-            jqe, "formatted"
-        )
-
     schema = T.StructType(
         [
             T.StructField("id", T.LongType()),
@@ -415,12 +410,12 @@ def test_mor_read_unresolved_append_only(spark, tmp_path):
             key_cols=["id"],
             compact_after_deltas=100,
         )
-    assert any(v for v in table._snap().props["deltas"].values()), "deltas expected"
+    assert any(table._deltas(table._snap()).values()), "deltas expected"
     resolved = table.read()
     unresolved = table.read(resolve=False)
     assert sorted(resolved.columns) == sorted(unresolved.columns)
-    assert "max_by" in _explain(resolved)
-    assert "max_by" not in _explain(unresolved)
+    assert "max_by" in formatted_plan(resolved)
+    assert "max_by" not in formatted_plan(unresolved)
     cols = sorted(resolved.columns)
     assert sorted(map(tuple, resolved.select(*cols).collect())) == sorted(
         map(tuple, unresolved.select(*cols).collect())
@@ -436,3 +431,129 @@ def test_mor_read_unresolved_append_only(spark, tmp_path):
     )
     assert table.read().where("id = 0").count() == 1
     assert table.read(resolve=False).where("id = 0").count() == 2
+
+
+LISTING_THRESHOLD = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+
+
+def _many_file_table(spark, root):
+    """A mor table of 4 uncompacted batches written 5 files a bucket into
+    2 buckets: ~24 delta files, a dozen in each bucket."""
+    from pyspark.sql import types as T
+
+    schema = T.StructType(
+        [
+            T.StructField("k", T.StringType()),
+            T.StructField("val", T.StringType()),
+            T.StructField("seq", T.LongType()),
+            T.StructField("op", T.StringType()),
+        ]
+    )
+    table = LakeTable(spark, root)
+    table.create(schema, num_buckets=2, key_cols=["k"])
+    for b in range(4):
+        rows = [(f"k{i}", f"v{b}-{i}", b * 100 + i, "upsert") for i in range(60)]
+        table.merge(
+            spark.createDataFrame(rows, schema),
+            f"s-{b}",
+            mode="mor",
+            files_per_bucket=5,
+            compact_after_deltas=1000,
+        )
+    return table
+
+
+def test_scans_launch_no_listing_job(spark, tmp_path):
+    """Table scans plan their relation from the manifest's paths. Spark
+    re-lists a scan's paths with a distributed job of one task per path
+    once they outnumber ``parallelPartitionDiscovery.threshold`` — here
+    lowered to 4 so a small table crosses it. read, read_changes, lookup
+    and compact must run no such stage, and the session's threshold must
+    be left as the test set it."""
+    # one scan task for the whole table, so no scan stage can have one
+    # task per file on a many-core host either
+    min_parts = "spark.sql.files.minPartitionNum"
+    table = _many_file_table(spark, str(tmp_path / "t"))
+    snap = table._snap()
+    deltas = table._deltas(snap)
+    n_all = sum(len(v) for v in deltas.values())
+    n_bucket = len(deltas[str(table.bucket_of("k1", snap))])
+    assert n_bucket > 8 and n_all > 8, (n_bucket, n_all)
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def stage_tasks(group, action):
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            action()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return [
+            tracker.getStageInfo(s).numTasks
+            for j in tracker.getJobIdsForGroup(group)
+            for s in tracker.getJobInfo(j).stageIds
+            if tracker.getStageInfo(s) is not None
+        ]
+
+    prior = spark.conf.get(min_parts, None)
+    spark.conf.set(LISTING_THRESHOLD, "4")
+    spark.conf.set(min_parts, "1")
+    try:
+        scans = {
+            "read": (n_all, lambda: table.read().collect()),
+            "read_changes": (
+                n_all, lambda: table.read_changes(since_seq=-1).collect()
+            ),
+            "lookup": (n_bucket, lambda: table.lookup("k1").collect()),
+            "compact": (n_all, table.compact),
+        }
+        for name, (n_files, action) in scans.items():
+            tasks = stage_tasks(f"no-listing-{name}-{tmp_path.name}", action)
+            assert tasks, name
+            assert n_files not in tasks, (name, n_files, tasks)
+        assert spark.conf.get(LISTING_THRESHOLD) == "4"
+    finally:
+        spark.conf.unset(LISTING_THRESHOLD)
+        if prior is None:
+            spark.conf.unset(min_parts)
+        else:
+            spark.conf.set(min_parts, prior)
+    assert not any(table._deltas(table._snap()).values())
+    assert table.read().count() == 60
+
+
+def test_concurrent_scans_restore_listing_threshold(spark, tmp_path):
+    """Scans raise the listing threshold while they plan and put it back.
+    Threads planning scans at once (the foreachBatch thread beside the
+    main thread) must never leave the session's value changed: a restore
+    lost to an interleaving would leave it raised."""
+    import sys
+    import threading
+
+    table = _many_file_table(spark, str(tmp_path / "t"))
+    errors = []
+
+    def plan_reads():
+        try:
+            for _ in range(6):
+                table.read()
+                table.lookup("k1")
+        except Exception as e:  # surfaced by the assert below
+            errors.append(e)
+
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    spark.conf.set(LISTING_THRESHOLD, "4")
+    try:
+        threads = [threading.Thread(target=plan_reads) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+        assert not any(t.is_alive() for t in threads)
+        assert not errors, errors
+        assert spark.conf.get(LISTING_THRESHOLD) == "4"
+    finally:
+        sys.setswitchinterval(switch)
+        spark.conf.unset(LISTING_THRESHOLD)

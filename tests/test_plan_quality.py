@@ -9,22 +9,13 @@ from pyspark.sql import functions as F
 
 from replicator_spark.dedup import lww_latest
 from replicator_spark.model import KEY_COLS
+from .conftest import formatted_plan
 
 SF = "/root/testdata/sf0.001"
 
 
-def _plan(df, execute: bool = False) -> str:
-    if execute:  # AQE finalizes the physical plan only at execution
-        df.collect()
-    jqe = df._jdf.queryExecution()
-    jvm = df.sparkSession._jvm
-    return jvm.org.apache.spark.sql.api.python.PythonSQLUtils.explainString(
-        jqe, "formatted"
-    )
-
-
 def test_source_filter_pushdown(spark):
-    plan = _plan(entry.q_cdc_source_filter(spark, SF))
+    plan = formatted_plan(entry.q_cdc_source_filter(spark, SF))
     assert "PushedFilters: [" in plan
     # the typed value threshold must reach the parquet scan
     assert "GreaterThan(value,100.0)" in plan.replace(" ", ""), plan[:2000]
@@ -33,7 +24,7 @@ def test_source_filter_pushdown(spark):
 def test_jq_select_pushed_to_scan(spark):
     """A jq select() compiles to a native predicate that must reach the
     parquet scan — the filter is not trapped above a Python boundary."""
-    plan = _plan(entry.q_transform_jq_engine(spark, SF))
+    plan = formatted_plan(entry.q_transform_jq_engine(spark, SF))
     assert "PushedFilters: [" in plan
     assert "GreaterThan(o_totalprice,100000.0)" in plan.replace(" ", ""), plan[:2000]
 
@@ -41,7 +32,7 @@ def test_jq_select_pushed_to_scan(spark):
 def test_js_custom_filter_pushed_to_scan(spark):
     """The JS CustomFilter predicate (types.go:226) compiles to native
     comparisons that must reach the parquet scan."""
-    plan = _plan(entry.q_transform_js_engine(spark, SF))
+    plan = formatted_plan(entry.q_transform_js_engine(spark, SF))
     assert "PushedFilters: [" in plan
     flat = plan.replace(" ", "")
     assert "GreaterThanOrEqual(l_quantity,30.0)" in flat, plan[:2000]
@@ -49,7 +40,7 @@ def test_js_custom_filter_pushed_to_scan(spark):
 
 
 def test_projection_pruning_reaches_scan(spark):
-    plan = _plan(entry.q_transform_shift_rename(spark, SF))
+    plan = formatted_plan(entry.q_transform_shift_rename(spark, SF))
     # only the needed columns are read
     assert "ReadSchema" in plan
     read = plan.split("ReadSchema:")[1].splitlines()[0]
@@ -58,7 +49,7 @@ def test_projection_pruning_reaches_scan(spark):
 
 
 def test_lookup_join_is_broadcast(spark):
-    plan = _plan(entry.q_lookup_join_enrich(spark, SF))
+    plan = formatted_plan(entry.q_lookup_join_enrich(spark, SF))
     assert "BroadcastHashJoin" in plan, plan[:1500]
 
 
@@ -71,7 +62,7 @@ def test_lww_is_partial_aggregate_not_window(spark):
         F.col("id").cast("string").alias("event_id"),
         F.lit("x").alias("content"),
     )
-    plan = _plan(lww_latest(df, KEY_COLS, "seq"), execute=True)
+    plan = formatted_plan(lww_latest(df, KEY_COLS, "seq"), execute=True)
     # max_by over a struct buffer plans as SortAggregate (complex-typed
     # buffer → no HashAggregate), but crucially WITH a partial (map-side)
     # aggregate below the exchange — duplicates collapse before shuffle
@@ -98,14 +89,14 @@ def test_no_python_eval_in_cdc_queries(spark):
     ]
     qs = entry.queries()
     for name in jvm_only:
-        plan = _plan(qs[name](spark, SF))
+        plan = formatted_plan(qs[name](spark, SF))
         assert "BatchEvalPython" not in plan, name
         assert "ArrowEvalPython" not in plan, name
     # Python is allowed ONLY via the Arrow-vectorized runner — never
     # row-at-a-time pickling
     arrow_ok = ["simhash_dedup", "extjson_decode"]
     for name in arrow_ok:
-        plan = _plan(qs[name](spark, SF))
+        plan = formatted_plan(qs[name](spark, SF))
         assert "BatchEvalPython" not in plan, name
         assert "ArrowEvalPython" in plan, name
     # minhash_lsh's contract query checkpoints the banding (it feeds
@@ -118,20 +109,20 @@ def test_no_python_eval_in_cdc_queries(spark):
     )
 
     docs = spark.read.parquet(f"{SF}/documents.parquet")
-    plan = _plan(
+    plan = formatted_plan(
         lsh_band_buckets(minhash_signatures(docs, num_hashes=32), "doc_id", 16)
     )
     assert "ArrowEvalPython" in plan and "BatchEvalPython" not in plan
-    plan = _plan(qs["minhash_lsh"](spark, SF))
+    plan = formatted_plan(qs["minhash_lsh"](spark, SF))
     assert "BatchEvalPython" not in plan
     # grouped-Arrow operators (applyInPandas) — FlatMapGroupsInPandas,
     # still never row-at-a-time pickling
-    plan = _plan(qs["pack_sequences"](spark, SF))
+    plan = formatted_plan(qs["pack_sequences"](spark, SF))
     assert "FlatMapGroupsInPandas" in plan
     assert "BatchEvalPython" not in plan
     # semdedup (r6): the per-cluster quadratic verify runs as a blocked
     # BLAS kernel via mapInPandas — grouped-Arrow, never row-at-a-time
-    plan = _plan(qs["semdedup"](spark, SF))
+    plan = formatted_plan(qs["semdedup"](spark, SF))
     assert "MapInPandas" in plan
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan
 
@@ -153,7 +144,7 @@ def test_cosmos_high_water_pushed_to_scan(spark, tmp_path):
     out = from_cosmos_documents(
         df, db="d", container="c", now_ts=100, high_water_ts=50
     )
-    plan = _plan(out)
+    plan = formatted_plan(out)
     assert "Filter" in plan and "BatchEvalPython" not in plan
     assert out.count() == 49
 
@@ -173,7 +164,7 @@ def test_partial_collapse_is_partial_aggregate_not_window(spark):
         F.col("id").cast("string").alias("event_id"),
         F.lit("x").alias("content"),
     )
-    plan = _plan(lww_collapse_partial(df, KEY_COLS, "seq"), execute=True)
+    plan = formatted_plan(lww_collapse_partial(df, KEY_COLS, "seq"), execute=True)
     pre_exchange = plan.split("Exchange")[0]
     assert "Aggregate" in pre_exchange, "partial aggregate must sit below the shuffle"
     assert "Window" not in plan
@@ -184,7 +175,7 @@ def test_partial_collapse_is_partial_aggregate_not_window(spark):
 
 
 def test_whole_stage_codegen_in_final_state(spark):
-    plan = _plan(entry.q_cdc_final_state(spark, SF), execute=True)
+    plan = formatted_plan(entry.q_cdc_final_state(spark, SF), execute=True)
     # formatted mode marks whole-stage-codegen operators with a '*'
     assert "* Project" in plan or "* HashAggregate" in plan or "WholeStageCodegen" in plan
 
@@ -203,5 +194,5 @@ def test_feed_scan_partition_pruned(spark, tmp_path):
 def test_decontaminate_benchmark_side_is_broadcast(spark):
     """The eval-corpus gram set must broadcast — the training side
     streams through the join without shuffling on gram hash."""
-    plan = _plan(entry.q_decontaminate(spark, SF))
+    plan = formatted_plan(entry.q_decontaminate(spark, SF))
     assert "BroadcastHashJoin" in plan, plan[:1500]
