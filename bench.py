@@ -76,12 +76,10 @@ def bench_cdc(spark, n_events: int, results: dict, n_batches: int = 8, warmup: i
         compact_after_deltas=100,
         write_metrics=False,
         # "auto" (default) sizes the write-layout salt from batch input
-        # bytes; an integer forces a fixed (bucket, salt) layout; "none"
-        # uses the AQE REBALANCE layout. For experiments.
+        # bytes; an integer forces a fixed (bucket, salt) layout. For
+        # experiments.
         files_per_bucket=(
-            None
-            if os.environ.get("SPARK_GRAFT_FPB") == "none"
-            else int(os.environ["SPARK_GRAFT_FPB"])
+            int(os.environ["SPARK_GRAFT_FPB"])
             if os.environ.get("SPARK_GRAFT_FPB")
             else "auto"
         ),

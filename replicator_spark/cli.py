@@ -40,7 +40,7 @@ class JobConfig:
     mode: str = "mor"  # cow | mor
     streaming: bool = True
     num_buckets: int = 32
-    files_per_bucket: int | str | None = "auto"
+    files_per_bucket: int | str = "auto"
     compact_after_deltas: int = 8
     max_files_per_trigger: int | None = None
     transform_rules: list[dict] = field(default_factory=list)
@@ -96,6 +96,13 @@ class JobConfig:
             errs.append("streaming jobs require checkpoint_dir")
         if not self.feed_dir or not self.table_root:
             errs.append("feed_dir and table_root are required")
+        fpb = self.files_per_bucket
+        if fpb != "auto" and (
+            not isinstance(fpb, int) or isinstance(fpb, bool) or fpb < 1
+        ):
+            errs.append(
+                f'files_per_bucket must be "auto" or an int >= 1, got {fpb!r}'
+            )
         if self.serve_port is not None and (
             not isinstance(self.serve_port, int)
             or isinstance(self.serve_port, bool)

@@ -55,10 +55,13 @@ change replication" stance (``README.md:48``).
 from __future__ import annotations
 
 import json
+import math
 import os
 import threading
+import time
+import uuid
 from collections.abc import Sequence
-from dataclasses import dataclass
+from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -67,6 +70,7 @@ from pyspark.sql import types as T
 from . import commitlog as cl
 from .dedup import lww_latest
 from .model import BUCKET_COL, KEY_COLS, LAST_SEQ_COL, OP_DELETE
+from .session import empty_frame
 
 
 def _widen_type(a: T.DataType, b: T.DataType) -> T.DataType:
@@ -97,13 +101,33 @@ class MergeStats:
     version: int | None  # committed snapshot version (None if skipped replay)
     applied: int = 0
     skipped_stale: int = 0  # cow: exact; mor: resolved lazily at compaction
-    deduped: int = 0
     deleted: int = 0
     schema_evolved: int = 0
-    touched_buckets: int = 0
     mode: str = "cow"
     replayed: bool = False  # batch_key already committed → no-op
     seq_hi: int | None = None  # max source seq in the batch
+    # the merge's own data files and their buckets (not auto-compaction's)
+    files_written: list[str] = field(default_factory=list)
+    buckets: list[int] = field(default_factory=list)
+
+
+def layout_width(
+    nbytes: int,
+    *,
+    hot_share: float = 0.35,
+    expansion: float = 2.5,
+    target_task_bytes: int = 64 << 20,
+    cap: int = 64,
+) -> int:
+    """Salt width of a write layout (files per bucket) for ``nbytes`` of
+    parquet input: the hottest bucket, assumed to hold ``hot_share`` of
+    it, is split into tasks of ``target_task_bytes`` decompressed bytes
+    (``expansion`` × the parquet size). A fixed width fails both ways:
+    width 1 leaves a skewed repo's bucket to one straggler sort (−38%
+    apply throughput at 32 cores on 4.2M-row batches), a high width
+    shatters small batches into near-empty files (−3× on 190k rows)."""
+    hot_bytes = hot_share * expansion * nbytes
+    return max(1, min(cap, math.ceil(hot_bytes / target_task_bytes)))
 
 
 def bucket_expr(num_buckets: int, repo_col: str = "repo") -> F.Column:
@@ -291,7 +315,7 @@ class LakeTable:
         group and are cast to the current types."""
         phys = self._physical_schema(snap)
         if not files:
-            return self.spark.createDataFrame([], phys)
+            return empty_frame(self.spark, phys)
         cur_types = {f.name: f.dataType for f in phys.fields}
         _sid, log = self._schema_meta(snap)
         # Group files by the physical types they were written under —
@@ -560,7 +584,7 @@ class LakeTable:
         key_cols: Sequence[str] | None = None,
         seq_col: str = "seq",
         op_col: str = "op",
-        files_per_bucket: int | None = None,
+        files_per_bucket: int = 1,
         compact_after_deltas: int = 8,
         props: dict | None = None,
         ledger_keep: int | None = 1024,
@@ -573,6 +597,8 @@ class LakeTable:
         LWW-deduped to ONE row per key (pipeline.apply_batch does that).
         ``mode='mor'`` appends deltas and auto-compacts buckets whose
         delta chain exceeds ``compact_after_deltas``.
+        ``files_per_bucket`` is the write layout's salt width
+        (``_write_buckets``).
 
         ``tombstone_retention``: when set, auto-compaction expires
         tombstones whose seq is more than this many sequence numbers
@@ -807,7 +833,7 @@ class LakeTable:
                 base = fresh
         stats.version = nsnap.version
         stats.schema_evolved = len(new_cols) + len(type_changed)
-        stats.touched_buckets = len(touched)
+        stats.buckets = sorted(int(b) for b in touched)
         if mode == "mor":
             max_chain = max((len(v) for v in cur_deltas.values()), default=0)
             if max_chain >= compact_after_deltas:
@@ -826,13 +852,11 @@ class LakeTable:
         microseconds); a winner that CRASHED inside that window never
         advances the hint, and the caller falls through to the loud
         dangling-commit error exactly as before."""
-        import time as _time
-
-        deadline = _time.monotonic() + timeout_s
+        deadline = time.monotonic() + timeout_s
         delay = 0.001
         fresh = self._snap()
-        while fresh.version <= base_version and _time.monotonic() < deadline:
-            _time.sleep(delay)
+        while fresh.version <= base_version and time.monotonic() < deadline:
+            time.sleep(delay)
             delay = min(delay * 2, 0.1)
             fresh = self._snap()
         return fresh
@@ -1035,10 +1059,9 @@ class LakeTable:
         ]
         result = j.select(*proj)
 
-        new_version = snap.version + 1
-        out_dir = self._new_data_dir(new_version)
-        self._write_buckets(result, out_dir, touched, key_cols, files_per_bucket)
-        new_files = self._list_bucket_files(out_dir)
+        new_files = self._write_buckets(
+            result, snap.version + 1, touched, key_cols, files_per_bucket
+        )
         if new_files:
             m = obs.get
         else:
@@ -1082,6 +1105,7 @@ class LakeTable:
             deleted=int(m["deleted"] or 0),
             mode="cow",
             seq_hi=int(m["seq_hi"]) if m["seq_hi"] is not None else None,
+            files_written=[p for fs in new_files.values() for p in fs],
         )
         return stats, files, deltas, cow_tombstones
 
@@ -1102,12 +1126,9 @@ class LakeTable:
             F.sum(F.when(F.col("_deleted"), 1).otherwise(0)).alias("deleted"),
             F.max(F.col(LAST_SEQ_COL)).alias("seq_hi"),
         )
-        new_version = snap.version + 1
-        out_dir = self._new_data_dir(new_version)
-        self._write_buckets(
-            delta, out_dir, range(snap.num_buckets), key_cols, files_per_bucket
+        new_files = self._write_buckets(
+            delta, snap.version + 1, range(snap.num_buckets), key_cols, files_per_bucket
         )
-        new_files = self._list_bucket_files(out_dir)
         if new_files:
             m = obs.get
         else:
@@ -1128,6 +1149,7 @@ class LakeTable:
             deleted=int(m["deleted"] or 0),
             mode="mor",
             seq_hi=int(m["seq_hi"]) if m["seq_hi"] is not None else None,
+            files_written=[p for fs in new_files.values() for p in fs],
         )
         return stats, files, deltas, sorted(int(b) for b in new_files)
 
@@ -1136,7 +1158,6 @@ class LakeTable:
         self,
         buckets: Sequence[int] | None = None,
         *,
-        files_per_bucket: int | None = None,
         expire_tombstones_below_seq: int | None = None,
         retries: int = 2,
     ) -> int:
@@ -1153,7 +1174,6 @@ class LakeTable:
             try:
                 return self._compact_once(
                     buckets,
-                    files_per_bucket=files_per_bucket,
                     expire_tombstones_below_seq=expire_tombstones_below_seq,
                 )
             except cl.CommitConflictError:
@@ -1165,7 +1185,6 @@ class LakeTable:
         self,
         buckets: Sequence[int] | None = None,
         *,
-        files_per_bucket: int | None = None,
         expire_tombstones_below_seq: int | None = None,
     ) -> int:
         """One compaction attempt against the current snapshot.
@@ -1222,14 +1241,18 @@ class LakeTable:
                 ~F.col("_deleted")
                 | (F.col(LAST_SEQ_COL) >= F.lit(expire_tombstones_below_seq))
             )
+        # salt width from the bytes it rewrites: the largest bucket's,
+        # known exactly here, so no hot-share guess
+        width = layout_width(max(
+            sum(map(os.path.getsize, snap.files.get(b, []) + deltas.get(b, [])))
+            for b in todo
+        ), hot_share=1.0)
         new_version = snap.version + 1
-        out_dir = self._new_data_dir(new_version)
-        self._write_buckets(
-            resolved, out_dir, [int(b) for b in todo], table_keys, files_per_bucket
+        new_files = self._write_buckets(
+            resolved, new_version, [int(b) for b in todo], table_keys, width
         )
         files = dict(snap.files)
         new_deltas = {b: list(v) for b, v in deltas.items()}
-        new_files = self._list_bucket_files(out_dir)
         for b in todo:
             files[b] = new_files.get(b, [])
             new_deltas.pop(b, None)
@@ -1297,8 +1320,6 @@ class LakeTable:
         consumers persist the base snapshot's ``max_seq`` and use
         ``read_changes(since_seq=...)``, which needs no old snapshot.
         """
-        import time as _time
-
         if cl.current_version(self.root) is None:
             raise ValueError(f"no table at {self.root}")
         versions = cl.list_versions(self.root)
@@ -1322,7 +1343,7 @@ class LakeTable:
                 referenced.update(os.path.realpath(p) for p in fs)
             manifests.update(cl.manifest_refs(self.root, v))
 
-        now = _time.time()
+        now = time.time()
 
         def _old_enough(p: str) -> bool:
             try:
@@ -1375,35 +1396,42 @@ class LakeTable:
 
     # -- physical write ------------------------------------------------
     def _write_buckets(
-        self, df: DataFrame, out_dir: str, touched, key_cols, files_per_bucket
-    ) -> None:
-        """One shuffle to the target file layout, sorted by key within
-        files for read locality.
+        self, df: DataFrame, version: int, touched, key_cols, width: int
+    ) -> dict[str, list[str]]:
+        """Write ``df`` for prospective ``version``; returns its new data
+        files by bucket. The one write layout of every table write (mor
+        delta append, cow rewrite, compaction): one shuffle,
+        ``repartition(n, bucket[, salt])``, sorted by key within files
+        for read locality.
 
-        Default (``files_per_bucket=None``): ``REBALANCE`` hint — AQE
-        sizes the write tasks by bytes: an oversized partition (the
-        skewed repo's bucket, 30% of rows) is SPLIT across tasks, and
-        tiny partitions are coalesced. This fixes both failure modes a
-        fixed layout has: with one file per bucket the hot bucket is a
-        single straggler task (10× at 32 cores) doing a 1.3M-row sort in
-        one heap (measured −38%/−28% apply throughput at 32/2 cores at
-        4.2M-row batches); with a fixed high salt a small batch shatters
-        into hundreds of near-empty files (measured −3× at 190k-row
-        batches). Byte-sized tasks adapt to any batch size.
+        Width 1: one file per touched bucket, from
+        ``n = min(len(touched), spark.sql.shuffle.partitions)`` tasks —
+        one writer per core, each writing whole buckets. A task per
+        bucket spent ~0.9 s of a 2.4 s batch on 4 cores starting 32
+        one-file tasks; one task for all buckets wrote them serially.
 
-        An integer ``files_per_bucket`` forces the fixed
-        (bucket, key-salt) layout — deterministic file counts for tests
-        and layout experiments."""
-        if files_per_bucket is None:
-            shuffled = df.hint("rebalance", F.col(BUCKET_COL))
+        Width w > 1 (``layout_width``, for batches whose hot bucket
+        outgrows one task): w files per bucket, split by a key salt,
+        from ``n = len(touched) × w`` tasks, so a hot bucket's salts
+        land in separate tasks instead of one straggler sort.
+
+        The data dir is writer-unique: writers racing one version must
+        not clobber each other's files (overwrite mode) before the
+        snapshot CAS decides the race, nor list the loser's files as the
+        winner's. GC is reference-based, so the random suffix is free;
+        the version in the name is a breadcrumb and may lag the committed
+        one after a rebase."""
+        out_dir = f"{self.root}/data/v{version}-{uuid.uuid4().hex[:8]}"
+        parts = [F.col(BUCKET_COL)]
+        if width == 1:
+            slots = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+            n = min(len(touched), slots)
         else:
-            nparts = max(len(touched) * files_per_bucket, 1)
-            salt = F.pmod(
-                F.xxhash64(*[F.col(k) for k in key_cols]), F.lit(files_per_bucket)
-            )
-            shuffled = df.repartition(nparts, F.col(BUCKET_COL), salt)
+            n = len(touched) * width
+            parts.append(F.pmod(F.xxhash64(*map(F.col, key_cols)), F.lit(width)))
         (
-            shuffled.sortWithinPartitions(*key_cols)
+            df.repartition(max(n, 1), *parts)
+            .sortWithinPartitions(*key_cols)
             .write.mode("overwrite")
             # content/commit columns are high-entropy — parquet dictionary
             # encoding only burns CPU before falling back (measured ~2.5s
@@ -1412,6 +1440,14 @@ class LakeTable:
             .partitionBy(BUCKET_COL)
             .parquet(out_dir)
         )
+        out: dict[str, list[str]] = {}
+        for entry in os.listdir(out_dir):
+            if entry.startswith(f"{BUCKET_COL}="):
+                d = os.path.join(out_dir, entry)
+                out[entry.split("=", 1)[1]] = sorted(
+                    os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")
+                )
+        return out
 
     @staticmethod
     def _parquet_max_seq(paths: Sequence[str]) -> dict[str, int | None]:
@@ -1450,20 +1486,6 @@ class LakeTable:
 
         with ThreadPoolExecutor(min(8, len(paths))) as ex:
             return dict(zip(paths, ex.map(one, paths)))
-
-    def _new_data_dir(self, version: int) -> str:
-        """Writer-unique data dir for a prospective version. Two
-        writers racing the same version must never share one directory
-        — ``_write_buckets`` uses overwrite mode, so a shared dir would
-        clobber the other writer's files BEFORE the snapshot CAS even
-        decides the race, and ``_list_bucket_files`` would credit the
-        loser's files to the winner. GC is reference-based (realpath
-        set membership), so the random suffix is free; the version in
-        the name is a human breadcrumb only and may lag the committed
-        version after a rebase."""
-        import uuid
-
-        return f"{self.root}/data/v{version}-{uuid.uuid4().hex[:8]}"
 
     def _next_file_meta(
         self,
@@ -1509,15 +1531,3 @@ class LakeTable:
             .collect()
         )
         return {r["b"]: [int(r["n"]), int(r["mn"])] for r in rows}
-
-    def _list_bucket_files(self, out_dir: str) -> dict[str, list[str]]:
-        out: dict[str, list[str]] = {}
-        for entry in os.listdir(out_dir):
-            if not entry.startswith(f"{BUCKET_COL}="):
-                continue
-            b = entry.split("=", 1)[1]
-            d = os.path.join(out_dir, entry)
-            out[b] = sorted(
-                os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")
-            )
-        return out

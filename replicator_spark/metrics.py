@@ -30,6 +30,8 @@ import time
 
 from pyspark.sql import types as T
 
+from .session import empty_frame
+
 ROLL_BYTES = 8 << 20  # ~8 MB ≈ 40k batch rows per segment
 
 METRICS_SCHEMA = T.StructType(
@@ -143,7 +145,7 @@ def _read(spark, dirpath: str, schema: T.StructType):
             )
         )
     if not parts:  # empty or legacy-only-just-created dir
-        return spark.createDataFrame([], schema)
+        return empty_frame(spark, schema)
     out = parts[0]
     for p_ in parts[1:]:
         out = out.unionByName(p_)

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import json
 import os
+import sys
 import time
 from dataclasses import dataclass
 
@@ -18,7 +19,7 @@ from pyspark.sql import types as T
 
 from . import metrics as M
 from .dedup import lww_collapse_partial, lww_latest
-from .laketable import LakeTable, MergeStats, _widen_type
+from .laketable import LakeTable, MergeStats, _widen_type, layout_width
 from .model import KEY_COLS
 
 _PYTYPE_TO_SPARK = {
@@ -283,37 +284,27 @@ def auto_files_per_bucket(
     expansion: float = 2.5,
     target_task_bytes: int = 64 << 20,
     cap: int = 64,
-) -> int | None:
-    """Size the write layout's salt width from the batch's input bytes.
-
-    A fixed salt width fails at one end or the other: width 1 makes a
-    skewed repo's bucket a single straggler task doing a multi-million-
-    row sort (measured −38% apply throughput at 32 cores on 4.2M-row
-    batches); a fixed high width shatters small batches into hundreds of
-    near-empty files (measured −3× on 190k-row batches). Input bytes are
-    free to read (``inputFiles()`` + stat — no Spark job), and the worst
-    bucket is assumed to hold ``hot_share`` of the batch (defensive
-    default for power-law repo distributions); that bucket is split into
-    ``target_task_bytes``-sized (decompressed) tasks. Returns None
-    (→ AQE REBALANCE layout) when the batch has no file-backed lineage.
+) -> int:
+    """The write layout's salt width (``laketable.layout_width``) from the
+    batch's input bytes: ``inputFiles()`` + stat, no Spark job. The
+    worst bucket is assumed to hold ``hot_share`` of the batch (a
+    defensive default for power-law repo distributions). Width 1 when
+    the driver can stat no input file (a plan without file-backed
+    lineage, such as a foreachBatch frame, or a file it cannot reach).
     """
-    import math
-
     try:
         files = raw_batch.inputFiles()
     except Exception:  # noqa: BLE001 — non-file-backed plans
-        return None
+        return 1
     total = 0
     for f in files:
         p = f[7:] if f.startswith("file://") else f
         try:
             total += os.path.getsize(p)
         except OSError:
-            return None
-    if total == 0:
-        return None
-    hot_bytes = hot_share * expansion * total
-    return max(1, min(cap, math.ceil(hot_bytes / target_task_bytes)))
+            return 1
+    return layout_width(total, hot_share=hot_share, expansion=expansion,
+                        target_task_bytes=target_task_bytes, cap=cap)
 
 
 def apply_batch(
@@ -325,7 +316,7 @@ def apply_batch(
     mode: str = "cow",
     transform_engine=None,
     event_filter=None,
-    files_per_bucket: int | str | None = "auto",
+    files_per_bucket: int | str = "auto",
     compact_after_deltas: int = 8,
     write_metrics: bool = True,
     schema_tracker: SchemaTracker | None = None,
@@ -348,9 +339,9 @@ def apply_batch(
     rows land in ``<table_root>/_dead_letter/batch_key=<k>`` parquet
     (per-batch path + overwrite + ledger check ⇒ replay-idempotent).
 
-    ``files_per_bucket``: "auto" (default) sizes the write-layout salt
-    from the batch's input bytes (auto_files_per_bucket); an int forces
-    a fixed layout; None uses the AQE REBALANCE layout.
+    ``files_per_bucket``: the write layout's salt width
+    (``LakeTable._write_buckets``). "auto" (default) sizes it from the
+    batch's input bytes (auto_files_per_bucket); an int fixes it.
 
     ``schema_tracker`` (when ``payload_schema`` is None) caches the
     inferred schema across batches and turns on lossless evolution
@@ -460,8 +451,6 @@ def apply_batch(
                 # and record it (ADVICE r02: no silent lossy commit)
                 detect = False
                 capped = True
-                import sys
-
                 print(
                     f"WARNING replicator_spark: schema widening retry cap "
                     f"hit for batch {batch_key}; committing with "
@@ -494,11 +483,10 @@ def apply_batch(
                 "schema_evolved": stats.schema_evolved,
                 "schema_retries": retries,
                 "schema_capped": int(capped),
-                "touched_buckets": stats.touched_buckets,
+                "touched_buckets": len(stats.buckets),
                 "wall_ms": wall_ms,
             },
         )
-        snap_files = table._snap(stats.version).files
         M.append_lineage(
             table.root,
             {
@@ -506,8 +494,8 @@ def apply_batch(
                 "snapshot_version": stats.version,
                 "seq_min": int(m_in["seq_lo"]) if m_in["seq_lo"] is not None else None,
                 "seq_max": int(m_in["seq_hi"]) if m_in["seq_hi"] is not None else None,
-                "n_files_written": sum(len(v) for v in snap_files.values()),
-                "buckets": sorted(int(b) for b in snap_files),
+                "n_files_written": len(stats.files_written),
+                "buckets": stats.buckets,
             },
         )
     return res
@@ -521,7 +509,7 @@ def replay_feed(
     payload_schema: T.StructType | None = None,
     batches: list[int] | None = None,
     mode: str = "cow",
-    files_per_bucket: int | str | None = "auto",
+    files_per_bucket: int | str = "auto",
     compact_after_deltas: int = 8,
     write_metrics: bool = True,
     stream_name: str = "feed",
@@ -554,8 +542,6 @@ def replay_feed(
     ``qos`` (qos.QoS): retry-with-backoff + circuit breaker around each
     batch apply — safe because a failed merge commits nothing and a
     retried committed batch is a ledger no-op."""
-    import os
-
     from . import lifecycle
 
     tracker = SchemaTracker() if payload_schema is None else None

@@ -9,7 +9,9 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def get_spark(
@@ -52,3 +54,12 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def empty_frame(spark: SparkSession, schema: T.StructType) -> DataFrame:
+    """An empty DataFrame of ``schema`` that the optimizer folds to an
+    empty local relation, so collecting it launches no Spark job (as
+    ``createDataFrame([], schema)``, a Python RDD, does)."""
+    return spark.range(1).select(
+        *[F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields]
+    ).limit(0)

@@ -23,11 +23,14 @@ pull-based.
 
 from __future__ import annotations
 
+import heapq
+import os
+
 from pyspark.sql import SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .laketable import LakeTable
+from .laketable import LakeTable, layout_width
 from .model import CHANGE_SCHEMA
 from .pipeline import apply_batch
 
@@ -80,6 +83,24 @@ def feed_stream_schema() -> T.StructType:
     )
 
 
+def trigger_files_per_bucket(feed_dir: str, max_files: int) -> int:
+    """The write layout's salt width for a stream, from one listing of
+    ``feed_dir``: the bytes of its ``max_files`` largest files, the most
+    one trigger can admit. A foreachBatch frame has no input files for
+    ``auto_files_per_bucket`` to stat. Hidden and ``_``-prefixed entries
+    are skipped, as the file source skips them."""
+    sizes = []
+    for dirpath, dirs, files in os.walk(feed_dir):
+        dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+        for f in files:
+            if not f.startswith(("_", ".")):
+                try:
+                    sizes.append(os.path.getsize(os.path.join(dirpath, f)))
+                except OSError:  # removed since the listing
+                    pass
+    return layout_width(sum(heapq.nlargest(max_files, sizes)))
+
+
 def run_stream(
     spark: SparkSession,
     feed_dir: str,
@@ -91,7 +112,7 @@ def run_stream(
     available_now: bool = True,
     stream_name: str = "cdc",
     mode: str = "cow",
-    files_per_bucket: int | str | None = "auto",
+    files_per_bucket: int | str = "auto",
     partial_updates: bool = False,
     tombstone_retention: int | None = None,
     transform_engine=None,
@@ -105,10 +126,17 @@ def run_stream(
     ``available_now=True`` replays everything currently in the feed and
     stops (Trigger.AvailableNow) — the replay mode. ``False`` keeps
     tailing (processingTime trigger) — the live mode.
+
+    ``files_per_bucket``: the write layout's salt width; "auto" sizes it
+    once, at start, from the largest trigger the feed can hold now
+    (``trigger_files_per_bucket``); an int fixes it.
     """
+    max_files = max_files_per_trigger or 16
+    if files_per_bucket == "auto":
+        files_per_bucket = trigger_files_per_bucket(feed_dir, max_files)
     reader = (
         spark.readStream.schema(feed_stream_schema())
-        .option("maxFilesPerTrigger", max_files_per_trigger or 16)
+        .option("maxFilesPerTrigger", max_files)
         .parquet(feed_dir)
     )
 

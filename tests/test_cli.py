@@ -34,6 +34,19 @@ def test_validate_catches_errors(tmp_path, capsys):
     assert "mode must be" in err and "checkpoint_dir" in err
 
 
+def test_validate_rejects_null_files_per_bucket(tmp_path, capsys):
+    """A null write-layout width selects no layout: validation names the
+    field and the values it takes."""
+    assert cli.main(["validate", "--config", _cfg(tmp_path, files_per_bucket=None)]) == 1
+    assert 'files_per_bucket must be "auto" or an int >= 1, got None' in (
+        capsys.readouterr().err
+    )
+    for ok in ("auto", 3):
+        assert cli.JobConfig.from_dict(
+            json.loads(open(_cfg(tmp_path, files_per_bucket=ok)).read())
+        ).validate() == []
+
+
 def test_unknown_key_rejected(tmp_path):
     import pytest
 

@@ -557,3 +557,29 @@ def test_concurrent_scans_restore_listing_threshold(spark, tmp_path):
     finally:
         sys.setswitchinterval(switch)
         spark.conf.unset(LISTING_THRESHOLD)
+
+
+def test_empty_table_scans_launch_no_job(spark, tmp_path):
+    """Scans of a table with no data files, and of a metrics log with no
+    rows, fold to an empty local relation: collecting them runs no Spark
+    job (an empty Python-RDD frame ran one task per core)."""
+    from replicator_spark import metrics as M
+
+    table = LakeTable(spark, str(tmp_path / "t"))
+    table.create(REPOS_SCHEMA, num_buckets=4)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    scans = {
+        "read": table.read,
+        "lookup": lambda: table.lookup("repo-0001", "a/b"),
+        "read_changes": lambda: table.read_changes(since_seq=-1),
+        "read_metrics": lambda: M.read_metrics(spark, table.root),
+    }
+    for name, scan in scans.items():
+        group = f"empty-{name}-{tmp_path.name}"
+        sc.setLocalProperty("spark.jobGroup.id", group)
+        try:
+            assert scan().collect() == [], name
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        assert list(tracker.getJobIdsForGroup(group)) == [], name
