@@ -46,16 +46,36 @@ def lww_latest(
     case. ``tiebreak_col`` makes the result deterministic if
     two events ever share a seq (should not happen for a real LSN;
     belt and braces).
+
+    The aggregate (``latest_by``) and the projection are SQL text: a
+    py4j round trip per column where ``Column`` objects cost ~3 to
+    build (and one more each to free), which is most of the driver time
+    of a short read (a lookup's resolve is planned on every call).
     """
     other = [c for c in df.columns if c not in key_cols]
-    ord_cols = [F.col(seq_col)]
-    if tiebreak_col is not None and tiebreak_col in df.columns:
-        ord_cols.append(F.col(tiebreak_col))
-    agg = F.max_by(
-        F.struct(*[F.col(c) for c in other]), F.struct(*ord_cols)
-    ).alias("_top")
-    out = df.groupBy(*[F.col(c) for c in key_cols]).agg(agg)
-    return out.select(*key_cols, *[F.col(f"_top.{c}").alias(c) for c in other])
+    if tiebreak_col not in df.columns:
+        tiebreak_col = None
+    top = latest_by(f"struct({', '.join(map(quote, other))})", seq_col, tiebreak_col)
+    return (
+        df.groupBy(*key_cols)
+        .agg(F.expr(f"{top} AS _top"))
+        .selectExpr(*map(quote, key_cols), "_top.*")
+    )
+
+
+def latest_by(value: str, seq_col: str, tiebreak_col: str | None = None) -> str:
+    """The LWW aggregate as SQL text: ``value`` (an SQL expression) of
+    the group's row with the greatest ``(seq_col, tiebreak_col)``. The
+    one statement of the ordering rule — ``lww_latest`` and the mor
+    partial upgrade (``LakeTable._upgrade_partials``) both take a key's
+    latest image through it, so they cannot disagree."""
+    ord_cols = [seq_col] if tiebreak_col is None else [seq_col, tiebreak_col]
+    return f"max_by({value}, struct({', '.join(map(quote, ord_cols))}))"
+
+
+def quote(name: str) -> str:
+    """``name`` as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def lww_collapse_partial(

@@ -68,7 +68,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import commitlog as cl
-from .dedup import lww_latest
+from .dedup import latest_by, lww_latest, quote
 from .model import BUCKET_COL, KEY_COLS, LAST_SEQ_COL, OP_DELETE
 from .session import empty_frame
 
@@ -132,6 +132,12 @@ def layout_width(
 
 def bucket_expr(num_buckets: int, repo_col: str = "repo") -> F.Column:
     return F.pmod(F.xxhash64(F.col(repo_col)), F.lit(num_buckets)).cast("int")
+
+
+def _is_partial(op_col: str, row: str = "") -> str:
+    """SQL predicate: a partial, non-delete row (``row`` prefixes the
+    struct the columns live in) — the rows a mor merge upgrades."""
+    return f"coalesce({row}_partial, false) AND {row}{quote(op_col)} != '{OP_DELETE}'"
 
 
 class LakeTable:
@@ -403,12 +409,23 @@ class LakeTable:
         include_deleted: bool = False,
         include_engine_cols: bool = False,
         resolve: bool = True,
+        single_partition: bool = False,
     ) -> DataFrame:
         """read() body over an already-resolved snapshot — callers that
         derive per-snapshot state first (bucket routing, key columns)
         pass the same object so one snapshot load serves the whole
         operation and the routing can never straddle a concurrent
-        commit."""
+        commit.
+
+        ``single_partition`` reads the files in one task when they are
+        small, so the LWW resolve's child is already clustered on the key
+        and no exchange is planned: one Spark job instead of two (a
+        lookup's one bucket). Small is at most
+        ``spark.sql.files.openCostInBytes`` (4 MB by default), bytes
+        Spark's own split planning prices at no more than opening one
+        file. Larger files keep the parallel scan and its shuffle: on 4
+        cores one task already lost to it at 5.4 MB in 6 files, and by
+        30% at 118 MB."""
         deltas = self._deltas(snap)
         bucket_ids = (
             list(snap.files.keys() | deltas.keys())
@@ -417,13 +434,20 @@ class LakeTable:
         )
         base_files = [f for b in bucket_ids for f in snap.files.get(b, [])]
         delta_files = [f for b in bucket_ids for f in deltas.get(b, [])]
-        df = self._read_files(snap, base_files + delta_files)
+        files = base_files + delta_files
+        df = self._read_files(snap, files)
+        # not on an empty scan: it folds to a local relation with no
+        # job, and a coalesce over it would launch one
+        if single_partition and files:
+            sql_conf = self.spark._jsparkSession.sessionState().conf()
+            if sum(map(os.path.getsize, files)) <= sql_conf.filesOpenCostInBytes():
+                df = df.coalesce(1)
         if delta_files and resolve:
             # per-key LWW resolution across base + deltas (mor read path)
             # on the table's persisted merge key — not a hardcoded default
             df = lww_latest(df, self.key_columns(snap), LAST_SEQ_COL, tiebreak_col=None)
         if not include_deleted:
-            df = df.where(~F.coalesce(F.col("_deleted"), F.lit(False)))
+            df = df.where("NOT coalesce(_deleted, false)")
         if not include_engine_cols:
             df = df.drop(*ENGINE_SCHEMA.names)
         return df
@@ -452,14 +476,17 @@ class LakeTable:
         PK-indexed stores (MySQL/Mongo point ops); the lake-table
         analogue of that indexed access is hash-bucket pruning — only
         the key's bucket is scanned (base + mor deltas), then the LWW
-        resolve runs over that bucket alone. ``path`` optionally narrows
-        to the second key column."""
+        resolve runs over that bucket alone, in one task and one Spark
+        job while the bucket is small. ``path`` optionally narrows to the
+        second key column."""
         snap = self._snap(version)
         kc = self.key_columns(snap)
         # one snapshot load serves routing AND the scan: no second
         # metadata parse, and the bucket id can't straddle a concurrent
         # commit that changes the file lists it routes into
-        df = self._read_snapshot(snap, buckets=[self.bucket_of(key, snap)])
+        df = self._read_snapshot(
+            snap, buckets=[self.bucket_of(key, snap)], single_partition=True
+        )
         df = df.where(F.col(kc[0]) == key)
         if path is not None:
             if len(kc) < 2:
@@ -622,9 +649,11 @@ class LakeTable:
         it; a partial update on a deleted/absent key upserts just its
         fields (tombstoned values are NOT resurrected). Without the
         column, full-image replace semantics apply as before. In mor
-        mode partial rows are upgraded to full images at write time via
-        a join against the touched buckets' current state (read cost
-        O(touched buckets), paid only by batches that contain partials;
+        mode partial rows are upgraded to full images at write time
+        (``_upgrade_partials``): one aggregate by key over the batch and
+        the raw files of the buckets holding partials, which an
+        Observation on the batch's checkpoint names (read cost
+        O(those buckets), paid only by batches that contain partials;
         the delta append stays O(batch)); in cow mode the coalesce rides
         the existing full-outer join. Cross-batch reordering of partials
         against deletes/full images of the same key is resolved by whole-
@@ -706,15 +735,24 @@ class LakeTable:
             # exception: upgrading partials to full images needs the
             # current state of their buckets.)
             if has_partial:
-                # Materialize the batch ONCE before the two consumers
-                # (bucket discovery + delta write). localCheckpoint, not
-                # persist: an eager checkpoint runs the whole plan, so
-                # upstream Observations fire with complete values —
-                # persist() + a filtered first action materializes the
-                # cache partially and corrupts the observation row.
-                src = src.localCheckpoint(eager=True)
+                # Materialize the batch ONCE, and learn the buckets that
+                # hold partial rows from an Observation on that same
+                # action: no discovery job. localCheckpoint, not persist:
+                # an eager checkpoint runs the whole plan, so upstream
+                # Observations fire with complete values — persist() + a
+                # filtered first action materializes the cache partially
+                # and corrupts the observation row.
+                found = Observation(f"partials-{batch_key}")
+                src = src.observe(
+                    found,
+                    F.expr(
+                        f"collect_set(CASE WHEN {_is_partial(op_col)} "
+                        f"THEN {BUCKET_COL} END) AS buckets"
+                    ),
+                ).localCheckpoint(eager=True)
                 src = self._upgrade_partials(
-                    snap, src, key_cols, all_payload, seq_col, op_col
+                    snap, src, found.get["buckets"],
+                    key_cols, all_payload, seq_col, op_col,
                 )
             stats, files, deltas, touched = self._merge_mor(
                 snap, src, batch_key, all_payload,
@@ -936,58 +974,75 @@ class LakeTable:
         return cur_files, cur_deltas
 
     def _upgrade_partials(
-        self, snap, src, key_cols, all_payload, seq_col, op_col
+        self, snap, src, buckets, key_cols, all_payload, seq_col, op_col
     ) -> DataFrame:
         """mor write-time upgrade: partial rows become full images by
-        coalescing with the *live* current state of their keys (deleted
-        keys resolve to no match — a partial after a delete upserts only
-        its own fields, never resurrecting tombstoned values). Only the
-        partial rows' buckets are read; full-image rows pass through."""
-        part_cond = F.coalesce(F.col("_partial"), F.lit(False)) & (
-            F.col(op_col) != F.lit(OP_DELETE)
-        )
+        coalescing with the *live* current image of their keys (a key
+        whose latest image is a tombstone has none — a partial after a
+        delete upserts only its own fields, never resurrecting
+        tombstoned values). Full-image rows pass through.
+
+        Only ``buckets``, the buckets holding partial rows, are read, and
+        without resolving them first: one aggregate, grouped by key, over
+        the batch rows and the raw rows of those buckets' base and delta
+        files takes the batch row, the key's latest image (``latest_by``
+        on ``_last_seq``, the read path's LWW rule) and drops the keys
+        the batch lacks. One shuffle, where an LWW resolve of the target
+        and a join against it took two or three. Each side travels as one
+        struct (``_s`` the batch row, ``_t`` the target image), so no
+        payload column name can collide with the aggregate's own."""
         proj = [*key_cols, *all_payload, seq_col, op_col, BUCKET_COL]
-        # Single-tree formulation (no filter/union split): any upstream
-        # Observation node must appear exactly once in the written plan,
-        # and this also keeps the batch to one pass. The discovery
-        # action's filter sits ABOVE the pipeline's CollectMetrics, so
-        # the observation still sees every row.
-        buckets = [
-            r[0]
-            for r in src.where(part_cond).select(BUCKET_COL).distinct().collect()
+        deltas = self._deltas(snap)
+        files = [
+            f for b in buckets
+            for f in snap.files.get(str(b), []) + deltas.get(str(b), [])
         ]
-        if not buckets:
+        if not files:
             return src.select(*proj)
-        tgt = self._read_snapshot(
-            snap, buckets=buckets, include_deleted=False, include_engine_cols=True
-        )
+        tgt = self._read_files(snap, files)
         sdict = {f.name: f.dataType for f in src.schema.fields}
         tdict = {f.name: f.dataType for f in tgt.schema.fields}
-        for c in all_payload:
-            if c not in tgt.columns:  # evolved cols absent from target
-                tgt = tgt.withColumn(c, F.lit(None).cast(sdict[c]))
-            elif tdict[c] != sdict[c]:  # type-widened this batch
-                tgt = tgt.withColumn(c, F.col(c).cast(sdict[c]))
-        cond = [F.col(f"s.{k}") == F.col(f"t.{k}") for k in key_cols]
-        s_part = F.coalesce(F.col("s._partial"), F.lit(False)) & (
-            F.col(f"s.{op_col}") != F.lit(OP_DELETE)
+        # the target image in the batch's types; columns the target
+        # lacks (evolved this batch) are null
+        image = [
+            (
+                F.lit(None).cast(sdict[c]) if c not in tdict
+                else F.col(c).cast(sdict[c]) if tdict[c] != sdict[c]
+                else F.col(c)
+            ).alias(c)
+            for c in all_payload
+        ]
+        s_cols = [*all_payload, seq_col, op_col, "_partial", BUCKET_COL]
+        rows = src.selectExpr(
+            *map(quote, key_cols), f"struct({', '.join(map(quote, s_cols))}) AS _s"
+        ).unionByName(
+            tgt.select(
+                *key_cols, F.struct(*image, "_deleted").alias("_t"), LAST_SEQ_COL
+            ),
+            allowMissingColumns=True,
+        )
+        upgrade = (
+            f"{_is_partial(op_col, '_s.')} AND _t IS NOT NULL "
+            "AND NOT coalesce(_t._deleted, false)"
         )
         return (
-            src.alias("s")
-            .join(tgt.alias("t"), cond, "left")
-            .select(
-                *[F.col(f"s.{k}").alias(k) for k in key_cols],
+            rows.groupBy(*key_cols)
+            # batch rows carry a null _t and _last_seq, which orders
+            # below every target row's: a key with no target row gets a
+            # null image
+            .agg(
+                F.expr("first(_s, true) AS _s"),
+                F.expr(f"{latest_by('_t', LAST_SEQ_COL)} AS _t"),
+            )
+            .where("_s IS NOT NULL")
+            .selectExpr(
+                *map(quote, key_cols),
                 *[
-                    F.when(
-                        s_part, F.coalesce(F.col(f"s.{c}"), F.col(f"t.{c}"))
-                    )
-                    .otherwise(F.col(f"s.{c}"))
-                    .alias(c)
-                    for c in all_payload
+                    f"CASE WHEN {upgrade} THEN coalesce(_s.{c}, _t.{c}) "
+                    f"ELSE _s.{c} END AS {c}"
+                    for c in map(quote, all_payload)
                 ],
-                F.col(f"s.{seq_col}").alias(seq_col),
-                F.col(f"s.{op_col}").alias(op_col),
-                F.col(f"s.{BUCKET_COL}").alias(BUCKET_COL),
+                *[f"_s.{c} AS {c}" for c in map(quote, (seq_col, op_col, BUCKET_COL))],
             )
         )
 
@@ -1401,8 +1456,10 @@ class LakeTable:
         """Write ``df`` for prospective ``version``; returns its new data
         files by bucket. The one write layout of every table write (mor
         delta append, cow rewrite, compaction): one shuffle,
-        ``repartition(n, bucket[, salt])``, sorted by key within files
-        for read locality.
+        ``repartition(n, bucket[, salt])``. Rows are not key-sorted
+        within files: the file writer sorts each task's rows on the
+        ``repo_bucket`` partition column, and a key sort before it would
+        be planned away.
 
         Width 1: one file per touched bucket, from
         ``n = min(len(touched), spark.sql.shuffle.partitions)`` tasks —
@@ -1431,7 +1488,6 @@ class LakeTable:
             parts.append(F.pmod(F.xxhash64(*map(F.col, key_cols)), F.lit(width)))
         (
             df.repartition(max(n, 1), *parts)
-            .sortWithinPartitions(*key_cols)
             .write.mode("overwrite")
             # content/commit columns are high-entropy — parquet dictionary
             # encoding only burns CPU before falling back (measured ~2.5s

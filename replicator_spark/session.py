@@ -48,6 +48,13 @@ def get_spark(
         .config("spark.sql.parquet.compression.codec", "snappy")
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "8g"))
+        # PySpark otherwise wraps every DataFrame/Column call in a
+        # call-site capture, at several JVM round trips per call. The
+        # cost of turning it off: Spark errors from any caller (CLI,
+        # streams, ops) no longer name the Python line that built the
+        # failing expression (no DataFrameQueryContext); ``extra_conf``
+        # may turn it back on when debugging
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)

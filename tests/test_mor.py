@@ -10,7 +10,7 @@ from replicator_spark.laketable import LakeTable
 from replicator_spark.model import REPOS_SCHEMA
 from replicator_spark.pipeline import replay_feed
 
-from .conftest import formatted_plan
+from .conftest import formatted_plan, spark_jobs
 from .oracle import content_sha, sequential_apply
 
 
@@ -480,22 +480,6 @@ def test_scans_launch_no_listing_job(spark, tmp_path):
     n_bucket = len(deltas[str(table.bucket_of("k1", snap))])
     assert n_bucket > 8 and n_all > 8, (n_bucket, n_all)
 
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
-
-    def stage_tasks(group, action):
-        sc.setLocalProperty("spark.jobGroup.id", group)
-        try:
-            action()
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        return [
-            tracker.getStageInfo(s).numTasks
-            for j in tracker.getJobIdsForGroup(group)
-            for s in tracker.getJobInfo(j).stageIds
-            if tracker.getStageInfo(s) is not None
-        ]
-
     prior = spark.conf.get(min_parts, None)
     spark.conf.set(LISTING_THRESHOLD, "4")
     spark.conf.set(min_parts, "1")
@@ -509,7 +493,8 @@ def test_scans_launch_no_listing_job(spark, tmp_path):
             "compact": (n_all, table.compact),
         }
         for name, (n_files, action) in scans.items():
-            tasks = stage_tasks(f"no-listing-{name}-{tmp_path.name}", action)
+            _, jobs = spark_jobs(spark, action)
+            tasks = [n for stages in jobs.values() for n in stages]
             assert tasks, name
             assert n_files not in tasks, (name, n_files, tasks)
         assert spark.conf.get(LISTING_THRESHOLD) == "4"
@@ -567,8 +552,6 @@ def test_empty_table_scans_launch_no_job(spark, tmp_path):
 
     table = LakeTable(spark, str(tmp_path / "t"))
     table.create(REPOS_SCHEMA, num_buckets=4)
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
     scans = {
         "read": table.read,
         "lookup": lambda: table.lookup("repo-0001", "a/b"),
@@ -576,10 +559,160 @@ def test_empty_table_scans_launch_no_job(spark, tmp_path):
         "read_metrics": lambda: M.read_metrics(spark, table.root),
     }
     for name, scan in scans.items():
-        group = f"empty-{name}-{tmp_path.name}"
-        sc.setLocalProperty("spark.jobGroup.id", group)
-        try:
-            assert scan().collect() == [], name
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        assert list(tracker.getJobIdsForGroup(group)) == [], name
+        rows, jobs = spark_jobs(spark, lambda: scan().collect())
+        assert rows == [], name
+        assert jobs == {}, name
+
+
+def test_lookup_runs_one_job(spark, tmp_path):
+    """A lookup resolves its one small bucket in a single task: the LWW
+    aggregate's child is one partition, so no exchange is planned and
+    the whole lookup is one Spark job (a shuffle made it two). A bucket
+    larger than ``openCostInBytes`` keeps the parallel scan and its
+    exchange."""
+    open_cost = "spark.sql.files.openCostInBytes"
+    table = _many_file_table(spark, str(tmp_path / "t"))
+    snap = table._snap()
+    assert len(table._deltas(snap)[str(table.bucket_of("k1", snap))]) >= 2
+    rows, jobs = spark_jobs(spark, lambda: table.lookup("k1").collect())
+    assert [(r["k"], r["val"]) for r in rows] == [("k1", "v3-1")]
+    assert len(jobs) == 1, jobs
+    assert "Exchange" not in formatted_plan(table.lookup("k1"), execute=True)
+
+    prior = spark.conf.get(open_cost, None)
+    spark.conf.set(open_cost, "1k")  # below the bucket's bytes
+    try:
+        rows, jobs = spark_jobs(spark, lambda: table.lookup("k1").collect())
+        assert "Exchange" in formatted_plan(table.lookup("k1"), execute=True)
+    finally:
+        if prior is None:
+            spark.conf.unset(open_cost)
+        else:
+            spark.conf.set(open_cost, prior)
+    assert [(r["k"], r["val"]) for r in rows] == [("k1", "v3-1")]
+    assert len(jobs) == 2, jobs
+
+
+RAW_SCHEMA = (
+    "event_id string, seq long, op string, "
+    "key struct<repo:string,path:string,commit:string>, doc string, "
+    "meta map<string,string>"
+)
+
+
+def test_partial_merge_runs_at_most_five_jobs(spark, tmp_path, monkeypatch):
+    """A partial-bearing mor batch onto a table with state: the buckets
+    holding partials are observed on the batch's checkpoint (no
+    discovery collect), and one aggregate upgrades the partials against
+    those buckets' files — at most 5 Spark jobs for the whole apply
+    (8 when the target was resolved, then joined)."""
+    from pyspark.sql import types as T
+
+    from replicator_spark.pipeline import apply_batch
+
+    payload = T.StructType(
+        [T.StructField("lang", T.StringType()), T.StructField("content", T.StringType())]
+    )
+    part = {"partial": "true"}
+    t = LakeTable(spark, str(tmp_path / "t"))
+    t.create(REPOS_SCHEMA, num_buckets=4)
+
+    def apply(rows, key):
+        return apply_batch(
+            t, spark.createDataFrame(rows, RAW_SCHEMA), key, payload,
+            mode="mor", partial_updates=True, write_metrics=False,
+        )
+
+    apply(
+        [
+            (f"e{i}", i, "insert", (f"r{i}", "p", "c"), f'{{"lang":"py","content":"v{i}"}}', {})
+            for i in range(8)
+        ],
+        "s-0",
+    )
+    collects = []
+    frame_cls = type(t.read())
+    orig_collect = frame_cls.collect
+
+    def counting_collect(self):
+        collects.append(self)
+        return orig_collect(self)
+
+    monkeypatch.setattr(frame_cls, "collect", counting_collect)
+    _, jobs = spark_jobs(
+        spark,
+        lambda: apply(
+            [
+                ("f0", 10, "update", ("r0", "p", "c"), '{"content":"w0"}', part),
+                ("f1", 11, "update", ("r1", "p", "c"), '{"lang":"go","content":"w1"}', {}),
+                ("f9", 12, "update", ("r9", "p", "c"), '{"content":"w9"}', part),
+            ],
+            "s-1",
+        ),
+    )
+    assert collects == []
+    assert len(jobs) <= 5, jobs
+    monkeypatch.undo()
+    rows = {r["repo"]: (r["lang"], r["content"]) for r in t.read().collect()}
+    assert rows["r0"] == ("py", "w0")  # partial: untouched lang kept
+    assert rows["r1"] == ("go", "w1")
+    assert rows["r9"] == (None, "w9")  # partial on an absent key
+    assert rows["r2"] == ("py", "v2")
+
+
+def test_empty_partial_batch_commits_cleanly(spark, tmp_path):
+    """An empty batch that carries a ``_partial`` column goes through the
+    checkpoint whose Observation names the partial rows' buckets: that
+    observation must materialize on zero rows (a hang or a raise there
+    would stall the stream), the merge must commit a zero-stat mor
+    snapshot, and the batch key must replay as a ledger no-op."""
+    import threading
+
+    t = LakeTable(spark, str(tmp_path / "t"))
+    t.create(REPOS_SCHEMA, num_buckets=4)
+    cols = (
+        "repo string, path string, commit string, content string, "
+        "seq long, op string, _partial boolean"
+    )
+    empty = spark.createDataFrame([], cols)
+    out = []
+    worker = threading.Thread(target=lambda: out.append(t.merge(empty, "e0", mode="mor")))
+    worker.start()
+    worker.join(timeout=300)
+    assert not worker.is_alive(), "merge of an empty partial batch hung"
+    (st,) = out
+    assert (st.applied, st.deleted, st.seq_hi, st.files_written) == (0, 0, None, [])
+    assert not st.replayed and st.version == 1
+    assert t.merge(empty, "e0", mode="mor").replayed
+    assert t._snap().version == 1
+    assert t.read().count() == 0
+
+
+def test_partial_upgrade_allows_any_payload_name(spark, tmp_path):
+    """Payload fields may take any name the pipeline does not reserve,
+    including ones that look like the upgrade's own working columns:
+    the partial upgrade carries each side as one struct, so nothing
+    collides and the upgrade keeps every untouched field."""
+    from pyspark.sql import types as T
+
+    from replicator_spark.pipeline import apply_batch
+
+    names = ["_b", "_s", "_t", "_top", "content"]
+    payload = T.StructType([T.StructField(n, T.StringType()) for n in names])
+    t = LakeTable(spark, str(tmp_path / "t"))
+    t.create(REPOS_SCHEMA, num_buckets=2)
+
+    def apply(rows, key):
+        return apply_batch(
+            t, spark.createDataFrame(rows, RAW_SCHEMA), key, payload,
+            mode="mor", partial_updates=True, write_metrics=False,
+        )
+
+    full = '{"_b":"b0","_s":"s0","_t":"t0","_top":"o0","content":"c0"}'
+    apply([("e0", 1, "insert", ("r0", "p", "c"), full, {})], "s-0")
+    apply(
+        [("e1", 2, "update", ("r0", "p", "c"), '{"_t":"t1"}', {"partial": "true"})],
+        "s-1",
+    )
+    (row,) = t.read().collect()
+    assert [row[n] for n in names] == ["b0", "s0", "t1", "o0", "c0"]

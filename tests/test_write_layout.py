@@ -12,6 +12,8 @@ from replicator_spark.model import REPOS_SCHEMA
 from replicator_spark.pipeline import replay_feed
 from replicator_spark.streaming import run_stream
 
+from .conftest import spark_jobs
+
 NUM_BUCKETS = 32
 
 
@@ -19,23 +21,13 @@ def _record_writes(spark, monkeypatch):
     """Wrap ``LakeTable._write_buckets`` so each call runs under its own
     job group; returns the list it fills with (touched buckets, task
     count of the write stage) per call."""
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
     orig = LakeTable._write_buckets
     calls = []
 
     def wrapped(self, df, *args, **kwargs):
-        group = f"write-{id(calls)}-{len(calls)}"
-        sc.setLocalProperty("spark.jobGroup.id", group)
-        try:
-            out = orig(self, df, *args, **kwargs)
-        finally:
-            sc.setLocalProperty("spark.jobGroup.id", None)
-        touched = list(args[1])
+        out, jobs = spark_jobs(spark, lambda: orig(self, df, *args, **kwargs))
         # the write job is the group's last; its result stage its last
-        job = tracker.getJobInfo(max(tracker.getJobIdsForGroup(group)))
-        tasks = tracker.getStageInfo(max(job.stageIds)).numTasks
-        calls.append((touched, tasks))
+        calls.append((list(args[1]), jobs[max(jobs)][-1]))
         return out
 
     monkeypatch.setattr(LakeTable, "_write_buckets", wrapped)
