@@ -37,7 +37,7 @@ class JobConfig:
     feed_dir: str
     table_root: str
     checkpoint_dir: str | None = None
-    mode: str = "mor"  # cow | mor
+    mode: str = "mor"  # the only merge mode; kept for saved configs
     streaming: bool = True
     num_buckets: int = 32
     files_per_bucket: int | str = "auto"
@@ -90,8 +90,12 @@ class JobConfig:
         errs = []
         if not self.name:
             errs.append("name is required")
-        if self.mode not in ("cow", "mor"):
-            errs.append(f"mode must be cow|mor, got {self.mode}")
+        from .pipeline import check_merge_mode
+
+        try:
+            check_merge_mode(self.mode)
+        except ValueError as e:
+            errs.append(str(e))
         if self.streaming and not self.checkpoint_dir:
             errs.append("streaming jobs require checkpoint_dir")
         if not self.feed_dir or not self.table_root:

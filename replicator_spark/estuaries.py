@@ -46,16 +46,13 @@ class Sink:
 
 
 class LakeSink(Sink):
-    def __init__(self, table: LakeTable, *, mode: str = "mor", **merge_kw):
+    def __init__(self, table: LakeTable, **merge_kw):
         self.table = table
-        self.mode = mode
         self.merge_kw = merge_kw
         self.name = f"lake:{table.root}"
 
     def write(self, prepared: DataFrame, batch_key: str) -> MergeStats:
-        return self.table.merge(
-            prepared, batch_key, mode=self.mode, **self.merge_kw
-        )
+        return self.table.merge(prepared, batch_key, **self.merge_kw)
 
 
 def _keyed_kv(prepared: DataFrame, num_partitions: int) -> DataFrame:

@@ -22,25 +22,20 @@ correctly rejected even across micro-batches — without them, LWW under
 out-of-order delivery silently resurrects deleted keys. ``read()``
 filters tombstones unless asked not to.
 
-Two MERGE strategies (mirroring Iceberg v2's copy-on-write vs
-merge-on-read — the decisive design choice for CDC at 10^10 events):
+One MERGE strategy, merge-on-read (Iceberg v2's equality deletes — the
+decisive design choice for CDC at 10^10 events): the LWW-deduped batch
+is appended as *delta* files per bucket (a delta row supersedes any
+older image of its key; a delete delta is a tombstone). Write cost is
+O(batch), so apply throughput is independent of table size — this is
+what survives a 100× scale-up. ``read()`` resolves base ∪ deltas with a
+per-key max-``_last_seq`` aggregation; ``compact()`` folds deltas back
+into base files when a bucket's delta chain crosses a threshold,
+bounding read amplification. The one write that reads table state is
+the partial-update upgrade (``merge``), which turns partial rows into
+full images against their buckets before the append.
 
-* **copy-on-write** (``mode='cow'``): one full-outer join of the batch
-  against the touched buckets, rewrite those buckets. Read-optimal
-  (base files only), but write cost is O(touched data) per batch — with
-  uniformly keyed batches every batch rewrites the whole table.
-* **merge-on-read** (``mode='mor'``, the high-throughput path): the
-  LWW-deduped batch is appended as *delta* files per bucket (equality-
-  delete semantics: a delta row supersedes any older image of its key;
-  a delete delta is a tombstone). Write cost is O(batch). ``read()``
-  resolves base ∪ deltas with a per-key max-``_last_seq`` aggregation;
-  ``compact()`` folds deltas back into base files when a bucket's delta
-  count crosses a threshold, bounding read amplification. Apply
-  throughput becomes independent of table size — this is what survives
-  a 100× scale-up.
-
-Both modes commit through the same atomic snapshot log and the same
-batch-key idempotence ledger; both support additive schema evolution
+Merges and compactions commit through the same atomic snapshot log and
+batch-key idempotence ledger. Merges support additive schema evolution
 (new payload columns widen the snapshot schema; older files read nulls)
 and type-WIDENING evolution (a column whose incoming type conflicts
 with the table's widens long/double → double, else → string; files keep
@@ -100,10 +95,9 @@ class MergeStats:
     batch_key: str
     version: int | None  # committed snapshot version (None if skipped replay)
     applied: int = 0
-    skipped_stale: int = 0  # cow: exact; mor: resolved lazily at compaction
+    skipped_stale: int = 0  # stale deltas are resolved at read/compaction
     deleted: int = 0
     schema_evolved: int = 0
-    mode: str = "cow"
     replayed: bool = False  # batch_key already committed → no-op
     seq_hi: int | None = None  # max source seq in the batch
     # the merge's own data files and their buckets (not auto-compaction's)
@@ -136,7 +130,7 @@ def bucket_expr(num_buckets: int, repo_col: str = "repo") -> F.Column:
 
 def _is_partial(op_col: str, row: str = "") -> str:
     """SQL predicate: a partial, non-delete row (``row`` prefixes the
-    struct the columns live in) — the rows a mor merge upgrades."""
+    struct the columns live in) — the rows a merge upgrades."""
     return f"coalesce({row}_partial, false) AND {row}{quote(op_col)} != '{OP_DELETE}'"
 
 
@@ -314,11 +308,11 @@ class LakeTable:
     ) -> DataFrame:
         """The one scan of a snapshot's data files: manifest paths → a
         DataFrame under the snapshot's physical schema. Every table read
-        (read, read_changes, lookup, compaction, the partial upgrade and
-        the cow target) comes through here, and the relation is planned
-        from the manifest's paths by ``_scan_parquet`` — no listing job
-        per scan. Files written before a type widening scan in their own
-        group and are cast to the current types."""
+        (read, read_changes, lookup, compaction and the partial upgrade)
+        comes through here, and the relation is planned from the
+        manifest's paths by ``_scan_parquet`` — no listing job per scan.
+        Files written before a type widening scan in their own group and
+        are cast to the current types."""
         phys = self._physical_schema(snap)
         if not files:
             return empty_frame(self.spark, phys)
@@ -607,7 +601,6 @@ class LakeTable:
         batch: DataFrame,
         batch_key: str,
         *,
-        mode: str = "cow",
         key_cols: Sequence[str] | None = None,
         seq_col: str = "seq",
         op_col: str = "op",
@@ -622,8 +615,8 @@ class LakeTable:
 
         ``batch`` columns: key cols + payload cols + seq + op, already
         LWW-deduped to ONE row per key (pipeline.apply_batch does that).
-        ``mode='mor'`` appends deltas and auto-compacts buckets whose
-        delta chain exceeds ``compact_after_deltas``.
+        The batch is appended as delta files; the table auto-compacts
+        once a delta chain reaches ``compact_after_deltas``.
         ``files_per_bucket`` is the write layout's salt width
         (``_write_buckets``).
 
@@ -648,21 +641,20 @@ class LakeTable:
         *untouched* and coalesce with the target row instead of nulling
         it; a partial update on a deleted/absent key upserts just its
         fields (tombstoned values are NOT resurrected). Without the
-        column, full-image replace semantics apply as before. In mor
-        mode partial rows are upgraded to full images at write time
+        column, full-image replace semantics apply as before. Partial
+        rows are upgraded to full images at write time
         (``_upgrade_partials``): one aggregate by key over the batch and
         the raw files of the buckets holding partials, which an
         Observation on the batch's checkpoint names (read cost
         O(those buckets), paid only by batches that contain partials;
-        the delta append stays O(batch)); in cow mode the coalesce rides
-        the existing full-outer join. Cross-batch reordering of partials
+        the delta append stays O(batch)). Cross-batch reordering of partials
         against deletes/full images of the same key is resolved by whole-
         row LWW, matching the reference's in-order apply loop.
         """
         snap = self._snap()
         done = cl.is_committed(snap, batch_key)
         if done is not None:
-            return MergeStats(batch_key, done, replayed=True, mode=mode)
+            return MergeStats(batch_key, done, replayed=True)
 
         table_keys = self.key_columns(snap)
         if key_cols is not None and list(key_cols) != table_keys:
@@ -728,54 +720,40 @@ class LakeTable:
             if c not in batch.columns:
                 src = src.withColumn(c, F.lit(None).cast(evolved_types[c]))
 
-        if mode == "mor":
-            # No pre-write bucket discovery needed: the partitioned delta
-            # write itself reveals which buckets were touched — one Spark
-            # job per micro-batch, total. (Partial batches are the
-            # exception: upgrading partials to full images needs the
-            # current state of their buckets.)
-            if has_partial:
-                # Materialize the batch ONCE, and learn the buckets that
-                # hold partial rows from an Observation on that same
-                # action: no discovery job. localCheckpoint, not persist:
-                # an eager checkpoint runs the whole plan, so upstream
-                # Observations fire with complete values — persist() + a
-                # filtered first action materializes the cache partially
-                # and corrupts the observation row.
-                found = Observation(f"partials-{batch_key}")
-                src = src.observe(
-                    found,
-                    F.expr(
-                        f"collect_set(CASE WHEN {_is_partial(op_col)} "
-                        f"THEN {BUCKET_COL} END) AS buckets"
-                    ),
-                ).localCheckpoint(eager=True)
-                src = self._upgrade_partials(
-                    snap, src, found.get["buckets"],
-                    key_cols, all_payload, seq_col, op_col,
-                )
-            stats, files, deltas, touched = self._merge_mor(
-                snap, src, batch_key, all_payload,
-                key_cols, seq_col, op_col, files_per_bucket,
+        # No pre-write bucket discovery needed: the partitioned delta
+        # write itself reveals which buckets were touched — one Spark
+        # job per micro-batch, total. (Partial batches are the
+        # exception: upgrading partials to full images needs the
+        # current state of their buckets.)
+        if has_partial:
+            # Materialize the batch ONCE, and learn the buckets that
+            # hold partial rows from an Observation on that same
+            # action: no discovery job. localCheckpoint, not persist:
+            # an eager checkpoint runs the whole plan, so upstream
+            # Observations fire with complete values — persist() + a
+            # filtered first action materializes the cache partially
+            # and corrupts the observation row.
+            found = Observation(f"partials-{batch_key}")
+            src = src.observe(
+                found,
+                F.expr(
+                    f"collect_set(CASE WHEN {_is_partial(op_col)} "
+                    f"THEN {BUCKET_COL} END) AS buckets"
+                ),
+            ).localCheckpoint(eager=True)
+            src = self._upgrade_partials(
+                snap, src, found.get["buckets"],
+                key_cols, all_payload, seq_col, op_col,
             )
-        else:
-            # Persist: src feeds touched-bucket discovery AND the merge
-            # join — without it the normalize+LWW pipeline executes twice.
-            src = src.persist()
-            try:
-                touched = [r[0] for r in src.select(BUCKET_COL).distinct().collect()]
-                stats, files, deltas, cow_tombstones = self._merge_cow(
-                    snap, src, batch_key, touched, all_payload, new_fields,
-                    key_cols, seq_col, op_col, files_per_bucket,
-                    type_changed=type_changed,
-                )
-            finally:
-                src.unpersist()
+        stats, deltas, touched = self._merge_mor(
+            snap, src, batch_key, all_payload,
+            key_cols, seq_col, op_col, files_per_bucket,
+        )
 
         if pre_commit_check is not None:
             pre_commit_check()
 
-        def _build(base, cur_files, cur_deltas):
+        def _build(base, cur_deltas):
             committed = dict(base.committed_batches)
             new_version = base.version + 1
             committed[batch_key] = new_version
@@ -790,22 +768,14 @@ class LakeTable:
                 sid = new_version
                 slog[str(sid)] = evolved_schema.json()
             file_stats, file_sids = self._next_file_meta(
-                base, cur_files, cur_deltas, sid
+                base, base.files, cur_deltas, sid
             )
-            # per-bucket tombstone stats describe BASE files only: mor
-            # appends deltas (base untouched → carry); cow rewrote its
-            # touched buckets and recorded their exact fresh stats
-            bucket_tombstones = dict(
-                (base.props or {}).get("bucket_tombstones", {})
-            )
-            if mode != "mor":
-                bucket_tombstones.update(cow_tombstones)
             return cl.Snapshot(
                 version=new_version,
                 parent=base.version,
                 schema_json=evolved_schema.json(),
                 num_buckets=nb,
-                files=cur_files,
+                files=dict(base.files),
                 committed_batches=committed,
                 props={
                     **(props or {}),
@@ -814,7 +784,11 @@ class LakeTable:
                     "max_seq": max_seq,
                     "schema_id": sid,
                     "schema_log": slog,
-                    "bucket_tombstones": bucket_tombstones,
+                    # per-bucket tombstone stats describe BASE files,
+                    # which a delta append leaves untouched
+                    "bucket_tombstones": dict(
+                        (base.props or {}).get("bucket_tombstones", {})
+                    ),
                 },
                 key_cols=base.key_cols,
                 ledger_floor=floor,
@@ -825,22 +799,22 @@ class LakeTable:
         # Commit with retry-with-rebase (VERDICT r04 #4): two streams
         # fanning into one table from separate drivers race the same
         # version; the loser's file-level work is still valid against
-        # the fresh snapshot in two cases, and then it is replayed as
-        # metadata instead of discarding the batch:
-        #  * a non-partial mor merge NEVER reads table state (the delta
+        # the fresh snapshot, and then it is replayed as metadata
+        # instead of discarding the batch:
+        #  * a merge without partials NEVER reads table state (the delta
         #    append is derived from the batch alone), so it rebases over
         #    ANY concurrent data commit — overlapping buckets included,
         #    which is the realistic fan-in shape since hash bucketing
         #    mixes every stream's keys into every bucket. LWW resolve
         #    is seq-ordered and commutative, so append order is free.
-        #  * cow rewrites, and mor merges that upgraded partial rows
-        #    (both READ the snapshot they started from), rebase only
-        #    when the winner's touched buckets are provably disjoint.
+        #  * a merge that upgraded partial rows READ the snapshot it
+        #    started from, so it rebases only when the winner left its
+        #    touched buckets alone.
         # A concurrent schema/shape change always keeps the loud error.
-        base, cur_files, cur_deltas = snap, files, deltas
+        base, cur_deltas = snap, deltas
         max_rebase = 8
         for attempt in range(max_rebase + 1):
-            nsnap = _build(base, cur_files, cur_deltas)
+            nsnap = _build(base, cur_deltas)
             try:
                 cl.commit_snapshot(self.root, nsnap)
                 break
@@ -856,30 +830,24 @@ class LakeTable:
                     # the concurrent writer WAS this batch (e.g. a
                     # crashed-and-restarted driver): exactly-once holds,
                     # our data files are unreferenced garbage for GC
-                    return MergeStats(batch_key, done, replayed=True, mode=mode)
+                    return MergeStats(batch_key, done, replayed=True)
                 if fresh.version <= base.version or attempt >= max_rebase:
                     # no committed progress to rebase onto (dangling
                     # mid-commit leftover) or pathological contention
                     raise
-                self._assert_rebase_safe(
-                    snap, fresh, touched, mode, has_partial
-                )
-                cur_files, cur_deltas = self._rebase_lists(
-                    fresh, files, deltas, touched, mode,
-                    orig=snap, has_partial=has_partial,
-                )
+                self._assert_rebase_safe(snap, fresh, touched, has_partial)
+                cur_deltas = self._rebase_deltas(snap, fresh, deltas, touched)
                 base = fresh
         stats.version = nsnap.version
         stats.schema_evolved = len(new_cols) + len(type_changed)
         stats.buckets = sorted(int(b) for b in touched)
-        if mode == "mor":
-            max_chain = max((len(v) for v in cur_deltas.values()), default=0)
-            if max_chain >= compact_after_deltas:
-                expire = None
-                max_seq = (nsnap.props or {}).get("max_seq")
-                if tombstone_retention is not None and max_seq is not None:
-                    expire = max_seq - tombstone_retention
-                self.compact(expire_tombstones_below_seq=expire)
+        max_chain = max((len(v) for v in cur_deltas.values()), default=0)
+        if max_chain >= compact_after_deltas:
+            expire = None
+            max_seq = (nsnap.props or {}).get("max_seq")
+            if tombstone_retention is not None and max_seq is not None:
+                expire = max_seq - tombstone_retention
+            self.compact(expire_tombstones_below_seq=expire)
         return stats
 
     def _wait_for_commit_progress(self, base_version: int, timeout_s: float = 2.0):
@@ -899,19 +867,16 @@ class LakeTable:
             fresh = self._snap()
         return fresh
 
-    def _assert_rebase_safe(
-        self, orig, fresh, touched, mode="cow", has_partial=False
-    ) -> None:
+    def _assert_rebase_safe(self, orig, fresh, touched, has_partial) -> None:
         """A concurrent commit is rebase-safe for this merge iff it
         changed no table shape (schema, schema log, bucket count, key
-        columns) and — for merges that READ the snapshot they started
-        from (cow rewrites, mor partial upgrades) — left our touched
-        buckets' file lists untouched. A non-partial mor merge skips
-        the bucket check entirely: its delta append is derived from the
-        batch alone, so it layers over any concurrent data commit.
-        Anything else re-raises the loud conflict — state-reading
-        overlapping merges must be replayed against current state, not
-        auto-merged."""
+        columns) and — for a merge that upgraded partial rows, so READ
+        the snapshot it started from — left our touched buckets' file
+        lists untouched. A merge without partials skips the bucket check
+        entirely: its delta append is derived from the batch alone, so
+        it layers over any concurrent data commit. Anything else
+        re-raises the loud conflict — overlapping state-reading merges
+        must be replayed against current state, not auto-merged."""
         if fresh.num_buckets != orig.num_buckets or fresh.key_cols != orig.key_cols:
             raise cl.CommitConflictError(
                 "concurrent table-shape change; cannot rebase this merge"
@@ -923,7 +888,7 @@ class LakeTable:
             raise cl.CommitConflictError(
                 "concurrent schema evolution; cannot rebase this merge"
             )
-        if mode == "mor" and not has_partial:
+        if not has_partial:
             return  # append-only: overlap is fine, no bucket check
         od, fd = self._deltas(orig), self._deltas(fresh)
         for b in touched:
@@ -935,48 +900,28 @@ class LakeTable:
                     "re-run against the current snapshot"
                 )
 
-    def _rebase_lists(
-        self, fresh, files, deltas, touched, mode, *, orig, has_partial=False
-    ):
-        """Re-derive (files, deltas) against the fresh snapshot.
-
-        Non-partial mor (append-only, overlap allowed): base files are
-        the winner's verbatim (mor never touches base), and each touched
-        bucket's delta chain is the WINNER's chain plus the delta files
+    def _rebase_deltas(self, orig, fresh, deltas, touched):
+        """Our delta chains re-derived against the fresh snapshot: the
+        WINNER's chains, plus, on each touched bucket, the delta files
         this merge wrote (ours = our list minus the orig snapshot's —
         LWW resolve is seq-ordered, so chain order between concurrent
-        writers is immaterial).
-
-        State-reading merges (cow; mor with partial upgrades —
-        disjointness proved by ``_assert_rebase_safe``): every untouched
-        bucket takes the winner's lists verbatim; our touched buckets
-        keep OUR lists (valid because the winner didn't move them: for
-        mor the shared base + our appended delta files, for cow our
-        rewritten base files)."""
-        tkeys = {str(b) for b in touched}
-        cur_files = dict(fresh.files)
+        writers is immaterial). Base files are the winner's verbatim: a
+        merge never touches base. For a merge that upgraded partials,
+        ``_assert_rebase_safe`` proved the winner left its touched
+        chains as they were, so this is exactly the chains it wrote."""
         cur_deltas = {b: list(v) for b, v in self._deltas(fresh).items()}
-        if mode == "mor" and not has_partial:
-            orig_deltas = self._deltas(orig)
-            for k in tkeys:
-                prev = set(orig_deltas.get(k, []))
-                ours = [f for f in deltas.get(k, []) if f not in prev]
-                if ours:
-                    cur_deltas[k] = cur_deltas.get(k, []) + ours
-            return cur_files, cur_deltas
-        for k in tkeys:
-            if k in files:
-                cur_files[k] = files[k]
-            if k in deltas:
-                cur_deltas[k] = deltas[k]
-            elif mode != "mor":
-                cur_deltas.pop(k, None)  # cow rewrite folds deltas in
-        return cur_files, cur_deltas
+        orig_deltas = self._deltas(orig)
+        for k in {str(b) for b in touched}:
+            prev = set(orig_deltas.get(k, []))
+            ours = [f for f in deltas.get(k, []) if f not in prev]
+            if ours:
+                cur_deltas[k] = cur_deltas.get(k, []) + ours
+        return cur_deltas
 
     def _upgrade_partials(
         self, snap, src, buckets, key_cols, all_payload, seq_col, op_col
     ) -> DataFrame:
-        """mor write-time upgrade: partial rows become full images by
+        """Write-time upgrade: partial rows become full images by
         coalescing with the *live* current image of their keys (a key
         whose latest image is a tombstone has none — a partial after a
         delete upserts only its own fields, never resurrecting
@@ -1046,124 +991,6 @@ class LakeTable:
             )
         )
 
-    def _merge_cow(
-        self, snap, src, batch_key, touched, all_payload, new_fields,
-        key_cols, seq_col, op_col, files_per_bucket,
-        type_changed=None,
-    ):
-        type_changed = type_changed or {}
-        tgt = self._read_snapshot(
-            snap, buckets=touched, include_deleted=True, include_engine_cols=True
-        )
-        for f_ in new_fields:
-            tgt = tgt.withColumn(f_.name, F.lit(None).cast(f_.dataType))
-        # target side of a type widening: cast so the merge projection's
-        # when/otherwise branches agree on type
-        for c, wt in type_changed.items():
-            tgt = tgt.withColumn(c, F.col(c).cast(wt))
-
-        s, t = src.alias("s"), tgt.alias("t")
-        cond = [F.col(f"s.{k}") == F.col(f"t.{k}") for k in key_cols]
-        j = t.join(s, cond, "full_outer")
-
-        win = F.col(f"s.{seq_col}").isNotNull() & (
-            F.col(f"t.{LAST_SEQ_COL}").isNull()
-            | (F.col(f"s.{seq_col}") > F.col(f"t.{LAST_SEQ_COL}"))
-        )
-        is_src = F.col(f"s.{seq_col}").isNotNull()
-        src_del = F.col(f"s.{op_col}") == OP_DELETE
-
-        obs = Observation(f"merge-{batch_key}")
-        j = j.observe(
-            obs,
-            F.sum(F.when(win, 1).otherwise(0)).alias("applied"),
-            F.sum(F.when(is_src & ~win, 1).otherwise(0)).alias("skipped_stale"),
-            F.sum(F.when(win & src_del, 1).otherwise(0)).alias("deleted"),
-            F.max(F.col(f"s.{seq_col}")).alias("seq_hi"),
-        )
-        proj = [F.coalesce(F.col(f"s.{k}"), F.col(f"t.{k}")).alias(k) for k in key_cols]
-        if "_partial" in src.columns:
-            # $set semantics: a winning partial row updates only its
-            # non-null columns; tombstoned target values never leak back
-            part = F.coalesce(F.col("s._partial"), F.lit(False)) & (
-                F.col(f"s.{op_col}") != F.lit(OP_DELETE)
-            )
-            t_dead = F.coalesce(F.col("t._deleted"), F.lit(False))
-            proj += [
-                F.when(win & part & ~t_dead, F.coalesce(F.col(f"s.{c}"), F.col(f"t.{c}")))
-                .when(win, F.col(f"s.{c}"))
-                .otherwise(F.col(f"t.{c}"))
-                .alias(c)
-                for c in all_payload
-            ]
-        else:
-            proj += [
-                F.when(win, F.col(f"s.{c}")).otherwise(F.col(f"t.{c}")).alias(c)
-                for c in all_payload
-            ]
-        proj += [
-            F.when(win, F.col(f"s.{seq_col}"))
-            .otherwise(F.col(f"t.{LAST_SEQ_COL}"))
-            .alias(LAST_SEQ_COL),
-            F.when(win, src_del)
-            .otherwise(F.coalesce(F.col("t._deleted"), F.lit(False)))
-            .alias("_deleted"),
-            F.coalesce(
-                F.col(f"s.{BUCKET_COL}"), bucket_expr(snap.num_buckets, f"t.{key_cols[0]}")
-            ).alias(BUCKET_COL),
-        ]
-        result = j.select(*proj)
-
-        new_files = self._write_buckets(
-            result, snap.version + 1, touched, key_cols, files_per_bucket
-        )
-        if new_files:
-            m = obs.get
-        else:
-            # empty micro-batch: zero write tasks ⇒ the CollectMetrics
-            # row never materialized (obs.get would raise). A non-empty
-            # batch always rewrites ≥1 row (the cow result keeps every
-            # existing row of its touched buckets), so no-files can
-            # only mean no input rows
-            m = {"applied": 0, "skipped_stale": 0, "deleted": 0, "seq_hi": None}
-
-        files = dict(snap.files)
-        deltas = dict(self._deltas(snap))
-        for b in touched:
-            files[str(b)] = new_files.get(str(b), [])
-            deltas.pop(str(b), None)  # cow rewrite folds deltas in
-        # exact per-bucket tombstone stats for the buckets just
-        # rewritten (VERDICT r03 #2: cow used to DROP these — a
-        # delete-heavy bucket that went cold in a cow table kept its
-        # tombstones forever). A cow rewrite IS the full new base
-        # content of its buckets, so the same column-pruned 3-column
-        # scan compaction uses yields exact counts, and a later
-        # expiry-compaction can target quiet cow buckets.
-        cow_tombstones: dict[str, list] = {str(b): [0, None] for b in touched}
-        # the scan is skippable when it provably can't find anything: no
-        # deletes in this batch AND every touched bucket's prior stats
-        # say tombstone-free (a missing prior entry means unknown — e.g.
-        # pre-upgrade snapshots — so scan). A batch with deletes, or a
-        # rewrite of a tombstone-bearing bucket (which may RESOLVE
-        # tombstones via higher-seq upserts), needs the exact recount.
-        prior = (snap.props or {}).get("bucket_tombstones", {})
-        need_scan = int(m["deleted"] or 0) > 0 or any(
-            str(b) not in prior or prior[str(b)][0] for b in touched
-        )
-        if need_scan:
-            cow_tombstones.update(self._tombstone_stats(new_files))
-        stats = MergeStats(
-            batch_key,
-            None,
-            applied=int(m["applied"] or 0),
-            skipped_stale=int(m["skipped_stale"] or 0),
-            deleted=int(m["deleted"] or 0),
-            mode="cow",
-            seq_hi=int(m["seq_hi"]) if m["seq_hi"] is not None else None,
-            files_written=[p for fs in new_files.values() for p in fs],
-        )
-        return stats, files, deltas, cow_tombstones
-
     def _merge_mor(
         self, snap, src, batch_key, all_payload,
         key_cols, seq_col, op_col, files_per_bucket,
@@ -1193,7 +1020,6 @@ class LakeTable:
             # always writes ≥1 file, so no-files ⇒ no-rows is safe
             m = {"applied": 0, "deleted": 0, "seq_hi": None}
 
-        files = dict(snap.files)
         deltas = {b: list(v) for b, v in self._deltas(snap).items()}
         for b, fs in new_files.items():
             deltas.setdefault(b, []).extend(fs)
@@ -1202,11 +1028,10 @@ class LakeTable:
             None,
             applied=int(m["applied"] or 0),
             deleted=int(m["deleted"] or 0),
-            mode="mor",
             seq_hi=int(m["seq_hi"]) if m["seq_hi"] is not None else None,
             files_written=[p for fs in new_files.values() for p in fs],
         )
-        return stats, files, deltas, sorted(int(b) for b in new_files)
+        return stats, deltas, sorted(int(b) for b in new_files)
 
     # -- compaction ----------------------------------------------------
     def compact(
@@ -1349,13 +1174,13 @@ class LakeTable:
     ) -> dict:
         """Expire old snapshots and garbage-collect every data file and
         manifest no retained snapshot references — without this, disk
-        grows O(history): cow rewrites and compactions strand their
-        superseded bucket files forever, and aborted commits leave
+        grows O(history): compactions strand their superseded bucket
+        files forever, and aborted commits leave
         orphan version dirs. Time travel remains available for the
         ``keep_last`` newest versions only (minimum 1 — the current
         snapshot is never expired).
 
-        Deletion is reference-based, not version-dir-based: a mor delta
+        Deletion is reference-based, not version-dir-based: a delta
         file written at v5 stays live while any retained snapshot still
         lists it. Paths are realpath-normalized on both sides of the
         comparison, so how the root was spelled at write vs GC time
@@ -1454,8 +1279,8 @@ class LakeTable:
         self, df: DataFrame, version: int, touched, key_cols, width: int
     ) -> dict[str, list[str]]:
         """Write ``df`` for prospective ``version``; returns its new data
-        files by bucket. The one write layout of every table write (mor
-        delta append, cow rewrite, compaction): one shuffle,
+        files by bucket. The one write layout of every table write
+        (delta append, compaction): one shuffle,
         ``repartition(n, bucket[, salt])``. Rows are not key-sorted
         within files: the file writer sorts each task's rows on the
         ``repo_bucket`` partition column, and a key sort before it would

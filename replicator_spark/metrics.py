@@ -103,19 +103,9 @@ def append_lineage(table_root: str, row: dict) -> None:
 
 
 def _iter_rows(dirpath: str):
-    """All rows, newest format and legacy alike: pre-upgrade tables
-    wrote one parquet part per batch — their history must not vanish
-    from the counters after the JSONL switch."""
     if not os.path.isdir(dirpath):
         return
-    names = sorted(os.listdir(dirpath))
-    pq_parts = [n for n in names if n.endswith(".parquet")]
-    if pq_parts:
-        import pyarrow.parquet as _pq
-
-        for n in pq_parts:
-            yield from _pq.read_table(os.path.join(dirpath, n)).to_pylist()
-    for name in names:
+    for name in sorted(os.listdir(dirpath)):
         if not name.endswith(".jsonl"):
             continue
         with open(os.path.join(dirpath, name)) as f:
@@ -128,28 +118,16 @@ def _iter_rows(dirpath: str):
 
 def _read(spark, dirpath: str, schema: T.StructType):
     names = sorted(os.listdir(dirpath)) if os.path.isdir(dirpath) else []
-    jsonl = [n for n in names if n.endswith(".jsonl")]
-    legacy = [n for n in names if n.endswith(".parquet")]
-    parts = []
-    if jsonl:
-        # DROPMALFORMED: a crash mid-append can leave one torn tail line
-        parts.append(
-            spark.read.schema(schema)
-            .option("mode", "DROPMALFORMED")
-            .json(os.path.join(dirpath, "*.jsonl"))
-        )
-    if legacy:  # pre-upgrade parquet parts
-        parts.append(
-            spark.read.schema(schema).parquet(
-                *[os.path.join(dirpath, n) for n in legacy]
-            )
-        )
-    if not parts:  # empty or legacy-only-just-created dir
+    paths = [os.path.join(dirpath, n) for n in names if n.endswith(".jsonl")]
+    if not paths:
         return empty_frame(spark, schema)
-    out = parts[0]
-    for p_ in parts[1:]:
-        out = out.unionByName(p_)
-    return out
+    # the listed paths, not a `*.jsonl` glob: Spark stats a lone path
+    # for a streaming-sink metadata dir, and a glob fails that stat with
+    # a logged stack trace on every read. DROPMALFORMED: a crash
+    # mid-append can leave one torn tail line
+    return (
+        spark.read.schema(schema).option("mode", "DROPMALFORMED").json(paths)
+    )
 
 
 def read_metrics(spark, table_root: str):

@@ -176,7 +176,7 @@ class MinHashIndex:
             F.col("doc_id").alias("seq"),
             F.lit("upsert").alias("op"),
         )
-        self.table.merge(batch, batch_key, mode="mor")
+        self.table.merge(batch, batch_key)
         return self._candidates(entries)
 
     def _candidates(self, entries: DataFrame) -> DataFrame:

@@ -262,7 +262,6 @@ class EmbeddingIndex:
                 F.col("vec_id").alias("seq"), F.lit("upsert").alias("op"),
             ),
             batch_key,
-            mode="mor",
         )
         rk_cols = [f"rk{r + 1}" for r in range(N_REFINE)]
         self.bands.merge(
@@ -271,7 +270,6 @@ class EmbeddingIndex:
                 F.col("vec_id").alias("seq"), F.lit("upsert").alias("op"),
             ),
             batch_key,
-            mode="mor",
         )
         return self._verified_pairs(prepared)
 

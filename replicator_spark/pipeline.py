@@ -307,13 +307,23 @@ def auto_files_per_bucket(
                         target_task_bytes=target_task_bytes, cap=cap)
 
 
+def check_merge_mode(mode: str) -> None:
+    """Every merge appends deltas (merge-on-read). ``mode`` stays on the
+    entry points only so saved job configs and callers passing ``"mor"``
+    keep working; any other value is refused before any work."""
+    if mode != "mor":
+        raise ValueError(
+            f"mode must be 'mor', got {mode!r} (copy-on-write was removed)"
+        )
+
+
 def apply_batch(
     table: LakeTable,
     raw_batch: DataFrame,
     batch_key: str,
     payload_schema: T.StructType | None = None,
     *,
-    mode: str = "cow",
+    mode: str = "mor",
     transform_engine=None,
     event_filter=None,
     files_per_bucket: int | str = "auto",
@@ -332,6 +342,8 @@ def apply_batch(
     fields (partial-aware intra-batch collapse + per-column coalescing
     MERGE; see laketable.merge). Leave False on feeds that never emit
     partials — it skips the heavier per-column collapse.
+
+    ``mode`` must be ``"mor"`` (``check_merge_mode``).
 
     ``transform_engine`` (transform.TransformEngine) runs between
     normalize and dedup with event_id/seq/op/key columns protected
@@ -353,6 +365,7 @@ def apply_batch(
     All counters ride the single MERGE action via Observations — no
     extra passes over the batch.
     """
+    check_merge_mode(mode)
     t0 = time.time()
     if event_filter is not None:
         # on the RAW feed, before normalize: the scalar clauses (op /
@@ -415,7 +428,6 @@ def apply_batch(
             stats = table.merge(
                 prepared,
                 batch_key,
-                mode=mode,
                 files_per_bucket=files_per_bucket,
                 compact_after_deltas=compact_after_deltas,
                 pre_commit_check=_check if detect else None,
@@ -508,7 +520,7 @@ def replay_feed(
     *,
     payload_schema: T.StructType | None = None,
     batches: list[int] | None = None,
-    mode: str = "cow",
+    mode: str = "mor",
     files_per_bucket: int | str = "auto",
     compact_after_deltas: int = 8,
     write_metrics: bool = True,
@@ -541,9 +553,12 @@ def replay_feed(
 
     ``qos`` (qos.QoS): retry-with-backoff + circuit breaker around each
     batch apply — safe because a failed merge commits nothing and a
-    retried committed batch is a ledger no-op."""
+    retried committed batch is a ledger no-op.
+
+    ``mode`` must be ``"mor"`` (``check_merge_mode``)."""
     from . import lifecycle
 
+    check_merge_mode(mode)
     tracker = SchemaTracker() if payload_schema is None else None
     if batches is None:
         batches = sorted(
@@ -563,7 +578,6 @@ def replay_feed(
                 bdf,
                 batch_key=f"{stream_name}-{b}",
                 payload_schema=payload_schema,
-                mode=mode,
                 files_per_bucket=files_per_bucket,
                 compact_after_deltas=compact_after_deltas,
                 write_metrics=write_metrics,

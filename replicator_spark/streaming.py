@@ -32,7 +32,7 @@ from pyspark.sql import types as T
 
 from .laketable import LakeTable, layout_width
 from .model import CHANGE_SCHEMA
-from .pipeline import apply_batch
+from .pipeline import apply_batch, check_merge_mode
 
 
 # current query generation per (table_root, stream_name): a restarted
@@ -111,7 +111,7 @@ def run_stream(
     max_files_per_trigger: int | None = None,
     available_now: bool = True,
     stream_name: str = "cdc",
-    mode: str = "cow",
+    mode: str = "mor",
     files_per_bucket: int | str = "auto",
     partial_updates: bool = False,
     tombstone_retention: int | None = None,
@@ -130,7 +130,10 @@ def run_stream(
     ``files_per_bucket``: the write layout's salt width; "auto" sizes it
     once, at start, from the largest trigger the feed can hold now
     (``trigger_files_per_bucket``); an int fixes it.
+
+    ``mode`` must be ``"mor"`` (``check_merge_mode``).
     """
+    check_merge_mode(mode)
     max_files = max_files_per_trigger or 16
     if files_per_bucket == "auto":
         files_per_bucket = trigger_files_per_bucket(feed_dir, max_files)
@@ -171,7 +174,6 @@ def run_stream(
                 batch_df,
                 batch_key=f"{stream_name}-{batch_id}",
                 payload_schema=payload_schema,
-                mode=mode,
                 files_per_bucket=files_per_bucket,
                 schema_tracker=tracker,
                 partial_updates=partial_updates,

@@ -262,7 +262,7 @@ def test_streaming_binlog_wire_replication_exactly_once(spark, tmp_path):
                 "seq",
                 "op",
             )
-            st = table.merge(batch, f"binlog-{epoch_id}", mode="mor",
+            st = table.merge(batch, f"binlog-{epoch_id}",
                              key_cols=("id",))
             applied_keys.append((st.batch_key, st.applied, st.replayed))
 

@@ -379,7 +379,7 @@ def test_config_backup_restore_roundtrip(tmp_path, capsys):
 
     assert main(["config-backup", "--config", str(src), "--table-root", root]) == 0
     bid1 = _json.loads(capsys.readouterr().out)["backup_id"]
-    cfg["mode"] = "cow"
+    cfg["num_buckets"] = 8
     src.write_text(_json.dumps(cfg))
     assert main(["config-backup", "--config", str(src), "--table-root", root]) == 0
     capsys.readouterr()
@@ -388,12 +388,12 @@ def test_config_backup_restore_roundtrip(tmp_path, capsys):
     # newest by default
     assert main(["config-restore", "--table-root", root, "--out", str(out)]) == 0
     capsys.readouterr()
-    assert _json.loads(out.read_text())["mode"] == "cow"
-    # by id → the first backup (default mode mor)
+    assert _json.loads(out.read_text())["num_buckets"] == 8
+    # by id → the first backup (default num_buckets 32)
     assert main(["config-restore", "--table-root", root, "--out", str(out),
                  "--backup-id", bid1]) == 0
     capsys.readouterr()
-    assert _json.loads(out.read_text())["mode"] == "mor"
+    assert _json.loads(out.read_text())["num_buckets"] == 32
     # list
     assert main(["config-restore", "--table-root", root, "--out", str(out),
                  "--list"]) == 0
@@ -433,53 +433,20 @@ def test_metrics_torn_tail_is_repaired_on_next_append(tmp_path):
     assert keys == ["s-0", "s-1"]  # torn row lost, next row intact
 
 
-def test_metrics_legacy_parquet_history_still_counted(spark, tmp_path):
-    """Pre-upgrade tables wrote one parquet part per batch — their
-    counters must survive the JSONL switch."""
+def test_metrics_reader_reads_rolled_segments(spark, tmp_path, monkeypatch):
+    """The reader scans every rolled segment plus the live log, and a
+    table with no metrics dir at all reads empty."""
     import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
 
     from replicator_spark import metrics as M
 
+    monkeypatch.setattr(M, "ROLL_BYTES", 512)
     root = str(tmp_path / "t")
-    d = os.path.join(root, "_metrics")
-    os.makedirs(d)
-    legacy = pa.Table.from_pylist(
-        [{"batch_key": "old-0", "received": 100, "applied": 90,
-          "skipped_stale": 10, "deduped": 0, "deleted": 0, "ts_ms": 1}]
-    )
-    pq.write_table(legacy, os.path.join(d, "part-1-old-0.parquet"))
-    M.append_metrics(root, {"batch_key": "new-0", "received": 50,
-                            "applied": 50, "skipped_stale": 0,
-                            "deduped": 0, "deleted": 0})
-    text = M.to_prometheus_text(root)
-    assert "replicator_received_records_total 150" in text
-    assert "replicator_batches_total 2" in text
-    assert M.read_metrics(spark, root).count() == 2
-
-
-def test_metrics_legacy_only_dir_reads_clean(spark, tmp_path):
-    """A pre-upgrade table with ONLY parquet metrics (no .jsonl yet)
-    must read, not crash with PATH_NOT_FOUND."""
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from replicator_spark import metrics as M
-
-    root = str(tmp_path / "t")
-    d = os.path.join(root, "_metrics")
-    os.makedirs(d)
-    pq.write_table(
-        pa.Table.from_pylist([{"batch_key": "old-0", "received": 7}]),
-        os.path.join(d, "part-1.parquet"),
-    )
-    assert M.read_metrics(spark, root).count() == 1
-    assert "replicator_received_records_total 7" in M.to_prometheus_text(root)
-    # and a table with NO metrics dir at all reads empty
+    for i in range(20):
+        M.append_metrics(root, {"batch_key": f"s-{i}", "received": 1})
+    assert len(os.listdir(os.path.join(root, "_metrics"))) > 2
+    assert M.read_metrics(spark, root).count() == 20
+    assert "replicator_received_records_total 20" in M.to_prometheus_text(root)
     assert M.read_metrics(spark, str(tmp_path / "none")).count() == 0
 
 

@@ -65,13 +65,13 @@ def test_metadata_bounded_over_many_commits(spark, tmp_path):
     t.create(REPOS_SCHEMA, num_buckets=4)
     n = 40
     for i in range(n):
-        t.merge(_tiny_batch(spark, i), f"s-{i}", mode="mor", ledger_keep=8)
+        t.merge(_tiny_batch(spark, i), f"s-{i}", ledger_keep=8)
 
     # ledger bounded by keep (+ compaction snapshots don't add keys)
     assert len(t.committed_batches()) <= 8
     # evicted batches are still exactly-once
     assert t.is_committed("s-0") is not None
-    res = t.merge(_tiny_batch(spark, 0), "s-0", mode="mor", ledger_keep=8)
+    res = t.merge(_tiny_batch(spark, 0), "s-0", ledger_keep=8)
     assert res.replayed
     # all rows still live (no data lost to retention/compaction)
     assert t.read().count() == n
@@ -108,7 +108,7 @@ def _disk_files(root):
 
 
 def test_expire_snapshots_gc_bounds_disk(spark, tmp_path):
-    """Without expiry, cow rewrites/compactions strand superseded files
+    """Without expiry, compactions strand superseded files
     forever. expire_snapshots deletes everything no retained snapshot
     references (incl. aborted-commit orphans), keeps time travel for the
     retained window, and leaves reads + exactly-once intact."""
@@ -117,7 +117,7 @@ def test_expire_snapshots_gc_bounds_disk(spark, tmp_path):
     n = 14
     for i in range(n):
         # compaction every 4 deltas → plenty of superseded files
-        t.merge(_tiny_batch(spark, i), f"s-{i}", mode="mor", compact_after_deltas=4)
+        t.merge(_tiny_batch(spark, i), f"s-{i}", compact_after_deltas=4)
     # plant an aborted-commit orphan dir
     orphan_dir = os.path.join(t.root, "data", "v9999", "repo_bucket=0")
     os.makedirs(orphan_dir)
@@ -159,9 +159,9 @@ def test_expire_snapshots_gc_bounds_disk(spark, tmp_path):
         t.read_changes(1)
     assert t.read_changes(since_seq=n - 3).count() == 2
     # exactly-once unaffected (ledger rides every snapshot)
-    assert t.merge(_tiny_batch(spark, 0), "s-0", mode="mor").replayed
+    assert t.merge(_tiny_batch(spark, 0), "s-0").replayed
     # and the table still accepts new merges after GC
-    t.merge(_tiny_batch(spark, n), f"s-{n}", mode="mor")
+    t.merge(_tiny_batch(spark, n), f"s-{n}")
     assert t.read().count() == n + 1
     # keep_last=0 never expires the current snapshot
     t.expire_snapshots(keep_last=0, min_age_s=0)
@@ -177,7 +177,7 @@ def test_expire_dangling_snapshot_does_not_occupy_keep_slot(spark, tmp_path):
     t = LakeTable(spark, str(tmp_path / "t"))
     t.create(REPOS_SCHEMA, num_buckets=2)
     for i in range(6):
-        t.merge(_tiny_batch(spark, i), f"s-{i}", mode="mor")
+        t.merge(_tiny_batch(spark, i), f"s-{i}")
     current = t._snap().version  # 6
     # torn commit: snapshot json written, hint never swapped
     snap = t._snap()
@@ -266,7 +266,7 @@ def test_compact_retries_on_conflicting_ingest_commit(spark, tmp_path, monkeypat
     t = LakeTable(spark, str(tmp_path / "t"))
     t.create(REPOS_SCHEMA, num_buckets=2)
     for i in range(6):
-        t.merge(_tiny_batch(spark, i), f"s-{i}", mode="mor")
+        t.merge(_tiny_batch(spark, i), f"s-{i}")
     v_before = t._snap().version
 
     orig = cl.commit_snapshot
@@ -275,7 +275,7 @@ def test_compact_retries_on_conflicting_ingest_commit(spark, tmp_path, monkeypat
     def racy(root, snap):
         if not state["raced"] and (snap.props or {}).get("compaction"):
             state["raced"] = True
-            t.merge(_tiny_batch(spark, 99), "s-99", mode="mor")
+            t.merge(_tiny_batch(spark, 99), "s-99")
         return orig(root, snap)
 
     monkeypatch.setattr(cl, "commit_snapshot", racy)
@@ -287,7 +287,7 @@ def test_compact_retries_on_conflicting_ingest_commit(spark, tmp_path, monkeypat
     assert t._snap().version == v_before + 2  # merge + retried compact
     assert not any((t._snap().props or {}).get("deltas", {}).values())
     # exactly-once intact across the conflict/retry
-    assert t.merge(_tiny_batch(spark, 99), "s-99", mode="mor").replayed
+    assert t.merge(_tiny_batch(spark, 99), "s-99").replayed
 
 
 def test_expire_spares_young_dangling_snapshot(spark, tmp_path):
@@ -298,7 +298,7 @@ def test_expire_spares_young_dangling_snapshot(spark, tmp_path):
     t = LakeTable(spark, str(tmp_path / "t"))
     t.create(REPOS_SCHEMA, num_buckets=2)
     for i in range(3):
-        t.merge(_tiny_batch(spark, i), f"s-{i}", mode="mor")
+        t.merge(_tiny_batch(spark, i), f"s-{i}")
     current = t._snap().version
     p = os.path.join(cl.meta_dir(t.root), f"v{current + 1}.json")
     cl._atomic_write(

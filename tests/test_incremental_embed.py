@@ -98,7 +98,6 @@ def test_vectors_committed_bands_not_recovers(spark, planted, tmp_path):
             "vec_id", "v", F.col("vec_id").alias("seq"), F.lit("upsert").alias("op")
         ),
         "b0",
-        mode="mor",
     )
     assert idx.bands.is_committed("b0") is None
     pairs = idx.add_batch(planted, "b0")

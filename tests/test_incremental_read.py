@@ -65,7 +65,7 @@ def test_chained_replication_converges(spark, tmp_path):
             F.when(F.col("_deleted"), F.lit("delete")).otherwise(F.lit("update")).alias("op"),
             F.concat(F.lit("sync"), F.col("_last_seq").cast("string")).alias("event_id"),
         )
-        b.merge(batch, batch_key, mode="mor")
+        b.merge(batch, batch_key)
 
     replay_feed(spark, feed, a, batches=[0, 1], mode="mor", write_metrics=False)
     v1 = a._snap().version
@@ -192,7 +192,7 @@ def test_three_hop_chain_survives_snapshot_expiry(spark, tmp_path):
             .alias("op"),
             F.concat(F.lit("s"), F.col("_last_seq").cast("string")).alias("event_id"),
         )
-        dst.merge(batch, batch_key, mode="mor")
+        dst.merge(batch, batch_key)
         return src._snap().props["max_seq"]
 
     wm_ab = wm_bc = -1

@@ -1,5 +1,5 @@
 """Merge-on-read path: delta-append MERGE + compaction must produce the
-same final state as copy-on-write and as the sequential oracle."""
+same final state as the sequential oracle."""
 
 import hashlib
 
@@ -61,17 +61,6 @@ def test_mor_auto_compaction_kicks_in(spark, feed, tmp_path):
     replay_feed(spark, feed, table, mode="mor", compact_after_deltas=2)
     deltas = table._snap().props.get("deltas", {})
     assert max((len(v) for v in deltas.values()), default=0) < 3
-    events = [r.asDict(recursive=True) for r in spark.read.parquet(feed).collect()]
-    assert _sha_state(table) == content_sha(sequential_apply(events))
-
-
-def test_mixed_mor_then_cow(spark, feed, tmp_path):
-    """A cow merge over a table with pending deltas must fold them in."""
-    table = LakeTable(spark, str(tmp_path / "t"))
-    table.create(REPOS_SCHEMA, num_buckets=8)
-    replay_feed(spark, feed, table, batches=[0, 1, 2], mode="mor", compact_after_deltas=100)
-    replay_feed(spark, feed, table, batches=[3, 4], mode="cow")
-    assert not any(v for v in table._snap().props.get("deltas", {}).values())
     events = [r.asDict(recursive=True) for r in spark.read.parquet(feed).collect()]
     assert _sha_state(table) == content_sha(sequential_apply(events))
 
@@ -176,9 +165,9 @@ def test_tombstone_expiry_bounded_under_retention(spark, tmp_path):
     # insert then delete each key; retention window = 10 seqs
     n = 24
     for i in range(0, n, 2):
-        t.merge(batch(i, i, "insert"), f"s-{i}", mode="mor",
+        t.merge(batch(i, i, "insert"), f"s-{i}",
                 compact_after_deltas=4, tombstone_retention=10)
-        t.merge(batch(i, i + 1, "delete"), f"s-{i+1}", mode="mor",
+        t.merge(batch(i, i + 1, "delete"), f"s-{i+1}",
                 compact_after_deltas=4, tombstone_retention=10)
 
     # every key deleted
@@ -217,8 +206,8 @@ def test_tombstone_expiry_reaches_quiet_buckets(spark, tmp_path):
 
     # bucket A (repo 'cold'): insert then delete, then goes quiet
     table.merge(batch([row("cold", "p1", 1, "insert"),
-                       row("cold", "p2", 2, "insert")]), "s-0", mode="mor")
-    table.merge(batch([row("cold", "p1", 3, "delete")]), "s-1", mode="mor")
+                       row("cold", "p2", 2, "insert")]), "s-0")
+    table.merge(batch([row("cold", "p1", 3, "delete")]), "s-1")
     table.compact()  # folds cold's tombstone into its base file
     snap = table._snap()
     bt = snap.props["bucket_tombstones"]
@@ -227,8 +216,7 @@ def test_tombstone_expiry_reaches_quiet_buckets(spark, tmp_path):
 
     # hot traffic elsewhere only; cold bucket's chain stays empty
     for i in range(4, 10):
-        table.merge(batch([row("hot", f"q{i}", i, "insert")]), f"s-{i}",
-                    mode="mor")
+        table.merge(batch([row("hot", f"q{i}", i, "insert")]), f"s-{i}")
 
     dead = table.read(include_deleted=True, include_engine_cols=True).where(
         "_deleted")
@@ -249,13 +237,11 @@ def test_tombstone_expiry_reaches_quiet_buckets(spark, tmp_path):
     assert table._snap().version == v
 
 
-def test_tombstone_expiry_reaches_quiet_cow_buckets(spark, tmp_path):
-    """VERDICT r03 #2: the quiet-bucket fix covered mor only — cow
-    merges dropped the touched buckets' tombstone stats ('conservative')
-    and compact() never saw cow buckets, so a delete-heavy bucket going
-    cold in a COW table retained its tombstones forever. Cow merges now
-    record exact per-bucket stats from the files they just wrote, and an
-    expiry compaction reaches the quiet cow bucket."""
+def test_expiry_in_delta_fold_never_resurrects(spark, tmp_path):
+    """The delta-fold twin of the quiet-bucket never-resurrect test: an
+    expiry compaction that folds the tombstone's own delta chain keeps a
+    tombstone at/above the watermark, so an in-window straggler is still
+    rejected."""
     from pyspark.sql import Row
 
     table = LakeTable(spark, str(tmp_path / "t"))
@@ -268,61 +254,14 @@ def test_tombstone_expiry_reaches_quiet_cow_buckets(spark, tmp_path):
         return dict(repo=repo, path=path, commit="c", lang="py",
                     content=f"v{seq}", seq=seq, op=op, event_id=f"e{seq}")
 
-    # bucket A (repo 'cold'): insert then delete via COW, then goes quiet
-    table.merge(batch([row("cold", "p1", 1, "insert"),
-                       row("cold", "p2", 2, "insert")]), "s-0", mode="cow")
-    table.merge(batch([row("cold", "p1", 3, "delete")]), "s-1", mode="cow")
-    bt = table._snap().props["bucket_tombstones"]
-    assert any(n for n, _ in bt.values()), "cow merge must record the tombstone"
-
-    # hot traffic elsewhere only; the cold bucket receives nothing more
-    for i in range(4, 10):
-        table.merge(batch([row("hot", f"q{i}", i, "insert")]), f"s-{i}",
-                    mode="cow")
-    bt = table._snap().props["bucket_tombstones"]
-    assert any(n for n, _ in bt.values())  # stats survive unrelated merges
-    dead = table.read(include_deleted=True, include_engine_cols=True).where(
-        "_deleted")
-    assert dead.count() == 1
-
-    # retention passed → maintenance expiry must reach the quiet cow
-    # bucket (no delta chains exist anywhere on a cow table)
-    live_before = {(r["repo"], r["path"]) for r in table.read().collect()}
-    table.compact(expire_tombstones_below_seq=4)
-    assert table.read(include_deleted=True, include_engine_cols=True).where(
-        "_deleted").count() == 0
-    assert {(r["repo"], r["path"]) for r in table.read().collect()} == live_before
-    # stats now clean → further expiry is a version no-op
-    v = table._snap().version
-    assert not any(n for n, _ in table._snap().props["bucket_tombstones"].values())
-    table.compact(expire_tombstones_below_seq=10**9)
-    assert table._snap().version == v
-
-
-def test_cow_expiry_below_watermark_keeps_tombstone(spark, tmp_path):
-    """Cow twin of the mor never-resurrect test: a tombstone at/above
-    the expiry watermark survives the cow-bucket expiry pass, so an
-    in-window straggler is still rejected."""
-    from pyspark.sql import Row
-
-    table = LakeTable(spark, str(tmp_path / "t"))
-    table.create(REPOS_SCHEMA, num_buckets=4)
-
-    def batch(rows):
-        return spark.createDataFrame([Row(**r) for r in rows])
-
-    def row(repo, path, seq, op):
-        return dict(repo=repo, path=path, commit="c", lang="py",
-                    content=f"v{seq}", seq=seq, op=op, event_id=f"e{seq}")
-
-    table.merge(batch([row("a", "p", 1, "insert")]), "s-0", mode="cow")
-    table.merge(batch([row("a", "p", 5, "delete")]), "s-1", mode="cow")
-    # watermark below the tombstone: the stats-driven pass keeps it
+    table.merge(batch([row("a", "p", 1, "insert")]), "s-0")
+    table.merge(batch([row("a", "p", 5, "delete")]), "s-1")
+    # watermark below the tombstone: the fold keeps it
     table.compact(expire_tombstones_below_seq=3)
     assert table.read(include_deleted=True, include_engine_cols=True).where(
         "_deleted").count() == 1
     # straggler update with seq 2 arrives late → still rejected
-    table.merge(batch([row("a", "p", 2, "update")]), "s-2", mode="cow")
+    table.merge(batch([row("a", "p", 2, "update")]), "s-2")
     assert table.read().where("repo = 'a'").count() == 0
 
 
@@ -342,21 +281,21 @@ def test_quiet_bucket_expiry_never_resurrects(spark, tmp_path):
         return dict(repo=repo, path=path, commit="c", lang="py",
                     content=f"v{seq}", seq=seq, op=op, event_id=f"e{seq}")
 
-    table.merge(batch([row("a", "p", 1, "insert")]), "s-0", mode="mor")
-    table.merge(batch([row("a", "p", 5, "delete")]), "s-1", mode="mor")
+    table.merge(batch([row("a", "p", 1, "insert")]), "s-0")
+    table.merge(batch([row("a", "p", 5, "delete")]), "s-1")
     table.compact()
     # watermark below the tombstone: expiry keeps it
     table.compact(expire_tombstones_below_seq=3)
     assert table.read(include_deleted=True, include_engine_cols=True).where(
         "_deleted").count() == 1
     # straggler update with seq 2 arrives late → still rejected
-    table.merge(batch([row("a", "p", 2, "update")]), "s-2", mode="mor")
+    table.merge(batch([row("a", "p", 2, "update")]), "s-2")
     assert table.read().where("repo = 'a'").count() == 0
 
 
 def test_empty_batch_merge_commits_cleanly(spark, tmp_path):
     """An empty micro-batch (a fully-filtered feed batch is legal) must
-    commit as a zero-stat snapshot in BOTH modes — the write runs zero
+    commit as a zero-stat snapshot — the write runs zero
     tasks, so its CollectMetrics row never materializes and a naive
     obs.get raises — and the committed batch_key must replay as a
     ledger no-op."""
@@ -368,17 +307,16 @@ def test_empty_batch_merge_commits_cleanly(spark, tmp_path):
         "content_sha string, seq long, op string"
     )
     empty = spark.createDataFrame([], cols)
-    for i, mode in enumerate(("mor", "cow")):
-        st = t.merge(empty, f"e{i}", mode=mode)
-        assert (st.applied, st.deleted, st.seq_hi) == (0, 0, None), mode
-        assert not st.replayed
-    assert t.merge(empty, "e0", mode="mor").replayed
+    st = t.merge(empty, "e0")
+    assert (st.applied, st.deleted, st.seq_hi) == (0, 0, None)
+    assert not st.replayed
+    assert t.merge(empty, "e0").replayed
     # the ledger advanced but no data files exist; a real batch after
     # the empties applies normally
     ne = spark.createDataFrame(
         [("r", "p", "c", "x", "s", 1, "upsert")], cols
     )
-    assert t.merge(ne, "e2", mode="mor").applied == 1
+    assert t.merge(ne, "e1").applied == 1
     assert t.read().count() == 1
 
 
@@ -406,7 +344,6 @@ def test_mor_read_unresolved_append_only(spark, tmp_path):
         table.merge(
             spark.createDataFrame(rows, schema),
             f"s-{b}",
-            mode="mor",
             key_cols=["id"],
             compact_after_deltas=100,
         )
@@ -425,7 +362,6 @@ def test_mor_read_unresolved_append_only(spark, tmp_path):
     table.merge(
         spark.createDataFrame([(0, "v-new", 999, "upsert")], schema),
         "s-3",
-        mode="mor",
         key_cols=["id"],
         compact_after_deltas=100,
     )
@@ -456,7 +392,6 @@ def _many_file_table(spark, root):
         table.merge(
             spark.createDataFrame(rows, schema),
             f"s-{b}",
-            mode="mor",
             files_per_bucket=5,
             compact_after_deltas=1000,
         )
@@ -676,14 +611,14 @@ def test_empty_partial_batch_commits_cleanly(spark, tmp_path):
     )
     empty = spark.createDataFrame([], cols)
     out = []
-    worker = threading.Thread(target=lambda: out.append(t.merge(empty, "e0", mode="mor")))
+    worker = threading.Thread(target=lambda: out.append(t.merge(empty, "e0")))
     worker.start()
     worker.join(timeout=300)
     assert not worker.is_alive(), "merge of an empty partial batch hung"
     (st,) = out
     assert (st.applied, st.deleted, st.seq_hi, st.files_written) == (0, 0, None, [])
     assert not st.replayed and st.version == 1
-    assert t.merge(empty, "e0", mode="mor").replayed
+    assert t.merge(empty, "e0").replayed
     assert t._snap().version == 1
     assert t.read().count() == 0
 
@@ -716,3 +651,39 @@ def test_partial_upgrade_allows_any_payload_name(spark, tmp_path):
     )
     (row,) = t.read().collect()
     assert [row[n] for n in names] == ["b0", "s0", "t1", "o0", "c0"]
+
+
+def test_cow_mode_is_refused_before_any_work(spark, feed, tmp_path):
+    """Copy-on-write was removed. The entry points that still take
+    ``mode`` (for saved job configs) refuse any value but "mor" before
+    any Spark job or commit."""
+    import os
+
+    from replicator_spark.cli import JobConfig
+    from replicator_spark.pipeline import apply_batch
+    from replicator_spark.streaming import run_stream
+
+    cfg = JobConfig(name="j", feed_dir=feed, table_root=str(tmp_path / "t"),
+                    streaming=False, mode="cow")
+    assert any("copy-on-write was removed" in e for e in cfg.validate())
+
+    table = LakeTable(spark, str(tmp_path / "t"))
+    table.create(REPOS_SCHEMA, num_buckets=4)
+    version = table._snap().version
+    raw = spark.read.parquet(f"{feed}/batch_id=0")
+    ckpt = str(tmp_path / "ckpt")
+    calls = [
+        lambda: apply_batch(table, raw, "s-0", mode="cow"),
+        lambda: replay_feed(spark, feed, table, mode="cow"),
+        lambda: run_stream(spark, feed, table, ckpt, mode="cow"),
+    ]
+    for call in calls:
+        def refused(call=call):
+            with pytest.raises(ValueError, match="copy-on-write was removed"):
+                call()
+
+        _, jobs = spark_jobs(spark, refused)
+        assert jobs == {}
+    assert table._snap().version == version
+    assert table.is_committed("feed-0") is None
+    assert not os.path.exists(ckpt)

@@ -55,30 +55,39 @@ def _fresh_table(spark, tmp_path, name):
     return t
 
 
-@pytest.mark.parametrize("mode", ["mor", "cow"])
-def test_disjoint_concurrent_merges_both_land(spark, tmp_path, mode):
-    ta = _fresh_table(spark, tmp_path, f"t_{mode}")
+@pytest.mark.parametrize("partial", [False, True], ids=["mor", "partial"])
+def test_disjoint_concurrent_merges_both_land(spark, tmp_path, partial):
+    """Both writers land when their buckets are disjoint — also for a
+    merge that upgraded partial rows, which READ its buckets' state and
+    so may rebase only over a winner that left those buckets alone."""
+    ta = _fresh_table(spark, tmp_path, f"t_{partial}")
     tb = LakeTable(spark, ta.root)  # second driver's handle
     ids = _ids_by_bucket(spark)
     a = _batch(spark, ids[0], 100, "a")
     b = _batch(spark, ids[1], 200, "b")
+    v0 = 0
+    if partial:
+        # A's partials upgrade against these rows of its own bucket
+        ta.merge(_batch(spark, ids[0], 50, "base"), "s0-0", key_cols=("id",))
+        a = a.withColumn("_partial", F.lit(True))
+        v0 = 1
 
     st_b = {}
 
     def competing_commit():
-        st_b["stats"] = tb.merge(b, "sB-0", mode=mode, key_cols=("id",))
+        st_b["stats"] = tb.merge(b, "sB-0", key_cols=("id",))
 
     st_a = ta.merge(
-        a, "sA-0", mode=mode, key_cols=("id",), pre_commit_check=competing_commit
+        a, "sA-0", key_cols=("id",), pre_commit_check=competing_commit
     )
-    # B won the race at version 1; A rebased and landed at version 2
-    assert st_b["stats"].version == 1
-    assert st_a.version == 2
+    # B won the race; A rebased and landed one version later
+    assert st_b["stats"].version == v0 + 1
+    assert st_a.version == v0 + 2
     assert st_a.replayed is False
 
     snap = ta._snap()
-    assert ta.is_committed("sA-0") == 2
-    assert ta.is_committed("sB-0") == 1
+    assert ta.is_committed("sA-0") == v0 + 2
+    assert ta.is_committed("sB-0") == v0 + 1
     rows = {r["id"]: r["v"] for r in ta.read().collect()}
     assert {i for i in ids[0]} <= set(rows) and {i for i in ids[1]} <= set(rows)
     assert all(rows[i] == f"a-{i}" for i in ids[0])
@@ -88,35 +97,10 @@ def test_disjoint_concurrent_merges_both_land(spark, tmp_path, mode):
 
     # the table stays fully functional: a later ordinary merge applies
     upd = _batch(spark, ids[0][:2], 300, "a2")
-    st2 = ta.merge(upd, "sA-1", mode=mode, key_cols=("id",))
-    assert st2.version == 3
+    st2 = ta.merge(upd, "sA-1", key_cols=("id",))
+    assert st2.version == v0 + 3
     rows = {r["id"]: r["v"] for r in ta.read().collect()}
     assert rows[ids[0][0]] == f"a2-{ids[0][0]}"
-
-
-def test_overlapping_cow_merges_stay_loud(spark, tmp_path):
-    """cow REWRITES its touched buckets from the snapshot it read, so
-    an overlapping concurrent commit invalidates the rewrite — the
-    conflict must stay loud, never auto-merge."""
-    ta = _fresh_table(spark, tmp_path, "t_overlap")
-    tb = LakeTable(spark, ta.root)
-    ids = _ids_by_bucket(spark)
-    a = _batch(spark, ids[0], 100, "a")
-    b = _batch(spark, ids[0][:3], 200, "b")  # SAME bucket → overlap
-
-    def competing_commit():
-        tb.merge(b, "sB-0", mode="cow", key_cols=("id",))
-
-    with pytest.raises(CommitConflictError, match="concurrent writer"):
-        ta.merge(
-            a, "sA-0", mode="cow", key_cols=("id",),
-            pre_commit_check=competing_commit,
-        )
-    # the winner's commit is intact; the loser left no committed trace
-    assert ta.is_committed("sB-0") == 1
-    assert ta.is_committed("sA-0") is None
-    rows = {r["id"]: r["v"] for r in ta.read().collect()}
-    assert rows[ids[0][0]] == f"b-{ids[0][0]}"
 
 
 def test_overlapping_mor_appends_rebase(spark, tmp_path):
@@ -136,10 +120,10 @@ def test_overlapping_mor_appends_rebase(spark, tmp_path):
     st_b = {}
 
     def competing_commit():
-        st_b["stats"] = tb.merge(b, "sB-0", mode="mor", key_cols=("id",))
+        st_b["stats"] = tb.merge(b, "sB-0", key_cols=("id",))
 
     st_a = ta.merge(
-        a, "sA-0", mode="mor", key_cols=("id",), pre_commit_check=competing_commit
+        a, "sA-0", key_cols=("id",), pre_commit_check=competing_commit
     )
     assert st_b["stats"].version == 1
     assert st_a.version == 2 and st_a.replayed is False
@@ -149,7 +133,7 @@ def test_overlapping_mor_appends_rebase(spark, tmp_path):
     assert all(rows[i] == f"a-{i}" for i in ids[0][2:])
     # a later seq from a reclaims a contended key — LWW stays live
     st2 = ta.merge(
-        _batch(spark, ids[0][:1], 300, "a2"), "sA-1", mode="mor",
+        _batch(spark, ids[0][:1], 300, "a2"), "sA-1",
         key_cols=("id",),
     )
     assert st2.version == 3
@@ -166,7 +150,7 @@ def test_overlapping_partial_mor_stays_loud(spark, tmp_path):
     ta = _fresh_table(spark, tmp_path, "t_partial_overlap")
     tb = LakeTable(spark, ta.root)
     ids = _ids_by_bucket(spark)
-    ta.merge(_batch(spark, ids[0], 50, "base"), "sA-0", mode="mor",
+    ta.merge(_batch(spark, ids[0], 50, "base"), "sA-0",
              key_cols=("id",))
     a = _batch(spark, ids[0][:3], 100, "a").withColumn(
         "_partial", F.lit(True)
@@ -174,11 +158,11 @@ def test_overlapping_partial_mor_stays_loud(spark, tmp_path):
     b = _batch(spark, ids[0][3:5], 200, "b")  # same bucket → overlap
 
     def competing_commit():
-        tb.merge(b, "sB-0", mode="mor", key_cols=("id",))
+        tb.merge(b, "sB-0", key_cols=("id",))
 
     with pytest.raises(CommitConflictError, match="concurrent writer"):
         ta.merge(
-            a, "sA-1", mode="mor", key_cols=("id",),
+            a, "sA-1", key_cols=("id",),
             pre_commit_check=competing_commit,
         )
     assert ta.is_committed("sA-1") is None
@@ -195,7 +179,7 @@ def test_mor_merge_rebases_over_concurrent_compaction(spark, tmp_path):
     tb = LakeTable(spark, ta.root)
     ids = _ids_by_bucket(spark)
     ta.merge(
-        _batch(spark, ids[0] + ids[1], 100, "seed"), "sA-0", mode="mor",
+        _batch(spark, ids[0] + ids[1], 100, "seed"), "sA-0",
         key_cols=("id",),
     )
 
@@ -206,7 +190,7 @@ def test_mor_merge_rebases_over_concurrent_compaction(spark, tmp_path):
 
     st = ta.merge(
         _batch(spark, ids[0][:3] + ids[1][:3], 200, "b"), "sB-0",
-        mode="mor", key_cols=("id",), pre_commit_check=competing_compact,
+        key_cols=("id",), pre_commit_check=competing_compact,
     )
     assert ver["compact"] == 2
     assert st.version == 3 and st.replayed is False
@@ -218,17 +202,19 @@ def test_mor_merge_rebases_over_concurrent_compaction(spark, tmp_path):
     assert {r["id"]: r["v"] for r in ta.read().collect()} == rows
 
 
-def test_cow_merge_stays_loud_under_concurrent_compaction(spark, tmp_path):
-    """A cow merge REWRITES its touched buckets from the snapshot it
-    read; a compaction that rewrote those same buckets invalidates the
-    rewrite, so the conflict must stay loud — same rule as an
-    overlapping cow writer."""
-    ta = _fresh_table(spark, tmp_path, "t_compact_cow")
+def test_partial_merge_stays_loud_under_concurrent_compaction(spark, tmp_path):
+    """A merge that upgraded partial rows READ its touched buckets'
+    state; a compaction that rewrote those same buckets invalidates
+    that read, so the conflict must stay loud — same rule as an
+    overlapping partial writer."""
+    ta = _fresh_table(spark, tmp_path, "t_compact_partial")
     tb = LakeTable(spark, ta.root)
     ids = _ids_by_bucket(spark)
     ta.merge(
-        _batch(spark, ids[0] + ids[1], 100, "seed"), "sA-0", mode="mor",
-        key_cols=("id",),
+        _batch(spark, ids[0] + ids[1], 100, "seed"), "sA-0", key_cols=("id",)
+    )
+    part = _batch(spark, ids[0][:3], 200, "b").withColumn(
+        "_partial", F.lit(True)
     )
 
     def competing_compact():
@@ -236,17 +222,13 @@ def test_cow_merge_stays_loud_under_concurrent_compaction(spark, tmp_path):
 
     with pytest.raises(CommitConflictError, match="concurrent writer"):
         ta.merge(
-            _batch(spark, ids[0][:3], 200, "b"), "sB-0", mode="cow",
-            key_cols=("id",), pre_commit_check=competing_compact,
+            part, "sB-0", key_cols=("id",), pre_commit_check=competing_compact
         )
     assert ta.is_committed("sB-0") is None
     # the compaction's state is intact and the table keeps working
     rows = {r["id"]: r["v"] for r in ta.read().collect()}
     assert all(rows[i] == f"seed-{i}" for i in ids[0] + ids[1])
-    st = ta.merge(
-        _batch(spark, ids[0][:3], 200, "b"), "sB-0", mode="cow",
-        key_cols=("id",),
-    )
+    st = ta.merge(part, "sB-0", key_cols=("id",))
     assert st.version == 3
 
 
@@ -273,7 +255,7 @@ def test_two_threads_concurrent_mor_fanin(spark, tmp_path):
                 # which would make the version==8 assert below racy
                 t.merge(
                     _batch(spark, chunk, 1000 * n, stream),
-                    f"{stream}-{n}", mode="mor", key_cols=("id",),
+                    f"{stream}-{n}", key_cols=("id",),
                     compact_after_deltas=10_000,
                 )
         except Exception as e:  # pragma: no cover - failure path
@@ -321,7 +303,7 @@ def test_two_writers_plus_compactor_concurrent(spark, tmp_path):
                 chunk = keys[n * 4 : (n + 1) * 4]
                 t.merge(
                     _batch(spark, chunk, 1000 * n, stream),
-                    f"{stream}-{n}", mode="mor", key_cols=("id",),
+                    f"{stream}-{n}", key_cols=("id",),
                     compact_after_deltas=10_000,
                 )
         except Exception as e:  # pragma: no cover - failure path
@@ -372,10 +354,10 @@ def test_duplicate_batch_key_resolves_as_replay(spark, tmp_path):
     a = _batch(spark, ids[0], 100, "a")
 
     def competing_commit():
-        tb.merge(a, "sA-0", mode="mor", key_cols=("id",))
+        tb.merge(a, "sA-0", key_cols=("id",))
 
     st = ta.merge(
-        a, "sA-0", mode="mor", key_cols=("id",), pre_commit_check=competing_commit
+        a, "sA-0", key_cols=("id",), pre_commit_check=competing_commit
     )
     assert st.replayed is True and st.version == 1
     assert ta._snap().version == 1
@@ -391,10 +373,10 @@ def test_concurrent_schema_evolution_is_not_rebased(spark, tmp_path):
     b = _batch(spark, ids[1], 200, "b").withColumn("extra", F.lit("x"))
 
     def competing_commit():
-        tb.merge(b, "sB-0", mode="mor", key_cols=("id",))
+        tb.merge(b, "sB-0", key_cols=("id",))
 
     with pytest.raises(CommitConflictError, match="schema"):
         ta.merge(
-            a, "sA-0", mode="mor", key_cols=("id",),
+            a, "sA-0", key_cols=("id",),
             pre_commit_check=competing_commit,
         )

@@ -1,8 +1,9 @@
 """$set / UpdateFields partial-update merge (reference
 ``pkg/estuary/mongo.go:345-347``, ``pkg/models/models.go:37``): an
 update carrying only changed fields coalesces per column with the
-target row instead of nulling untouched columns — in both merge modes,
-through the intra-batch collapse, and end-to-end through apply_batch."""
+target row instead of nulling untouched columns — over delta chains and
+base files, through the intra-batch collapse, and end-to-end through
+apply_batch."""
 
 import pytest
 from pyspark.sql import Row
@@ -85,30 +86,42 @@ def test_collapse_all_partial_stays_partial(spark):
     assert out["content"] == "v5" and out["lang"] == "go"
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_merge_partial_preserves_untouched_columns(spark, tmp_path, mode):
-    t = LakeTable(spark, str(tmp_path / f"t_{mode}"))
+def _merger(spark, t, compacted):
+    """``t.merge`` of rows; ``compacted`` folds every merge into base
+    files, so a partial upgrades against base files, not delta chains."""
+    def merge(rows, key):
+        t.merge(_df(spark, rows), key)
+        if compacted:
+            t.compact()
+    return merge
+
+
+@pytest.mark.parametrize("compacted", [False, True], ids=["mor", "compacted"])
+def test_merge_partial_preserves_untouched_columns(spark, tmp_path, compacted):
+    t = LakeTable(spark, str(tmp_path / "t"))
     t.create(REPOS_SCHEMA, num_buckets=4)
-    t.merge(_df(spark, [_row(1, "insert", False, content="v1", lang="py")]), "b-0", mode=mode)
+    merge = _merger(spark, t, compacted)
+    merge([_row(1, "insert", False, content="v1", lang="py")], "b-0")
     # partial update: sets content only — lang must survive
-    t.merge(_df(spark, [_row(2, "update", True, content="v2")]), "b-1", mode=mode)
+    merge([_row(2, "update", True, content="v2")], "b-1")
     r = t.read().first()
     assert r["content"] == "v2" and r["lang"] == "py"
 
     # stale partial (older seq) is a no-op
-    t.merge(_df(spark, [_row(1, "update", True, lang="rb")]), "b-2", mode=mode)
+    merge([_row(1, "update", True, lang="rb")], "b-2")
     r = t.read().first()
     assert r["lang"] == "py" and r["content"] == "v2"
 
 
-@pytest.mark.parametrize("mode", ["cow", "mor"])
-def test_partial_after_delete_upserts_only_its_fields(spark, tmp_path, mode):
-    t = LakeTable(spark, str(tmp_path / f"t_{mode}"))
+@pytest.mark.parametrize("compacted", [False, True], ids=["mor", "compacted"])
+def test_partial_after_delete_upserts_only_its_fields(spark, tmp_path, compacted):
+    t = LakeTable(spark, str(tmp_path / "t"))
     t.create(REPOS_SCHEMA, num_buckets=4)
-    t.merge(_df(spark, [_row(1, "insert", False, content="secret", lang="py")]), "b-0", mode=mode)
-    t.merge(_df(spark, [_row(2, "delete", False)]), "b-1", mode=mode)
+    merge = _merger(spark, t, compacted)
+    merge([_row(1, "insert", False, content="secret", lang="py")], "b-0")
+    merge([_row(2, "delete", False)], "b-1")
     assert t.read().count() == 0
-    t.merge(_df(spark, [_row(3, "update", True, lang="go")]), "b-2", mode=mode)
+    merge([_row(3, "update", True, lang="go")], "b-2")
     r = t.read().first()
     # tombstoned values must NOT be resurrected by the coalesce
     assert r["lang"] == "go" and r["content"] is None
@@ -117,8 +130,8 @@ def test_partial_after_delete_upserts_only_its_fields(spark, tmp_path, mode):
 def test_mor_partial_survives_compaction(spark, tmp_path):
     t = LakeTable(spark, str(tmp_path / "t"))
     t.create(REPOS_SCHEMA, num_buckets=4)
-    t.merge(_df(spark, [_row(1, "insert", False, content="v1", lang="py")]), "b-0", mode="mor")
-    t.merge(_df(spark, [_row(2, "update", True, content="v2")]), "b-1", mode="mor")
+    t.merge(_df(spark, [_row(1, "insert", False, content="v1", lang="py")]), "b-0")
+    t.merge(_df(spark, [_row(2, "update", True, content="v2")]), "b-1")
     t.compact()
     r = t.read().first()
     assert r["content"] == "v2" and r["lang"] == "py"
@@ -196,23 +209,26 @@ def test_partial_update_with_type_widened_column(spark, tmp_path):
                 stars=3, seq=2, op="insert", event_id="e2"),
         ]
     )
-    t.merge(b0, "s-0", mode="mor")
+    t.merge(b0, "s-0")
+    t.compact()  # the long-typed rows now live in base files
     # batch 1: string-typed stars (widens the table) + a PARTIAL that
     # touches only stars for p1 — lang/content must survive from the
     # long-typed base file via the upgrade join
     b1 = spark.createDataFrame(
         [row(3, "update", True, stars="five")], wide
     )
-    st = t.merge(b1, "s-1", mode="mor")
+    st = t.merge(b1, "s-1")
     assert st.schema_evolved == 1
     live = {r["path"]: r for r in t.read().collect()}
     assert live["p1"]["stars"] == "five"
     assert live["p1"]["lang"] == "py" and live["p1"]["content"] == "v1"
     assert live["p2"]["stars"] == "3"  # old long read under string
-    # and a later full image over the widened column still works in cow
+    # and a later full image over the widened column still works, also
+    # once compaction folds it into the pre-widening base file
     b2 = spark.createDataFrame(
         [row(4, "update", False, content="v2", lang="py", stars="six")], wide
     )
-    t.merge(b2, "s-2", mode="cow")
+    t.merge(b2, "s-2")
+    t.compact()
     live = {r["path"]: r for r in t.read().collect()}
     assert live["p1"]["stars"] == "six" and live["p1"]["content"] == "v2"

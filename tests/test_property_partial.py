@@ -3,7 +3,7 @@ semantics — reference ``pkg/estuary/mongo.go:345-347``,
 ``pkg/models/models.go:37``): random event streams mixing full images,
 per-column partial updates, deletes and same-batch redeliveries are
 applied through the real pipeline (``replay_feed`` with
-``partial_updates=True``, both merge modes) and must match a sequential
+``partial_updates=True``) and must match a sequential
 one-event-at-a-time oracle on EVERY payload column.
 
 The oracle encodes the engine's documented contract (CLAUDE.md /
@@ -148,7 +148,7 @@ def _oracle(rows):
     return state
 
 
-def _replay_and_compare(spark, tmp, events, mode):
+def _replay_and_compare(spark, tmp, events):
     rows = _materialize(events)
     feed, root = f"{tmp}/feed", f"{tmp}/table"
     spark.createDataFrame(rows, FEED_SCHEMA).write.partitionBy(
@@ -161,7 +161,6 @@ def _replay_and_compare(spark, tmp, events, mode):
         feed,
         table,
         payload_schema=PAYLOAD,
-        mode=mode,
         partial_updates=True,
         write_metrics=False,
     )
@@ -182,19 +181,5 @@ def test_random_partial_streams_match_oracle_mor(
     spark, tmp_path_factory, events
 ):
     _replay_and_compare(
-        spark, str(tmp_path_factory.mktemp("pprop")), events, "mor"
-    )
-
-
-@settings(
-    max_examples=4,
-    deadline=None,
-    suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
-)
-@given(events=st.lists(event_st, min_size=1, max_size=40))
-def test_random_partial_streams_match_oracle_cow(
-    spark, tmp_path_factory, events
-):
-    _replay_and_compare(
-        spark, str(tmp_path_factory.mktemp("pprop")), events, "cow"
+        spark, str(tmp_path_factory.mktemp("pprop")), events
     )

@@ -100,8 +100,8 @@ def test_key_cols_persisted_and_enforced(spark, tmp_path):
         [Row(repo="r1", path="p1", commit="c2", lang="py", content="v2",
              seq=2, op="update", event_id="e2")]
     )
-    t.merge(b1, "b1", mode="mor")
-    t.merge(b2, "b2", mode="mor")
+    t.merge(b1, "b1")
+    t.merge(b2, "b2")
     # LWW on (repo, path): ONE live row, the seq=2 image — resolution on
     # the default 3-col key would wrongly keep both commits
     live = t.read()

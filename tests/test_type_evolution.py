@@ -43,13 +43,13 @@ def _doc_str(s):
     return f'{{"lang":"py","content":"c{s}","stars":"s{s % 7}"}}'
 
 
-def _roundtrip(spark, tmp_path, mode):
-    table = LakeTable(spark, str(tmp_path / f"t_{mode}"))
+def _roundtrip(spark, tmp_path):
+    table = LakeTable(spark, str(tmp_path / "t"))
     table.create(STARS_SCHEMA, num_buckets=4)
     tr = SchemaTracker()
 
     b0 = _batch(spark, range(300), _doc_int)
-    r0 = apply_batch(table, b0, "s-0", schema_tracker=tr, mode=mode,
+    r0 = apply_batch(table, b0, "s-0", schema_tracker=tr,
                      write_metrics=False)
     assert r0.schema_retries == 0
     assert dict((f.name, f.dataType) for f in table.schema().fields)[
@@ -62,7 +62,7 @@ def _roundtrip(spark, tmp_path, mode):
         return _doc_str(s) if s >= 550 else _doc_int(s)
 
     b1 = _batch(spark, range(300, 600), doc1)
-    r1 = apply_batch(table, b1, "s-1", schema_tracker=tr, mode=mode,
+    r1 = apply_batch(table, b1, "s-1", schema_tracker=tr,
                      write_metrics=False)
     assert r1.schema_retries == 1, "conflict must trigger the widening retry"
     assert dict((f.name, f.dataType) for f in table.schema().fields)[
@@ -79,7 +79,7 @@ def _roundtrip(spark, tmp_path, mode):
 
 
 def test_int_to_string_roundtrip_mor(spark, tmp_path):
-    table, tr = _roundtrip(spark, tmp_path, "mor")
+    table, tr = _roundtrip(spark, tmp_path)
     # compaction migrates old-typed files to the current schema
     table.compact()
     snap = table._snap()
@@ -97,10 +97,6 @@ def test_int_to_string_roundtrip_mor(spark, tmp_path):
                      write_metrics=False)
     assert r2.schema_retries == 0
     assert table.read().where("stars IS NULL").count() == 0
-
-
-def test_int_to_string_roundtrip_cow(spark, tmp_path):
-    _roundtrip(spark, tmp_path, "cow")
 
 
 def test_scalar_to_object_conflict(spark, tmp_path):
@@ -237,10 +233,10 @@ def test_long_batch_into_double_column_is_not_phantom_evolution(spark, tmp_path)
                  event_id=f"e{i}")]
         )
 
-    st = table.merge(batch(1, 5), "s-1", mode="mor")
+    st = table.merge(batch(1, 5), "s-1")
     assert st.schema_evolved == 0
     sid_before = table._snap().props["schema_id"]
-    st2 = table.merge(batch(2, 7), "s-2", mode="mor")
+    st2 = table.merge(batch(2, 7), "s-2")
     assert st2.schema_evolved == 0
     assert table._snap().props["schema_id"] == sid_before
     assert dict((f.name, f.dataType) for f in table.schema().fields)[
