@@ -2,13 +2,16 @@
 single-consumer in-order apply loop (``pkg/replicator/service.go:391-413``;
 positions totally ordered per ``pkg/position/mysql_position.go:78-98``).
 
-Two layers:
+One layer, two shapes:
 
-1. ``dedup_exact`` — drop redelivered events (same event_id), the
-   at-least-once redelivery the reference's Kafka auto-commit can produce
-   (``pkg/streams/kafka_stream.go:370``).
-2. ``lww_latest`` — one surviving row per key: the max-``seq`` image.
-   Parallel-safe replacement for "apply in log order".
+- ``lww_latest`` — one surviving row per key: the max-``seq`` image.
+  Parallel-safe replacement for "apply in log order". It also drops
+  redelivered events — the at-least-once redelivery the reference's
+  Kafka auto-commit can produce (``pkg/streams/kafka_stream.go:370``) —
+  since a redelivery carries an identical ``(key, seq)`` and the
+  ``event_id`` tiebreak keeps exactly one copy.
+- ``lww_collapse_partial`` — the same collapse for batches carrying
+  partial updates: each column takes the latest event that touched it.
 
 Both are single-shuffle DataFrame ops (hash partition on the key); at
 cluster scale the key (repo, path, commit) is high-cardinality so the
@@ -19,13 +22,8 @@ from __future__ import annotations
 
 from collections.abc import Sequence
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def dedup_exact(df: DataFrame, id_col: str = "event_id") -> DataFrame:
-    """Exactly-once within the visible frame: keep one row per event id."""
-    return df.dropDuplicates([id_col])
 
 
 def lww_latest(
@@ -131,22 +129,3 @@ def lww_collapse_partial(
         # null ordering rows are ignored by max_by ⇒ only touchers count
         aggs.append(F.max_by(F.col(c), F.when(touch, ord_)).alias(c))
     return df.groupBy(*[F.col(k) for k in key_cols]).agg(*aggs)
-
-
-def lww_latest_window(
-    df: DataFrame,
-    key_cols: Sequence[str],
-    seq_col: str = "seq",
-    tiebreak_col: str | None = "event_id",
-) -> DataFrame:
-    """Window/row_number formulation of lww_latest — kept for parity
-    testing and for callers that need the full ranking."""
-    order = [F.col(seq_col).desc()]
-    if tiebreak_col is not None and tiebreak_col in df.columns:
-        order.append(F.col(tiebreak_col).desc())
-    w = Window.partitionBy(*[F.col(c) for c in key_cols]).orderBy(*order)
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )

@@ -12,14 +12,14 @@ applied to the RAW feed before normalization, so Catalyst pushes the
 scalar clauses into the parquet scan of the feed (pinned in
 test_plan_quality.py).
 
-``custom_filter`` languages: the default is a **jq** boolean expression
-(compiled to Column exprs by ``functions.jq``); set
-``custom_filter_lang: "javascript"`` for the reference's declared
-JavaScript-expression shape (``types.go:226``), compiled the same
-driver-side way by ``functions.js.compile_predicate`` — never a
-per-event interpreter. (The reference never executed its JS string;
-here both languages run as native Column predicates and the scalar
-clauses stay pushable to the scan.)
+``custom_filter`` languages: the default is a **jq** boolean expression;
+set ``custom_filter_lang: "javascript"`` for the reference's declared
+JavaScript-expression shape (``types.go:226``). Either compiles
+driver-side to one Column by its engine's ``compile_predicate``
+(``functions.jq`` / ``functions.js``) — never a per-event interpreter.
+(The reference never executed its JS string; here both languages run as
+native Column predicates and the scalar clauses stay pushable to the
+scan.)
 
 Field resolution for ``FieldFilter.field``:
 
@@ -38,8 +38,13 @@ from dataclasses import dataclass, field as dc_field
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .functions import js, jq
+from .functions.lowering import ScriptError
 from .model import CHANGE_SCHEMA
 from .transform import compile_condition_on
+
+# custom_filter_lang → the engine that compiles its boolean expressions
+_CUSTOM_FILTER_LANGS = {"jq": jq, "javascript": js}
 
 
 @dataclass
@@ -98,41 +103,28 @@ class EventFilter:
                 errs.append(
                     f"field_filters[{ff.field}]: unknown operator {ff.operator!r}"
                 )
-        if self.custom_filter_lang not in ("jq", "javascript"):
-            errs.append(
-                f"custom_filter_lang: unknown language "
-                f"{self.custom_filter_lang!r} (jq | javascript)"
-            )
-        elif self.custom_filter and self.custom_filter_lang == "jq":
-            from .functions.jq import JqError
-            from .functions.jq import parse as jq_parse
-
-            try:
-                ast = jq_parse(self.custom_filter.strip())
-                last = ast[1][-1] if ast[0] == "pipe" else ast
-                if last[0] == "obj":
-                    errs.append(
-                        "custom_filter must be a boolean jq expression, "
-                        "not a projection"
-                    )
-            except JqError as e:
-                errs.append(f"custom_filter: {e}")
-        elif self.custom_filter:
-            from .functions.js import JsError
-            from .functions.js import parse as js_parse
-
-            try:
-                ast = js_parse(self.custom_filter.strip())
-                if ast[0] == "obj":
-                    errs.append(
-                        "custom_filter must be a boolean JS expression, "
-                        "not an object literal"
-                    )
-            except JsError as e:
-                errs.append(f"custom_filter: {e}")
+        try:
+            engine = self._engine()
+        except ValueError as e:
+            errs.append(str(e))
+        else:
+            if self.custom_filter:
+                try:
+                    engine.parse_predicate(self.custom_filter.strip())
+                except ScriptError as e:
+                    errs.append(f"custom_filter: {e}")
         return errs
 
     # -- compilation ---------------------------------------------------------
+
+    def _engine(self):
+        """The custom_filter language's engine module."""
+        if self.custom_filter_lang not in _CUSTOM_FILTER_LANGS:
+            raise ValueError(
+                f"custom_filter_lang: unknown language "
+                f"{self.custom_filter_lang!r} (jq | javascript)"
+            )
+        return _CUSTOM_FILTER_LANGS[self.custom_filter_lang]
 
     def _resolve(self, name: str) -> tuple[Column, bool]:
         """(column expr, is_doc_path)."""
@@ -179,38 +171,9 @@ class EventFilter:
                 preds.append(~F.coalesce(F.col(col).isin(*vals), F.lit(False)))
         for ff in self.field_filters:
             preds.append(self._field_pred(ff))
-        if self.custom_filter and self.custom_filter_lang == "javascript":
-            # the reference's declared shape (types.go:226) — compiled
-            # driver-side to one Column; JS truthiness on non-booleans
-            from .functions.js import compile_predicate
-
-            preds.append(compile_predicate(self.custom_filter.strip(),
-                                           CHANGE_SCHEMA))
-        elif self.custom_filter:
-            from .functions.jq import JqError, compile_program
-            from .functions.jq import parse as jq_parse
-
-            prog = self.custom_filter.strip()
-            # a bare object construction is a projection mistake, and
-            # wrapping it in select() would silently keep EVERY row
-            # (any jq object is truthy) — catch it at the AST
-            ast = jq_parse(prog)
-            last = ast[1][-1] if ast[0] == "pipe" else ast
-            if last[0] == "obj":
-                raise JqError(
-                    "custom_filter must be a boolean jq expression "
-                    "(filter-only), not a projection"
-                )
-            if not prog.startswith("select"):
-                prog = f"select({prog})"
-            compiled = compile_program(prog, CHANGE_SCHEMA)
-            if compiled.columns is not None:
-                raise JqError(
-                    "custom_filter must be a boolean jq expression "
-                    "(filter-only), not a projection"
-                )
-            if compiled.where is not None:
-                preds.append(compiled.where)
+        if self.custom_filter:
+            preds.append(self._engine().compile_predicate(
+                self.custom_filter.strip(), CHANGE_SCHEMA))
         if not preds:
             return F.lit(True)
         out = preds[0]

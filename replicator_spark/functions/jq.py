@@ -67,145 +67,40 @@ values there). ``tonumber`` yields double.
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-
-class JqError(ValueError):
-    """Parse or compile error in a jq program (always compile-time)."""
-
-
-# -- tokenizer ---------------------------------------------------------------
-
-_TOKEN_RE = re.compile(
-    r"""
-    (?P<ws>\s+)
-  | (?P<num>\d+(?:\.\d+)?)
-  | (?P<op>\.\.|//|==|!=|<=|>=|\||\.|\(|\)|\{|\}|\[|\]|:|;|,|\?|\+|-|\*|/|%|<|>)
-  | (?P<ident>[A-Za-z_][A-Za-z0-9_]*)
-    """,
-    re.VERBOSE,
+from .lowering import (
+    BOOL, DOUBLE, LONG, STR, Compiled, Compiler, Parser, ScriptError, Val,
+    element_type, num_type, result_type, root_from_schema, same_type, transform,
 )
 
-_KEYWORDS = {"and", "or", "if", "then", "elif", "else", "end", "true", "false", "null"}
 
-
-@dataclass
-class _Tok:
-    kind: str  # num | str | op | ident | kw | eof
-    val: object
-    pos: int
-
-
-def _lex_string(src: str, i: int) -> tuple[list, int]:
-    """Lex a double-quoted string starting at src[i] == '"'.
-
-    Returns (parts, next_index) where parts alternate ("lit", str) and
-    ("expr", substring) for ``\\(...)`` interpolations.
-    """
-    assert src[i] == '"'
-    i += 1
-    parts: list = []
-    buf: list[str] = []
-    while i < len(src):
-        c = src[i]
-        if c == '"':
-            if buf:
-                parts.append(("lit", "".join(buf)))
-            return parts, i + 1
-        if c == "\\":
-            if i + 1 >= len(src):
-                break
-            n = src[i + 1]
-            if n == "(":  # interpolation — find the balanced close paren
-                depth, j = 1, i + 2
-                while j < len(src) and depth:
-                    if src[j] == '"':  # skip nested string
-                        _, j = _lex_string(src, j)
-                        continue
-                    if src[j] == "(":
-                        depth += 1
-                    elif src[j] == ")":
-                        depth -= 1
-                    j += 1
-                if depth:
-                    raise JqError(f"unterminated interpolation at {i}")
-                if buf:
-                    parts.append(("lit", "".join(buf)))
-                    buf = []
-                parts.append(("expr", src[i + 2 : j - 1]))
-                i = j
-                continue
-            esc = {"n": "\n", "t": "\t", "r": "\r", '"': '"', "\\": "\\", "/": "/"}
-            if n not in esc:
-                raise JqError(f"unsupported string escape \\{n}")
-            buf.append(esc[n])
-            i += 2
-            continue
-        buf.append(c)
-        i += 1
-    raise JqError("unterminated string literal")
-
-
-def _tokenize(src: str) -> list[_Tok]:
-    toks: list[_Tok] = []
-    i = 0
-    while i < len(src):
-        if src[i] == '"':
-            parts, j = _lex_string(src, i)
-            toks.append(_Tok("str", parts, i))
-            i = j
-            continue
-        m = _TOKEN_RE.match(src, i)
-        if not m:
-            raise JqError(f"unexpected character {src[i]!r} at {i}")
-        i = m.end()
-        if m.lastgroup == "ws":
-            continue
-        if m.lastgroup == "num":
-            txt = m.group("num")
-            toks.append(_Tok("num", float(txt) if "." in txt else int(txt), m.start()))
-        elif m.lastgroup == "ident":
-            w = m.group("ident")
-            toks.append(_Tok("kw" if w in _KEYWORDS else "ident", w, m.start()))
-        else:
-            toks.append(_Tok("op", m.group("op"), m.start()))
-    toks.append(_Tok("eof", None, len(src)))
-    return toks
+class JqError(ScriptError):
+    """Parse or compile error in a jq program (always compile-time)."""
 
 
 # -- parser (recursive descent; AST = nested tuples) -------------------------
 
 
-class _Parser:
-    def __init__(self, toks: list[_Tok]):
-        self.toks = toks
-        self.i = 0
-
-    def peek(self) -> _Tok:
-        return self.toks[self.i]
-
-    def next(self) -> _Tok:
-        t = self.toks[self.i]
-        self.i += 1
-        return t
-
-    def expect(self, kind: str, val: object = None) -> _Tok:
-        t = self.next()
-        if t.kind != kind or (val is not None and t.val != val):
-            raise JqError(f"expected {val or kind}, got {t.val!r} at {t.pos}")
-        return t
-
-    def at_op(self, *ops: str) -> bool:
-        t = self.peek()
-        return t.kind == "op" and t.val in ops
-
-    def at_kw(self, *kws: str) -> bool:
-        t = self.peek()
-        return t.kind == "kw" and t.val in kws
+class _Parser(Parser):
+    Error = JqError
+    TOKEN_RE = re.compile(
+        r"""
+        (?P<ws>\s+)
+      | (?P<num>\d+(?:\.\d+)?)
+      | (?P<op>\.\.|//|==|!=|<=|>=|\||\.|\(|\)|\{|\}|\[|\]|:|;|,|\?|\+|-|\*|/|%|<|>)
+      | (?P<ident>[A-Za-z_][A-Za-z0-9_]*)
+        """,
+        re.VERBOSE,
+    )
+    KEYWORDS = frozenset(
+        {"and", "or", "if", "then", "elif", "else", "end", "true", "false", "null"}
+    )
+    QUOTES = {'"': ("str", {"n": "\n", "t": "\t", "r": "\r", '"': '"', "\\": "\\",
+                            "/": "/"}, "\\(")}
 
     # pipe := alt ('|' alt)*
     def parse_pipe(self):
@@ -217,25 +112,14 @@ class _Parser:
 
     # alt := or ('//' or)*   (right-assoc like jq)
     def parse_alt(self):
-        left = self.parse_or()
+        left = self.binary(self.parse_and, ("or",), "or")
         if self.at_op("//"):
             self.next()
             return ("alt", left, self.parse_alt())
         return left
 
-    def parse_or(self):
-        left = self.parse_and()
-        while self.at_kw("or"):
-            self.next()
-            left = ("or", left, self.parse_and())
-        return left
-
     def parse_and(self):
-        left = self.parse_cmp()
-        while self.at_kw("and"):
-            self.next()
-            left = ("and", left, self.parse_cmp())
-        return left
+        return self.binary(self.parse_cmp, ("and",), "and")
 
     def parse_cmp(self):
         left = self.parse_add()
@@ -245,18 +129,10 @@ class _Parser:
         return left
 
     def parse_add(self):
-        left = self.parse_mul()
-        while self.at_op("+", "-"):
-            op = self.next().val
-            left = ("arith", op, left, self.parse_mul())
-        return left
+        return self.binary(self.parse_mul, ("+", "-"))
 
     def parse_mul(self):
-        left = self.parse_unary()
-        while self.at_op("*", "/", "%"):
-            op = self.next().val
-            left = ("arith", op, left, self.parse_unary())
-        return left
+        return self.binary(self.parse_unary, ("*", "/", "%"))
 
     def parse_unary(self):
         if self.at_op("-"):
@@ -269,16 +145,10 @@ class _Parser:
         while True:
             if self.at_op("."):
                 # lookahead: '.' IDENT  (path continuation on a value)
-                nxt = self.toks[self.i + 1]
-                if nxt.kind != "ident":
+                if self.toks[self.i + 1].kind != "ident":
                     break
                 self.next()
-                name = self.next().val
-                opt = False
-                if self.at_op("?"):
-                    self.next()
-                    opt = True
-                node = ("field", node, name, opt)
+                node = self._field(node)
             elif self.at_op("["):
                 self.next()
                 node = ("index", node, self._index_literal())
@@ -286,19 +156,20 @@ class _Parser:
                 break
         return node
 
+    def _field(self, base):
+        """``NAME ['?']`` after a '.' → a field access on ``base``."""
+        name = self.next().val
+        opt = self.at_op("?")
+        if opt:
+            self.next()
+        return ("field", base, name, opt)
+
     def parse_primary(self):
         t = self.peek()
         if t.kind == "op" and t.val == ".":
             self.next()
-            nxt = self.peek()
-            if nxt.kind == "ident":  # .a(.b)* path from the input
-                name = self.next().val
-                opt = False
-                if self.at_op("?"):
-                    self.next()
-                    opt = True
-                node = ("field", ("identity",), name, opt)
-                return node
+            if self.peek().kind == "ident":  # .a(.b)* path from the input
+                return self._field(("identity",))
             if self.at_op("["):  # .[0]
                 self.next()
                 if self.at_op("]"):
@@ -311,6 +182,8 @@ class _Parser:
             return ("lit", t.val)
         if t.kind == "str":
             self.next()
+            if all(kind == "lit" for kind, _ in t.val):
+                return ("lit", "".join(s for _, s in t.val))
             return ("str", t.val)
         if t.kind == "kw" and t.val in ("true", "false", "null"):
             self.next()
@@ -325,17 +198,12 @@ class _Parser:
         if t.kind == "op" and t.val == "{":
             return self.parse_object()
         if t.kind == "op" and t.val == "[":
-            return self.parse_array()
+            return ("arr", self.delimited("[", "]", self.parse_alt))
         if t.kind == "ident":
             name = self.next().val
             args = []
             if self.at_op("("):
-                self.next()
-                args.append(self.parse_pipe())
-                while self.at_op(";"):
-                    self.next()
-                    args.append(self.parse_pipe())
-                self.expect("op", ")")
+                args = self.delimited("(", ")", self.parse_pipe, ";", empty=False)
             return ("call", name, args)
         raise JqError(f"unexpected token {t.val!r} at {t.pos}")
 
@@ -396,48 +264,23 @@ class _Parser:
             self.expect("op", "}")
             return ("obj", entries)
 
-    def parse_array(self):
-        self.expect("op", "[")
-        items = []
-        if not self.at_op("]"):
-            items.append(self.parse_alt())
-            while self.at_op(","):
-                self.next()
-                items.append(self.parse_alt())
-        self.expect("op", "]")
-        return ("arr", items)
-
 
 def parse(program: str):
     """Parse a jq program; returns the AST (raises JqError on syntax errors)."""
-    p = _Parser(_tokenize(program))
+    p = _Parser(program)
     ast = p.parse_pipe()
-    if p.peek().kind != "eof":
-        t = p.peek()
-        raise JqError(f"trailing input at {t.pos}: {t.val!r}")
+    p.end("")
     return ast
 
 
 # -- compiler ----------------------------------------------------------------
 #
-# Values carry (Column, DataType|None); the program input is either an
-# object (dict of named values — the row) or a single value. Type info
-# drives the polymorphic bits (+, length, truthiness) and is best-effort:
-# None means "unknown, assume numeric scalar".
+# The program input is either an object (dict of named values — the row)
+# or a single value; a value's type of None means "unknown, assume
+# numeric scalar".
 
 
-@dataclass
-class _Val:
-    col: Column | None = None
-    dtype: T.DataType | None = None
-    obj: dict | None = None  # name -> _Val when this is an object
-
-    @property
-    def is_obj(self) -> bool:
-        return self.obj is not None
-
-
-def _truthy(v: _Val) -> Column:
+def _truthy(v: Val) -> Column:
     if v.is_obj:
         return F.lit(True)  # an object is always truthy in jq
     if isinstance(v.dtype, T.BooleanType):
@@ -445,36 +288,55 @@ def _truthy(v: _Val) -> Column:
     return v.col.isNotNull()
 
 
-def _scalar(v: _Val, what: str) -> _Val:
-    if v.is_obj:
-        raise JqError(f"{what}: expected a value, got an object")
-    return v
+def _tostring(v: Val) -> Column:
+    if isinstance(v.dtype, T.StringType):
+        return v.col
+    return v.col.cast("string")
 
 
-def _lit_str_arg(args: list, i: int, fn: str) -> str:
-    if i >= len(args):
-        raise JqError(f"{fn}: missing argument {i + 1}")
-    a = args[i]
-    if a[0] == "str" and len(a[1]) == 1 and a[1][0][0] == "lit":
-        return a[1][0][1]
-    if a[0] == "str" and not a[1]:
-        return ""
-    raise JqError(f"{fn}: argument must be a string literal")
+# builtins that differ only in their Spark function and result type:
+# name → (input kind, count of string-literal arguments — they
+# parameterize the expression —, lowering of (input column, *literals),
+# result type: fixed, or derived from the input's type)
+_BUILTINS = {
+    "tonumber": ("value", 0, lambda c: c.cast("double"), DOUBLE),
+    # floor / ceil / round are integer-typed, as jq produces integral values
+    "floor": ("value", 0, lambda c: F.floor(c.cast("double")), LONG),
+    "ceil": ("value", 0, lambda c: F.ceil(c.cast("double")), LONG),
+    "round": ("value", 0, lambda c: F.round(c.cast("double")).cast("long"), LONG),
+    "fabs": ("value", 0, F.abs, same_type),
+    "sqrt": ("value", 0, lambda c: F.sqrt(c.cast("double")), DOUBLE),
+    "ascii_downcase": ("value", 0, F.lower, STR),
+    "ascii_upcase": ("value", 0, F.upper, STR),
+    "ltrimstr": ("value", 1, lambda c, s: F.when(
+        c.startswith(s), c.substr(F.lit(len(s) + 1), F.length(c))).otherwise(c), STR),
+    "rtrimstr": ("value", 1, lambda c, s: F.when(
+        c.endswith(s), c.substr(F.lit(1), F.length(c) - len(s))).otherwise(c), STR),
+    "startswith": ("value", 1, lambda c, s: c.startswith(s), BOOL),
+    "endswith": ("value", 1, lambda c, s: c.endswith(s), BOOL),
+    "test": ("value", 1, lambda c, s: c.rlike(s), BOOL),
+    "gsub": ("value", 2, F.regexp_replace, STR),
+    # jq add on a numeric array (sum); jq yields null on [], the
+    # aggregate its 0.0 start (documented)
+    "add": ("array", 0, lambda c: F.aggregate(
+        c, F.lit(0.0), lambda acc, x: acc + x.cast("double")), DOUBLE),
+    "min": ("array", 0, F.array_min, element_type),
+    "max": ("array", 0, F.array_max, element_type),
+    "sort": ("array", 0, F.sort_array, same_type),
+    "reverse": ("array", 0, F.reverse, same_type),
+    "unique": ("array", 0, lambda c: F.sort_array(F.array_distinct(c)), same_type),
+    "first": ("array", 0, lambda c: F.try_element_at(c, F.lit(1)), element_type),
+    "last": ("array", 0, lambda c: F.try_element_at(c, F.lit(-1)), element_type),
+    "join": ("array", 1, F.array_join, STR),
+}
+
+# ``any`` / ``any(f)``, ``all`` / ``all(f)`` — jq truthiness per element
+_QUANTIFIERS = {"any": F.exists, "all": F.forall}
 
 
-_STR = T.StringType()
-_BOOL = T.BooleanType()
-_LONG = T.LongType()
-_DOUBLE = T.DoubleType()
-
-
-class _Compiler:
-    def compile(self, node, inp: _Val) -> _Val:
-        kind = node[0]
-        m = getattr(self, f"_c_{kind}", None)
-        if m is None:
-            raise JqError(f"unsupported jq construct: {kind}")
-        return m(node, inp)
+class _Compiler(Compiler):
+    Error = JqError
+    LANG = "jq"
 
     # select() is legal only in ROW context — a top-level pipe stage, or
     # a pipe stage of a parenthesized group that is itself a top-level
@@ -486,11 +348,11 @@ class _Compiler:
     # keeps the row with a="d" in jq), and inside a higher-order lambda
     # the predicate references the lambda variable, unresolvable in a
     # row filter — so it raises instead.
-    def run(self, ast, inp: _Val) -> _Val:
+    def run(self, ast, inp: Val) -> Val:
         self.where: Column | None = None
         return self._pipe_stages(ast, inp, top=True)
 
-    def _pipe_stages(self, node, inp: _Val, top: bool = False) -> _Val:
+    def _pipe_stages(self, node, inp: Val, top: bool = False) -> Val:
         stages = node[1] if node[0] == "pipe" else [node]
         cur = inp
         for s in stages:
@@ -515,7 +377,7 @@ class _Compiler:
             cur = self.compile(s, cur)
         return cur
 
-    def _compile_pred(self, node, inp: _Val) -> Column:
+    def _compile_pred(self, node, inp: Val) -> Column:
         """Compile a select() argument in WHERE context. Comparisons are
         already total (never-null — see _c_cmp), so they pass through
         pushable as-is; and/or trees compile operand-wise. Non-boolean
@@ -524,9 +386,9 @@ class _Compiler:
         block PushedFilters). `not` routes through the value path, whose
         coalesce gives jq's null flip (jq: null|not → true)."""
         if node[0] == "and":
-            return self._compile_pred(node[1], inp) & self._compile_pred(node[2], inp)
+            return self._compile_pred(node[2], inp) & self._compile_pred(node[3], inp)
         if node[0] == "or":
-            return self._compile_pred(node[1], inp) | self._compile_pred(node[2], inp)
+            return self._compile_pred(node[2], inp) | self._compile_pred(node[3], inp)
         v = self.compile(node, inp)
         if v.is_obj:
             return F.lit(True)
@@ -540,30 +402,10 @@ class _Compiler:
     def _c_identity(self, node, inp):
         return inp
 
-    def _c_lit(self, node, inp):
-        v = node[1]
-        dt = (
-            _BOOL if isinstance(v, bool)
-            else _LONG if isinstance(v, int)
-            else _DOUBLE if isinstance(v, float)
-            else None
-        )
-        return _Val(F.lit(v), dt)
+    def splice(self, payload: str, inp: Val) -> Val:  # "\(payload)"
+        return self._pipe_stages(parse(payload), inp)
 
-    def _c_str(self, node, inp):
-        parts = node[1]
-        if not parts:
-            return _Val(F.lit(""), _STR)
-        if len(parts) == 1 and parts[0][0] == "lit":
-            return _Val(F.lit(parts[0][1]), _STR)
-        cols = []
-        for kind, payload in parts:
-            if kind == "lit":
-                cols.append(F.lit(payload))
-            else:  # interpolation: compile against the same input, tostring
-                sub = self._pipe_stages(parse(payload), inp)
-                cols.append(self._tostring(_scalar(sub, "interpolation")))
-        return _Val(F.concat(*cols), _STR)
+    stringify = staticmethod(_tostring)
 
     def _c_field(self, node, inp):
         _, base, name, opt = node
@@ -572,41 +414,40 @@ class _Compiler:
             if name in b.obj:
                 return b.obj[name]
             if opt:
-                return _Val(F.lit(None), None)
+                return Val(F.lit(None), None)
             raise JqError(
                 f".{name}: no such field (have: {sorted(b.obj)[:8]}...); "
                 f"use .{name}? for optional access"
             )
         if isinstance(b.dtype, T.StructType):
             if name in b.dtype.fieldNames():
-                return _Val(b.col.getField(name), b.dtype[name].dataType)
+                return Val(b.col.getField(name), b.dtype[name].dataType)
             if opt:
-                return _Val(F.lit(None), None)
+                return Val(F.lit(None), None)
             raise JqError(f".{name}: struct has no field {name!r}")
         if b.dtype is None or opt:
             # unknown type (e.g. came through //) — late-bound getField
-            return _Val(b.col.getField(name) if b.col is not None else F.lit(None), None)
+            return Val(b.col.getField(name) if b.col is not None else F.lit(None), None)
         raise JqError(f".{name}: cannot index a {b.dtype.simpleString()} value")
 
     def _c_index(self, node, inp):
         _, base, idx = node
-        b = _scalar(self.compile(base, inp), "[...]")
-        el = b.dtype.elementType if isinstance(b.dtype, T.ArrayType) else None
+        b = self.scalar(self.compile(base, inp), "[...]")
         if b.dtype is not None and not isinstance(b.dtype, T.ArrayType):
             raise JqError(f".[{idx}]: cannot index a {b.dtype.simpleString()}")
         # jq is 0-based and yields null out of range; element_at is 1-based
         # (negative jq indexes count from the end, like element_at's)
         pos = idx + 1 if idx >= 0 else idx
-        return _Val(F.try_element_at(b.col, F.lit(pos)), el)
+        return Val(F.try_element_at(b.col, F.lit(pos)), element_type(b.dtype))
 
     def _c_neg(self, node, inp):
-        v = _scalar(self.compile(node[1], inp), "unary -")
-        return _Val(-v.col, v.dtype)
+        v = self.scalar(self.compile(node[1], inp), "unary -")
+        return Val(-v.col, v.dtype)
 
     def _c_arith(self, node, inp):
         _, op, ln, rn = node
-        l = _scalar(self.compile(ln, inp), op)
-        r = _scalar(self.compile(rn, inp), op)
+        l = self.scalar(self.compile(ln, inp), op)
+        r = self.scalar(self.compile(rn, inp), op)
         if op == "+":
             if isinstance(l.dtype, T.StringType) or isinstance(r.dtype, T.StringType):
                 if not (
@@ -615,34 +456,26 @@ class _Compiler:
                 ):
                     raise JqError("+: cannot add string and non-string (jq errors too; "
                                   "pipe through tostring)")
-                return _Val(F.concat(l.col, r.col), _STR)
+                return Val(F.concat(l.col, r.col), STR)
             if isinstance(l.dtype, T.ArrayType) or isinstance(r.dtype, T.ArrayType):
-                return _Val(F.concat(l.col, r.col), l.dtype or r.dtype)
-            return _Val(l.col + r.col, self._num_out(l, r))
+                return Val(F.concat(l.col, r.col), l.dtype or r.dtype)
+            return Val(l.col + r.col, num_type(l, r))
         for d in (l, r):
             if d.dtype is not None and not isinstance(d.dtype, T.NumericType):
                 raise JqError(f"{op}: requires numbers, got {d.dtype.simpleString()}")
         if op == "-":
-            return _Val(l.col - r.col, self._num_out(l, r))
+            return Val(l.col - r.col, num_type(l, r))
         if op == "*":
-            return _Val(l.col * r.col, self._num_out(l, r))
+            return Val(l.col * r.col, num_type(l, r))
         if op == "%":
-            return _Val(l.col % r.col, self._num_out(l, r))
+            return Val(l.col % r.col, num_type(l, r))
         # '/' — jq division is always float
-        return _Val(l.col.cast("double") / r.col.cast("double"), _DOUBLE)
-
-    @staticmethod
-    def _num_out(l: _Val, r: _Val) -> T.DataType | None:
-        if isinstance(l.dtype, T.FractionalType) or isinstance(r.dtype, T.FractionalType):
-            return _DOUBLE
-        if l.dtype is None or r.dtype is None:
-            return None
-        return _LONG
+        return Val(l.col.cast("double") / r.col.cast("double"), DOUBLE)
 
     def _c_cmp(self, node, inp):
         _, op, ln, rn = node
-        l = _scalar(self.compile(ln, inp), op).col
-        r = _scalar(self.compile(rn, inp), op).col
+        l = self.scalar(self.compile(ln, inp), op).col
+        r = self.scalar(self.compile(rn, inp), op).col
         # jq comparisons are TOTAL: null is an ordinary value that sorts
         # below everything else (null == null → true, null < 5 → true,
         # .a != "x" with null .a → true). Raw SQL operators are 3-valued
@@ -672,26 +505,22 @@ class _Compiler:
             expr = (r.isNull() & l.isNotNull()) | (l.isNotNull() & (l > r))
         else:  # ">="
             expr = r.isNull() | (l.isNotNull() & (l >= r))
-        return _Val(expr, _BOOL)
+        return Val(expr, BOOL)
 
     def _c_and(self, node, inp):
-        l = _truthy(self.compile(node[1], inp))
-        r = _truthy(self.compile(node[2], inp))
-        return _Val(l & r, _BOOL)
+        l = _truthy(self.compile(node[2], inp))
+        r = _truthy(self.compile(node[3], inp))
+        return Val(l & r, BOOL)
 
     def _c_or(self, node, inp):
-        l = _truthy(self.compile(node[1], inp))
-        r = _truthy(self.compile(node[2], inp))
-        return _Val(l | r, _BOOL)
+        l = _truthy(self.compile(node[2], inp))
+        r = _truthy(self.compile(node[3], inp))
+        return Val(l | r, BOOL)
 
     def _c_alt(self, node, inp):
-        l = self.compile(node[1], inp)
-        r = self.compile(node[2], inp)
-        l = _scalar(l, "//")
-        r = _scalar(r, "//")
-        return _Val(
-            F.when(_truthy(l), l.col).otherwise(r.col), l.dtype or r.dtype
-        )
+        l = self.scalar(self.compile(node[1], inp), "//")
+        r = self.scalar(self.compile(node[2], inp), "//")
+        return Val(F.when(_truthy(l), l.col).otherwise(r.col), l.dtype or r.dtype)
 
     def _c_if(self, node, inp):
         _, branches, els = node
@@ -699,301 +528,115 @@ class _Compiler:
         dt: T.DataType | None = None
         for cond, then in branches:
             c = _truthy(self.compile(cond, inp))
-            t = _scalar(self.compile(then, inp), "if-branch")
+            t = self.scalar(self.compile(then, inp), "if-branch")
             out = F.when(c, t.col) if out is None else out.when(c, t.col)
             dt = dt or t.dtype
-        e = _scalar(self.compile(els, inp), "else-branch")
-        return _Val(out.otherwise(e.col), dt or e.dtype)
-
-    def _c_obj(self, node, inp):
-        out = {}
-        for k, e in node[1]:
-            v = self.compile(e, inp)
-            if v.is_obj:  # nested construction -> struct column
-                v = _Val(
-                    F.struct(*[c.col.alias(n) for n, c in v.obj.items()]),
-                    T.StructType([
-                        T.StructField(n, c.dtype or T.NullType())
-                        for n, c in v.obj.items()
-                    ]),
-                )
-            out[k] = v
-        return _Val(obj=out)
-
-    def _c_arr(self, node, inp):
-        items = [_scalar(self.compile(e, inp), "array") for e in node[1]]
-        el = next((i.dtype for i in items if i.dtype is not None), None)
-        return _Val(
-            F.array(*[i.col for i in items]) if items else F.array(),
-            T.ArrayType(el) if el is not None else None,
-        )
+        e = self.scalar(self.compile(els, inp), "else-branch")
+        return Val(out.otherwise(e.col), dt or e.dtype)
 
     # -- builtins ------------------------------------------------------------
-
-    def _tostring(self, v: _Val) -> Column:
-        if isinstance(v.dtype, T.StringType):
-            return v.col
-        return v.col.cast("string")
 
     def _c_call(self, node, inp):
         _, name, args = node
         if name == "select":
             raise JqError("select is only supported as a pipe stage "
                           "(… | select(f) | …)")
+        if name in _BUILTINS:
+            kind, n, lower, out = _BUILTINS[name]
+            self.argc(name, len(args), n)
+            lits = [self.str_arg(args, i, name) for i in range(n)]
+            v = self._array_in(inp, name) if kind == "array" else self.scalar(inp, name)
+            return Val(lower(v.col, *lits), result_type(out, v.dtype))
+        if name in _QUANTIFIERS:
+            v = self._array_in(inp, name)
+            self.argc(name, len(args), 0, 1)
+            body = args[0] if args else ("identity",)
+            el = element_type(v.dtype)
+            return Val(_QUANTIFIERS[name](
+                v.col, lambda x: _truthy(self.compile(body, Val(x, el)))), BOOL)
         fn = getattr(self, f"_fn_{name}", None)
         if fn is None:
             raise JqError(f"unsupported jq function: {name}")
         return fn(args, inp)
 
-    def _no_args(self, args, name):
-        if args:
-            raise JqError(f"{name} takes no arguments")
-
-    def _fn_length(self, args, inp):
-        self._no_args(args, "length")
-        v = _scalar(inp, "length")
-        if isinstance(v.dtype, T.ArrayType):
-            return _Val(F.size(v.col), T.IntegerType())
-        if v.dtype is None or isinstance(v.dtype, T.StringType):
-            return _Val(F.length(v.col), T.IntegerType())
-        raise JqError(f"length: unsupported on {v.dtype.simpleString()}")
-
-    def _fn_not(self, args, inp):
-        self._no_args(args, "not")
-        return _Val(~_truthy(inp), _BOOL)
-
-    def _fn_tostring(self, args, inp):
-        self._no_args(args, "tostring")
-        return _Val(self._tostring(_scalar(inp, "tostring")), _STR)
-
-    def _fn_tonumber(self, args, inp):
-        self._no_args(args, "tonumber")
-        return _Val(_scalar(inp, "tonumber").col.cast("double"), _DOUBLE)
-
-    def _fn_floor(self, args, inp):
-        self._no_args(args, "floor")
-        return _Val(F.floor(_scalar(inp, "floor").col.cast("double")), _LONG)
-
-    def _fn_ceil(self, args, inp):
-        self._no_args(args, "ceil")
-        return _Val(F.ceil(_scalar(inp, "ceil").col.cast("double")), _LONG)
-
-    def _fn_round(self, args, inp):
-        self._no_args(args, "round")
-        return _Val(
-            F.round(_scalar(inp, "round").col.cast("double")).cast("long"), _LONG
-        )
-
-    def _fn_fabs(self, args, inp):
-        self._no_args(args, "fabs")
-        v = _scalar(inp, "fabs")
-        return _Val(F.abs(v.col), v.dtype)
-
-    def _fn_sqrt(self, args, inp):
-        self._no_args(args, "sqrt")
-        return _Val(F.sqrt(_scalar(inp, "sqrt").col.cast("double")), _DOUBLE)
-
-    def _fn_ascii_downcase(self, args, inp):
-        self._no_args(args, "ascii_downcase")
-        return _Val(F.lower(_scalar(inp, "ascii_downcase").col), _STR)
-
-    def _fn_ascii_upcase(self, args, inp):
-        self._no_args(args, "ascii_upcase")
-        return _Val(F.upper(_scalar(inp, "ascii_upcase").col), _STR)
-
-    def _fn_ltrimstr(self, args, inp):
-        s = _lit_str_arg(args, 0, "ltrimstr")
-        c = _scalar(inp, "ltrimstr").col
-        return _Val(
-            F.when(c.startswith(s), c.substr(F.lit(len(s) + 1), F.length(c)))
-            .otherwise(c),
-            _STR,
-        )
-
-    def _fn_rtrimstr(self, args, inp):
-        s = _lit_str_arg(args, 0, "rtrimstr")
-        c = _scalar(inp, "rtrimstr").col
-        return _Val(
-            F.when(c.endswith(s), c.substr(F.lit(1), F.length(c) - len(s)))
-            .otherwise(c),
-            _STR,
-        )
-
-    def _fn_startswith(self, args, inp):
-        s = _lit_str_arg(args, 0, "startswith")
-        return _Val(_scalar(inp, "startswith").col.startswith(s), _BOOL)
-
-    def _fn_endswith(self, args, inp):
-        s = _lit_str_arg(args, 0, "endswith")
-        return _Val(_scalar(inp, "endswith").col.endswith(s), _BOOL)
-
-    def _fn_test(self, args, inp):
-        pat = _lit_str_arg(args, 0, "test")
-        return _Val(_scalar(inp, "test").col.rlike(pat), _BOOL)
-
-    def _fn_gsub(self, args, inp):
-        pat = _lit_str_arg(args, 0, "gsub")
-        repl = _lit_str_arg(args, 1, "gsub")
-        return _Val(F.regexp_replace(_scalar(inp, "gsub").col, pat, repl), _STR)
-
-    def _fn_split(self, args, inp):
-        sep = _lit_str_arg(args, 0, "split")
-        if not sep:
-            raise JqError("split: separator must be non-empty")
-        # jq splits on a LITERAL separator; F.split takes a regex
-        return _Val(
-            F.split(_scalar(inp, "split").col, re.escape(sep)),
-            T.ArrayType(_STR),
-        )
-
-    def _fn_join(self, args, inp):
-        sep = _lit_str_arg(args, 0, "join")
-        v = _scalar(inp, "join")
-        if v.dtype is not None and not isinstance(v.dtype, T.ArrayType):
-            raise JqError("join: input must be an array")
-        return _Val(F.array_join(v.col, sep), _STR)
-
-    # -- array builtins (Spark higher-order functions — still JVM-side) ------
-
-    def _array_in(self, inp: _Val, what: str) -> _Val:
-        v = _scalar(inp, what)
+    def _array_in(self, inp: Val, what: str) -> Val:
+        v = self.scalar(inp, what)
         if v.dtype is not None and not isinstance(v.dtype, T.ArrayType):
             raise JqError(f"{what}: input must be an array, got "
                           f"{v.dtype.simpleString()}")
         return v
 
+    def _fn_length(self, args, inp):
+        self.argc("length", len(args), 0)
+        return Val(self.length(self.scalar(inp, "length"), "length"), T.IntegerType())
+
+    def _fn_not(self, args, inp):
+        self.argc("not", len(args), 0)
+        return Val(~_truthy(inp), BOOL)
+
+    def _fn_tostring(self, args, inp):
+        self.argc("tostring", len(args), 0)
+        return Val(_tostring(self.scalar(inp, "tostring")), STR)
+
+    def _fn_split(self, args, inp):
+        self.argc("split", len(args), 1)
+        sep = self.str_arg(args, 0, "split")
+        if not sep:
+            raise JqError("split: separator must be non-empty")
+        # jq splits on a LITERAL separator; F.split takes a regex
+        return Val(F.split(self.scalar(inp, "split").col, re.escape(sep)), T.ArrayType(STR))
+
     def _fn_map(self, args, inp):
         """jq ``map(f)`` → ``F.transform``: f runs per element, compiled
         once against the element type — no iteration leaves the JVM."""
-        if len(args) != 1:
-            raise JqError("map takes exactly one argument")
+        self.argc("map", len(args), 1)
         v = self._array_in(inp, "map")
-        el = v.dtype.elementType if isinstance(v.dtype, T.ArrayType) else None
-        body = args[0]
+        el = element_type(v.dtype)
         out_dtype: list = [None]
 
         def _f(x: Column) -> Column:
-            r = _scalar(self.compile(body, _Val(x, el)), "map body")
+            r = self.scalar(self.compile(args[0], Val(x, el)), "map body")
             out_dtype[0] = r.dtype
             return r.col
 
         col = F.transform(v.col, _f)
-        return _Val(col, T.ArrayType(out_dtype[0]) if out_dtype[0] else None)
-
-    def _fn_add(self, args, inp):
-        """jq ``add`` on a numeric array (sum; null for empty-as-jq? jq
-        yields null on []; aggregate yields the 0 start — documented)."""
-        self._no_args(args, "add")
-        v = self._array_in(inp, "add")
-        return _Val(
-            F.aggregate(
-                v.col, F.lit(0.0), lambda acc, x: acc + x.cast("double")
-            ),
-            _DOUBLE,
-        )
-
-    def _fn_min(self, args, inp):
-        self._no_args(args, "min")
-        v = self._array_in(inp, "min")
-        el = v.dtype.elementType if isinstance(v.dtype, T.ArrayType) else None
-        return _Val(F.array_min(v.col), el)
-
-    def _fn_max(self, args, inp):
-        self._no_args(args, "max")
-        v = self._array_in(inp, "max")
-        el = v.dtype.elementType if isinstance(v.dtype, T.ArrayType) else None
-        return _Val(F.array_max(v.col), el)
-
-    def _fn_sort(self, args, inp):
-        self._no_args(args, "sort")
-        v = self._array_in(inp, "sort")
-        return _Val(F.sort_array(v.col), v.dtype)
-
-    def _fn_reverse(self, args, inp):
-        self._no_args(args, "reverse")
-        v = self._array_in(inp, "reverse")
-        return _Val(F.reverse(v.col), v.dtype)
-
-    def _fn_unique(self, args, inp):
-        """jq unique = distinct + sorted."""
-        self._no_args(args, "unique")
-        v = self._array_in(inp, "unique")
-        return _Val(F.sort_array(F.array_distinct(v.col)), v.dtype)
-
-    def _fn_first(self, args, inp):
-        self._no_args(args, "first")
-        v = self._array_in(inp, "first")
-        el = v.dtype.elementType if isinstance(v.dtype, T.ArrayType) else None
-        return _Val(F.try_element_at(v.col, F.lit(1)), el)
-
-    def _fn_last(self, args, inp):
-        self._no_args(args, "last")
-        v = self._array_in(inp, "last")
-        el = v.dtype.elementType if isinstance(v.dtype, T.ArrayType) else None
-        return _Val(F.try_element_at(v.col, F.lit(-1)), el)
-
-    def _fn_any(self, args, inp):
-        """``any`` / ``any(f)`` → F.exists (jq truthiness per element)."""
-        v = self._array_in(inp, "any")
-        el = v.dtype.elementType if isinstance(v.dtype, T.ArrayType) else None
-        if len(args) > 1:
-            raise JqError("any takes at most one argument")
-        body = args[0] if args else ("identity",)
-        return _Val(
-            F.exists(v.col, lambda x: _truthy(self.compile(body, _Val(x, el)))),
-            _BOOL,
-        )
-
-    def _fn_all(self, args, inp):
-        v = self._array_in(inp, "all")
-        el = v.dtype.elementType if isinstance(v.dtype, T.ArrayType) else None
-        if len(args) > 1:
-            raise JqError("all takes at most one argument")
-        body = args[0] if args else ("identity",)
-        return _Val(
-            F.forall(v.col, lambda x: _truthy(self.compile(body, _Val(x, el)))),
-            _BOOL,
-        )
+        return Val(col, T.ArrayType(out_dtype[0]) if out_dtype[0] else None)
 
     def _fn_has(self, args, inp):
-        key = _lit_str_arg(args, 0, "has")
+        self.argc("has", len(args), 1)
+        key = self.str_arg(args, 0, "has")
         if inp.is_obj:
-            return _Val(F.lit(key in inp.obj), _BOOL)
+            return Val(F.lit(key in inp.obj), BOOL)
         if isinstance(inp.dtype, T.StructType):
-            return _Val(F.lit(key in inp.dtype.fieldNames()), _BOOL)
+            return Val(F.lit(key in inp.dtype.fieldNames()), BOOL)
         raise JqError("has: input must be an object")
 
 
 # -- public API --------------------------------------------------------------
 
-
-@dataclass
-class CompiledJq:
-    """A compiled program: output projection + optional filter predicate.
-
-    ``columns`` is None when the program is pure filtering (its pipeline
-    value is the unchanged input object) — callers keep their own
-    projection then.
-    """
-
-    columns: dict[str, Column] | None
-    where: Column | None
+_NOT_A_PREDICATE = ("predicate must be a boolean jq expression (filter-only), "
+                    "not a projection")
 
 
-def _root_from_schema(
-    schema: T.StructType, cols: dict[str, Column] | None = None
-) -> _Val:
-    return _Val(obj={
-        f.name: _Val(cols[f.name] if cols else F.col(f.name), f.dataType)
-        for f in schema.fields
-    })
+def _lower(ast, schema: T.StructType, cols: dict[str, Column] | None = None) -> Compiled:
+    comp = _Compiler()
+    root = root_from_schema(schema, cols)
+    out = comp.run(ast, root)
+    if not out.is_obj:
+        raise JqError(
+            "program must produce an object ({...}) or be filter-only; "
+            "a bare scalar result has no column name"
+        )
+    if out.obj is root.obj:  # filter-only program: '.' passed through
+        return Compiled(None, comp.where)
+    return Compiled.of(out, comp.where)
 
 
 def compile_program(
     program: str,
     schema: T.StructType,
     cols: dict[str, Column] | None = None,
-) -> CompiledJq:
+) -> Compiled:
     """Compile ``program`` against a row ``schema``.
 
     The input object ``.`` is the row; ``.col`` is a column reference.
@@ -1003,29 +646,34 @@ def compile_program(
     back them (the transform engine's payload dict mid-chain); defaults
     to ``F.col(name)``.
     """
+    return _lower(parse(program), schema, cols)
+
+
+def parse_predicate(program: str):
+    """Parse a boolean jq expression (the CustomFilter shape) as the
+    ``select(...)`` it filters by. Spark-free, so config validation runs
+    it. A final object construction raises: as a select() argument it
+    would keep EVERY row (any jq object is truthy)."""
     ast = parse(program)
-    comp = _Compiler()
-    root = _root_from_schema(schema, cols)
-    out = comp.run(ast, root)
-    if out.is_obj:
-        if out.obj is root.obj:  # filter-only program: '.' passed through
-            return CompiledJq(columns=None, where=comp.where)
-        return CompiledJq(columns={k: v.col for k, v in out.obj.items()},
-                          where=comp.where)
-    raise JqError(
-        "program must produce an object ({...}) or be filter-only; "
-        "a bare scalar result has no column name"
-    )
+    stages = ast[1] if ast[0] == "pipe" else [ast]
+    if stages[-1][0] == "obj":
+        raise JqError(_NOT_A_PREDICATE)
+    if stages[0][:2] != ("call", "select"):
+        ast = ("call", "select", [ast])
+    return ast
+
+
+def compile_predicate(program: str, schema: T.StructType) -> Column:
+    """Compile a boolean jq expression to one WHERE Column (jq
+    truthiness: null and false drop the row)."""
+    compiled = _lower(parse_predicate(program), schema)
+    if compiled.columns is not None:
+        raise JqError(_NOT_A_PREDICATE)
+    return compiled.where
 
 
 def jq_transform(df: DataFrame, program: str) -> DataFrame:
     """Apply a jq program to a DataFrame: selects become WHERE, the
     final object becomes the projection. One driver-side compile; the
     executed plan is pure Column expressions (no Python in the path)."""
-    c = compile_program(program, df.schema)
-    out = df
-    if c.where is not None:
-        out = out.where(c.where)
-    if c.columns is not None:
-        out = out.select(*[v.alias(k) for k, v in c.columns.items()])
-    return out
+    return transform(df, compile_program(program, df.schema))

@@ -79,167 +79,57 @@ yields null (the SQL cast behavior), documented per-operator above.
 
 from __future__ import annotations
 
+import operator
 import re
-from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from .lowering import (
+    BOOL, DOUBLE, LONG, STR, Compiled, Compiler, Parser, ScriptError, Val, cat,
+    element_type, root_from_schema, transform,
+)
 
-class JsError(ValueError):
+
+class JsError(ScriptError):
     """Parse or compile error in a JavaScript program (always compile-time)."""
 
 
-# -- tokenizer ----------------------------------------------------------------
-
-_TOKEN_RE = re.compile(
-    r"""
-    (?P<ws>\s+|//[^\n]*|/\*.*?\*/)
-  | (?P<num>\d+(?:\.\d+)?|\.\d+)
-  | (?P<op>===|!==|==|!=|<=|>=|&&|\|\||\?\?|\?\.|[<>+\-*/%!?:.,;(){}\[\]])
-  | (?P<ident>[A-Za-z_$][A-Za-z0-9_$]*)
-    """,
-    re.VERBOSE | re.DOTALL,
-)
-
-_KEYWORDS = {"return", "true", "false", "null", "undefined"}
+# -- parser -------------------------------------------------------------------
 
 _STR_ESC = {"n": "\n", "t": "\t", "r": "\r", '"': '"', "'": "'", "\\": "\\",
             "`": "`", "$": "$", "/": "/"}
 
 
-@dataclass
-class _Tok:
-    kind: str  # num | str | tmpl | op | ident | kw | eof
-    val: object
-    pos: int
+class _Parser(Parser):
+    Error = JsError
+    TOKEN_RE = re.compile(
+        r"""
+        (?P<ws>\s+|//[^\n]*|/\*.*?\*/)
+      | (?P<num>\d+(?:\.\d+)?|\.\d+)
+      | (?P<op>===|!==|==|!=|<=|>=|&&|\|\||\?\?|\?\.|[<>+\-*/%!?:.,;(){}\[\]])
+      | (?P<ident>[A-Za-z_$][A-Za-z0-9_$]*)
+        """,
+        re.VERBOSE | re.DOTALL,
+    )
+    KEYWORDS = frozenset({"return", "true", "false", "null", "undefined"})
+    # template literals (`a ${expr} b`) lex to ("lit" | "expr") parts
+    QUOTES = {"'": ("str", _STR_ESC, None), '"': ("str", _STR_ESC, None),
+              "`": ("tmpl", _STR_ESC, "${")}
 
-
-def _lex_plain_string(src: str, i: int) -> tuple[str, int]:
-    quote = src[i]
-    j, buf = i + 1, []
-    while j < len(src) and src[j] != quote:
-        if src[j] == "\\":
-            if j + 1 >= len(src) or src[j + 1] not in _STR_ESC:
-                raise JsError(f"unsupported string escape at {j}")
-            buf.append(_STR_ESC[src[j + 1]])
-            j += 2
-        else:
-            buf.append(src[j])
-            j += 1
-    if j >= len(src):
-        raise JsError("unterminated string literal")
-    return "".join(buf), j + 1
-
-
-def _lex_template(src: str, i: int) -> tuple[list, int]:
-    """Lex a template literal starting at src[i] == '`'. Returns parts
-    alternating ("lit", str) and ("expr", substring)."""
-    j, buf, parts = i + 1, [], []
-    while j < len(src):
-        c = src[j]
-        if c == "`":
-            if buf:
-                parts.append(("lit", "".join(buf)))
-            return parts, j + 1
-        if c == "\\":
-            if j + 1 >= len(src) or src[j + 1] not in _STR_ESC:
-                raise JsError(f"unsupported template escape at {j}")
-            buf.append(_STR_ESC[src[j + 1]])
-            j += 2
-            continue
-        if c == "$" and j + 1 < len(src) and src[j + 1] == "{":
-            depth, k = 1, j + 2
-            while k < len(src) and depth:
-                if src[k] in "'\"":
-                    _, k = _lex_plain_string(src, k)
-                    continue
-                if src[k] == "{":
-                    depth += 1
-                elif src[k] == "}":
-                    depth -= 1
-                k += 1
-            if depth:
-                raise JsError(f"unterminated ${{...}} splice at {j}")
-            if buf:
-                parts.append(("lit", "".join(buf)))
-                buf = []
-            parts.append(("expr", src[j + 2 : k - 1]))
-            j = k
-            continue
-        buf.append(c)
-        j += 1
-    raise JsError("unterminated template literal")
-
-
-def _tokenize(src: str) -> list[_Tok]:
-    toks: list[_Tok] = []
-    i = 0
-    while i < len(src):
-        c = src[i]
-        if c in "'\"":
-            s, j = _lex_plain_string(src, i)
-            toks.append(_Tok("str", s, i))
-            i = j
-            continue
-        if c == "`":
-            parts, j = _lex_template(src, i)
-            toks.append(_Tok("tmpl", parts, i))
-            i = j
-            continue
-        m = _TOKEN_RE.match(src, i)
-        if not m:
-            raise JsError(f"unexpected character {src[i]!r} at {i}")
-        i = m.end()
-        if m.lastgroup == "ws":
-            continue
-        if m.lastgroup == "num":
-            txt = m.group("num")
-            toks.append(_Tok("num", float(txt) if "." in txt else int(txt), m.start()))
-        elif m.lastgroup == "ident":
-            w = m.group("ident")
-            toks.append(_Tok("kw" if w in _KEYWORDS else "ident", w, m.start()))
-        else:
-            if m.group("op") in ("==", "!="):
+    def __init__(self, src: str):
+        super().__init__(src)
+        for t in self.toks:
+            if t.kind == "op" and t.val in ("==", "!="):
                 raise JsError(
-                    f"loose {m.group('op')} at {m.start()}: its coercion table is "
-                    f"not supported — use strict {m.group('op')}="
+                    f"loose {t.val} at {t.pos}: its coercion table is "
+                    f"not supported — use strict {t.val}="
                 )
-            toks.append(_Tok("op", m.group("op"), m.start()))
-    toks.append(_Tok("eof", None, len(src)))
-    return toks
-
-
-# -- parser -------------------------------------------------------------------
-
-
-class _Parser:
-    def __init__(self, toks: list[_Tok]):
-        self.toks = toks
-        self.i = 0
-
-    def peek(self) -> _Tok:
-        return self.toks[self.i]
-
-    def next(self) -> _Tok:
-        t = self.toks[self.i]
-        self.i += 1
-        return t
-
-    def expect(self, kind: str, val: object = None) -> _Tok:
-        t = self.next()
-        if t.kind != kind or (val is not None and t.val != val):
-            raise JsError(f"expected {val or kind}, got {t.val!r} at {t.pos}")
-        return t
-
-    def at_op(self, *ops: str) -> bool:
-        t = self.peek()
-        return t.kind == "op" and t.val in ops
 
     # ternary := nullish ('?' expr ':' expr)?
     def parse_expr(self):
-        cond = self.parse_nullish()
+        cond = self.binary(self.parse_or, ("??",), "nullish")
         if self.at_op("?"):
             self.next()
             a = self.parse_expr()
@@ -248,33 +138,14 @@ class _Parser:
             return ("ternary", cond, a, b)
         return cond
 
-    def parse_nullish(self):
-        left = self.parse_or()
-        while self.at_op("??"):
-            self.next()
-            left = ("nullish", left, self.parse_or())
-        return left
-
     def parse_or(self):
-        left = self.parse_and()
-        while self.at_op("||"):
-            self.next()
-            left = ("or", left, self.parse_and())
-        return left
+        return self.binary(self.parse_and, ("||",), "or")
 
     def parse_and(self):
-        left = self.parse_eq()
-        while self.at_op("&&"):
-            self.next()
-            left = ("and", left, self.parse_eq())
-        return left
+        return self.binary(self.parse_eq, ("&&",), "and")
 
     def parse_eq(self):
-        left = self.parse_rel()
-        while self.at_op("===", "!=="):
-            op = self.next().val
-            left = ("eq", op, left, self.parse_rel())
-        return left
+        return self.binary(self.parse_rel, ("===", "!=="), "eq")
 
     def parse_rel(self):
         left = self.parse_add()
@@ -284,18 +155,10 @@ class _Parser:
         return left
 
     def parse_add(self):
-        left = self.parse_mul()
-        while self.at_op("+", "-"):
-            op = self.next().val
-            left = ("arith", op, left, self.parse_mul())
-        return left
+        return self.binary(self.parse_mul, ("+", "-"))
 
     def parse_mul(self):
-        left = self.parse_unary()
-        while self.at_op("*", "/", "%"):
-            op = self.next().val
-            left = ("arith", op, left, self.parse_unary())
-        return left
+        return self.binary(self.parse_unary, ("*", "/", "%"))
 
     def parse_unary(self):
         if self.at_op("!"):
@@ -329,27 +192,16 @@ class _Parser:
         return node
 
     def _call_args(self) -> list:
-        self.expect("op", "(")
-        args = []
-        if not self.at_op(")"):
-            args.append(self.parse_expr())
-            while self.at_op(","):
-                self.next()
-                args.append(self.parse_expr())
-        self.expect("op", ")")
-        return args
+        return self.delimited("(", ")", self.parse_expr)
 
     def parse_primary(self):
         t = self.peek()
-        if t.kind == "num":
+        if t.kind in ("num", "str"):
             self.next()
             return ("lit", t.val)
-        if t.kind == "str":
-            self.next()
-            return ("slit", t.val)
         if t.kind == "tmpl":
             self.next()
-            return ("tmpl", t.val)
+            return ("str", t.val)
         if t.kind == "kw" and t.val in ("true", "false", "null", "undefined"):
             self.next()
             return ("lit", {"true": True, "false": False,
@@ -362,13 +214,10 @@ class _Parser:
         if t.kind == "op" and t.val == "{":
             return self.parse_object()
         if t.kind == "op" and t.val == "[":
-            return self.parse_array()
+            return ("arr", self.delimited("[", "]", self.parse_expr))
         if t.kind == "ident":
             name = self.next().val
-            if self.at_op("(") and name not in ("row", "event", "Math", "String",
-                                                "Number"):
-                return ("call", name, self._call_args())
-            if name in ("String", "Number") and self.at_op("("):
+            if self.at_op("(") and name not in ("row", "event", "Math"):
                 return ("call", name, self._call_args())
             return ("name", name)
         raise JsError(f"unexpected token {t.val!r} at {t.pos}")
@@ -378,9 +227,7 @@ class _Parser:
         entries = []
         while not self.at_op("}"):
             t = self.next()
-            if t.kind in ("ident", "kw"):
-                key = t.val
-            elif t.kind == "str":
+            if t.kind in ("ident", "kw", "str"):
                 key = t.val
             else:
                 raise JsError(f"bad object key at {t.pos}")
@@ -398,76 +245,28 @@ class _Parser:
         self.next()
         return ("obj", entries)
 
-    def parse_array(self):
-        self.expect("op", "[")
-        items = []
-        if not self.at_op("]"):
-            items.append(self.parse_expr())
-            while self.at_op(","):
-                self.next()
-                items.append(self.parse_expr())
-        self.expect("op", "]")
-        return ("arr", items)
-
 
 def parse(program: str):
     """Parse an expression program (optionally ``return``-prefixed,
     optionally ``;``-terminated); returns the AST."""
-    p = _Parser(_tokenize(program))
-    if p.peek().kind == "kw" and p.peek().val == "return":
+    p = _Parser(program)
+    if p.at_kw("return"):
         p.next()
     ast = p.parse_expr()
     if p.at_op(";"):
         p.next()
-    if p.peek().kind != "eof":
-        t = p.peek()
-        raise JsError(f"trailing input at {t.pos}: {t.val!r} (one expression only)")
+    p.end(" (one expression only)")
     return ast
 
 
 # -- compiler -----------------------------------------------------------------
 
 
-@dataclass
-class _Val:
-    col: Column | None = None
-    dtype: T.DataType | None = None
-    obj: dict | None = None      # name -> _Val when this is the row object
-    nn: bool = False             # statically known non-null
-    known_undef: bool = False    # statically known null/undefined
-
-    @property
-    def is_obj(self) -> bool:
-        return self.obj is not None
-
-
-_STR = T.StringType()
-_BOOL = T.BooleanType()
-_LONG = T.LongType()
-_DOUBLE = T.DoubleType()
-
-
-def _cat(dt: T.DataType | None) -> str | None:
-    if dt is None:
-        return None
-    if isinstance(dt, T.NumericType):
-        return "number"
-    if isinstance(dt, T.StringType):
-        return "string"
-    if isinstance(dt, T.BooleanType):
-        return "boolean"
-    if isinstance(dt, T.ArrayType):
-        return "array"
-    if isinstance(dt, T.StructType):
-        return "object"
-    return dt.simpleString()
-
-
-def _truthy(v: _Val) -> Column:
+def _truthy(v: Val) -> Column:
     # JS: false, 0, "", null/undefined are falsy (NaN divergence documented)
     if v.is_obj:
         return F.lit(True)
-    c = _cat(v.dtype)
+    c = cat(v.dtype)
     if c == "boolean":
         return F.coalesce(v.col, F.lit(False))
     if c == "number":
@@ -477,24 +276,62 @@ def _truthy(v: _Val) -> Column:
     return v.col.isNotNull()
 
 
-class _Compiler:
-    def compile(self, node, inp: _Val) -> _Val:
-        m = getattr(self, f"_c_{node[0]}", None)
-        if m is None:
-            raise JsError(f"unsupported JavaScript construct: {node[0]}")
-        return m(node, inp)
+_ORDER = {"<": operator.lt, "<=": operator.le, ">": operator.gt, ">=": operator.ge}
 
-    def _scalar(self, v: _Val, what: str) -> _Val:
-        if v.is_obj:
-            raise JsError(f"{what}: expected a value, got the row object")
-        return v
+# methods: name → (argument count range, base category — None: string
+# or array, lowering of (base column, *argument columns) — None: the
+# _m_<name> method —, result type)
+_METHODS = {
+    "toUpperCase": (0, 0, "string", F.upper, STR),
+    "toLowerCase": (0, 0, "string", F.lower, STR),
+    "trim": (0, 0, "string", F.trim, STR),
+    "startsWith": (1, 1, "string", lambda c, a: c.startswith(a), BOOL),
+    "endsWith": (1, 1, "string", lambda c, a: c.endswith(a), BOOL),
+    "includes": (1, 1, None, None, BOOL),
+    "split": (1, 1, "string", None, T.ArrayType(STR)),
+    "join": (0, 1, "array", None, STR),
+    "replaceAll": (2, 2, "string", None, STR),
+    "charAt": (1, 1, "string", None, STR),
+    "slice": (1, 2, "string", None, STR),
+}
 
-    def _js_string(self, v: _Val) -> Column:
+# one-argument Math functions on the Number()-coerced argument
+_MATH = {
+    "floor": (F.floor, LONG),
+    "ceil": (F.ceil, LONG),
+    # JS rounds half toward +∞ (Math.round(-2.5) === -2), unlike
+    # SQL's HALF_UP-away-from-zero
+    "round": (lambda c: F.floor(c + F.lit(0.5)), LONG),
+    "trunc": (lambda c: c.cast("long"), LONG),
+    "abs": (F.abs, DOUBLE),
+    "sqrt": (F.sqrt, DOUBLE),
+}
+
+# leading-prefix number parses ("12px" → 12; no digits → null for NaN):
+# name → (prefix regex, cast type, result type)
+_PARSE_NUM = {
+    "parseInt": (r"^[+-]?\d+", "long", LONG),
+    "parseFloat": (r"^[+-]?(\d+\.?\d*|\.\d+)", "double", DOUBLE),
+}
+
+
+class _Compiler(Compiler):
+    Error = JsError
+    LANG = "JavaScript"
+    OBJ_NOUN = "the row object"
+    ROW_VALUE_ERROR = "the whole row object is not a value; project fields"
+    NAME_NOUN = "identifier"
+    MIXED_HINT = " — use a ternary (cond ? x : y) instead"
+
+    def splice(self, payload: str, inp: Val) -> Val:  # `${payload}`
+        return self.compile(parse(payload), inp)
+
+    def stringify(self, v: Val) -> Column:
         """String(x): null/undefined → 'null' (the JS null rendering;
         undefined's 'undefined' is conflated — one SQL null), booleans →
         'true'/'false', integral doubles render without '.0' as all JS
         numbers are doubles (exact to 2^63)."""
-        if v.known_undef:
+        if v.known_nil:
             return F.lit("null")
         if isinstance(v.dtype, T.FractionalType):
             as_long = v.col.cast("long")
@@ -505,28 +342,28 @@ class _Compiler:
             s = v.col.cast("string")
         return F.coalesce(s, F.lit("null"))
 
-    def _to_number(self, v: _Val) -> _Val:
+    def _to_number(self, v: Val) -> Val:
         """Number(x): null → 0, '' → 0, booleans → 0/1, unparseable →
         null (JS NaN has no column representation; documented)."""
-        if v.known_undef:
-            return _Val(F.lit(0.0), _DOUBLE, nn=True)
-        c = _cat(v.dtype)
+        if v.known_nil:
+            return Val(F.lit(0.0), DOUBLE, nn=True)
+        c = cat(v.dtype)
         if c == "boolean":
             out = F.coalesce(v.col.cast("int").cast("double"), F.lit(0.0))
-            return _Val(out, _DOUBLE, nn=True)
+            return Val(out, DOUBLE, nn=True)
         if c == "string":
             out = (
                 F.when(v.col.isNull() | (F.trim(v.col) == ""), F.lit(0.0))
                 .otherwise(v.col.cast("double"))
             )
-            return _Val(out, _DOUBLE)
+            return Val(out, DOUBLE)
         if c in (None, "number"):
-            return _Val(F.coalesce(v.col.cast("double"), F.lit(0.0)), _DOUBLE, nn=True)
+            return Val(F.coalesce(v.col.cast("double"), F.lit(0.0)), DOUBLE, nn=True)
         raise JsError(f"Number(): cannot coerce a {c} value")
 
     # property access through null/undefined is a TypeError → raise_error
     # (skipped for ?.-chained access, which null-propagates like JS)
-    def _type_guard(self, base: _Val, result: Column, what: str, opt: bool) -> Column:
+    def _type_guard(self, base: Val, result: Column, what: str, opt: bool) -> Column:
         if opt or base.nn:
             return result
         return F.when(
@@ -535,101 +372,55 @@ class _Compiler:
                                 f"(use ?. to null-propagate)")),
         ).otherwise(result)
 
-    def _c_lit(self, node, inp):
-        v = node[1]
-        if v is None:
-            return _Val(F.lit(None), None, known_undef=True)
-        dt = (
-            _BOOL if isinstance(v, bool)
-            else _LONG if isinstance(v, int)
-            else _DOUBLE
-        )
-        return _Val(F.lit(v), dt, nn=True)
-
-    def _c_slit(self, node, inp):
-        return _Val(F.lit(node[1]), _STR, nn=True)
-
-    def _c_tmpl(self, node, inp):
-        parts = node[1]
-        if not parts:
-            return _Val(F.lit(""), _STR, nn=True)
-        cols = []
-        for kind, payload in parts:
-            if kind == "lit":
-                cols.append(F.lit(payload))
-            else:
-                sub = self.compile(parse(payload), inp)
-                cols.append(self._js_string(self._scalar(sub, "template splice")))
-        return _Val(F.concat(*cols), _STR, nn=True)
-
-    def _c_name(self, node, inp):
-        if node[1] in ("row", "event"):
-            return inp
-        raise JsError(f"unknown identifier {node[1]!r} (the input row is 'row')")
-
     def _c_member(self, node, inp):
         _, base, name, opt = node
         b = self.compile(base, inp)
         if b.is_obj:
             if name in b.obj:
                 return b.obj[name]
-            return _Val(F.lit(None), None, known_undef=True)
-        if b.known_undef:
+            return Val(F.lit(None), None, known_nil=True)
+        if b.known_nil:
             raise JsError(
                 f".{name}: TypeError — the base is statically null/undefined"
             )
         if name == "length":
-            if isinstance(b.dtype, T.ArrayType):
-                out = F.size(b.col).cast("long")
-            elif b.dtype is None or isinstance(b.dtype, T.StringType):
-                out = F.length(b.col).cast("long")
-            else:
-                raise JsError(f".length: unsupported on a {_cat(b.dtype)} value")
-            return _Val(self._type_guard(b, out, ".length", opt), _LONG, nn=b.nn)
+            out = self.length(b, ".length").cast("long")
+            return Val(self._type_guard(b, out, ".length", opt), LONG, nn=b.nn)
         if isinstance(b.dtype, T.StructType):
             if name not in b.dtype.fieldNames():
-                return _Val(F.lit(None), None, known_undef=True)
+                return Val(F.lit(None), None, known_nil=True)
             out = self._type_guard(b, b.col.getField(name), f".{name}", opt)
-            return _Val(out, b.dtype[name].dataType)
-        raise JsError(f".{name}: cannot read properties of a {_cat(b.dtype)} value")
+            return Val(out, b.dtype[name].dataType)
+        raise JsError(f".{name}: cannot read properties of a {cat(b.dtype)} value")
 
     def _c_index(self, node, inp):
         _, base, idxn = node
-        b = self._scalar(self.compile(base, inp), "[...]")
-        if b.known_undef:
+        b = self.scalar(self.compile(base, inp), "[...]")
+        if b.known_nil:
             raise JsError("[...]: TypeError — the base is statically null/undefined")
         if b.dtype is not None and not isinstance(b.dtype, T.ArrayType):
             raise JsError(f"[...]: only array indexing is supported, got "
-                          f"{_cat(b.dtype)}")
-        idx = self._scalar(self.compile(idxn, inp), "index")
-        el = b.dtype.elementType if isinstance(b.dtype, T.ArrayType) else None
+                          f"{cat(b.dtype)}")
+        idx = self.scalar(self.compile(idxn, inp), "index")
         # JS is 0-based; element_at is 1-based; out of range → undefined
         out = F.try_element_at(b.col, (idx.col + F.lit(1)).cast("int"))
-        return _Val(self._type_guard(b, out, "[...]", False), el)
+        return Val(self._type_guard(b, out, "[...]", False), element_type(b.dtype))
 
     def _c_ternary(self, node, inp):
         c = _truthy(self.compile(node[1], inp))
-        a = self._scalar(self.compile(node[2], inp), "?:")
-        b = self._scalar(self.compile(node[3], inp), "?:")
+        a = self.scalar(self.compile(node[2], inp), "?:")
+        b = self.scalar(self.compile(node[3], inp), "?:")
         dt = self._unify(a, b)
-        return _Val(F.when(c, a.col).otherwise(b.col), dt, nn=a.nn and b.nn)
+        return Val(F.when(c, a.col).otherwise(b.col), dt, nn=a.nn and b.nn)
 
     def _c_nullish(self, node, inp):
-        l = self._scalar(self.compile(node[1], inp), "??")
-        r = self._scalar(self.compile(node[2], inp), "??")
+        l = self.scalar(self.compile(node[2], inp), "??")
+        r = self.scalar(self.compile(node[3], inp), "??")
         dt = self._unify(l, r)
-        return _Val(F.coalesce(l.col, r.col), dt, nn=l.nn or r.nn)
-
-    def _mixed_check(self, l: _Val, r: _Val, op: str) -> None:
-        lc, rc = _cat(l.dtype), _cat(r.dtype)
-        if lc is not None and rc is not None and lc != rc:
-            raise JsError(
-                f"{op}: a {lc}-or-{rc} value has no single column type — "
-                f"use a ternary (cond ? x : y) instead"
-            )
+        return Val(F.coalesce(l.col, r.col), dt, nn=l.nn or r.nn)
 
     @staticmethod
-    def _unify(l: _Val, r: _Val) -> T.DataType | None:
+    def _unify(l: Val, r: Val) -> T.DataType | None:
         """Declared type of a two-branch value (&&/||/??/?:): when the
         branches mix integer and fractional NUMBER types, Spark coerces
         the actual column to the wider type — the declared dtype must
@@ -638,79 +429,78 @@ class _Compiler:
         (caught by test_js_differential.py)."""
         if l.dtype == r.dtype:
             return l.dtype or r.dtype
-        if _cat(l.dtype) == "number" and _cat(r.dtype) == "number":
+        if cat(l.dtype) == "number" and cat(r.dtype) == "number":
             if isinstance(l.dtype, T.FractionalType) or isinstance(
                 r.dtype, T.FractionalType
             ):
-                return _DOUBLE
-            return _LONG
+                return DOUBLE
+            return LONG
         return l.dtype or r.dtype
 
     def _c_or(self, node, inp):
-        ln, rn = node[1], node[2]
+        ln, rn = node[2], node[3]
         if ln[0] == "and":
             # `cond && b || c`: one CASE WHEN — exact JS semantics when b
             # is statically never falsy (a truthy literal, or a non-null
             # array/object); otherwise generic value semantics below
             # (mixed types then raise rather than silently coerce)
-            cond = self.compile(ln[1], inp)
-            bn = ln[2]
-            b = self._scalar(self.compile(bn, inp), "&&")
+            cond = self.compile(ln[2], inp)
+            bn = ln[3]
+            b = self.scalar(self.compile(bn, inp), "&&")
             never_falsy = (
-                (bn[0] == "slit" and bn[1] != "")
-                or (bn[0] == "lit" and bool(bn[1]))
-                or (b.nn and _cat(b.dtype) in ("array", "object"))
+                (bn[0] == "lit" and bool(bn[1]))
+                or (b.nn and cat(b.dtype) in ("array", "object"))
             )
             if never_falsy:
-                c = self._scalar(self.compile(rn, inp), "||")
+                c = self.scalar(self.compile(rn, inp), "||")
                 dt = self._unify(b, c)
-                return _Val(
+                return Val(
                     F.when(_truthy(cond), b.col).otherwise(c.col), dt,
                     nn=b.nn and c.nn,
                 )
-        l = self._scalar(self.compile(ln, inp), "||")
-        r = self._scalar(self.compile(rn, inp), "||")
-        self._mixed_check(l, r, "||")
-        if l.nn and r.nn and _cat(l.dtype) == "boolean" \
-                and _cat(r.dtype) == "boolean":
+        l = self.scalar(self.compile(ln, inp), "||")
+        r = self.scalar(self.compile(rn, inp), "||")
+        self.mixed_check(l, r, "||")
+        if l.nn and r.nn and cat(l.dtype) == "boolean" \
+                and cat(r.dtype) == "boolean":
             # both non-null booleans: plain OR (true || b ≡ true,
             # false || b ≡ b) — stays pushable
-            return _Val(l.col | r.col, _BOOL, nn=True)
+            return Val(l.col | r.col, BOOL, nn=True)
         dt = self._unify(l, r)
-        return _Val(F.when(_truthy(l), l.col).otherwise(r.col), dt, nn=r.nn)
+        return Val(F.when(_truthy(l), l.col).otherwise(r.col), dt, nn=r.nn)
 
     def _c_and(self, node, inp):
-        l = self._scalar(self.compile(node[1], inp), "&&")
-        r = self._scalar(self.compile(node[2], inp), "&&")
-        self._mixed_check(l, r, "&&")
-        if l.nn and r.nn and _cat(l.dtype) == "boolean" \
-                and _cat(r.dtype) == "boolean":
+        l = self.scalar(self.compile(node[2], inp), "&&")
+        r = self.scalar(self.compile(node[3], inp), "&&")
+        self.mixed_check(l, r, "&&")
+        if l.nn and r.nn and cat(l.dtype) == "boolean" \
+                and cat(r.dtype) == "boolean":
             # both non-null booleans: value semantics collapse to plain
             # AND (true && b ≡ b, false && b ≡ false) — stays pushable
-            return _Val(l.col & r.col, _BOOL, nn=True)
+            return Val(l.col & r.col, BOOL, nn=True)
         dt = self._unify(l, r)
-        return _Val(F.when(_truthy(l), r.col).otherwise(l.col), dt, nn=l.nn and r.nn)
+        return Val(F.when(_truthy(l), r.col).otherwise(l.col), dt, nn=l.nn and r.nn)
 
     def _c_not(self, node, inp):
-        return _Val(~_truthy(self.compile(node[1], inp)), _BOOL, nn=True)
+        return Val(~_truthy(self.compile(node[1], inp)), BOOL, nn=True)
 
     def _c_neg(self, node, inp):
-        v = self._to_number(self._scalar(self.compile(node[1], inp), "unary -"))
-        return _Val(-v.col, _DOUBLE, nn=v.nn)
+        v = self._to_number(self.scalar(self.compile(node[1], inp), "unary -"))
+        return Val(-v.col, DOUBLE, nn=v.nn)
 
     def _c_tonum(self, node, inp):
-        return self._to_number(self._scalar(self.compile(node[1], inp), "unary +"))
+        return self._to_number(self.scalar(self.compile(node[1], inp), "unary +"))
 
     def _c_eq(self, node, inp):
         _, op, ln, rn = node
-        l = self._scalar(self.compile(ln, inp), op)
-        r = self._scalar(self.compile(rn, inp), op)
-        lc, rc = _cat(l.dtype), _cat(r.dtype)
+        l = self.scalar(self.compile(ln, inp), op)
+        r = self.scalar(self.compile(rn, inp), op)
+        lc, rc = cat(l.dtype), cat(r.dtype)
         if lc is not None and rc is not None and lc != rc:
             # strict equality never coerces: different types → false
-            return _Val(F.lit(op == "!=="), _BOOL, nn=True)
+            return Val(F.lit(op == "!=="), BOOL, nn=True)
         expr = l.col.eqNullSafe(r.col)
-        return _Val(expr if op == "===" else ~expr, _BOOL, nn=True)
+        return Val(expr if op == "===" else ~expr, BOOL, nn=True)
 
     @staticmethod
     def _num_const(node) -> float | None:
@@ -726,14 +516,13 @@ class _Compiler:
 
     def _c_rel(self, node, inp):
         _, op, ln, rn = node
-        l = self._scalar(self.compile(ln, inp), op)
-        r = self._scalar(self.compile(rn, inp), op)
-        if _cat(l.dtype) == "string" and _cat(r.dtype) == "string":
+        l = self.scalar(self.compile(ln, inp), op)
+        r = self.scalar(self.compile(rn, inp), op)
+        if cat(l.dtype) == "string" and cat(r.dtype) == "string":
             # both strings: lexicographic; a null operand takes JS's
             # Number() path → NaN → every comparison false
-            cmp = {"<": l.col < r.col, "<=": l.col <= r.col,
-                   ">": l.col > r.col, ">=": l.col >= r.col}[op]
-            return _Val(l.col.isNotNull() & r.col.isNotNull() & cmp, _BOOL, nn=True)
+            return Val(l.col.isNotNull() & r.col.isNotNull() & _ORDER[op](l.col, r.col),
+                       BOOL, nn=True)
         # Pushdown-friendly form: a plain numeric column vs a numeric
         # literal folds the null→0 coercion into isNull/isNotNull algebra
         # instead of a coalesce() the parquet scan cannot push — same
@@ -741,37 +530,33 @@ class _Compiler:
         # (the jq engine's approach — see functions/jq.py's null-order
         # note; Spark's UnwrapCastInBinaryComparison then strips the
         # widening cast so the raw column predicate lands on the scan).
-        import operator as _pyop
-        _OPS = {"<": _pyop.lt, "<=": _pyop.le, ">": _pyop.gt, ">=": _pyop.ge}
         for col_v, const in ((l, self._num_const(rn)), (r, self._num_const(ln))):
             if const is None or not isinstance(col_v.dtype, T.NumericType) \
-                    or col_v.known_undef:
+                    or col_v.known_nil:
                 continue
             a, b = (col_v.col.cast("double"), F.lit(const))
-            raw = _OPS[op](a, b) if col_v is l else _OPS[op](b, a)
+            raw = _ORDER[op](a, b) if col_v is l else _ORDER[op](b, a)
             if col_v.nn:
-                return _Val(raw, _BOOL, nn=True)
-            null_res = _OPS[op](0.0, const) if col_v is l else _OPS[op](const, 0.0)
+                return Val(raw, BOOL, nn=True)
+            null_res = _ORDER[op](0.0, const) if col_v is l else _ORDER[op](const, 0.0)
             if null_res:
-                return _Val(col_v.col.isNull() | raw, _BOOL, nn=True)
-            return _Val(col_v.col.isNotNull() & raw, _BOOL, nn=True)
+                return Val(col_v.col.isNull() | raw, BOOL, nn=True)
+            return Val(col_v.col.isNotNull() & raw, BOOL, nn=True)
         ln_, rn_ = self._to_number(l), self._to_number(r)
-        cmp = {"<": ln_.col < rn_.col, "<=": ln_.col <= rn_.col,
-               ">": ln_.col > rn_.col, ">=": ln_.col >= rn_.col}[op]
         # an unparseable string coerced to null (JS NaN) → comparison false
-        return _Val(F.coalesce(cmp, F.lit(False)), _BOOL, nn=True)
+        return Val(F.coalesce(_ORDER[op](ln_.col, rn_.col), F.lit(False)), BOOL, nn=True)
 
     def _c_arith(self, node, inp):
         _, op, ln, rn = node
-        l = self._scalar(self.compile(ln, inp), op)
-        r = self._scalar(self.compile(rn, inp), op)
-        if op == "+" and ("string" in (_cat(l.dtype), _cat(r.dtype))):
-            return _Val(
-                F.concat(self._js_string(l), self._js_string(r)), _STR, nn=True
+        l = self.scalar(self.compile(ln, inp), op)
+        r = self.scalar(self.compile(rn, inp), op)
+        if op == "+" and ("string" in (cat(l.dtype), cat(r.dtype))):
+            return Val(
+                F.concat(self.stringify(l), self.stringify(r)), STR, nn=True
             )
         for v in (l, r):
-            if _cat(v.dtype) not in (None, "number", "boolean"):
-                raise JsError(f"{op}: cannot apply to a {_cat(v.dtype)} value")
+            if cat(v.dtype) not in (None, "number", "boolean"):
+                raise JsError(f"{op}: cannot apply to a {cat(v.dtype)} value")
         ln_, rn_ = self._to_number(l), self._to_number(r)
         both_int = (
             isinstance(l.dtype, T.IntegralType) and isinstance(r.dtype, T.IntegralType)
@@ -782,273 +567,120 @@ class _Compiler:
         if both_int and op in ("+", "-", "*", "%"):
             out = {"+": l.col + r.col, "-": l.col - r.col,
                    "*": l.col * r.col, "%": l.col % r.col}[op]
-            return _Val(out, _LONG, nn=True)
+            return Val(out, LONG, nn=True)
         out = {"+": ln_.col + rn_.col, "-": ln_.col - rn_.col,
                "*": ln_.col * rn_.col, "/": ln_.col / rn_.col,
                "%": ln_.col % rn_.col}[op]
-        return _Val(out, _DOUBLE, nn=ln_.nn and rn_.nn)
-
-    def _c_add(self, node, inp):  # pragma: no cover — parser emits 'arith'
-        return self._c_arith(node, inp)
-
-    def _c_obj(self, node, inp):
-        out = {}
-        for k, e in node[1]:
-            v = self.compile(e, inp)
-            if v.is_obj:
-                if v.obj is inp.obj:
-                    raise JsError(f"{k}: the whole row object is not a value; "
-                                  f"project fields")
-                v = _Val(
-                    F.struct(*[c.col.alias(n) for n, c in v.obj.items()]),
-                    T.StructType([
-                        T.StructField(n, c.dtype or T.NullType())
-                        for n, c in v.obj.items()
-                    ]),
-                    nn=True,
-                )
-            out[k] = v
-        return _Val(obj=out)
-
-    def _c_arr(self, node, inp):
-        items = [self._scalar(self.compile(e, inp), "array") for e in node[1]]
-        el = next((i.dtype for i in items if i.dtype is not None), None)
-        return _Val(
-            F.array(*[i.col for i in items]) if items else F.array(),
-            T.ArrayType(el) if el is not None else None,
-            nn=True,
-        )
+        return Val(out, DOUBLE, nn=ln_.nn and rn_.nn)
 
     # -- methods ---------------------------------------------------------------
 
     def _c_method(self, node, inp):
         _, basen, name, args, opt = node
         if basen == ("name", "Math"):
-            return _compile_math(self, name, args, inp)
-        b = self._scalar(self.compile(basen, inp), f".{name}()")
-        if b.known_undef:
+            return self._math(name, args, inp)
+        b = self.scalar(self.compile(basen, inp), f".{name}()")
+        if b.known_nil:
             raise JsError(f".{name}(): TypeError — the base is statically "
                           f"null/undefined")
-        fn = getattr(self, f"_m_{name}", None)
-        if fn is None:
+        if name not in _METHODS:
             if name == "replace":
                 raise JsError(".replace() replaces only the first match in JS — "
                               "use .replaceAll(find, repl)")
             raise JsError(f"unsupported method .{name}()")
-        vals = [self._scalar(self.compile(a, inp), f".{name}()") for a in args]
-        return fn(b, name, args, vals, opt)
-
-    def _argc(self, name, vals, lo, hi=None):
-        hi = lo if hi is None else hi
-        if not lo <= len(vals) <= hi:
-            raise JsError(f".{name}(): expected {lo}"
-                          f"{'' if hi == lo else f'-{hi}'} argument(s), got {len(vals)}")
-
-    def _str_base(self, b: _Val, name: str) -> _Val:
-        if _cat(b.dtype) not in (None, "string"):
-            raise JsError(f".{name}(): base must be a string, got {_cat(b.dtype)}")
-        return b
-
-    def _lit_str(self, args, vals, i, name) -> str:
-        a = args[i]
-        if a[0] != "slit":
-            raise JsError(f".{name}(): argument {i + 1} must be a string literal "
-                          f"(it parameterizes the compiled expression)")
-        return a[1]
-
-    def _lit_int(self, args, i, name) -> int:
-        a = args[i]
-        neg = a[0] == "neg" and a[1][0] == "lit"
-        lit = a[1] if neg else a
-        if lit[0] != "lit" or not isinstance(lit[1], int) or isinstance(lit[1], bool):
-            raise JsError(f".{name}(): argument {i + 1} must be an integer literal")
-        return -lit[1] if neg else lit[1]
-
-    def _m_toUpperCase(self, b, name, args, vals, opt):
-        self._argc(name, vals, 0)
-        b = self._str_base(b, name)
-        return _Val(self._type_guard(b, F.upper(b.col), f".{name}", opt), _STR, nn=b.nn)
-
-    def _m_toLowerCase(self, b, name, args, vals, opt):
-        self._argc(name, vals, 0)
-        b = self._str_base(b, name)
-        return _Val(self._type_guard(b, F.lower(b.col), f".{name}", opt), _STR, nn=b.nn)
-
-    def _m_trim(self, b, name, args, vals, opt):
-        self._argc(name, vals, 0)
-        b = self._str_base(b, name)
-        return _Val(self._type_guard(b, F.trim(b.col), f".{name}", opt), _STR, nn=b.nn)
-
-    def _m_startsWith(self, b, name, args, vals, opt):
-        self._argc(name, vals, 1)
-        b = self._str_base(b, name)
-        out = b.col.startswith(vals[0].col)
-        return _Val(self._type_guard(b, out, f".{name}", opt), _BOOL, nn=b.nn)
-
-    def _m_endsWith(self, b, name, args, vals, opt):
-        self._argc(name, vals, 1)
-        b = self._str_base(b, name)
-        out = b.col.endswith(vals[0].col)
-        return _Val(self._type_guard(b, out, f".{name}", opt), _BOOL, nn=b.nn)
-
-    def _m_includes(self, b, name, args, vals, opt):
-        self._argc(name, vals, 1)
-        if isinstance(b.dtype, T.ArrayType):
-            out = F.array_contains(b.col, vals[0].col)
-        elif _cat(b.dtype) in (None, "string"):
-            out = b.col.contains(vals[0].col)
+        vals = [self.scalar(self.compile(a, inp), f".{name}()") for a in args]
+        lo, hi, base, lower, dt = _METHODS[name]
+        self.argc(f".{name}()", len(vals), lo, hi)
+        allowed = (base,) if base else ("string", "array")
+        if cat(b.dtype) not in (None, *allowed):
+            kind = {"string": "a string", "array": "an array", None: "a string or array"}
+            raise JsError(f".{name}(): base must be {kind[base]}, got {cat(b.dtype)}")
+        if lower is not None:
+            out = lower(b.col, *[v.col for v in vals])
         else:
-            raise JsError(f".{name}(): base must be a string or array")
-        return _Val(self._type_guard(b, out, f".{name}", opt), _BOOL, nn=b.nn)
+            out = getattr(self, f"_m_{name}")(b, args, vals)
+        return Val(self._type_guard(b, out, f".{name}", opt), dt, nn=b.nn)
 
-    def _m_split(self, b, name, args, vals, opt):
-        self._argc(name, vals, 1)
-        b = self._str_base(b, name)
-        sep = self._lit_str(args, vals, 0, name)
+    def _m_includes(self, b, args, vals):
+        if isinstance(b.dtype, T.ArrayType):
+            return F.array_contains(b.col, vals[0].col)
+        return b.col.contains(vals[0].col)
+
+    def _m_split(self, b, args, vals):
+        sep = self.str_arg(args, 0, ".split()")
         if not sep:
             raise JsError(".split(''): per-character splits are not supported")
-        out = F.split(b.col, re.escape(sep))
-        return _Val(self._type_guard(b, out, f".{name}", opt),
-                    T.ArrayType(_STR), nn=b.nn)
+        return F.split(b.col, re.escape(sep))
 
-    def _m_join(self, b, name, args, vals, opt):
-        self._argc(name, vals, 0, 1)
-        if b.dtype is not None and not isinstance(b.dtype, T.ArrayType):
-            raise JsError(f".{name}(): base must be an array")
-        sep = self._lit_str(args, vals, 0, name) if vals else ","
-        out = F.array_join(b.col, sep)
-        return _Val(self._type_guard(b, out, f".{name}", opt), _STR, nn=b.nn)
+    def _m_join(self, b, args, vals):
+        return F.array_join(b.col, self.str_arg(args, 0, ".join()") if vals else ",")
 
-    def _m_replaceAll(self, b, name, args, vals, opt):
-        self._argc(name, vals, 2)
-        b = self._str_base(b, name)
-        find = self._lit_str(args, vals, 0, name)
-        repl = self._lit_str(args, vals, 1, name)
-        out = F.regexp_replace(b.col, re.escape(find), repl.replace("\\", "\\\\"))
-        return _Val(self._type_guard(b, out, f".{name}", opt), _STR, nn=b.nn)
+    def _m_replaceAll(self, b, args, vals):
+        find = self.str_arg(args, 0, ".replaceAll()")
+        repl = self.str_arg(args, 1, ".replaceAll()")
+        return F.regexp_replace(b.col, re.escape(find), repl.replace("\\", "\\\\"))
 
-    def _m_charAt(self, b, name, args, vals, opt):
-        self._argc(name, vals, 1)
-        b = self._str_base(b, name)
-        i = self._lit_int(args, 0, name)
-        if i < 0:
-            return _Val(F.lit(""), _STR, nn=True)  # JS: out of range → ""
-        out = F.substring(b.col, i + 1, 1)
-        return _Val(self._type_guard(b, out, f".{name}", opt), _STR, nn=b.nn)
+    def _m_charAt(self, b, args, vals):
+        i = self.int_arg(args, 0, ".charAt()")
+        # JS: out of range → ""
+        return F.lit("") if i < 0 else F.substring(b.col, i + 1, 1)
 
-    def _m_slice(self, b, name, args, vals, opt):
+    def _m_slice(self, b, args, vals):
         """JS String.prototype.slice: 0-based, end-exclusive, negative
         indexes count from the end, clamped to [0, len]."""
-        self._argc(name, vals, 1, 2)
-        b = self._str_base(b, name)
-        i = self._lit_int(args, 0, name)
         slen = F.length(b.col)
-        start = (
-            F.least(F.lit(i), slen) if i >= 0
-            else F.greatest(slen + F.lit(i), F.lit(0))
-        )
-        if len(args) > 1:
-            j = self._lit_int(args, 1, name)
-            stop = (
-                F.least(F.lit(j), slen) if j >= 0
-                else F.greatest(slen + F.lit(j), F.lit(0))
-            )
-        else:
-            stop = slen
-        n = F.greatest(stop - start, F.lit(0))
-        out = F.substring(b.col, start + F.lit(1), n)
-        return _Val(self._type_guard(b, out, f".{name}", opt), _STR, nn=b.nn)
+
+        def bound(k: int) -> Column:
+            i = self.int_arg(args, k, ".slice()")
+            return F.least(F.lit(i), slen) if i >= 0 else F.greatest(slen + F.lit(i), F.lit(0))
+
+        start = bound(0)
+        stop = bound(1) if len(args) > 1 else slen
+        return F.substring(b.col, start + F.lit(1), F.greatest(stop - start, F.lit(0)))
 
     # -- globals -----------------------------------------------------------------
 
+    def _math(self, name: str, args: list, inp: Val) -> Val:
+        vals = [self.scalar(self.compile(a, inp), f"Math.{name}") for a in args]
+        nums = [self._to_number(v) for v in vals]
+        if name in _MATH:
+            self.argc(f"Math.{name}()", len(nums), 1)
+            lower, out = _MATH[name]
+            return Val(lower(nums[0].col), out, nn=True)
+        if name == "pow":
+            self.argc("Math.pow()", len(nums), 2)
+            return Val(F.pow(nums[0].col, nums[1].col), DOUBLE, nn=True)
+        if name in ("max", "min"):
+            if not nums:
+                raise JsError(f"Math.{name}() needs at least one argument")
+            f = F.greatest if name == "max" else F.least
+            out = nums[0].col if len(nums) == 1 else f(*[n.col for n in nums])
+            return Val(out, DOUBLE, nn=True)
+        raise JsError(f"unsupported Math.{name}")
+
     def _c_call(self, node, inp):
         _, name, args = node
-        vals = [self._scalar(self.compile(a, inp), name) for a in args]
+        vals = [self.scalar(self.compile(a, inp), name) for a in args]
+        if name not in ("String", "Number") and name not in _PARSE_NUM:
+            raise JsError(f"unsupported function {name}()")
+        self.argc(f"{name}()", len(vals), 1)
         if name == "String":
-            self._argc("String", vals, 1)
-            return _Val(self._js_string(vals[0]), _STR, nn=True)
+            return Val(self.stringify(vals[0]), STR, nn=True)
         if name == "Number":
-            self._argc("Number", vals, 1)
             return self._to_number(vals[0])
-        if name == "parseInt":
-            self._argc("parseInt", vals, 1)
-            s = F.trim(vals[0].col.cast("string"))
-            digits = F.regexp_extract(s, r"^[+-]?\d+", 0)
-            return _Val(
-                F.when(digits == "", F.lit(None)).otherwise(digits.cast("long")),
-                _LONG,
-            )
-        if name == "parseFloat":
-            self._argc("parseFloat", vals, 1)
-            s = F.trim(vals[0].col.cast("string"))
-            num = F.regexp_extract(s, r"^[+-]?(\d+\.?\d*|\.\d+)", 0)
-            return _Val(
-                F.when(num == "", F.lit(None)).otherwise(num.cast("double")),
-                _DOUBLE,
-            )
-        raise JsError(f"unsupported function {name}()")
-
-
-def _compile_math(comp: _Compiler, name: str, args: list, inp: _Val) -> _Val:
-    vals = [comp._scalar(comp.compile(a, inp), f"Math.{name}") for a in args]
-    nums = [comp._to_number(v) for v in vals]
-
-    def one():
-        if len(nums) != 1:
-            raise JsError(f"Math.{name}() takes exactly one argument")
-        return nums[0]
-
-    if name == "floor":
-        return _Val(F.floor(one().col), _LONG, nn=True)
-    if name == "ceil":
-        return _Val(F.ceil(one().col), _LONG, nn=True)
-    if name == "round":
-        # JS rounds half toward +∞ (Math.round(-2.5) === -2), unlike
-        # SQL's HALF_UP-away-from-zero
-        return _Val(F.floor(one().col + F.lit(0.5)), _LONG, nn=True)
-    if name == "trunc":
-        return _Val(one().col.cast("long"), _LONG, nn=True)
-    if name == "abs":
-        return _Val(F.abs(one().col), _DOUBLE, nn=True)
-    if name == "sqrt":
-        return _Val(F.sqrt(one().col), _DOUBLE, nn=True)
-    if name == "pow":
-        if len(nums) != 2:
-            raise JsError("Math.pow() takes exactly two arguments")
-        return _Val(F.pow(nums[0].col, nums[1].col), _DOUBLE, nn=True)
-    if name in ("max", "min"):
-        if not nums:
-            raise JsError(f"Math.{name}() needs at least one argument")
-        f = F.greatest if name == "max" else F.least
-        out = nums[0].col if len(nums) == 1 else f(*[n.col for n in nums])
-        return _Val(out, _DOUBLE, nn=True)
-    raise JsError(f"unsupported Math.{name}")
+        prefix, to, dt = _PARSE_NUM[name]
+        num = F.regexp_extract(F.trim(vals[0].col.cast("string")), prefix, 0)
+        return Val(F.when(num == "", F.lit(None)).otherwise(num.cast(to)), dt)
 
 
 # -- public API ----------------------------------------------------------------
-
-
-@dataclass
-class CompiledJs:
-    """A compiled program: the returned object as output Column projection."""
-
-    columns: dict[str, Column]
-
-
-def _root_from_schema(
-    schema: T.StructType, cols: dict[str, Column] | None = None
-) -> _Val:
-    return _Val(obj={
-        f.name: _Val(cols[f.name] if cols else F.col(f.name), f.dataType)
-        for f in schema.fields
-    })
 
 
 def compile_program(
     program: str,
     schema: T.StructType,
     cols: dict[str, Column] | None = None,
-) -> CompiledJs:
+) -> Compiled:
     """Compile ``return { ... }`` (or a parenthesized object literal)
     against a row ``schema``. ``cols`` optionally maps field names to
     the Column expressions backing them (the transform engine's payload
@@ -1057,21 +689,23 @@ def compile_program(
     if ast[0] != "obj":
         raise JsError("program must return an object literal "
                       "{ name: expr, ... } (the new payload)")
-    comp = _Compiler()
-    root = _root_from_schema(schema, cols)
-    out = comp.compile(ast, root)
-    return CompiledJs(columns={k: v.col for k, v in out.obj.items()})
+    return Compiled.of(_Compiler().compile(ast, root_from_schema(schema, cols)))
+
+
+def parse_predicate(program: str):
+    """Parse a boolean JS expression (the CustomFilter shape) — Spark-free,
+    so config validation runs it; an object literal raises."""
+    ast = parse(program)
+    if ast[0] == "obj":
+        raise JsError("predicate must be a boolean expression, not an object literal")
+    return ast
 
 
 def compile_predicate(program: str, schema: T.StructType) -> Column:
     """Compile a boolean JS expression (the reference's CustomFilter
     shape, ``pkg/models/types.go:226``) to one WHERE Column. JS
     truthiness applies when the expression is not boolean-typed."""
-    ast = parse(program)
-    if ast[0] == "obj":
-        raise JsError("predicate must be a boolean expression, not an object")
-    comp = _Compiler()
-    out = comp.compile(ast, _root_from_schema(schema))
+    out = _Compiler().compile(parse_predicate(program), root_from_schema(schema))
     if out.is_obj:
         raise JsError("predicate must be a boolean expression, not the row")
     if isinstance(out.dtype, T.BooleanType):
@@ -1085,5 +719,4 @@ def js_transform(df: DataFrame, program: str) -> DataFrame:
     """Apply a JS ``return {...}`` program to a DataFrame: the returned
     object becomes the projection. One driver-side compile; the executed
     plan is pure Column expressions (no Python in the path)."""
-    c = compile_program(program, df.schema)
-    return df.select(*[v.alias(k) for k, v in c.columns.items()])
+    return transform(df, compile_program(program, df.schema))

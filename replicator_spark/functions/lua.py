@@ -79,126 +79,45 @@ tests/test_lua_differential.py, which models the unification).
 from __future__ import annotations
 
 import re
-from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-
-class LuaError(ValueError):
-    """Parse or compile error in a Lua program (always compile-time)."""
-
-
-# -- tokenizer ----------------------------------------------------------------
-
-_TOKEN_RE = re.compile(
-    r"""
-    (?P<ws>\s+|--[^\n]*)
-  | (?P<num>\d+(?:\.\d+)?|\.\d+)
-  | (?P<op>==|~=|<=|>=|\.\.|//|[<>=+\-*/%^#.,;:(){}\[\]])
-  | (?P<ident>[A-Za-z_][A-Za-z0-9_]*)
-    """,
-    re.VERBOSE,
+from .lowering import (
+    BOOL, DOUBLE, LONG, STR, Compiled, Compiler, Parser, ScriptError, Val, cat,
+    element_type, num_type, result_type, root_from_schema, same_type, transform,
 )
 
-_KEYWORDS = {"and", "or", "not", "nil", "true", "false", "return"}
 
-_STR_ESC = {"n": "\n", "t": "\t", "r": "\r", '"': '"', "'": "'", "\\": "\\"}
-
-
-@dataclass
-class _Tok:
-    kind: str  # num | str | op | ident | kw | eof
-    val: object
-    pos: int
-
-
-def _tokenize(src: str) -> list[_Tok]:
-    toks: list[_Tok] = []
-    i = 0
-    while i < len(src):
-        c = src[i]
-        if c in "'\"":
-            quote, j, buf = c, i + 1, []
-            while j < len(src) and src[j] != quote:
-                if src[j] == "\\":
-                    if j + 1 >= len(src) or src[j + 1] not in _STR_ESC:
-                        raise LuaError(f"unsupported string escape at {j}")
-                    buf.append(_STR_ESC[src[j + 1]])
-                    j += 2
-                else:
-                    buf.append(src[j])
-                    j += 1
-            if j >= len(src):
-                raise LuaError("unterminated string literal")
-            toks.append(_Tok("str", "".join(buf), i))
-            i = j + 1
-            continue
-        m = _TOKEN_RE.match(src, i)
-        if not m:
-            raise LuaError(f"unexpected character {src[i]!r} at {i}")
-        i = m.end()
-        if m.lastgroup == "ws":
-            continue
-        if m.lastgroup == "num":
-            txt = m.group("num")
-            toks.append(_Tok("num", float(txt) if "." in txt else int(txt), m.start()))
-        elif m.lastgroup == "ident":
-            w = m.group("ident")
-            toks.append(_Tok("kw" if w in _KEYWORDS else "ident", w, m.start()))
-        else:
-            toks.append(_Tok("op", m.group("op"), m.start()))
-    toks.append(_Tok("eof", None, len(src)))
-    return toks
+class LuaError(ScriptError):
+    """Parse or compile error in a Lua program (always compile-time)."""
 
 
 # -- parser (Lua 5.4 expression precedence) ----------------------------------
 
+_STR_ESC = {"n": "\n", "t": "\t", "r": "\r", '"': '"', "'": "'", "\\": "\\"}
 
-class _Parser:
-    def __init__(self, toks: list[_Tok]):
-        self.toks = toks
-        self.i = 0
 
-    def peek(self) -> _Tok:
-        return self.toks[self.i]
-
-    def next(self) -> _Tok:
-        t = self.toks[self.i]
-        self.i += 1
-        return t
-
-    def expect(self, kind: str, val: object = None) -> _Tok:
-        t = self.next()
-        if t.kind != kind or (val is not None and t.val != val):
-            raise LuaError(f"expected {val or kind}, got {t.val!r} at {t.pos}")
-        return t
-
-    def at_op(self, *ops: str) -> bool:
-        t = self.peek()
-        return t.kind == "op" and t.val in ops
-
-    def at_kw(self, *kws: str) -> bool:
-        t = self.peek()
-        return t.kind == "kw" and t.val in kws
+class _Parser(Parser):
+    Error = LuaError
+    TOKEN_RE = re.compile(
+        r"""
+        (?P<ws>\s+|--[^\n]*)
+      | (?P<num>\d+(?:\.\d+)?|\.\d+)
+      | (?P<op>==|~=|<=|>=|\.\.|//|[<>=+\-*/%^#.,;:(){}\[\]])
+      | (?P<ident>[A-Za-z_][A-Za-z0-9_]*)
+        """,
+        re.VERBOSE,
+    )
+    KEYWORDS = frozenset({"and", "or", "not", "nil", "true", "false", "return"})
+    QUOTES = {"'": ("str", _STR_ESC, None), '"': ("str", _STR_ESC, None)}
 
     def parse_expr(self):
-        return self.parse_or()
-
-    def parse_or(self):
-        left = self.parse_and()
-        while self.at_kw("or"):
-            self.next()
-            left = ("or", left, self.parse_and())
-        return left
+        return self.binary(self.parse_and, ("or",), "or")
 
     def parse_and(self):
-        left = self.parse_cmp()
-        while self.at_kw("and"):
-            self.next()
-            left = ("and", left, self.parse_cmp())
-        return left
+        return self.binary(self.parse_cmp, ("and",), "and")
 
     def parse_cmp(self):
         left = self.parse_concat()
@@ -215,18 +134,10 @@ class _Parser:
         return left
 
     def parse_add(self):
-        left = self.parse_mul()
-        while self.at_op("+", "-"):
-            op = self.next().val
-            left = ("arith", op, left, self.parse_mul())
-        return left
+        return self.binary(self.parse_mul, ("+", "-"))
 
     def parse_mul(self):
-        left = self.parse_unary()
-        while self.at_op("*", "/", "//", "%"):
-            op = self.next().val
-            left = ("arith", op, left, self.parse_unary())
-        return left
+        return self.binary(self.parse_unary, ("*", "/", "//", "%"))
 
     def parse_unary(self):
         if self.at_kw("not"):
@@ -267,22 +178,11 @@ class _Parser:
         return node
 
     def _call_args(self) -> list:
-        self.expect("op", "(")
-        args = []
-        if not self.at_op(")"):
-            args.append(self.parse_expr())
-            while self.at_op(","):
-                self.next()
-                args.append(self.parse_expr())
-        self.expect("op", ")")
-        return args
+        return self.delimited("(", ")", self.parse_expr)
 
     def parse_primary(self):
         t = self.peek()
-        if t.kind == "num":
-            self.next()
-            return ("lit", t.val)
-        if t.kind == "str":
+        if t.kind in ("num", "str"):
             self.next()
             return ("lit", t.val)
         if t.kind == "kw" and t.val in ("nil", "true", "false"):
@@ -330,45 +230,24 @@ class _Parser:
         self.next()
         if named and positional:
             raise LuaError("mixed array/record table constructors are not supported")
-        return ("arrtab", positional) if positional and not named else ("table", named)
+        return ("arr", positional) if positional and not named else ("obj", named)
 
 
 def parse(program: str):
     """Parse ``return { ... }``; returns the AST of the returned expression."""
-    p = _Parser(_tokenize(program))
+    p = _Parser(program)
     p.expect("kw", "return")
     ast = p.parse_expr()
     if p.at_op(";"):
         p.next()
-    if p.peek().kind != "eof":
-        t = p.peek()
-        raise LuaError(f"trailing input at {t.pos}: {t.val!r} (one return statement only)")
+    p.end(" (one return statement only)")
     return ast
 
 
 # -- compiler -----------------------------------------------------------------
 
 
-@dataclass
-class _Val:
-    col: Column | None = None
-    dtype: T.DataType | None = None
-    obj: dict | None = None     # name -> _Val when this is the row table
-    nn: bool = False            # statically known never-nil
-    known_nil: bool = False     # statically known to BE nil (absent field)
-
-    @property
-    def is_obj(self) -> bool:
-        return self.obj is not None
-
-
-_STR = T.StringType()
-_BOOL = T.BooleanType()
-_LONG = T.LongType()
-_DOUBLE = T.DoubleType()
-
-
-def _truthy(v: _Val) -> Column:
+def _truthy(v: Val) -> Column:
     # Lua: only nil and false are falsy (0 and "" are truthy)
     if v.is_obj:
         return F.lit(True)
@@ -377,33 +256,36 @@ def _truthy(v: _Val) -> Column:
     return v.col.isNotNull()
 
 
-def _cat(dt: T.DataType | None) -> str | None:
-    if dt is None:
-        return None
-    if isinstance(dt, T.NumericType):
-        return "number"
-    if isinstance(dt, T.StringType):
-        return "string"
-    if isinstance(dt, T.BooleanType):
-        return "boolean"
-    if isinstance(dt, T.ArrayType):
-        return "array"
-    if isinstance(dt, T.StructType):
-        return "struct"
-    return dt.simpleString()
+# one-argument builtins (nil argument → guard): name → (lowering of the
+# argument column, result type, required argument category)
+_UNARY = {
+    "math.floor": (lambda c: F.floor(c.cast("double")), LONG, None),
+    "math.ceil": (lambda c: F.ceil(c.cast("double")), LONG, None),
+    "math.abs": (F.abs, same_type, None),
+    "math.sqrt": (lambda c: F.sqrt(c.cast("double")), DOUBLE, None),
+    "string.upper": (F.upper, STR, "string"),
+    "string.lower": (F.lower, STR, "string"),
+    "string.len": (lambda c: F.length(c).cast("long"), LONG, "string"),
+    "string.reverse": (F.reverse, STR, "string"),
+}
+
+# variadic numeric builtins (any nil argument → guard)
+_VARIADIC = {"math.max": F.greatest, "math.min": F.least}
 
 
-class _Compiler:
-    def compile(self, node, inp: _Val) -> _Val:
-        m = getattr(self, f"_c_{node[0]}", None)
-        if m is None:
-            raise LuaError(f"unsupported Lua construct: {node[0]}")
-        return m(node, inp)
+class _Compiler(Compiler):
+    Error = LuaError
+    LANG = "Lua"
+    OBJ_NOUN = "the row table"
+    ROW_VALUE_ERROR = "the whole row table is not a value; project fields"
+    NAME_NOUN = "variable"
+    MIXED_HINT = ("; Lua's conditional idiom `cond and x or y` is supported "
+                  "when x can never be nil/false")
 
     # a nil operand where Lua raises → conditional raise_error (fail-loud;
     # statically-nil operands are compile errors, statically-non-nil skip
     # the guard entirely so literal-heavy programs stay branch-free)
-    def _guard(self, result: Column, what: str, *operands: _Val) -> Column:
+    def _guard(self, result: Column, what: str, *operands: Val) -> Column:
         if any(v.known_nil for v in operands):
             raise LuaError(f"{what} on a nil value (Lua runtime error, caught at compile)")
         nils = [v.col.isNull() for v in operands if not v.nn]
@@ -416,28 +298,6 @@ class _Compiler:
             cond, F.raise_error(F.lit(f"lua: attempt to perform {what} on a nil value"))
         ).otherwise(result)
 
-    def _scalar(self, v: _Val, what: str) -> _Val:
-        if v.is_obj:
-            raise LuaError(f"{what}: expected a value, got the row table")
-        return v
-
-    def _c_lit(self, node, inp):
-        v = node[1]
-        if v is None:
-            return _Val(F.lit(None), None, known_nil=True)
-        dt = (
-            _BOOL if isinstance(v, bool)
-            else _LONG if isinstance(v, int)
-            else _DOUBLE if isinstance(v, float)
-            else _STR
-        )
-        return _Val(F.lit(v), dt, nn=True)
-
-    def _c_name(self, node, inp):
-        if node[1] in ("row", "event"):
-            return inp
-        raise LuaError(f"unknown variable {node[1]!r} (the input row is 'row')")
-
     def _c_field(self, node, inp):
         _, base, name = node
         b = self.compile(base, inp)
@@ -445,14 +305,14 @@ class _Compiler:
             if name in b.obj:
                 return b.obj[name]
             # real Lua table semantics: absent key reads as nil
-            return _Val(F.lit(None), None, known_nil=True)
+            return Val(F.lit(None), None, known_nil=True)
         if b.known_nil:
             raise LuaError(
                 f".{name}: attempt to index a nil value (the base is statically nil)"
             )
         if isinstance(b.dtype, T.StructType):
             if name not in b.dtype.fieldNames():
-                return _Val(F.lit(None), None, known_nil=True)
+                return Val(F.lit(None), None, known_nil=True)
             out = b.col.getField(name)
             dt = b.dtype[name].dataType
             if not b.nn:  # indexing through nil is a Lua error
@@ -460,95 +320,80 @@ class _Compiler:
                     b.col.isNull(),
                     F.raise_error(F.lit(f"lua: attempt to index a nil value (.{name})")),
                 ).otherwise(out)
-            return _Val(out, dt)
-        raise LuaError(f".{name}: cannot index a {_cat(b.dtype)} value")
+            return Val(out, dt)
+        raise LuaError(f".{name}: cannot index a {cat(b.dtype)} value")
 
     def _c_index(self, node, inp):
         _, base, idxn = node
-        b = self._scalar(self.compile(base, inp), "[...]")
+        b = self.scalar(self.compile(base, inp), "[...]")
         if b.known_nil:
             raise LuaError("[...]: attempt to index a nil value")
         if b.dtype is not None and not isinstance(b.dtype, T.ArrayType):
-            raise LuaError(f"[...]: cannot index a {_cat(b.dtype)} value")
-        idx = self._scalar(self.compile(idxn, inp), "index")
-        el = b.dtype.elementType if isinstance(b.dtype, T.ArrayType) else None
+            raise LuaError(f"[...]: cannot index a {cat(b.dtype)} value")
+        idx = self.scalar(self.compile(idxn, inp), "index")
         # Lua arrays and element_at are both 1-based; out of range → nil
         out = F.try_element_at(b.col, idx.col.cast("int"))
-        return _Val(self._guard(out, "index", b), el)
+        return Val(self._guard(out, "index", b), element_type(b.dtype))
 
     def _c_neg(self, node, inp):
-        v = self._scalar(self.compile(node[1], inp), "unary -")
+        v = self.scalar(self.compile(node[1], inp), "unary -")
         if v.dtype is not None and not isinstance(v.dtype, T.NumericType):
             raise LuaError("unary -: operand must be a number")
-        return _Val(self._guard(-v.col, "arithmetic (unary -)", v), v.dtype, nn=v.nn)
+        return Val(self._guard(-v.col, "arithmetic (unary -)", v), v.dtype, nn=v.nn)
 
     def _c_len(self, node, inp):
-        v = self._scalar(self.compile(node[1], inp), "#")
-        if isinstance(v.dtype, T.ArrayType):
-            out = F.size(v.col).cast("long")
-        elif v.dtype is None or isinstance(v.dtype, T.StringType):
-            out = F.length(v.col).cast("long")
-        else:
-            raise LuaError(f"#: unsupported on a {_cat(v.dtype)} value")
-        return _Val(self._guard(out, "length (#)", v), _LONG, nn=v.nn)
+        v = self.scalar(self.compile(node[1], inp), "#")
+        out = self.length(v, "#").cast("long")
+        return Val(self._guard(out, "length (#)", v), LONG, nn=v.nn)
 
     def _c_not(self, node, inp):
         v = self.compile(node[1], inp)
-        return _Val(~_truthy(v), _BOOL, nn=True)
-
-    def _mixed_check(self, l: _Val, r: _Val, op: str) -> None:
-        lc, rc = _cat(l.dtype), _cat(r.dtype)
-        if lc is not None and rc is not None and lc != rc:
-            raise LuaError(
-                f"{op}: a {lc}-or-{rc} value has no single column type; "
-                f"Lua's conditional idiom `cond and x or y` is supported "
-                f"when x can never be nil/false"
-            )
+        return Val(~_truthy(v), BOOL, nn=True)
 
     def _c_and(self, node, inp):
-        l = self._scalar(self.compile(node[1], inp), "and")
-        r = self._scalar(self.compile(node[2], inp), "and")
-        self._mixed_check(l, r, "and")
-        dt = l.dtype if _cat(l.dtype) == _cat(r.dtype) else (r.dtype or l.dtype)
-        return _Val(
+        l = self.scalar(self.compile(node[2], inp), "and")
+        r = self.scalar(self.compile(node[3], inp), "and")
+        self.mixed_check(l, r, "and")
+        dt = l.dtype if cat(l.dtype) == cat(r.dtype) else (r.dtype or l.dtype)
+        return Val(
             F.when(_truthy(l), r.col).otherwise(l.col), dt, nn=l.nn and r.nn
         )
 
     def _c_or(self, node, inp):
-        ln, rn = node[1], node[2]
+        ln, rn = node[2], node[3]
         if ln[0] == "and":
             # Lua's conditional idiom `cond and b or c`: compiles to one
             # CASE WHEN — EXACT Lua semantics when b is statically never
             # falsy (the idiom's own documented precondition); otherwise
             # fall through to generic value semantics (mixed types then
             # raise rather than silently coerce)
-            cond = self.compile(ln[1], inp)
-            b = self._scalar(self.compile(ln[2], inp), "and")
+            cond = self.compile(ln[2], inp)
+            b = self.scalar(self.compile(ln[3], inp), "and")
             if b.nn and not isinstance(b.dtype, T.BooleanType):
-                c = self._scalar(self.compile(rn, inp), "or")
-                dt = b.dtype if _cat(b.dtype) == _cat(c.dtype) else (b.dtype or c.dtype)
-                return _Val(
+                c = self.scalar(self.compile(rn, inp), "or")
+                dt = b.dtype if cat(b.dtype) == cat(c.dtype) else (b.dtype or c.dtype)
+                return Val(
                     F.when(_truthy(cond), b.col).otherwise(c.col), dt,
                     nn=b.nn and c.nn,
                 )
-        l = self._scalar(self.compile(ln, inp), "or")
-        r = self._scalar(self.compile(rn, inp), "or")
-        self._mixed_check(l, r, "or")
-        dt = l.dtype if _cat(l.dtype) == _cat(r.dtype) else (l.dtype or r.dtype)
-        return _Val(F.when(_truthy(l), l.col).otherwise(r.col), dt, nn=r.nn)
+        l = self.scalar(self.compile(ln, inp), "or")
+        r = self.scalar(self.compile(rn, inp), "or")
+        self.mixed_check(l, r, "or")
+        dt = l.dtype if cat(l.dtype) == cat(r.dtype) else (l.dtype or r.dtype)
+        return Val(F.when(_truthy(l), l.col).otherwise(r.col), dt, nn=r.nn)
 
     def _c_cmp(self, node, inp):
         _, op, ln, rn = node
-        l = self._scalar(self.compile(ln, inp), op)
-        r = self._scalar(self.compile(rn, inp), op)
-        lc, rc = _cat(l.dtype), _cat(r.dtype)
+        l = self.scalar(self.compile(ln, inp), op)
+        r = self.scalar(self.compile(rn, inp), op)
+        lc, rc = cat(l.dtype), cat(r.dtype)
         if op in ("==", "~="):
             # Lua ==: nil-safe, never coerces across types
             if lc is not None and rc is not None and lc != rc:
-                return _Val(F.lit(op == "~="), _BOOL, nn=True)
+                return Val(F.lit(op == "~="), BOOL, nn=True)
             expr = l.col.eqNullSafe(r.col)
-            return _Val(expr if op == "==" else ~expr, _BOOL, nn=True)
-        for c, side in ((lc, l), (rc, r)):
+            return Val(expr if op == "==" else ~expr, BOOL, nn=True)
+        for c in (lc, rc):
             if c not in (None, "number", "string"):
                 raise LuaError(f"{op}: cannot compare {c} values")
         if lc is not None and rc is not None and lc != rc:
@@ -557,33 +402,30 @@ class _Compiler:
             "<": l.col < r.col, "<=": l.col <= r.col,
             ">": l.col > r.col, ">=": l.col >= r.col,
         }[op]
-        return _Val(self._guard(cmp, f"comparison ({op})", l, r), _BOOL, nn=True)
+        return Val(self._guard(cmp, f"comparison ({op})", l, r), BOOL, nn=True)
 
     def _c_concat(self, node, inp):
-        l = self._scalar(self.compile(node[1], inp), "..")
-        r = self._scalar(self.compile(node[2], inp), "..")
+        l = self.scalar(self.compile(node[1], inp), "..")
+        r = self.scalar(self.compile(node[2], inp), "..")
         parts = []
         for v in (l, r):
-            if _cat(v.dtype) not in (None, "number", "string"):
-                raise LuaError(f"..: cannot concatenate a {_cat(v.dtype)} value")
-            parts.append(v.col.cast("string") if _cat(v.dtype) == "number" else v.col)
-        return _Val(
+            if cat(v.dtype) not in (None, "number", "string"):
+                raise LuaError(f"..: cannot concatenate a {cat(v.dtype)} value")
+            parts.append(v.col.cast("string") if cat(v.dtype) == "number" else v.col)
+        return Val(
             self._guard(F.concat(*parts), "concatenation (..)", l, r),
-            _STR, nn=l.nn and r.nn,
+            STR, nn=l.nn and r.nn,
         )
 
     def _c_arith(self, node, inp):
         _, op, ln, rn = node
-        l = self._scalar(self.compile(ln, inp), op)
-        r = self._scalar(self.compile(rn, inp), op)
+        l = self.scalar(self.compile(ln, inp), op)
+        r = self.scalar(self.compile(rn, inp), op)
         for v in (l, r):
-            if _cat(v.dtype) not in (None, "number"):
-                raise LuaError(f"{op}: cannot perform arithmetic on a {_cat(v.dtype)} value")
-        both_int = (
-            isinstance(l.dtype, T.IntegralType) and isinstance(r.dtype, T.IntegralType)
-        )
-        frac = isinstance(l.dtype, T.FractionalType) or isinstance(r.dtype, T.FractionalType)
-        num_dt = _DOUBLE if frac else (_LONG if both_int else None)
+            if cat(v.dtype) not in (None, "number"):
+                raise LuaError(f"{op}: cannot perform arithmetic on a {cat(v.dtype)} value")
+        num_dt = num_type(l, r)
+        both_int = num_dt == LONG
         if op == "+":
             out, dt = l.col + r.col, num_dt
         elif op == "-":
@@ -591,151 +433,69 @@ class _Compiler:
         elif op == "*":
             out, dt = l.col * r.col, num_dt
         elif op == "/":
-            out, dt = l.col.cast("double") / r.col.cast("double"), _DOUBLE
+            out, dt = l.col.cast("double") / r.col.cast("double"), DOUBLE
         elif op == "^":
-            out, dt = F.pow(l.col.cast("double"), r.col.cast("double")), _DOUBLE
+            out, dt = F.pow(l.col.cast("double"), r.col.cast("double")), DOUBLE
         elif op == "//":
             fl = F.floor(l.col.cast("double") / r.col.cast("double"))
-            out, dt = (fl, _LONG) if both_int else (fl.cast("double"), _DOUBLE)
+            out, dt = (fl, LONG) if both_int else (fl.cast("double"), DOUBLE)
         else:  # '%' — Lua FLOORED modulo: sign follows the divisor
             out, dt = ((l.col % r.col) + r.col) % r.col, num_dt
-        return _Val(self._guard(out, f"arithmetic ({op})", l, r), dt, nn=l.nn and r.nn)
-
-    def _c_table(self, node, inp):
-        out = {}
-        for k, e in node[1]:
-            v = self.compile(e, inp)
-            if v.is_obj:
-                if v.obj is inp.obj:
-                    raise LuaError(
-                        f"{k}: the whole row table is not a value; project fields"
-                    )
-                # nested table constructor → struct column
-                v = _Val(
-                    F.struct(*[c.col.alias(n) for n, c in v.obj.items()]),
-                    T.StructType([
-                        T.StructField(n, c.dtype or T.NullType())
-                        for n, c in v.obj.items()
-                    ]),
-                    nn=True,
-                )
-            out[k] = v
-        return _Val(obj=out)
-
-    def _c_arrtab(self, node, inp):
-        items = [self._scalar(self.compile(e, inp), "array entry") for e in node[1]]
-        el = next((i.dtype for i in items if i.dtype is not None), None)
-        return _Val(
-            F.array(*[i.col for i in items]) if items else F.array(),
-            T.ArrayType(el) if el is not None else None,
-            nn=True,
-        )
+        return Val(self._guard(out, f"arithmetic ({op})", l, r), dt, nn=l.nn and r.nn)
 
     # -- builtins -------------------------------------------------------------
 
     def _c_call(self, node, inp):
         _, name, args = node
+        if name.startswith(("string.gsub", "string.find", "string.match")):
+            raise LuaError(f"{name}: Lua patterns are not regexes — descoped "
+                           "(a translated approximation would silently diverge)")
         fn = getattr(self, "_fn_" + name.replace(".", "_"), None)
-        if fn is None:
-            if name.startswith(("string.gsub", "string.find", "string.match")):
-                raise LuaError(f"{name}: Lua patterns are not regexes — descoped "
-                               "(a translated approximation would silently diverge)")
+        if fn is None and name not in _UNARY and name not in _VARIADIC:
             raise LuaError(f"unsupported Lua function: {name}")
-        vals = [self._scalar(self.compile(a, inp), name) for a in args]
+        vals = [self.scalar(self.compile(a, inp), name) for a in args]
+        if name in _UNARY:
+            self.argc(name, len(vals), 1)
+            lower, out, need = _UNARY[name]
+            v = self._cat_in(name, vals[0], need) if need else vals[0]
+            return Val(self._guard(lower(v.col), name, v), result_type(out, v.dtype),
+                       nn=v.nn)
+        if name in _VARIADIC:
+            self.argc(name, len(vals), 1, 64)
+            for v in vals:
+                self._cat_in(name, v, "number", "arguments must be numbers")
+            out = vals[0].col if len(vals) == 1 else _VARIADIC[name](*[v.col for v in vals])
+            frac = any(isinstance(v.dtype, T.FractionalType) for v in vals)
+            unknown = any(v.dtype is None for v in vals)
+            dt = None if unknown else (DOUBLE if frac else LONG)
+            return Val(self._guard(out, name, *vals), dt, nn=all(v.nn for v in vals))
         return fn(name, args, vals)
 
-    def _argc(self, name, vals, lo, hi=None):
-        hi = lo if hi is None else hi
-        if not lo <= len(vals) <= hi:
-            raise LuaError(f"{name}: expected {lo}{'' if hi == lo else f'-{hi}'} "
-                           f"argument(s), got {len(vals)}")
-
-    def _fn_tostring(self, name, args, vals):
-        self._argc(name, vals, 1)
-        v = vals[0]
-        if v.known_nil:
-            return _Val(F.lit("nil"), _STR, nn=True)
-        # cast covers numbers and booleans ("true"/"false", as Lua prints)
-        return _Val(F.coalesce(v.col.cast("string"), F.lit("nil")), _STR, nn=True)
-
-    def _fn_tonumber(self, name, args, vals):
-        self._argc(name, vals, 1)
-        # non-numeric input → nil, exactly Lua; always float-typed here
-        # (try_cast: ANSI mode would otherwise raise on malformed input)
-        return _Val(vals[0].col.try_cast("double"), _DOUBLE)
-
-    def _fn_math_floor(self, name, args, vals):
-        self._argc(name, vals, 1)
-        v = vals[0]
-        return _Val(self._guard(F.floor(v.col.cast("double")), name, v), _LONG, nn=v.nn)
-
-    def _fn_math_ceil(self, name, args, vals):
-        self._argc(name, vals, 1)
-        v = vals[0]
-        return _Val(self._guard(F.ceil(v.col.cast("double")), name, v), _LONG, nn=v.nn)
-
-    def _fn_math_abs(self, name, args, vals):
-        self._argc(name, vals, 1)
-        v = vals[0]
-        return _Val(self._guard(F.abs(v.col), name, v), v.dtype, nn=v.nn)
-
-    def _fn_math_sqrt(self, name, args, vals):
-        self._argc(name, vals, 1)
-        v = vals[0]
-        return _Val(
-            self._guard(F.sqrt(v.col.cast("double")), name, v), _DOUBLE, nn=v.nn
-        )
-
-    def _minmax(self, name, vals, f):
-        self._argc(name, vals, 1, 64)
-        for v in vals:
-            if _cat(v.dtype) not in (None, "number"):
-                raise LuaError(f"{name}: arguments must be numbers")
-        out = vals[0].col if len(vals) == 1 else f(*[v.col for v in vals])
-        frac = any(isinstance(v.dtype, T.FractionalType) for v in vals)
-        unknown = any(v.dtype is None for v in vals)
-        dt = None if unknown else (_DOUBLE if frac else _LONG)
-        return _Val(self._guard(out, name, *vals), dt, nn=all(v.nn for v in vals))
-
-    def _fn_math_max(self, name, args, vals):
-        return self._minmax(name, vals, F.greatest)
-
-    def _fn_math_min(self, name, args, vals):
-        return self._minmax(name, vals, F.least)
-
-    def _str_in(self, name, v: _Val) -> _Val:
-        if _cat(v.dtype) not in (None, "string"):
-            raise LuaError(f"{name}: argument must be a string")
+    def _cat_in(self, name: str, v: Val, need: str, msg: str | None = None) -> Val:
+        if cat(v.dtype) not in (None, need):
+            raise LuaError(f"{name}: {msg or f'argument must be a {need}'}")
         return v
 
-    def _fn_string_upper(self, name, args, vals):
-        self._argc(name, vals, 1)
-        v = self._str_in(name, vals[0])
-        return _Val(self._guard(F.upper(v.col), name, v), _STR, nn=v.nn)
+    def _fn_tostring(self, name, args, vals):
+        self.argc(name, len(vals), 1)
+        v = vals[0]
+        if v.known_nil:
+            return Val(F.lit("nil"), STR, nn=True)
+        # cast covers numbers and booleans ("true"/"false", as Lua prints)
+        return Val(F.coalesce(v.col.cast("string"), F.lit("nil")), STR, nn=True)
 
-    def _fn_string_lower(self, name, args, vals):
-        self._argc(name, vals, 1)
-        v = self._str_in(name, vals[0])
-        return _Val(self._guard(F.lower(v.col), name, v), _STR, nn=v.nn)
-
-    def _fn_string_len(self, name, args, vals):
-        self._argc(name, vals, 1)
-        v = self._str_in(name, vals[0])
-        return _Val(self._guard(F.length(v.col).cast("long"), name, v), _LONG, nn=v.nn)
-
-    def _fn_string_reverse(self, name, args, vals):
-        self._argc(name, vals, 1)
-        v = self._str_in(name, vals[0])
-        return _Val(self._guard(F.reverse(v.col), name, v), _STR, nn=v.nn)
+    def _fn_tonumber(self, name, args, vals):
+        self.argc(name, len(vals), 1)
+        # non-numeric input → nil, exactly Lua; always float-typed here
+        # (try_cast: ANSI mode would otherwise raise on malformed input)
+        return Val(vals[0].col.try_cast("double"), DOUBLE)
 
     def _fn_string_rep(self, name, args, vals):
-        self._argc(name, vals, 2)
-        v = self._str_in(name, vals[0])
-        n = vals[1]
-        if _cat(n.dtype) not in (None, "number"):
-            raise LuaError(f"{name}: count must be a number")
-        return _Val(
-            self._guard(F.repeat(v.col, n.col.cast("int")), name, v, n), _STR,
+        self.argc(name, len(vals), 2)
+        v = self._cat_in(name, vals[0], "string")
+        n = self._cat_in(name, vals[1], "number", "count must be a number")
+        return Val(
+            self._guard(F.repeat(v.col, n.col.cast("int")), name, v, n), STR,
             nn=v.nn and n.nn,
         )
 
@@ -743,72 +503,40 @@ class _Compiler:
         """Lua string.sub(s, i[, j]): 1-based inclusive, negatives count
         from the end, out-of-range clamps to an empty/shorter slice —
         i/j must be integer literals (they parameterize the expression)."""
-        self._argc(name, vals, 2, 3)
-        v = self._str_in(name, vals[0])
-        bounds = []
-        for a in args[1:]:
-            neg = a[0] == "neg" and a[1][0] == "lit"
-            lit = a[1] if neg else a
-            if lit[0] != "lit" or not isinstance(lit[1], int) or isinstance(lit[1], bool):
-                raise LuaError(f"{name}: i and j must be integer literals")
-            bounds.append(-lit[1] if neg else lit[1])
-        i = bounds[0]
-        j = bounds[1] if len(bounds) > 1 else -1
+        self.argc(name, len(vals), 2, 3)
+        v = self._cat_in(name, vals[0], "string")
+        i = self.int_arg(args, 1, name)
+        j = self.int_arg(args, 2, name) if len(args) > 2 else -1
         slen = F.length(v.col)
         start = F.lit(i) if i > 0 else F.greatest(slen + F.lit(i + 1), F.lit(1))
         stop = F.lit(j) if j > 0 else slen + F.lit(j + 1)
         stop = F.least(stop, slen)
         n = F.greatest(stop - start + F.lit(1), F.lit(0))
-        return _Val(
-            self._guard(F.substring(v.col, start, n), name, v), _STR, nn=v.nn
+        return Val(
+            self._guard(F.substring(v.col, start, n), name, v), STR, nn=v.nn
         )
 
 
 # -- public API ----------------------------------------------------------------
 
 
-@dataclass
-class CompiledLua:
-    """A compiled program: the returned table as output Column projection."""
-
-    columns: dict[str, Column]
-
-
-def _root_from_schema(
-    schema: T.StructType, cols: dict[str, Column] | None = None
-) -> _Val:
-    return _Val(obj={
-        f.name: _Val(cols[f.name] if cols else F.col(f.name), f.dataType)
-        for f in schema.fields
-    })
-
-
 def compile_program(
     program: str,
     schema: T.StructType,
     cols: dict[str, Column] | None = None,
-) -> CompiledLua:
+) -> Compiled:
     """Compile ``return { ... }`` against a row ``schema``. ``cols``
     optionally maps field names to the Column expressions backing them
     (the transform engine's payload dict mid-chain)."""
     ast = parse(program)
-    if ast[0] != "table":
+    if ast[0] != "obj":
         raise LuaError("program must return a table constructor "
                        "{ name = expr, ... } (the new payload)")
-    comp = _Compiler()
-    root = _root_from_schema(schema, cols)
-    out = comp.compile(ast, root)
-    cols_out = {}
-    for k, v in out.obj.items():
-        if v.is_obj:
-            raise LuaError(f"{k}: cannot emit the whole row table as one column")
-        cols_out[k] = v.col
-    return CompiledLua(columns=cols_out)
+    return Compiled.of(_Compiler().compile(ast, root_from_schema(schema, cols)))
 
 
 def lua_transform(df: DataFrame, program: str) -> DataFrame:
     """Apply a Lua ``return {...}`` program to a DataFrame: the returned
     table becomes the projection. One driver-side compile; the executed
     plan is pure Column expressions (no Python in the path)."""
-    c = compile_program(program, df.schema)
-    return df.select(*[v.alias(k) for k, v in c.columns.items()])
+    return transform(df, compile_program(program, df.schema))

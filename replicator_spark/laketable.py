@@ -95,7 +95,6 @@ class MergeStats:
     batch_key: str
     version: int | None  # committed snapshot version (None if skipped replay)
     applied: int = 0
-    skipped_stale: int = 0  # stale deltas are resolved at read/compaction
     deleted: int = 0
     schema_evolved: int = 0
     replayed: bool = False  # batch_key already committed → no-op

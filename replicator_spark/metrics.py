@@ -40,7 +40,6 @@ METRICS_SCHEMA = T.StructType(
         T.StructField("snapshot_version", T.LongType()),
         T.StructField("received", T.LongType()),
         T.StructField("applied", T.LongType()),
-        T.StructField("skipped_stale", T.LongType()),
         T.StructField("deduped", T.LongType()),
         T.StructField("deleted", T.LongType()),
         T.StructField("schema_evolved", T.LongType()),
@@ -146,7 +145,7 @@ def to_prometheus_text(table_root: str) -> str:
     modulo the reference's 'recieved' typo, which we do not reproduce).
     Driver-side JSONL scan — no Spark job."""
     totals = {
-        "received": 0, "applied": 0, "skipped_stale": 0,
+        "received": 0, "applied": 0,
         "deduped": 0, "deleted": 0, "schema_capped": 0,
     }
     n_batches = 0
@@ -163,9 +162,6 @@ def to_prometheus_text(table_root: str) -> str:
         "# HELP replicator_processed_records_total Events applied to the lake table",
         "# TYPE replicator_processed_records_total counter",
         f"replicator_processed_records_total {totals['applied']}",
-        "# HELP replicator_skipped_records_total LWW-stale events rejected",
-        "# TYPE replicator_skipped_records_total counter",
-        f"replicator_skipped_records_total {totals['skipped_stale']}",
         "# HELP replicator_deduped_records_total Redelivered/superseded duplicates collapsed",
         "# TYPE replicator_deduped_records_total counter",
         f"replicator_deduped_records_total {totals['deduped']}",

@@ -412,9 +412,9 @@ def apply_batch(
             F.max("seq").alias("seq_hi"),
         )
         # No separate event-id dedup pass: redelivered duplicates carry an
-        # identical (key, seq), so the per-key LWW window already collapses
+        # identical (key, seq), so the per-key LWW collapse already drops
         # them (tiebreak on event_id keeps it deterministic) — one shuffle
-        # instead of two. dedup.dedup_exact remains for standalone use.
+        # instead of two.
         if partial_updates:
             prepared = lww_collapse_partial(flat, key_cols, "seq")
         else:
@@ -479,7 +479,7 @@ def apply_batch(
     received = int(m_in["received"] or 0)
     # rows removed before apply: redelivery duplicates + intra-batch
     # LWW-superseded images
-    deduped = received - (stats.applied + stats.skipped_stale)
+    deduped = received - stats.applied
     res = BatchResult(stats, received, deduped, wall_ms, retries)
     if write_metrics:
         M.append_metrics(
@@ -489,7 +489,6 @@ def apply_batch(
                 "snapshot_version": stats.version,
                 "received": received,
                 "applied": stats.applied,
-                "skipped_stale": stats.skipped_stale,
                 "deduped": deduped,
                 "deleted": stats.deleted,
                 "schema_evolved": stats.schema_evolved,

@@ -21,9 +21,10 @@ computed (year/month/tier via when-chains supplied as Column), plus the
 THREE engine types ``models.go:30,59`` / ``validation.go:246`` declare
 but never execute — ``jq``, ``lua``, ``javascript`` — here compiled to
 Column expressions by ``functions.jq`` / ``functions.lua`` /
-``functions.js`` (the program's final object/table is the new payload,
-same contract as kazaam shift; see each module for its supported
-subset and per-language null/nil semantics).
+``functions.js``, three front-ends over one lowering core
+(``functions/lowering.py``). The program's final object/table is the
+new payload, same contract as kazaam shift; see each module for its
+supported subset and per-language null/nil semantics.
 
 Conditions: exists / not_exists / eq / ne / gt / lt / gte / lte /
 contains / in / nin / regex over dot-paths (``engine.go:411-508``,
@@ -46,6 +47,8 @@ from dataclasses import dataclass, field as dc_field
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from .functions import js, jq, lua
 
 # -- spec model -------------------------------------------------------------
 
@@ -120,47 +123,35 @@ def compile_condition_on(f: Column, op: str, value) -> Column:
 # rewriting; nothing touches the cluster until the final projection.
 
 
+# script action type → (engine module, the spec key holding its program)
+_SCRIPTS = {"jq": (jq, "query"), "lua": (lua, "script"), "javascript": (js, "script")}
+
+
 def _apply_action(
     cols: dict[str, Column], a: Action, typer=None
 ) -> dict[str, Column]:
     t, s = a.type, a.spec
     if t == "pass":
         return cols
-    if t == "jq":
-        # jq engine (models.go:30,59 declares it; validation.go:246 accepts
-        # it; the reference never links an interpreter). The program's
-        # final object is the new payload — same contract as kazaam shift.
-        from .functions.jq import compile_program
-
+    if t in _SCRIPTS:
+        # the three engine types models.go:30,59 declares (validation.go:246
+        # accepts them) but the reference never links an interpreter for:
+        # compiled driver-side to Column expressions. The program's final
+        # object/table is the new payload — same contract as kazaam shift.
+        engine, key = _SCRIPTS[t]
         if typer is None:
+            name = engine.__name__.rsplit(".", 1)[-1]
             raise ValueError(
-                "jq action needs the engine's schema context; use "
-                "TransformEngine.apply or functions.jq.jq_transform directly"
+                f"{t} action needs the engine's schema context; use "
+                f"TransformEngine.apply or functions.{name}.{name}_transform directly"
             )
-        schema = typer(cols)
-        compiled = compile_program(s["query"], schema, cols)
+        compiled = engine.compile_program(s[key], typer(cols), cols)
         if compiled.where is not None:
             raise ValueError(
-                "jq action: select() filters rows — express that as rule "
+                f"{t} action: select() filters rows — express that as rule "
                 "conditions (or a validate predicate), not inside an action"
             )
         return dict(cols) if compiled.columns is None else dict(compiled.columns)
-    if t in ("lua", "javascript"):
-        # the other two declared-only engine types (models.go:30,59);
-        # same contract as jq: the program's returned table/object is
-        # the new payload, compiled driver-side to Column expressions
-        if typer is None:
-            raise ValueError(
-                f"{t} action needs the engine's schema context; use "
-                f"TransformEngine.apply or functions.{'lua' if t == 'lua' else 'js'}"
-                f".{'lua' if t == 'lua' else 'js'}_transform directly"
-            )
-        if t == "lua":
-            from .functions.lua import compile_program as _compile
-        else:
-            from .functions.js import compile_program as _compile
-        compiled = _compile(s["script"], typer(cols), cols)
-        return dict(compiled.columns)
     if t == "shift":
         # kazaam shift: output doc = exactly the spec's projection
         # ({"output": "input"} — pkg/transform/kazaam_test.go:10-48)
@@ -255,29 +246,19 @@ class TransformEngine:
         for a in r.actions:
             if a.type not in (
                 "pass", "shift", "default", "set", "concat", "extract",
-                "delete", "timestamp", "uuid", "computed", "jq", "lua",
-                "javascript",
+                "delete", "timestamp", "uuid", "computed", *_SCRIPTS,
             ):
                 raise ValueError(f"rule {r.name}: unknown action {a.type}")
-            if a.type == "jq":
+            if a.type in _SCRIPTS:
                 # fail-fast at construction: syntax errors surface here,
                 # type errors at apply() (schema-dependent) — both before
                 # any executor work
-                from .functions.jq import parse as _jq_parse
-
-                if "query" not in a.spec:
-                    raise ValueError(f"rule {r.name}: jq action needs spec['query']")
-                _jq_parse(a.spec["query"])
-            if a.type in ("lua", "javascript"):
-                if "script" not in a.spec:
+                engine, key = _SCRIPTS[a.type]
+                if key not in a.spec:
                     raise ValueError(
-                        f"rule {r.name}: {a.type} action needs spec['script']"
+                        f"rule {r.name}: {a.type} action needs spec['{key}']"
                     )
-                if a.type == "lua":
-                    from .functions.lua import parse as _parse
-                else:
-                    from .functions.js import parse as _parse
-                _parse(a.spec["script"])
+                engine.parse(a.spec[key])
         if r.error_policy not in ("fail_fast", "skip", "dead_letter", "continue"):
             raise ValueError(f"rule {r.name}: unknown error policy {r.error_policy}")
 
@@ -294,7 +275,7 @@ class TransformEngine:
             )
             orig = {c: F.col(c) for c in payload}
             new = dict(orig)
-            # jq actions need types: resolve the CURRENT payload exprs'
+            # script actions need types: resolve the CURRENT payload exprs'
             # schema against df — driver-side analysis only, no job
             typer = lambda cs: df.select(  # noqa: E731
                 *[v.alias(k) for k, v in cs.items()]

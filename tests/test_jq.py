@@ -13,12 +13,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from replicator_spark.functions.jq import (
-    CompiledJq,
     JqError,
     compile_program,
     jq_transform,
     parse,
 )
+from replicator_spark.functions.lowering import Compiled as CompiledJq
 from replicator_spark.transform import Action, Condition, Rule, TransformEngine
 
 

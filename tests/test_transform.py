@@ -5,6 +5,9 @@ surface (pkg/transform/engine.go:411-508)."""
 import pytest
 from pyspark.sql import functions as F
 
+from replicator_spark.functions.jq import JqError
+from replicator_spark.functions.js import JsError
+from replicator_spark.functions.lua import LuaError
 from replicator_spark.transform import Action, Condition, Rule, TransformEngine
 
 
@@ -242,3 +245,31 @@ def test_whole_chain_is_single_projection(spark):
     out, _ = eng.apply(df)
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "Exchange" not in plan, plan
+
+
+@pytest.mark.parametrize(
+    "engine, spec, broken, error",
+    [
+        ("jq", {"query": '{id, tag: (.tag + "-" + .name)}'},
+         {"query": "{tag: ("}, JqError),
+        ("lua", {"script": 'return { id = row.id, tag = row.tag .. "-" .. row.name }'},
+         {"script": "return { tag = ( }"}, LuaError),
+        ("javascript", {"script": 'return { id: row.id, tag: row.tag + "-" + row.name }'},
+         {"script": "return { tag: ( }"}, JsError),
+    ],
+)
+def test_script_action_mid_chain(spark, engine, spec, broken, error):
+    """A script action after another action reads the payload as that
+    action left it: its inputs are then expressions (the set literal),
+    not bare columns. A syntax error raises when the engine is built."""
+    df = _df(spark, [(1, "a"), (2, "b")], "id long, name string")
+    eng = TransformEngine(
+        [Rule("r", actions=[Action("set", {"tag": "t"}), Action(engine, spec)])]
+    )
+    out, _ = eng.apply(df)
+    assert [r.asDict() for r in out.orderBy("id").collect()] == [
+        {"id": 1, "name": None, "tag": "t-a"},
+        {"id": 2, "name": None, "tag": "t-b"},
+    ]
+    with pytest.raises(error):
+        TransformEngine([Rule("r", actions=[Action(engine, broken)])])
