@@ -12,11 +12,15 @@ exactly-once commit its research notes aspired to
 Physical layout::
 
     <root>/metadata/v{N}.json, version-hint.text   (commitlog.py)
-    <root>/data/v{N}/repo_bucket=K/part-*.parquet
+    <root>/data/v{N}-<token>/part-*.parquet                  (deltas)
+    <root>/data/v{N}-<token>/repo_bucket=K/part-*.parquet    (base files)
 
-Rows are hash-bucketed on ``repo`` into ``num_buckets`` buckets. Each
-row carries engine columns ``_last_seq`` (per-key LWW high-water mark)
-and ``_deleted`` (tombstone). Tombstones are retained so that a
+Rows are hash-bucketed on ``repo`` into ``num_buckets`` buckets. A base
+file holds one bucket; a delta file holds the rows of every bucket its
+writer task received and is listed in the manifest under each of them
+(its ``repo_bucket`` column says which). Each row carries engine columns
+``_last_seq`` (per-key LWW high-water mark) and ``_deleted``
+(tombstone). Tombstones are retained so that a
 late-arriving update with seq < a previously applied delete's seq is
 correctly rejected even across micro-batches — without them, LWW under
 out-of-order delivery silently resurrects deleted keys. ``read()``
@@ -24,11 +28,11 @@ filters tombstones unless asked not to.
 
 One MERGE strategy, merge-on-read (Iceberg v2's equality deletes — the
 decisive design choice for CDC at 10^10 events): the LWW-deduped batch
-is appended as *delta* files per bucket (a delta row supersedes any
-older image of its key; a delete delta is a tombstone). Write cost is
-O(batch), so apply throughput is independent of table size — this is
-what survives a 100× scale-up. ``read()`` resolves base ∪ deltas with a
-per-key max-``_last_seq`` aggregation; ``compact()`` folds deltas back
+is appended as *delta* files, one per writer task (a delta row
+supersedes any older image of its key; a delete delta is a tombstone).
+Write cost is O(batch), so apply throughput is independent of table
+size — this is what survives a 100× scale-up. ``read()`` resolves base ∪
+deltas with a per-key max-``_last_seq`` aggregation; ``compact()`` folds deltas back
 into base files when a bucket's delta chain crosses a threshold,
 bounding read amplification. The one write that reads table state is
 the partial-update upgrade (``merge``), which turns partial rows into
@@ -55,9 +59,11 @@ import os
 import threading
 import time
 import uuid
+from collections import Counter
 from collections.abc import Sequence
 from dataclasses import dataclass, field
 
+from py4j.java_gateway import JavaClass
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -125,6 +131,18 @@ def layout_width(
 
 def bucket_expr(num_buckets: int, repo_col: str = "repo") -> F.Column:
     return F.pmod(F.xxhash64(F.col(repo_col)), F.lit(num_buckets)).cast("int")
+
+
+def _jvm_seq(spark: SparkSession, strings: Sequence[str]):
+    """A JVM ``Seq[String]`` of ``strings`` in a constant number of py4j
+    round trips: they cross as one newline-joined string, split in the
+    JVM. The classes are named directly, which skips py4j's reflective
+    resolution of each package on the way to them."""
+    client = spark._jvm._gateway_client
+    tokens = JavaClass("java.util.StringTokenizer", client)("\n".join(strings), "\n")
+    return JavaClass("org.apache.spark.api.python.PythonUtils", client).toSeq(
+        JavaClass("java.util.Collections", client).list(tokens)
+    )
 
 
 def _is_partial(op_col: str, row: str = "") -> str:
@@ -284,18 +302,22 @@ class LakeTable:
         that job only re-stats files already known: the threshold is
         raised to the path count for the duration of the (eager) listing,
         which then runs in this process — local-FS stats, milliseconds for
-        the ≤ 8 × 32 delta files auto-compaction lets a scan see. The old
+        the ≤ 8 batches of delta files auto-compaction lets a scan see. The old
         value (or its absence) is restored under a module lock, so
-        concurrent scans can never leave the session changed."""
+        concurrent scans can never leave the session changed.
+
+        ``reader.parquet(*paths)`` would hand py4j a Python list, which
+        it converts with one round trip per path (``_jvm_seq``)."""
         reader = self.spark.read.schema(schema)
+        jpaths = _jvm_seq(self.spark, paths)
         conf = self.spark.conf
         with _LISTING_LOCK:
             prior = conf.get(_LISTING_THRESHOLD, None)
             if len(paths) <= int(conf.get(_LISTING_THRESHOLD)):
-                return reader.parquet(*paths)
+                return reader._df(reader._jreader.parquet(jpaths))
             conf.set(_LISTING_THRESHOLD, str(len(paths)))
             try:
-                return reader.parquet(*paths)
+                return reader._df(reader._jreader.parquet(jpaths))
             finally:
                 if prior is None:
                     conf.unset(_LISTING_THRESHOLD)
@@ -419,14 +441,7 @@ class LakeTable:
         file. Larger files keep the parallel scan and its shuffle: on 4
         cores one task already lost to it at 5.4 MB in 6 files, and by
         30% at 118 MB."""
-        deltas = self._deltas(snap)
-        bucket_ids = (
-            list(snap.files.keys() | deltas.keys())
-            if buckets is None
-            else [str(b) for b in buckets]
-        )
-        base_files = [f for b in bucket_ids for f in snap.files.get(b, [])]
-        delta_files = [f for b in bucket_ids for f in deltas.get(b, [])]
+        base_files, delta_files, where = self._bucket_files(snap, buckets)
         files = base_files + delta_files
         df = self._read_files(snap, files)
         # not on an empty scan: it folds to a local relation with no
@@ -435,6 +450,8 @@ class LakeTable:
             sql_conf = self.spark._jsparkSession.sessionState().conf()
             if sum(map(os.path.getsize, files)) <= sql_conf.filesOpenCostInBytes():
                 df = df.coalesce(1)
+        if where is not None:
+            df = df.where(where)
         if delta_files and resolve:
             # per-key LWW resolution across base + deltas (mor read path)
             # on the table's persisted merge key — not a hardcoded default
@@ -444,6 +461,33 @@ class LakeTable:
         if not include_engine_cols:
             df = df.drop(*ENGINE_SCHEMA.names)
         return df
+
+    def _bucket_files(
+        self, snap: cl.Snapshot, buckets: Sequence[int] | None = None
+    ) -> tuple[list[str], list[str], str | None]:
+        """(base files, delta files, row filter) of a scan of ``buckets``
+        (every bucket when None). A delta file is listed under each bucket
+        whose rows it holds, so it is named once however many of them the
+        scan reads. When a scanned delta is also listed under a bucket
+        outside the scan, the row filter is the SQL predicate that keeps
+        the scan's buckets' rows; else None."""
+        deltas = self._deltas(snap)
+        ids = (
+            sorted(snap.files.keys() | deltas.keys(), key=int)
+            if buckets is None
+            else [str(b) for b in buckets]
+        )
+        base = [f for b in ids for f in snap.files.get(b, [])]
+        delta = list(dict.fromkeys(f for b in ids for f in deltas.get(b, [])))
+        wanted, scanned = set(ids), set(delta)
+        if not any(
+            b not in wanted and not scanned.isdisjoint(fs) for b, fs in deltas.items()
+        ):
+            return base, delta, None
+        key = quote(self.key_columns(snap)[0])
+        return base, delta, (
+            f"pmod(xxhash64({key}), {snap.num_buckets}) IN ({', '.join(ids)})"
+        )
 
     def bucket_of(self, key: str, snap: cl.Snapshot | None = None) -> int:
         """Driver-side bucket id for a first-key value: the same
@@ -571,7 +615,6 @@ class LakeTable:
         exceeds ``floor`` (unknown stat ⇒ kept) — the ONE pruning
         predicate, shared by read_changes and changed_files so the
         observability surface can never drift from the actual scan."""
-        deltas = self._deltas(snap)
         stats = snap.file_stats
 
         def _keep(p: str) -> bool:
@@ -580,10 +623,8 @@ class LakeTable:
             mx = stats.get(p)
             return mx is None or mx > floor
 
-        bucket_ids = sorted(snap.files.keys() | deltas.keys(), key=str)
-        base = [f for b in bucket_ids for f in snap.files.get(b, []) if _keep(f)]
-        delta = [f for b in bucket_ids for f in deltas.get(b, []) if _keep(f)]
-        return base, delta
+        base, delta, _ = self._bucket_files(snap)
+        return [f for f in base if _keep(f)], [f for f in delta if _keep(f)]
 
     def changed_files(
         self, since_seq: int, version: int | None = None
@@ -744,7 +785,7 @@ class LakeTable:
                 snap, src, found.get["buckets"],
                 key_cols, all_payload, seq_col, op_col,
             )
-        stats, deltas, touched = self._merge_mor(
+        stats, deltas, touched, written = self._merge_mor(
             snap, src, batch_key, all_payload,
             key_cols, seq_col, op_col, files_per_bucket,
         )
@@ -767,7 +808,7 @@ class LakeTable:
                 sid = new_version
                 slog[str(sid)] = evolved_schema.json()
             file_stats, file_sids = self._next_file_meta(
-                base, base.files, cur_deltas, sid
+                base, base.files, cur_deltas, sid, written
             )
             return cl.Snapshot(
                 version=new_version,
@@ -936,14 +977,12 @@ class LakeTable:
         struct (``_s`` the batch row, ``_t`` the target image), so no
         payload column name can collide with the aggregate's own."""
         proj = [*key_cols, *all_payload, seq_col, op_col, BUCKET_COL]
-        deltas = self._deltas(snap)
-        files = [
-            f for b in buckets
-            for f in snap.files.get(str(b), []) + deltas.get(str(b), [])
-        ]
-        if not files:
+        base, delta, where = self._bucket_files(snap, buckets)
+        if not base + delta:
             return src.select(*proj)
-        tgt = self._read_files(snap, files)
+        tgt = self._read_files(snap, base + delta)
+        if where is not None:
+            tgt = tgt.where(where)
         sdict = {f.name: f.dataType for f in src.schema.fields}
         tdict = {f.name: f.dataType for f in tgt.schema.fields}
         # the target image in the batch's types; columns the target
@@ -1007,16 +1046,18 @@ class LakeTable:
             F.sum(F.when(F.col("_deleted"), 1).otherwise(0)).alias("deleted"),
             F.max(F.col(LAST_SEQ_COL)).alias("seq_hi"),
         )
-        new_files = self._write_buckets(
-            delta, snap.version + 1, range(snap.num_buckets), key_cols, files_per_bucket
+        new_files, written = self._write_buckets(
+            delta, snap.version + 1, range(snap.num_buckets), key_cols,
+            files_per_bucket, by_bucket=False,
         )
         if new_files:
             m = obs.get
         else:
             # empty micro-batch (a fully-filtered feed batch is legal):
-            # the write ran zero tasks, so the CollectMetrics row never
-            # materialized and obs.get would raise; a non-empty delta
-            # always writes ≥1 file, so no-files ⇒ no-rows is safe
+            # the write may run zero tasks, so the CollectMetrics row
+            # never materializes and obs.get would raise; a non-empty
+            # delta always writes ≥1 file holding a bucket's rows, so
+            # no-bucket-files ⇒ no-rows is safe
             m = {"applied": 0, "deleted": 0, "seq_hi": None}
 
         deltas = {b: list(v) for b, v in self._deltas(snap).items()}
@@ -1028,9 +1069,9 @@ class LakeTable:
             applied=int(m["applied"] or 0),
             deleted=int(m["deleted"] or 0),
             seq_hi=int(m["seq_hi"]) if m["seq_hi"] is not None else None,
-            files_written=[p for fs in new_files.values() for p in fs],
+            files_written=sorted({p for fs in new_files.values() for p in fs}),
         )
-        return stats, deltas, sorted(int(b) for b in new_files)
+        return stats, deltas, sorted(int(b) for b in new_files), written
 
     # -- compaction ----------------------------------------------------
     def compact(
@@ -1079,8 +1120,8 @@ class LakeTable:
         Tombstone expiry reaches QUIET buckets too (VERDICT r02 #2):
         every compaction records exact per-bucket tombstone stats
         (count + min seq — props["bucket_tombstones"], O(num_buckets)
-        metadata, computed by a column-pruned scan of the files it just
-        wrote), so a later expiry-compaction can include a tombstone-
+        metadata, observed on the rows it writes), so a later
+        expiry-compaction can include a tombstone-
         bearing bucket whose delta chain is empty — a delete-heavy
         bucket that goes cold no longer retains its tombstones forever.
         The exact min-seq prevents re-compaction livelock: a bucket is a
@@ -1106,29 +1147,53 @@ class LakeTable:
                 and snap.files.get(b)
                 and (buckets is None or int(b) in set(buckets))
             ]
+        # A fold takes whole delta files: a subset grows to every bucket
+        # sharing one with it. A file dropped from only some of the
+        # buckets it holds would leave their rows in the others' scans
+        # beside the new base files, where an image older than a
+        # tombstone this fold expired would come back.
+        i = 0
+        while buckets is not None and i < len(todo):
+            fs = set(deltas.get(todo[i], []))
+            todo += [b for b, ds in deltas.items()
+                     if b not in todo and not fs.isdisjoint(ds)]
+            i += 1
         if not todo:
             return snap.version
         table_keys = self.key_columns(snap)
+        ids = [int(b) for b in todo]
         resolved = self._read_snapshot(
-            snap,
-            buckets=[int(b) for b in todo],
-            include_deleted=True,
-            include_engine_cols=True,
+            snap, buckets=ids, include_deleted=True, include_engine_cols=True,
         ).withColumn(BUCKET_COL, bucket_expr(snap.num_buckets, table_keys[0]))
         if expire_tombstones_below_seq is not None:
             resolved = resolved.where(
                 ~F.col("_deleted")
                 | (F.col(LAST_SEQ_COL) >= F.lit(expire_tombstones_below_seq))
             )
+        # exact per-bucket tombstone stats of the rows written, so later
+        # expiry runs can target quiet buckets precisely
+        tombs = Observation()
+        resolved = resolved.observe(tombs, *[
+            F.expr(f"{agg} AS {name}{b}")
+            for b in ids
+            for name, agg in (
+                ("n", f"count_if(_deleted AND {BUCKET_COL} = {b})"),
+                ("m", f"min(CASE WHEN _deleted AND {BUCKET_COL} = {b} "
+                      f"THEN {LAST_SEQ_COL} END)"),
+            )
+        ])
         # salt width from the bytes it rewrites: the largest bucket's,
-        # known exactly here, so no hot-share guess
+        # known exactly here, so no hot-share guess; a delta file's bytes
+        # are split evenly among the buckets listing (holding) it
+        owners = Counter(f for fs in deltas.values() for f in fs)
         width = layout_width(max(
-            sum(map(os.path.getsize, snap.files.get(b, []) + deltas.get(b, [])))
+            sum(map(os.path.getsize, snap.files.get(b, [])))
+            + sum(os.path.getsize(f) / owners[f] for f in deltas.get(b, []))
             for b in todo
         ), hot_share=1.0)
         new_version = snap.version + 1
-        new_files = self._write_buckets(
-            resolved, new_version, [int(b) for b in todo], table_keys, width
+        new_files, written = self._write_buckets(
+            resolved, new_version, ids, table_keys, width, by_bucket=True
         )
         files = dict(snap.files)
         new_deltas = {b: list(v) for b, v in deltas.items()}
@@ -1136,14 +1201,17 @@ class LakeTable:
             files[b] = new_files.get(b, [])
             new_deltas.pop(b, None)
         sid, slog = self._schema_meta(snap)
-        file_stats, file_sids = self._next_file_meta(snap, files, new_deltas, sid)
-        # exact per-bucket tombstone stats for the buckets just
-        # rewritten — a column-pruned (3-column) scan of the new base
-        # files, so later expiry runs can target quiet buckets precisely
+        file_stats, file_sids = self._next_file_meta(
+            snap, files, new_deltas, sid, written
+        )
+        # a write of no rows never materializes the observation
+        m = tombs.get if new_files else {}
         bucket_tombstones = dict((snap.props or {}).get("bucket_tombstones", {}))
-        for b in todo:
-            bucket_tombstones[b] = [0, None]
-        bucket_tombstones.update(self._tombstone_stats(new_files))
+        for b in ids:
+            mn = m.get(f"m{b}")
+            bucket_tombstones[str(b)] = [
+                int(m.get(f"n{b}") or 0), int(mn) if mn is not None else None
+            ]
         nsnap = cl.Snapshot(
             version=new_version,
             parent=snap.version,
@@ -1275,26 +1343,37 @@ class LakeTable:
 
     # -- physical write ------------------------------------------------
     def _write_buckets(
-        self, df: DataFrame, version: int, touched, key_cols, width: int
-    ) -> dict[str, list[str]]:
+        self, df: DataFrame, version: int, touched, key_cols, width: int,
+        *, by_bucket: bool,
+    ) -> tuple[dict[str, list[str]], dict[str, int | None]]:
         """Write ``df`` for prospective ``version``; returns its new data
-        files by bucket. The one write layout of every table write
-        (delta append, compaction): one shuffle,
-        ``repartition(n, bucket[, salt])``. Rows are not key-sorted
-        within files: the file writer sorts each task's rows on the
-        ``repo_bucket`` partition column, and a key sort before it would
-        be planned away.
+        files by bucket, and each file's max ``_last_seq``. The one write
+        layout of every table write (delta append, compaction): one
+        shuffle, ``repartition(n, bucket[, salt])``, then one file per
+        writer task (deltas) or, with ``by_bucket``, one per bucket each
+        task holds (compaction's base files, under ``repo_bucket=K/``).
 
-        Width 1: one file per touched bucket, from
-        ``n = min(len(touched), spark.sql.shuffle.partitions)`` tasks —
-        one writer per core, each writing whole buckets. A task per
-        bucket spent ~0.9 s of a 2.4 s batch on 4 cores starting 32
+        Width 1: ``n = min(len(touched), spark.sql.shuffle.partitions)``
+        tasks — one writer per core, each holding whole buckets. A task
+        per bucket spent ~0.9 s of a 2.4 s batch on 4 cores starting 32
         one-file tasks; one task for all buckets wrote them serially.
 
         Width w > 1 (``layout_width``, for batches whose hot bucket
-        outgrows one task): w files per bucket, split by a key salt,
-        from ``n = len(touched) × w`` tasks, so a hot bucket's salts
-        land in separate tasks instead of one straggler sort.
+        outgrows one task): a key salt splits each bucket w ways, over
+        ``n = len(touched) × w`` tasks, so a hot bucket's salts land in
+        separate tasks instead of one straggler sort.
+
+        Why deltas skip the per-bucket split: a parquet file's writer
+        setup (codec, the column-config walk of the Hadoop conf) costs
+        more than a ~4k-row micro-batch's rows: on 4 cores, 32 bucket
+        files took 273 ms of job time where 4 task files took 120 ms, and
+        every read until the next compaction opens them all. A delta file keeps
+        ``repo_bucket`` as a column; the driver reads it back with the
+        footer's max ``_last_seq`` in one threaded per-file pass, so the
+        file → bucket map is what the file holds. The one empty file a
+        write of no rows leaves holds no bucket and is never listed.
+        Base files stay one per bucket: every lookup of a bucket reads
+        them until the next compaction replaces them.
 
         The data dir is writer-unique: writers racing one version must
         not clobber each other's files (overwrite mode) before the
@@ -1310,53 +1389,72 @@ class LakeTable:
         else:
             n = len(touched) * width
             parts.append(F.pmod(F.xxhash64(*map(F.col, key_cols)), F.lit(width)))
-        (
+        writer = (
             df.repartition(max(n, 1), *parts)
             .write.mode("overwrite")
             # content/commit columns are high-entropy — parquet dictionary
             # encoding only burns CPU before falling back (measured ~2.5s
             # per 700k-row batch)
             .option("parquet.enable.dictionary", "false")
-            .partitionBy(BUCKET_COL)
-            .parquet(out_dir)
         )
+        if by_bucket:
+            writer = writer.partitionBy(BUCKET_COL)
+        writer.parquet(out_dir)
+        paths = sorted(
+            os.path.join(d, f)
+            for d, _, fs in os.walk(out_dir)
+            for f in fs
+            if f.endswith(".parquet")
+        )
+        meta = self._parquet_meta(paths, read_buckets=not by_bucket)
         out: dict[str, list[str]] = {}
-        for entry in os.listdir(out_dir):
-            if entry.startswith(f"{BUCKET_COL}="):
-                d = os.path.join(out_dir, entry)
-                out[entry.split("=", 1)[1]] = sorted(
-                    os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet")
-                )
-        return out
+        for p in paths:
+            held = (
+                meta[p][1] if not by_bucket
+                else [os.path.basename(os.path.dirname(p)).split("=", 1)[1]]
+            )
+            for b in held:
+                out.setdefault(str(b), []).append(p)
+        return out, {p: mx for p, (mx, _) in meta.items()}
 
     @staticmethod
-    def _parquet_max_seq(paths: Sequence[str]) -> dict[str, int | None]:
-        """Per-file max ``_last_seq`` from the parquet footers (the
-        Iceberg file-level column-stats idea). Driver-side, O(files
-        written this commit) ~1 ms footer reads, threaded; None when the
-        footer lacks usable stats (readers then simply never prune that
-        file)."""
+    def _parquet_meta(
+        paths: Sequence[str], read_buckets: bool = False
+    ) -> dict[str, tuple[int | None, list[int]]]:
+        """Per-file (max ``_last_seq``, buckets held): the max from the
+        parquet footer (the Iceberg file-level column-stats idea; None
+        when the footer lacks usable stats, and readers then never prune
+        that file), the buckets from the file's ``repo_bucket`` column
+        when ``read_buckets`` (else []). Driver-side, ~1 ms a file,
+        threaded."""
+        import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
-        def one(p: str) -> int | None:
-            try:
-                md = pq.ParquetFile(p).metadata
-                idx = None
-                for i in range(md.num_columns):
-                    if md.schema.column(i).name == LAST_SEQ_COL:
-                        idx = i
-                        break
-                if idx is None or md.num_rows == 0:
-                    return None
-                mx = None
-                for r in range(md.num_row_groups):
-                    st = md.row_group(r).column(idx).statistics
-                    if st is None or not st.has_min_max:
-                        return None
-                    mx = st.max if mx is None else max(mx, st.max)
-                return int(mx) if mx is not None else None
-            except Exception:
+        def max_seq(md) -> int | None:
+            idx = None
+            for i in range(md.num_columns):
+                if md.schema.column(i).name == LAST_SEQ_COL:
+                    idx = i
+                    break
+            if idx is None or md.num_rows == 0:
                 return None
+            mx = None
+            for r in range(md.num_row_groups):
+                st = md.row_group(r).column(idx).statistics
+                if st is None or not st.has_min_max:
+                    return None
+                mx = st.max if mx is None else max(mx, st.max)
+            return int(mx) if mx is not None else None
+
+        def one(p: str) -> tuple[int | None, list[int]]:
+            if read_buckets:  # a file just written: it must be readable
+                pf = pq.ParquetFile(p)
+                col = pf.read(columns=[BUCKET_COL]).column(0)
+                return max_seq(pf.metadata), sorted(pc.unique(col).to_pylist())
+            try:
+                return max_seq(pq.ParquetFile(p).metadata), []
+            except Exception:
+                return None, []
 
         if not paths:
             return {}
@@ -1373,41 +1471,24 @@ class LakeTable:
         files: dict[str, list[str]],
         deltas: dict[str, list[str]],
         schema_id: int,
+        written: dict[str, int | None],
     ) -> tuple[dict[str, int | None], dict[str, int]]:
         """(stats, schema_ids) for the next snapshot: inherited entries
-        for surviving files + fresh footer reads / the commit's schema
-        id for files this commit introduced; dropped files are shed."""
+        for surviving files, the ``written`` stats / the commit's schema
+        id for files this commit introduced (footers are read only for
+        older files still without a stat); dropped files are shed."""
         live = {p for fs in files.values() for p in fs}
         live |= {p for fs in deltas.values() for p in fs}
-        inherited = {
+        stats = {
             p: s for p, s in snap.file_stats.items() if p in live and s is not None
         }
-        fresh = self._parquet_max_seq(sorted(live - inherited.keys()))
+        stats.update((p, s) for p, s in written.items() if p in live)
+        stats.update(
+            (p, mx)
+            for p, (mx, _) in self._parquet_meta(sorted(live - stats.keys())).items()
+        )
         old_live = {p for fs in snap.files.values() for p in fs}
         old_live |= {p for fs in self._deltas(snap).values() for p in fs}
         sids = {p: s for p, s in snap.file_schema_ids.items() if p in live}
         sids.update({p: schema_id for p in live - old_live})
-        return {**inherited, **fresh}, sids
-
-    def _tombstone_stats(
-        self, new_files: dict[str, list[str]]
-    ) -> dict[str, list[int]]:
-        """Exact ``[count, min seq]`` of the tombstones in each bucket of
-        the files a write just produced (buckets without one are
-        absent): a scan of the two engine columns, each row's bucket read
-        off its file's ``repo_bucket=K`` directory."""
-        paths = [p for fs in new_files.values() for p in fs]
-        if not paths:
-            return {}
-        rows = (
-            self._scan_parquet(ENGINE_SCHEMA, paths)
-            .where(F.col("_deleted"))
-            .groupBy(
-                F.regexp_extract(
-                    F.input_file_name(), f"{BUCKET_COL}=(\\d+)/", 1
-                ).alias("b")
-            )
-            .agg(F.count(F.lit(1)).alias("n"), F.min(LAST_SEQ_COL).alias("mn"))
-            .collect()
-        )
-        return {r["b"]: [int(r["n"]), int(r["mn"])] for r in rows}
+        return stats, sids

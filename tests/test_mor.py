@@ -293,6 +293,44 @@ def test_quiet_bucket_expiry_never_resurrects(spark, tmp_path):
     assert table.read().where("repo = 'a'").count() == 0
 
 
+def test_compaction_observes_its_tombstone_stats(spark, tmp_path):
+    """compact() learns each rewritten bucket's tombstone count and min
+    seq from an Observation on the rows it writes, not a re-scan of the
+    new base files: 3 Spark jobs (the resolve's shuffle, the write's
+    shuffle, the write), and props["bucket_tombstones"] equals a pyarrow
+    count over the new base files."""
+    import pyarrow.compute as pc
+    import pyarrow.parquet as pq
+    from pyspark.sql import Row
+
+    table = LakeTable(spark, str(tmp_path / "t"))
+    table.create(REPOS_SCHEMA, num_buckets=8)
+
+    def batch(rows):
+        return spark.createDataFrame([Row(**r) for r in rows])
+
+    def row(repo, seq, op):
+        return dict(repo=repo, path="p", commit="c", lang="py",
+                    content=f"v{seq}", seq=seq, op=op, event_id=f"e{seq}")
+
+    table.merge(batch([row(f"r{i}", i, "insert") for i in range(40)]), "s-0")
+    table.merge(
+        batch([row(f"r{i}", 100 + i, "delete") for i in range(0, 40, 3)]), "s-1"
+    )
+    v, jobs = spark_jobs(spark, table.compact)
+    assert len(jobs) == 3, jobs
+    snap = table._snap()
+    assert snap.version == v
+    want = {}
+    for b, fs in snap.files.items():
+        t = pq.read_table(fs, columns=["_deleted", "_last_seq"])
+        dead = t.filter(pc.fill_null(t["_deleted"], False))["_last_seq"]
+        want[b] = [len(dead), pc.min(dead).as_py()]
+    assert sum(n for n, _ in want.values()) == 14
+    assert sum(1 for n, _ in want.values() if n) > 1, want
+    assert snap.props["bucket_tombstones"] == want
+
+
 def test_empty_batch_merge_commits_cleanly(spark, tmp_path):
     """An empty micro-batch (a fully-filtered feed batch is legal) must
     commit as a zero-stat snapshot — the write runs zero
@@ -477,6 +515,49 @@ def test_concurrent_scans_restore_listing_threshold(spark, tmp_path):
     finally:
         sys.setswitchinterval(switch)
         spark.conf.unset(LISTING_THRESHOLD)
+
+
+def test_scan_round_trips_do_not_grow_with_files(spark, tmp_path, monkeypatch):
+    """A scan hands its path list to the JVM in a constant number of py4j
+    round trips: a Python list costs one per path (``ArrayList.add``)."""
+    import gc
+    import threading
+
+    table = _many_file_table(spark, str(tmp_path / "t"))
+    snap = table._snap()
+    paths = sorted({p for fs in table._deltas(snap).values() for p in fs})
+    schema = table._physical_schema(snap)
+    threshold = int(spark.conf.get(LISTING_THRESHOLD))
+    assert 2 < len(paths) <= threshold, len(paths)
+    client = spark.sparkContext._gateway._gateway_client
+    send = client.send_command
+    me = threading.get_ident()
+
+    def round_trips(n):
+        """This thread's commands for one scan of ``n`` paths, without
+        py4j's deletes of garbage-collected objects (the least of three
+        scans: other work in the process can add to any one of them)."""
+        counts = []
+        for _ in range(3):
+            sent = []
+
+            def counted(command, *args, **kwargs):
+                if threading.get_ident() == me and not command.startswith("m\nd\n"):
+                    sent.append(command)
+                return send(command, *args, **kwargs)
+
+            gc.collect()
+            monkeypatch.setattr(client, "send_command", counted)
+            try:
+                table._scan_parquet(schema, paths[:n])
+            finally:
+                monkeypatch.undo()
+            counts.append(len(sent))
+        return min(counts)
+
+    table._scan_parquet(schema, paths)  # first-use costs are not per scan
+    few, many = round_trips(2), round_trips(len(paths))
+    assert few == many, (few, many, len(paths))
 
 
 def test_empty_table_scans_launch_no_job(spark, tmp_path):
