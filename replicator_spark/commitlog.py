@@ -18,11 +18,12 @@ the commit is guarded by a compare-and-swap (exclusive create of
 stream fanning into the table, or a maintenance ``compact`` cron —
 fails loudly with :class:`CommitConflictError` instead of silently
 vanishing a commit. ``compact`` retries against the new current
-snapshot, and ``LakeTable.merge`` retries-with-rebase when the winner
-touched a disjoint bucket set (laketable._assert_rebase_safe);
-overlapping or schema-changing races keep the loud error. On a shared
-object store the CAS becomes a conditional PUT / catalog swap; the API
-is unchanged.
+snapshot, and ``LakeTable.merge`` retries-with-rebase
+(laketable._assert_rebase_safe): a merge without partials rebases over
+any concurrent data commit, a merge that upgraded partials only over
+one that left its buckets alone, and a concurrent shape or schema
+change keeps the loud error. On a shared object store the CAS becomes a
+conditional PUT / catalog swap; the API is unchanged.
 
 Metadata is bounded at the 10^10-event regime (VERDICT r01 #4):
 
@@ -32,7 +33,7 @@ Metadata is bounded at the 10^10-event regime (VERDICT r01 #4):
   small manifests and re-references the other 29 by hash, so snapshot
   bytes are O(num_buckets), not O(total files); identical lists dedupe
   by construction (this is Iceberg's manifest-list idea flattened one
-  level). Old inline-list snapshots still load (back-compat).
+  level).
 * **Ledger watermark** — the committed-batch ledger retains only the
   last ``keep`` batch ids per stream; older ids are evicted and covered
   by a per-stream floor (``ledger_floor``): a batch id at or below the
@@ -68,7 +69,7 @@ class Snapshot:
     committed_at_ms: int = 0
     # MERGE key columns, fixed at create time and carried by every
     # snapshot so read()/compact() resolve LWW on the same keys merge()
-    # used (None in pre-upgrade snapshots → model.KEY_COLS).
+    # used.
     key_cols: list[str] | None = None
     # per-stream high-water mark of batch ids evicted from
     # committed_batches: n <= ledger_floor[stream] ⇒ committed
@@ -77,14 +78,13 @@ class Snapshot:
     # stats, read from parquet footers at commit time). Carried inside
     # the content-addressed manifests — NOT serialized inline (that
     # would reintroduce O(total-files) snapshot JSON). Missing/None ⇒
-    # unknown (pre-upgrade manifests) ⇒ readers must not prune the file.
+    # unknown (a footer without usable stats) ⇒ readers must not prune
+    # the file.
     file_stats: dict[str, int | None] = field(default_factory=dict)
     # per-data-file schema id (Iceberg's schema-id-per-data-file):
     # which entry of props["schema_log"] the file's physical columns
     # were written under. Carried in the manifests like file_stats.
-    # Missing ⇒ legacy file ⇒ readers use schema id 0 (type changes
-    # were impossible before this feature, so every legacy file's
-    # types are a null-fillable prefix of the seed schema).
+    # Missing ⇒ schema id 0.
     file_schema_ids: dict[str, int] = field(default_factory=dict)
 
     # NOTE: serialization lives in commit_snapshot/load_snapshot ONLY —
@@ -267,25 +267,22 @@ def _resolve(
     schema_ids_out: dict[str, int],
 ) -> dict[str, list[str]]:
     """Resolve manifest refs to inline file lists, accumulating the
-    per-file stats/schema-ids the manifests carry. Handles all on-disk
-    generations: inline lists, plain-list manifests (pre-stats), and
-    {"files", "max_last_seq"[, "schema_id"]} manifests."""
+    per-file stats/schema-ids the manifests carry: a bucket is either a
+    {"files", "max_last_seq", "schema_id"} manifest ref or, when empty,
+    an inline ``[]``."""
     out: dict[str, list[str]] = {}
     for b, v in refs.items():
         if isinstance(v, str):  # manifest ref
             with open(os.path.join(meta_dir(root), v)) as f:
                 body = json.load(f)
-            if isinstance(body, dict):
-                out[b] = list(body["files"])
-                for p, s in zip(body["files"], body.get("max_last_seq") or []):
-                    if s is not None:
-                        stats_out[p] = s
-                for p, s in zip(body["files"], body.get("schema_id") or []):
-                    if s is not None:
-                        schema_ids_out[p] = s
-            else:  # plain-list manifest (pre-stats)
-                out[b] = list(body)
-        else:  # inline list (pre-manifest snapshots, empty buckets)
+            out[b] = list(body["files"])
+            for p, s in zip(body["files"], body["max_last_seq"]):
+                if s is not None:
+                    stats_out[p] = s
+            for p, s in zip(body["files"], body["schema_id"]):
+                if s is not None:
+                    schema_ids_out[p] = s
+        else:  # inline list (empty buckets)
             out[b] = list(v)
     return out
 

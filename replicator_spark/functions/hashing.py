@@ -1,16 +1,11 @@
 """Content hashing — the per-row invariant vs the reference
 (BASELINE.json input_hint: sha256(content) equality after replay).
 
-Two interchangeable implementations:
-
-* ``sha256_builtin`` — ``F.sha2(col, 256)``: JVM-side, whole-stage
-  codegen, the hot-path default.
-* ``sha256_arrow`` — a vectorized pandas UDF (Arrow batch transfer,
-  ``hashlib`` over the batch, no per-row Python interpreter dispatch in
-  Spark's loop): the mandated pandas/Arrow form, and the template for
-  hash kernels Spark lacks natively.
-
-Both produce identical lowercase hex; tests assert cross-equality.
+``sha256_arrow`` is a vectorized pandas UDF (Arrow batch transfer,
+``hashlib`` over the batch, no per-row Python interpreter dispatch in
+Spark's loop): the mandated pandas/Arrow form, and the template for
+hash kernels Spark lacks natively. It yields the same lowercase hex as
+``F.sha2(col, 256)``; tests assert that and hashlib equality.
 """
 
 from __future__ import annotations
@@ -21,10 +16,6 @@ import pandas as pd
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
-
-
-def sha256_builtin(col: Column | str) -> Column:
-    return F.sha2(F.col(col) if isinstance(col, str) else col, 256)
 
 
 def _sha256_batch(s: pd.Series) -> pd.Series:

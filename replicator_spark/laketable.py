@@ -198,7 +198,7 @@ class LakeTable:
 
     def key_columns(self, snap: cl.Snapshot | None = None) -> list[str]:
         snap = snap or self._snap()
-        return list(snap.key_cols or KEY_COLS)
+        return list(snap.key_cols)
 
     def exists(self) -> bool:
         return cl.current_version(self.root) is not None
@@ -280,16 +280,9 @@ class LakeTable:
 
     @staticmethod
     def _schema_meta(snap: cl.Snapshot) -> tuple[int, dict[str, str]]:
-        """(current schema id, schema log). Legacy tables (pre-schema-log
-        snapshots) get a synthetic log seeded with the current schema at
-        id 0 — sound because type changes were impossible before the log
-        existed, so every legacy file's types agree with it."""
-        props = snap.props or {}
-        sid = int(props.get("schema_id", 0))
-        log = dict(props.get("schema_log") or {})
-        if not log:
-            log["0"] = snap.schema_json
-        return sid, log
+        """(current schema id, a copy of the schema log). ``create``
+        writes the log and every later commit carries it forward."""
+        return int(snap.props["schema_id"]), dict(snap.props["schema_log"])
 
     def _scan_parquet(self, schema: T.StructType, paths: list[str]) -> DataFrame:
         """The parquet relation over an explicit file list, planned
@@ -555,8 +548,8 @@ class LakeTable:
         ≤ floor, so none can be a change, and none can out-rank an
         unpruned row that is > floor. A steady-state poll between
         compactions therefore reads only the delta files newer than the
-        watermark. Files from pre-stats manifests (unknown max) are
-        never pruned — correct, just unpruned.
+        watermark. A file whose footer had no usable stats (unknown
+        max) is never pruned — correct, just unpruned.
 
         Two documented caveats: (1) an out-of-order straggler applied
         after ``since_version`` with a seq below that watermark is
@@ -1076,7 +1069,6 @@ class LakeTable:
     # -- compaction ----------------------------------------------------
     def compact(
         self,
-        buckets: Sequence[int] | None = None,
         *,
         expire_tombstones_below_seq: int | None = None,
         retries: int = 2,
@@ -1093,7 +1085,6 @@ class LakeTable:
         for attempt in range(retries + 1):
             try:
                 return self._compact_once(
-                    buckets,
                     expire_tombstones_below_seq=expire_tombstones_below_seq,
                 )
             except cl.CommitConflictError:
@@ -1102,16 +1093,13 @@ class LakeTable:
         raise AssertionError("unreachable")
 
     def _compact_once(
-        self,
-        buckets: Sequence[int] | None = None,
-        *,
-        expire_tombstones_below_seq: int | None = None,
+        self, *, expire_tombstones_below_seq: int | None = None
     ) -> int:
         """One compaction attempt against the current snapshot.
 
-        Resolves per-key LWW across base ∪ deltas and rewrites the
-        affected buckets — the maintenance half of the mor tradeoff,
-        run out of the hot apply path. ``expire_tombstones_below_seq``
+        Resolves per-key LWW across base ∪ deltas and rewrites every
+        bucket with a delta chain — the maintenance half of the mor
+        tradeoff, run out of the hot apply path. ``expire_tombstones_below_seq``
         optionally drops tombstones older than a watermark the feed is
         guaranteed to have passed (bounding tombstone growth; unsafe to
         set below the source's max-reordering window). Returns the new
@@ -1129,11 +1117,7 @@ class LakeTable:
         watermark."""
         snap = self._snap()
         deltas = self._deltas(snap)
-        todo = (
-            [b for b in deltas if deltas[b]]
-            if buckets is None
-            else [str(b) for b in buckets if deltas.get(str(b))]
-        )
+        todo = [b for b in deltas if deltas[b]]
         if expire_tombstones_below_seq is not None:
             bt = (snap.props or {}).get("bucket_tombstones", {})
             seen = set(todo)
@@ -1145,19 +1129,7 @@ class LakeTable:
                 and mn is not None
                 and mn < expire_tombstones_below_seq
                 and snap.files.get(b)
-                and (buckets is None or int(b) in set(buckets))
             ]
-        # A fold takes whole delta files: a subset grows to every bucket
-        # sharing one with it. A file dropped from only some of the
-        # buckets it holds would leave their rows in the others' scans
-        # beside the new base files, where an image older than a
-        # tombstone this fold expired would come back.
-        i = 0
-        while buckets is not None and i < len(todo):
-            fs = set(deltas.get(todo[i], []))
-            todo += [b for b, ds in deltas.items()
-                     if b not in todo and not fs.isdisjoint(ds)]
-            i += 1
         if not todo:
             return snap.version
         table_keys = self.key_columns(snap)
@@ -1421,12 +1393,13 @@ class LakeTable:
     def _parquet_meta(
         paths: Sequence[str], read_buckets: bool = False
     ) -> dict[str, tuple[int | None, list[int]]]:
-        """Per-file (max ``_last_seq``, buckets held): the max from the
-        parquet footer (the Iceberg file-level column-stats idea; None
-        when the footer lacks usable stats, and readers then never prune
-        that file), the buckets from the file's ``repo_bucket`` column
-        when ``read_buckets`` (else []). Driver-side, ~1 ms a file,
-        threaded."""
+        """Per-file (max ``_last_seq``, buckets held) of files a write
+        just made: the max from the parquet footer (the Iceberg
+        file-level column-stats idea; None when the footer lacks usable
+        stats, and readers then never prune that file), the buckets from
+        the file's ``repo_bucket`` column when ``read_buckets`` (else
+        []). A file that cannot be read fails the write. Driver-side,
+        ~1 ms a file, threaded."""
         import pyarrow.compute as pc
         import pyarrow.parquet as pq
 
@@ -1447,14 +1420,11 @@ class LakeTable:
             return int(mx) if mx is not None else None
 
         def one(p: str) -> tuple[int | None, list[int]]:
-            if read_buckets:  # a file just written: it must be readable
-                pf = pq.ParquetFile(p)
-                col = pf.read(columns=[BUCKET_COL]).column(0)
-                return max_seq(pf.metadata), sorted(pc.unique(col).to_pylist())
-            try:
-                return max_seq(pq.ParquetFile(p).metadata), []
-            except Exception:
-                return None, []
+            pf = pq.ParquetFile(p)
+            if not read_buckets:
+                return max_seq(pf.metadata), []
+            col = pf.read(columns=[BUCKET_COL]).column(0)
+            return max_seq(pf.metadata), sorted(pc.unique(col).to_pylist())
 
         if not paths:
             return {}
@@ -1475,18 +1445,13 @@ class LakeTable:
     ) -> tuple[dict[str, int | None], dict[str, int]]:
         """(stats, schema_ids) for the next snapshot: inherited entries
         for surviving files, the ``written`` stats / the commit's schema
-        id for files this commit introduced (footers are read only for
-        older files still without a stat); dropped files are shed."""
+        id for files this commit introduced; dropped files are shed."""
         live = {p for fs in files.values() for p in fs}
         live |= {p for fs in deltas.values() for p in fs}
         stats = {
             p: s for p, s in snap.file_stats.items() if p in live and s is not None
         }
         stats.update((p, s) for p, s in written.items() if p in live)
-        stats.update(
-            (p, mx)
-            for p, (mx, _) in self._parquet_meta(sorted(live - stats.keys())).items()
-        )
         old_live = {p for fs in snap.files.values() for p in fs}
         old_live |= {p for fs in self._deltas(snap).values() for p in fs}
         sids = {p: s for p, s in snap.file_schema_ids.items() if p in live}

@@ -1,13 +1,15 @@
 """Text deduplication operators, Spark-first.
 
-All of these stay in the JVM (higher-order array functions + hash
-builtins) — no Python in the hot path. Shapes:
+Relational work stays in the JVM (higher-order array functions + hash
+builtins); the per-hash arithmetic of MinHash and SimHash runs in
+vectorized numpy kernels over Arrow batches — never row-at-a-time
+Python. Shapes:
 
 * exact_dedup        — hash-groupBy, keep canonical doc per hash
-* minhash_signatures — shingle → k independent min-hashes (permutation
-                       hashing via xxhash64 with per-band seeds)
+* minhash_signatures — shingle → one hash per shingle → k min-hashes
+                       under affine permutations (Arrow kernel)
 * minhash_lsh        — band signatures → bucket join → candidate pairs
-* simhash64          — 64-bit simhash over token hashes
+* simhash64          — 64-bit simhash over token hashes (Arrow kernel)
 * ngram_jaccard      — exact Jaccard on shingle sets for candidate
                        pairs (verification stage after LSH)
 
@@ -29,9 +31,13 @@ star path ("no silent caps").
 
 from __future__ import annotations
 
+import hashlib
+
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
 
 def shingle_expr(col_name: str, n: int = 5):
@@ -58,14 +64,42 @@ def affine_constants(num_hashes: int, seed: int = 42):
     mod 2^64 — odd multipliers (bijections), shared by the numpy kernel
     and the DuckDB oracle builder (the constants must be THE SAME
     stream or hash-parity is meaningless)."""
-    import numpy as np
-
     rng = np.random.default_rng(seed)
     a = (
         rng.integers(0, 2**63, size=num_hashes, dtype=np.uint64) << np.uint64(1)
     ) | np.uint64(1)
     b = rng.integers(0, 2**63, size=num_hashes, dtype=np.uint64)
     return a, b
+
+
+def _segments(rows) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The set-up of a segmented numpy reduction over a batch of per-row
+    hash arrays: (every row's hashes in one uint64 array, the mask of
+    rows holding at least one, those rows' start offsets). reduceat
+    takes only the non-empty rows' offsets: an empty row adds no
+    elements, so each segment covers exactly one non-empty row."""
+    lens = np.fromiter((len(x) for x in rows), dtype=np.int64, count=len(rows))
+    flat = np.empty(int(lens.sum()), dtype=np.int64)
+    pos = 0
+    for x in rows:
+        flat[pos : pos + len(x)] = x
+        pos += len(x)
+    nonempty = lens > 0
+    return flat.view(np.uint64), nonempty, (np.cumsum(lens) - lens)[nonempty]
+
+
+def _affine_min(rows, a: np.ndarray, b: np.ndarray) -> pd.Series:
+    """Per row, the min of h_i(x) = a_i·x + b_i mod 2^64 over its hashes
+    for each (a_i, b_i): k multiplies and a segmented min per batch. A
+    row without hashes gets int64 max in every slot."""
+    u, nonempty, seg = _segments(rows)
+    out = np.full((len(rows), len(a)), np.iinfo(np.int64).max, dtype=np.int64)
+    if nonempty.any():
+        with np.errstate(over="ignore"):
+            for i in range(len(a)):
+                perm = (u * a[i] + b[i]).view(np.int64)
+                out[nonempty, i] = np.minimum.reduceat(perm, seg)
+    return pd.Series(list(out))
 
 
 def minhash_signatures(
@@ -76,33 +110,28 @@ def minhash_signatures(
     shingle_n: int = 5,
     num_hashes: int = 128,
     seed: int = 42,
-    impl: str = "arrow",
     base_hash: str = "xxhash64",
 ) -> DataFrame:
     """id → array<long> of ``num_hashes`` min-hash values.
 
-    * ``impl="arrow"`` (default): shingles are hashed ONCE in the JVM
-      (one transform pass of xxhash64), then the k permutations are
-      affine maps h_i(x) = a_i·x + b_i over uint64 (universal-hash
-      family) applied in a single numpy kernel — k multiplies + segmented
-      min-reduceat over the Arrow batch's flattened hashes. O(S + k·S)
-      word ops instead of k string-hash passes.
-    * ``impl="jvm"``: k independent xxhash64 passes
-      (h_i(s) = xxhash64(s, seed+i)) with array_min — zero Python, but
-      each pass re-hashes every shingle string.
+    Each shingle is hashed once, then the k permutations are affine maps
+    h_i(x) = a_i·x + b_i over uint64 (universal-hash family) applied in
+    one numpy kernel — k multiplies + segmented min-reduceat over the
+    Arrow batch's flattened hashes. O(S + k·S) word ops instead of k
+    string-hash passes.
 
     ``base_hash`` selects the one-pass shingle hash feeding the
-    permutations: ``"xxhash64"`` (default, fastest) or ``"sha2_60"`` —
-    a 60-bit sha2-derived hash DuckDB reproduces exactly
-    (``('0x'||substr(sha256(s),1,15))::BIGINT``), the same trick that
-    oracle-gated simhash; the affine kernel is IDENTICAL either way,
-    so the contract query exercises the real permutation/min machinery
-    under the hash gate while the library default stays xxhash64.
-    (arrow impl only; the jvm impl is inherently xxhash64-seeded.)
+    permutations: ``"xxhash64"`` (default, fastest; shingles and hashes
+    stay in the JVM) or ``"sha2_60"`` — a 60-bit sha2-derived hash
+    DuckDB reproduces exactly (``('0x'||substr(sha256(s),1,15))::BIGINT``),
+    the same trick that oracle-gated simhash; the affine kernel is
+    IDENTICAL either way, so the contract query exercises the real
+    permutation/min machinery under the hash gate while the library
+    default stays xxhash64.
     """
-    sh = shingle_expr(text_col, shingle_n).alias("_sh")
+    a_, b_ = affine_constants(num_hashes, seed)
 
-    if impl == "arrow" and base_hash == "sha2_60":
+    if base_hash == "sha2_60":
         # r6: shingle + sha-60 + permutations all in ONE Arrow kernel
         # over the raw text. The JVM form paid 20.5 s at sf1.0 for the
         # substr/array_distinct shingling alone and another ~6 s for
@@ -112,119 +141,38 @@ def minhash_signatures(
         # codepoints), set() = array_distinct, and
         # int.from_bytes(sha256(s)[:8], 'big') >> 4 IS
         # conv(substr(sha2_hex, 1, 15), 16, 10) — the first 60 bits.
-        from pyspark.sql.functions import pandas_udf
-
-        import numpy as np
-
-        a_, b_ = affine_constants(num_hashes, seed)
         k_n = shingle_n
 
         @pandas_udf("array<long>")
         def _sig_text_pd(texts: pd.Series) -> pd.Series:
-            import hashlib
-
             sha = hashlib.sha256
-            docs_hashes = []
+            rows = []
             for t in texts:
                 t = t or ""
-                n_starts = max(len(t) - (k_n - 1), 1)
                 hs = {
                     sha(t[i : i + k_n].encode("utf-8")).digest()[:8]
-                    for i in range(n_starts)
+                    for i in range(max(len(t) - (k_n - 1), 1))
                 }
-                docs_hashes.append(
-                    np.fromiter(
-                        (int.from_bytes(h, "big") >> 4 for h in hs),
-                        dtype=np.uint64,
-                        count=len(hs),
-                    )
-                )
-            n = len(docs_hashes)
-            lens = np.fromiter((len(x) for x in docs_hashes), dtype=np.int64, count=n)
-            total = int(lens.sum())
-            flat = np.empty(total, dtype=np.uint64)
-            pos = 0
-            for x in docs_hashes:
-                flat[pos : pos + len(x)] = x
-                pos += len(x)
-            offsets = np.zeros(n, dtype=np.int64)
-            if n > 1:
-                np.cumsum(lens[:-1], out=offsets[1:])
-            nonempty = lens > 0
-            seg = offsets[nonempty]
-            out = np.full((n, len(a_)), np.iinfo(np.int64).max, dtype=np.int64)
-            if nonempty.any():
-                with np.errstate(over="ignore"):
-                    for i in range(len(a_)):
-                        perm = (flat * a_[i] + b_[i]).view(np.int64)
-                        out[nonempty, i] = np.minimum.reduceat(perm, seg)
-            return pd.Series(list(out))
+                rows.append(np.fromiter(
+                    (int.from_bytes(h, "big") >> 4 for h in hs),
+                    dtype=np.int64, count=len(hs),
+                ))
+            return _affine_min(rows, a_, b_)
 
         return df.select(
             F.col(id_col), _sig_text_pd(F.col(text_col)).alias("signature")
         )
-
-    base = df.select(F.col(id_col), sh)
-
-    if impl == "arrow":
-        from pyspark.sql.functions import pandas_udf
-
-        import numpy as np
-
-        a_, b_ = affine_constants(num_hashes, seed)
-
-        @pandas_udf("array<long>")
-        def _sig_pd(sh_hashes: pd.Series) -> pd.Series:
-            n = len(sh_hashes)
-            lens = np.fromiter((len(x) for x in sh_hashes), dtype=np.int64, count=n)
-            total = int(lens.sum())
-            flat = np.empty(total, dtype=np.int64)
-            pos = 0
-            for x in sh_hashes:
-                m = len(x)
-                flat[pos : pos + m] = x
-                pos += m
-            u = flat.view(np.uint64)
-            offsets = np.zeros(n, dtype=np.int64)
-            if n > 1:
-                np.cumsum(lens[:-1], out=offsets[1:])
-            nonempty = lens > 0
-            seg = offsets[nonempty]
-            out = np.full((n, len(a_)), np.iinfo(np.int64).max, dtype=np.int64)
-            if nonempty.any():
-                with np.errstate(over="ignore"):
-                    for i in range(len(a_)):
-                        perm = (u * a_[i] + b_[i]).view(np.int64)
-                        out[nonempty, i] = np.minimum.reduceat(perm, seg)
-            return pd.Series(list(out))
-
-        if base_hash == "sha2_60":
-            h0 = F.transform(
-                F.col("_sh"),
-                lambda s: F.conv(
-                    F.substring(F.sha2(s, 256), 1, 15), 16, 10
-                ).cast("long"),
-            )
-        elif base_hash == "xxhash64":
-            h0 = F.transform(F.col("_sh"), lambda s: F.xxhash64(s, F.lit(seed)))
-        else:
-            raise ValueError(f"unknown base_hash {base_hash!r}")
-        return base.select(id_col, _sig_pd(h0).alias("signature"))
-
     if base_hash != "xxhash64":
-        raise ValueError("base_hash selection requires impl='arrow'")
+        raise ValueError(f"unknown base_hash {base_hash!r}")
 
-    def _minhash(i: int):
-        # NB: close over the seed column; an extra lambda param (even
-        # defaulted) changes F.transform's arity dispatch — a 2-arg
-        # lambda receives the ARRAY INDEX as its second argument.
-        seed_col = F.lit(seed + i)
-        return F.array_min(
-            F.transform(F.col("_sh"), lambda s: F.xxhash64(s, seed_col))
-        )
+    @pandas_udf("array<long>")
+    def _sig_pd(sh_hashes: pd.Series) -> pd.Series:
+        return _affine_min(sh_hashes, a_, b_)
 
-    sig = F.array(*[_minhash(i) for i in range(num_hashes)])
-    return base.select(id_col, sig.alias("signature"))
+    h0 = F.transform(
+        shingle_expr(text_col, shingle_n), lambda s: F.xxhash64(s, F.lit(seed))
+    )
+    return df.select(F.col(id_col), _sig_pd(h0).alias("signature"))
 
 
 def band_rows(sigs: DataFrame, id_col: str, bands: int) -> DataFrame:
@@ -483,116 +431,60 @@ def simhash64(
     text_col: str = "text",
     id_col: str = "doc_id",
     seed: int = 42,
-    impl: str = "arrow",
     token_hash: str = "xxhash64",
 ) -> DataFrame:
     """64-bit SimHash over whitespace tokens.
 
     Per bit b: sum over tokens of (+1 if bit set else -1); the sign
-    vector packs into one long. Tokenization + per-token hashing stay
-    JVM-side (split + xxhash64 transform); the 64 bit-sums run either
+    vector packs into one long. Tokenization stays JVM-side (split); the
+    bit-sums run in one vectorized numpy kernel over the token hashes —
+    one segmented reduceat pass per bit over the Arrow batch's flattened
+    hashes (as 64 ``F.aggregate`` folds the JVM would dispatch an
+    interpreted lambda per token per bit, ~10x slower).
 
-    * ``impl="arrow"`` (default): one vectorized numpy kernel over the
-      token-hash arrays — 64 segmented reduceat passes over the Arrow
-      batch's flattened hashes. ~10x the JVM expression form, because
-    * ``impl="jvm"``: 64 ``F.aggregate`` folds, i.e. an *interpreted*
-      lambda dispatch per token per bit (64·T evals per doc) — kept for
-      a zero-Python path and as the cross-check in tests.
-
-    ``token_hash="xxhash64"`` (default) is the fast production path.
-    ``token_hash="sha2"`` derives a 60-bit token hash from sha-256
-    (``conv(substr(sha2(t), 1, 15), 16, 10)``) — slower, but exactly
-    reproducible in ANSI SQL engines (DuckDB:
+    ``token_hash="xxhash64"`` (default) is the fast production path: the
+    tokens are hashed JVM-side with ``xxhash64(t, seed)``.
+    ``token_hash="sha2"`` derives a 60-bit token hash from sha-256 (the
+    first 15 hex digits, ``conv(substr(sha2(t), 1, 15), 16, 10)``) —
+    slower, but exactly reproducible in ANSI SQL engines (DuckDB:
     ``('0x' || substr(sha256(t), 1, 15))::BIGINT``), which is what puts
-    the simhash pipeline under the external oracle gate. The pigeonhole
-    blocking in :func:`simhash_near_dups` is unaffected (the constant
-    top 4 bits always agree)."""
+    the simhash pipeline under the external oracle gate. Its tokens
+    arrive raw and ``hashlib`` hashes them in the kernel (r6: ~5x the
+    JVM sha2+substring+conv chain). The pigeonhole blocking in
+    :func:`simhash_near_dups` is unaffected (the constant top 4 bits
+    always agree)."""
     if token_hash not in ("xxhash64", "sha2"):
         raise ValueError(f"token_hash must be 'xxhash64' or 'sha2', got {token_hash!r}")
-    nbits = 64 if token_hash == "xxhash64" else 60
+    in_kernel_sha = token_hash == "sha2"
+    nbits = 60 if in_kernel_sha else 64
     toks = F.split(F.trim(F.col(text_col)), r"\s+")
-    if token_hash == "xxhash64":
-        th = F.transform(toks, lambda t: F.xxhash64(t, F.lit(seed)))
-    else:
-        th = F.transform(
-            toks,
-            lambda t: F.conv(F.sha2(t, 256).substr(1, 15), 16, 10).cast("long"),
-        )
 
-    if impl == "arrow":
-        from pyspark.sql.functions import pandas_udf
+    @pandas_udf("long")
+    def _simhash_pd(col: pd.Series) -> pd.Series:
+        if in_kernel_sha:
+            sha = hashlib.sha256
+            col = [
+                np.fromiter(
+                    (int.from_bytes(sha(t.encode("utf-8")).digest()[:8], "big") >> 4
+                     for t in x),
+                    dtype=np.int64, count=len(x),
+                )
+                for x in col
+            ]
+        u, nonempty, seg = _segments(col)
+        out = np.zeros(len(col), dtype=np.uint64)
+        if nonempty.any():
+            for b in range(nbits):
+                pm = (((u >> np.uint64(b)) & np.uint64(1)).astype(np.int32) * 2) - 1
+                sums = np.add.reduceat(pm, seg)
+                out[nonempty] |= np.uint64(1 << b) * (sums > 0).astype(np.uint64)
+        return pd.Series(out.view(np.int64))
 
-        in_kernel_sha = token_hash == "sha2"
-
-        @pandas_udf("long")
-        def _simhash_pd(tok_hashes: pd.Series) -> pd.Series:
-            import numpy as np
-
-            n = len(tok_hashes)
-            lens = np.fromiter((len(x) for x in tok_hashes), dtype=np.int64, count=n)
-            total = int(lens.sum())
-            if in_kernel_sha:
-                # r6: tokens arrive RAW and the 60-bit sha-derived hash
-                # is computed here — hashlib beats the JVM
-                # sha2+substring+conv expression chain ~5× (same value:
-                # first 60 bits of the digest)
-                import hashlib
-
-                sha = hashlib.sha256
-                u = np.empty(total, dtype=np.uint64)
-                pos = 0
-                for x in tok_hashes:
-                    for t in x:
-                        u[pos] = (
-                            int.from_bytes(
-                                sha(t.encode("utf-8")).digest()[:8], "big"
-                            )
-                            >> 4
-                        )
-                        pos += 1
-            else:
-                flat = np.empty(total, dtype=np.int64)
-                pos = 0
-                for x in tok_hashes:
-                    m = len(x)
-                    flat[pos : pos + m] = x
-                    pos += m
-                u = flat.view(np.uint64)
-            offsets = np.zeros(n, dtype=np.int64)
-            if n > 1:
-                np.cumsum(lens[:-1], out=offsets[1:])
-            nonempty = lens > 0
-            out = np.zeros(n, dtype=np.uint64)
-            if nonempty.any():
-                # reduceat over only the nonempty rows' offsets: empty
-                # rows contribute zero tokens, so each segment still
-                # covers exactly one nonempty row's hashes
-                seg = offsets[nonempty]
-                for b in range(nbits):
-                    pm = (((u >> np.uint64(b)) & np.uint64(1)).astype(np.int32) * 2) - 1
-                    sums = np.add.reduceat(pm, seg)
-                    out[nonempty] |= np.uint64(1 << b) * (sums > 0).astype(np.uint64)
-            return pd.Series(out.view(np.int64))
-
-        kernel_in = toks if in_kernel_sha else th
-        return df.select(F.col(id_col), _simhash_pd(kernel_in).alias("simhash"))
-
-    def _bit_sum(b: int):
-        # bit 63: 1<<63 overflows signed long — use its two's-complement
-        mask = F.lit((1 << b) if b < 63 else -(1 << 63))
-        return F.aggregate(
-            th,
-            F.lit(0),
-            lambda acc, h: acc + F.when(h.bitwiseAND(mask) != 0, 1).otherwise(-1),
-        )
-
-    bit_sums = [_bit_sum(b) for b in range(nbits)]
-    packed = None
-    for b, s in enumerate(bit_sums):
-        bit = F.when(s > 0, F.lit(1).cast("long")).otherwise(F.lit(0).cast("long"))
-        term = F.shiftleft(bit, b)
-        packed = term if packed is None else packed.bitwiseOR(term)
-    return df.select(F.col(id_col), packed.alias("simhash"))
+    kernel_in = (
+        toks if in_kernel_sha
+        else F.transform(toks, lambda t: F.xxhash64(t, F.lit(seed)))
+    )
+    return df.select(F.col(id_col), _simhash_pd(kernel_in).alias("simhash"))
 
 
 def simhash_near_dups(

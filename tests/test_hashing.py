@@ -7,6 +7,8 @@ would make ``lookup`` silently scan the wrong bucket. The pin fuzzes
 unicode strings through both implementations.
 """
 
+import hashlib
+
 import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
@@ -128,10 +130,14 @@ def test_lookup_missing_key_is_empty(spark, table):
 
 def test_sha256_arrow_matches_builtin(spark):
     df = spark.createDataFrame(
-        [("abc",), ("",), (None,), ("é中文",)], "s string"
+        [("abc",), ("",), (None,), ("é中文",), ("unicode-✓",)], "s string"
     )
     rows = df.select(
-        F.sha2("s", 256).alias("jvm"), sha256_arrow("s").alias("arrow")
+        F.sha2("s", 256).alias("jvm"), sha256_arrow("s").alias("arrow"), "s"
     ).collect()
     for r in rows:
         assert r.jvm == r.arrow
+        if r.s is None:
+            assert r.arrow is None
+        else:
+            assert r.arrow == hashlib.sha256(r.s.encode()).hexdigest()

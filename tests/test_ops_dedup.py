@@ -1,8 +1,12 @@
 """Training-data dedup operators: exact, MinHash+LSH, SimHash,
 n-gram Jaccard."""
 
+import re
+import struct
+
 from pyspark.sql import functions as F
 
+from replicator_spark.functions.hashing import xxhash64_py
 from replicator_spark.ops.dedup_text import (
     exact_dedup,
     minhash_lsh_candidates,
@@ -84,11 +88,24 @@ def test_simhash_near_dups(spark):
     assert (0, 2) not in pairs
 
 
-def test_simhash_arrow_matches_jvm(spark):
-    """The vectorized numpy kernel and the pure-JVM expression form
-    must produce bit-identical simhashes (incl. empty docs)."""
-    from replicator_spark.ops.dedup_text import simhash64
+def _simhash_py(text: str, seed: int = 42) -> int:
+    """Reference SimHash, one token and one bit at a time. A token's hash
+    is Spark's ``xxhash64(t, lit(seed))``: the seed (an int) is hashed
+    with the string's hash as its seed."""
+    hs = [
+        xxhash64_py(struct.pack("<i", seed), xxhash64_py(t.encode("utf-8"), seed))
+        for t in re.split(r"\s+", text.strip(" "))
+    ]
+    bits = sum(
+        1 << b for b in range(64)
+        if sum(1 if (h >> b) & 1 else -1 for h in hs) > 0
+    )
+    return bits - (1 << 64) if bits >= 1 << 63 else bits
 
+
+def test_simhash_arrow_matches_python_oracle(spark):
+    """The vectorized numpy kernel must produce bit-identical simhashes
+    to a pure-Python SimHash over the xxhash64 twin (incl. empty docs)."""
     rows = [
         (0, "the quick brown fox jumps over the lazy dog"),
         (1, "the quick brown fox jumped over the lazy dog"),
@@ -97,18 +114,15 @@ def test_simhash_arrow_matches_jvm(spark):
         (4, "a b c d e f g h i j k l m n o p q r s t u v w x y z " * 40),
     ]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    got_a = {r["doc_id"]: r["simhash"] for r in simhash64(df, impl="arrow").collect()}
-    got_j = {r["doc_id"]: r["simhash"] for r in simhash64(df, impl="jvm").collect()}
-    assert got_a == got_j
+    got = {r["doc_id"]: r["simhash"] for r in simhash64(df).collect()}
+    assert got == {i: _simhash_py(text) for i, text in rows}
 
 
 def test_simhash_plan_impls(spark):
-    """jvm impl must stay entirely JVM-side; arrow impl must use the
-    Arrow (vectorized) python runner, never row-at-a-time pickling."""
-    plan_j = simhash64(_docs(spark), impl="jvm")._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan_j and "ArrowEvalPython" not in plan_j
-    plan_a = simhash64(_docs(spark), impl="arrow")._jdf.queryExecution().executedPlan().toString()
-    assert "ArrowEvalPython" in plan_a and "BatchEvalPython" not in plan_a
+    """The kernel must use the Arrow (vectorized) python runner, never
+    row-at-a-time pickling."""
+    plan = simhash64(_docs(spark))._jdf.queryExecution().executedPlan().toString()
+    assert "ArrowEvalPython" in plan and "BatchEvalPython" not in plan
 
 
 def test_minhash_r8_banding_selective_with_high_recall(spark):
@@ -256,8 +270,6 @@ def test_minhash_base_hash_variants(spark):
     assert s60[1] != s60[3] and sxx[1] != sxx[3]
     # different base hash → different signature stream, same shape
     assert s60[1] != sxx[1] and len(s60[1]) == len(sxx[1]) == 16
-    with _pytest.raises(ValueError, match="impl='arrow'"):
-        minhash_signatures(docs, impl="jvm", base_hash="sha2_60")
     with _pytest.raises(ValueError, match="unknown base_hash"):
         minhash_signatures(docs, base_hash="md5").count()
 

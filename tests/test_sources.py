@@ -1,15 +1,10 @@
 """Source normalizer + vectorized kernel tests (FIXTURES.md F4)."""
 
-import hashlib
 import json
 
 from pyspark.sql import functions as F
 
-from replicator_spark.functions import (
-    decode_extended_json,
-    sha256_arrow,
-    sha256_builtin,
-)
+from replicator_spark.functions import decode_extended_json
 from replicator_spark.sources import (
     from_kafka_messages,
     from_mongo_events,
@@ -112,21 +107,6 @@ def test_mongo_replace_folds_to_update(spark):
         "operationType string, fullDocument string, ns_coll string, seq long",
     )
     assert from_mongo_events(events).first()["op"] == "update"
-
-
-def test_sha256_arrow_equals_builtin_and_hashlib(spark):
-    df = spark.createDataFrame(
-        [("hello",), ("",), (None,), ("unicode-✓",)], "s string"
-    )
-    out = df.select(
-        sha256_arrow("s").alias("a"), sha256_builtin("s").alias("b"), "s"
-    ).collect()
-    for r in out:
-        assert r["a"] == r["b"]
-        if r["s"] is not None:
-            assert r["a"] == hashlib.sha256(r["s"].encode()).hexdigest()
-        else:
-            assert r["a"] is None
 
 
 def test_extended_json_decode(spark):

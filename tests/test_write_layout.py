@@ -138,9 +138,9 @@ COLS = (
 def test_deltas_spanning_buckets_read_like_sequential_apply(spark, tmp_path):
     """Deltas written one file per task hold several buckets each. Every
     delta file is listed under exactly the buckets whose rows it holds,
-    and the readers of a bucket subset — read(buckets=...), lookup, the
-    partial upgrade, and compact(buckets=...) followed by a full read —
-    give the sequential-apply result."""
+    and the readers of a bucket subset — read(buckets=...), lookup and
+    the partial upgrade, also over a folded table's base files — give
+    the sequential-apply result."""
     rng = random.Random(7)
     t = LakeTable(spark, str(tmp_path / "t"))
     t.create(REPOS_SCHEMA, num_buckets=NUM_BUCKETS)
@@ -200,14 +200,10 @@ def test_deltas_spanning_buckets_read_like_sequential_apply(spark, tmp_path):
     check_listing()
     check_reads()
 
-    # a subset fold takes whole delta files: every bucket sharing one
-    # with the subset is folded too, so no delta is left listed under
-    # only some of the buckets it holds
-    subset = rng.sample(sorted(int(b) for b, fs in t._deltas(t._snap()).items() if fs), 2)
-    t.compact(buckets=subset)
-    snap = t._snap()
-    assert all(not t._deltas(snap).get(str(b)) for b in subset)
-    assert all(snap.files.get(str(b)) for b in subset)
+    # a fold leaves no delta chain; the partial merge after it upgrades
+    # against base files
+    t.compact()
+    assert not any(t._deltas(t._snap()).values())
     check_listing()
     check_reads()
     merge([(k, "partial", None, f"v3-{k}") for k in rng.sample(keys, 30)],
