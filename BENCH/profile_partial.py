@@ -1,8 +1,8 @@
 """Profile cdc_partial_update_merge phase-by-phase (VERDICT r04 watch item).
 
 Monkeypatches timing probes around the merge internals so each micro-batch's
-cost splits into: localCheckpoint, partial-bucket discovery, state read +
-upgrade join, delta write, commit, compaction. Run on the bench config
+cost splits into: localCheckpoint, the plan of the partial fold (state
+read + collapse), delta write, commit, compaction. Run on the bench config
 (local[$SPARK_GRAFT_CPUS], sf dir $SPARK_GRAFT_SF_DIR).
 """
 import json
@@ -50,7 +50,7 @@ def main():
 
     from replicator_spark import pipeline as pl
 
-    _wrap(lt.LakeTable, "_upgrade_partials", "upgrade_partials")
+    _wrap(lt.LakeTable, "_fold_partials", "fold_partials")
     _wrap(lt.LakeTable, "_merge_mor", "merge_mor_write")
     _wrap(lt.LakeTable, "read", "table_read")
     _wrap(lt.LakeTable, "compact", "compact")

@@ -20,7 +20,7 @@ fails loudly with :class:`CommitConflictError` instead of silently
 vanishing a commit. ``compact`` retries against the new current
 snapshot, and ``LakeTable.merge`` retries-with-rebase
 (laketable._assert_rebase_safe): a merge without partials rebases over
-any concurrent data commit, a merge that upgraded partials only over
+any concurrent data commit, a merge that folded partials only over
 one that left its buckets alone, and a concurrent shape or schema
 change keeps the loud error. On a shared object store the CAS becomes a
 conditional PUT / catalog swap; the API is unchanged.

@@ -12,6 +12,8 @@ One layer, two shapes:
   ``event_id`` tiebreak keeps exactly one copy.
 - ``lww_collapse_partial`` — the same collapse for batches carrying
   partial updates: each column takes the latest event that touched it.
+  ``LakeTable.merge`` runs it once over a partial batch's events and
+  their buckets' current rows, so the touch rule is coded only here.
 
 Both are single-shuffle DataFrame ops (hash partition on the key); at
 cluster scale the key (repo, path, commit) is high-cardinality so the
@@ -24,6 +26,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .model import OP_DELETE
 
 
 def lww_latest(
@@ -45,35 +49,39 @@ def lww_latest(
     two events ever share a seq (should not happen for a real LSN;
     belt and braces).
 
-    The aggregate (``latest_by``) and the projection are SQL text: a
-    py4j round trip per column where ``Column`` objects cost ~3 to
-    build (and one more each to free), which is most of the driver time
-    of a short read (a lookup's resolve is planned on every call).
+    The aggregate and the projection are SQL text: a py4j round trip
+    per column where ``Column`` objects cost ~3 to build (and one more
+    each to free), which is most of the driver time of a short read (a
+    lookup's resolve is planned on every call).
     """
     other = [c for c in df.columns if c not in key_cols]
-    if tiebreak_col not in df.columns:
-        tiebreak_col = None
-    top = latest_by(f"struct({', '.join(map(quote, other))})", seq_col, tiebreak_col)
+    order = _order(df, seq_col, tiebreak_col)
     return (
         df.groupBy(*key_cols)
-        .agg(F.expr(f"{top} AS _top"))
+        .agg(F.expr(f"max_by(struct({', '.join(map(quote, other))}), {order}) AS _top"))
         .selectExpr(*map(quote, key_cols), "_top.*")
     )
-
-
-def latest_by(value: str, seq_col: str, tiebreak_col: str | None = None) -> str:
-    """The LWW aggregate as SQL text: ``value`` (an SQL expression) of
-    the group's row with the greatest ``(seq_col, tiebreak_col)``. The
-    one statement of the ordering rule — ``lww_latest`` and the mor
-    partial upgrade (``LakeTable._upgrade_partials``) both take a key's
-    latest image through it, so they cannot disagree."""
-    ord_cols = [seq_col] if tiebreak_col is None else [seq_col, tiebreak_col]
-    return f"max_by({value}, struct({', '.join(map(quote, ord_cols))}))"
 
 
 def quote(name: str) -> str:
     """``name`` as a backtick-quoted SQL identifier."""
     return "`" + name.replace("`", "``") + "`"
+
+
+def _order(df: DataFrame, seq_col: str, tiebreak_col: str | None) -> str:
+    """The LWW ordering as SQL text: ``struct(seq, tiebreak)``, without
+    the tiebreak when ``df`` lacks it. Both collapses order by it."""
+    cols = [seq_col] if tiebreak_col not in df.columns else [seq_col, tiebreak_col]
+    return f"struct({', '.join(map(quote, cols))})"
+
+
+def partial_row(op_col: str = "op", partial_col: str = "_partial") -> str:
+    """SQL predicate: a partial, non-delete row — one that touches only
+    its non-null columns."""
+    return (
+        f"coalesce({quote(partial_col)}, false) "
+        f"AND {quote(op_col)} != '{OP_DELETE}'"
+    )
 
 
 def lww_collapse_partial(
@@ -90,42 +98,42 @@ def lww_collapse_partial(
     mongo.go:345-347``, ``pkg/models/models.go:37``).
 
     Touch rules: a full-image row (``partial_col`` false — inserts,
-    full updates, and deletes) touches every column (deletes with null,
-    resetting state); a partial row touches only its non-null columns
-    (JSON-absent ≡ null after from_json, so partials cannot set a column
-    TO null — documented divergence, same information loss as the
-    reference's BSON ``$set`` map).
+    full updates, and deletes) touches every column, a delete with null
+    (resetting state, whatever image the delete carried); a partial row
+    touches only its non-null columns (JSON-absent ≡ null after
+    from_json, so partials cannot set a column TO null — documented
+    divergence, same information loss as the reference's BSON ``$set``
+    map).
 
-    The collapsed row is itself flagged partial only when *every* event
-    in the group was partial — one full image in the group determines
-    all columns, so the result is a full image.
+    A row whose ``partial_col`` is NULL is an image of current state,
+    not an event: it takes part as a full image, but a key with no
+    event is dropped. ``LakeTable.merge`` folds a partial batch into
+    its buckets' rows this way. The collapsed row is flagged partial
+    only when *every* row of the group was partial — one full image
+    determines all columns.
 
     Same single-shuffle max_by partial-aggregation shape as lww_latest;
-    one aggregate expression per column.
+    one aggregate per column, built as one SQL-text struct so planning
+    it costs a constant number of py4j round trips.
     """
-    engine_cols = {seq_col, op_col, partial_col}
-    if tiebreak_col is not None and tiebreak_col in df.columns:
-        engine_cols.add(tiebreak_col)
-    payload = [c for c in df.columns if c not in set(key_cols) | engine_cols]
-
-    part = F.coalesce(F.col(partial_col), F.lit(False)) & (
-        F.col(op_col) != F.lit("delete")
+    latest = [c for c in (seq_col, op_col, tiebreak_col) if c in df.columns]
+    payload = [c for c in df.columns if c not in {*key_cols, *latest, partial_col}]
+    order, part = _order(df, seq_col, tiebreak_col), partial_row(op_col, partial_col)
+    op, flag = quote(op_col), quote(partial_col)
+    aggs = [f"max_by({c}, {order}) AS {c}" for c in map(quote, latest)]
+    aggs.append(
+        f"CASE WHEN count({flag}) > 0 "
+        f"THEN bool_and(coalesce({part}, false)) END AS {flag}"
     )
-    ord_cols = [F.col(seq_col)]
-    if tiebreak_col is not None and tiebreak_col in df.columns:
-        ord_cols.append(F.col(tiebreak_col))
-    ord_ = F.struct(*ord_cols)
-
-    aggs = [
-        F.max_by(F.col(seq_col), ord_).alias(seq_col),
-        F.max_by(F.col(op_col), ord_).alias(op_col),
-        # all-partial group ⇒ still partial relative to the table
-        F.min(F.when(part, 1).otherwise(0)).cast("boolean").alias(partial_col),
-    ]
-    if tiebreak_col is not None and tiebreak_col in df.columns:
-        aggs.append(F.max_by(F.col(tiebreak_col), ord_).alias(tiebreak_col))
-    for c in payload:
-        touch = (~part) | F.col(c).isNotNull()
+    aggs += [
         # null ordering rows are ignored by max_by ⇒ only touchers count
-        aggs.append(F.max_by(F.col(c), F.when(touch, ord_)).alias(c))
-    return df.groupBy(*[F.col(k) for k in key_cols]).agg(*aggs)
+        f"max_by(CASE WHEN {op} = '{OP_DELETE}' THEN NULL ELSE {c} END, "
+        f"CASE WHEN {c} IS NOT NULL OR NOT ({part}) THEN {order} END) AS {c}"
+        for c in map(quote, payload)
+    ]
+    return (
+        df.groupBy(*key_cols)
+        .agg(F.expr(f"struct({', '.join(aggs)}) AS _top"))
+        .where(f"_top.{flag} IS NOT NULL")
+        .selectExpr(*map(quote, key_cols), "_top.*")
+    )

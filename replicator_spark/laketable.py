@@ -35,8 +35,8 @@ size — this is what survives a 100× scale-up. ``read()`` resolves base ∪
 deltas with a per-key max-``_last_seq`` aggregation; ``compact()`` folds deltas back
 into base files when a bucket's delta chain crosses a threshold,
 bounding read amplification. The one write that reads table state is
-the partial-update upgrade (``merge``), which turns partial rows into
-full images against their buckets before the append.
+a partial-update merge, which folds the batch's events into their
+buckets' rows in one ``dedup.lww_collapse_partial`` before the append.
 
 Merges and compactions commit through the same atomic snapshot log and
 batch-key idempotence ledger. Merges support additive schema evolution
@@ -69,8 +69,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import commitlog as cl
-from .dedup import latest_by, lww_latest, quote
-from .model import BUCKET_COL, KEY_COLS, LAST_SEQ_COL, OP_DELETE
+from .dedup import lww_collapse_partial, lww_latest, partial_row, quote
+from .model import BUCKET_COL, KEY_COLS, LAST_SEQ_COL, OP_DELETE, OP_UPDATE
 from .session import empty_frame
 
 
@@ -143,12 +143,6 @@ def _jvm_seq(spark: SparkSession, strings: Sequence[str]):
     return JavaClass("org.apache.spark.api.python.PythonUtils", client).toSeq(
         JavaClass("java.util.Collections", client).list(tokens)
     )
-
-
-def _is_partial(op_col: str, row: str = "") -> str:
-    """SQL predicate: a partial, non-delete row (``row`` prefixes the
-    struct the columns live in) — the rows a merge upgrades."""
-    return f"coalesce({row}_partial, false) AND {row}{quote(op_col)} != '{OP_DELETE}'"
 
 
 class LakeTable:
@@ -322,7 +316,7 @@ class LakeTable:
     ) -> DataFrame:
         """The one scan of a snapshot's data files: manifest paths → a
         DataFrame under the snapshot's physical schema. Every table read
-        (read, read_changes, lookup, compaction and the partial upgrade)
+        (read, read_changes, lookup, compaction and the partial fold)
         comes through here, and the relation is planned from the
         manifest's paths by ``_scan_parquet`` — no listing job per scan.
         Files written before a type widening scan in their own group and
@@ -561,10 +555,10 @@ class LakeTable:
         pass it as ``since_seq`` — that form needs no old snapshot, so
         it survives expire_snapshots; ``since_version`` requires the
         base snapshot to still be retained (clear error otherwise). A
-        base snapshot that has data but predates seq tracking raises
-        too (silently reporting the whole table as changes is the worse
-        failure); pass ``since_seq=-1`` to request an explicit full
-        resync.
+        base snapshot that has data but no ``max_seq`` (every batch
+        merged up to it carried only null seqs) raises too (silently
+        reporting the whole table as changes is the worse failure);
+        pass ``since_seq=-1`` to request an explicit full resync.
         """
         if since_seq is not None:
             floor = since_seq
@@ -587,7 +581,7 @@ class LakeTable:
                 if has_data:
                     raise ValueError(
                         f"base snapshot v{since_version} has data but no "
-                        "max_seq watermark (written before seq tracking) — "
+                        "max_seq watermark (its batches carried no seq) — "
                         "every row would be reported as a change. Pass "
                         "since_seq explicitly (since_seq=-1 for a full "
                         "resync)."
@@ -646,8 +640,10 @@ class LakeTable:
     ) -> MergeStats:
         """Apply one micro-batch as MERGE INTO. Idempotent on batch_key.
 
-        ``batch`` columns: key cols + payload cols + seq + op, already
-        LWW-deduped to ONE row per key (pipeline.apply_batch does that).
+        ``batch`` columns: key cols + payload cols + seq + op. Without a
+        ``_partial`` column it is already LWW-deduped to ONE row per key
+        (pipeline.apply_batch does that); with one it carries the events
+        uncollapsed, and the merge collapses them (below).
         The batch is appended as delta files; the table auto-compacts
         once a delta chain reaches ``compact_after_deltas``.
         ``files_per_bucket`` is the write layout's salt width
@@ -670,19 +666,19 @@ class LakeTable:
         **Partial updates** (reference ``$set``/UpdateFields —
         ``pkg/estuary/mongo.go:345-347``, ``pkg/models/models.go:37``):
         a boolean ``_partial`` column marks rows that carry only changed
-        fields. For those rows absent (null) payload columns mean
-        *untouched* and coalesce with the target row instead of nulling
-        it; a partial update on a deleted/absent key upserts just its
-        fields (tombstoned values are NOT resurrected). Without the
-        column, full-image replace semantics apply as before. Partial
-        rows are upgraded to full images at write time
-        (``_upgrade_partials``): one aggregate by key over the batch and
-        the raw files of the buckets holding partials, which an
-        Observation on the batch's checkpoint names (read cost
-        O(those buckets), paid only by batches that contain partials;
-        the delta append stays O(batch)). Cross-batch reordering of partials
-        against deletes/full images of the same key is resolved by whole-
-        row LWW, matching the reference's in-order apply loop.
+        fields: their absent (null) payload columns mean *untouched*.
+        Without the column, full-image replace semantics apply. With it,
+        the events are folded into full images before the append
+        (``_fold_partials``): one ``dedup.lww_collapse_partial`` over the
+        events and the raw rows of the buckets holding partials, which
+        an Observation on the batch's checkpoint names (read cost
+        O(those buckets), paid only by batches that carry the column;
+        the delta append stays O(batch)). Each column takes the latest
+        event that touched it, the table's rows counting as full images,
+        so a partial on a deleted/absent key upserts just its fields
+        (tombstoned values are NOT resurrected) and a partial older than
+        the key's image changes nothing — the reference's in-order apply
+        loop.
         """
         snap = self._snap()
         done = cl.is_committed(snap, batch_key)
@@ -754,10 +750,9 @@ class LakeTable:
                 src = src.withColumn(c, F.lit(None).cast(evolved_types[c]))
 
         # No pre-write bucket discovery needed: the partitioned delta
-        # write itself reveals which buckets were touched — one Spark
-        # job per micro-batch, total. (Partial batches are the
-        # exception: upgrading partials to full images needs the
-        # current state of their buckets.)
+        # write itself reveals which buckets were touched. (Partial
+        # batches are the exception: folding partials into full images
+        # needs the current state of their buckets.)
         if has_partial:
             # Materialize the batch ONCE, and learn the buckets that
             # hold partial rows from an Observation on that same
@@ -770,14 +765,14 @@ class LakeTable:
             src = src.observe(
                 found,
                 F.expr(
-                    f"collect_set(CASE WHEN {_is_partial(op_col)} "
+                    f"collect_set(CASE WHEN {partial_row(op_col)} "
                     f"THEN {BUCKET_COL} END) AS buckets"
                 ),
             ).localCheckpoint(eager=True)
-            src = self._upgrade_partials(
+            src = self._fold_partials(
                 snap, src, found.get["buckets"],
                 key_cols, all_payload, seq_col, op_col,
-            )
+            ).withColumn(BUCKET_COL, bucket_expr(nb, key_cols[0]))
         stats, deltas, touched, written = self._merge_mor(
             snap, src, batch_key, all_payload,
             key_cols, seq_col, op_col, files_per_bucket,
@@ -840,7 +835,7 @@ class LakeTable:
         #    which is the realistic fan-in shape since hash bucketing
         #    mixes every stream's keys into every bucket. LWW resolve
         #    is seq-ordered and commutative, so append order is free.
-        #  * a merge that upgraded partial rows READ the snapshot it
+        #  * a merge that folded partial rows READ the snapshot it
         #    started from, so it rebases only when the winner left its
         #    touched buckets alone.
         # A concurrent schema/shape change always keeps the loud error.
@@ -903,7 +898,7 @@ class LakeTable:
     def _assert_rebase_safe(self, orig, fresh, touched, has_partial) -> None:
         """A concurrent commit is rebase-safe for this merge iff it
         changed no table shape (schema, schema log, bucket count, key
-        columns) and — for a merge that upgraded partial rows, so READ
+        columns) and — for a merge that folded partial rows, so READ
         the snapshot it started from — left our touched buckets' file
         lists untouched. A merge without partials skips the bucket check
         entirely: its delta append is derived from the batch alone, so
@@ -939,7 +934,7 @@ class LakeTable:
         this merge wrote (ours = our list minus the orig snapshot's —
         LWW resolve is seq-ordered, so chain order between concurrent
         writers is immaterial). Base files are the winner's verbatim: a
-        merge never touches base. For a merge that upgraded partials,
+        merge never touches base. For a merge that folded partials,
         ``_assert_rebase_safe`` proved the winner left its touched
         chains as they were, so this is exactly the chains it wrote."""
         cur_deltas = {b: list(v) for b, v in self._deltas(fresh).items()}
@@ -951,76 +946,44 @@ class LakeTable:
                 cur_deltas[k] = cur_deltas.get(k, []) + ours
         return cur_deltas
 
-    def _upgrade_partials(
+    def _fold_partials(
         self, snap, src, buckets, key_cols, all_payload, seq_col, op_col
     ) -> DataFrame:
-        """Write-time upgrade: partial rows become full images by
-        coalescing with the *live* current image of their keys (a key
-        whose latest image is a tombstone has none — a partial after a
-        delete upserts only its own fields, never resurrecting
-        tombstoned values). Full-image rows pass through.
-
-        Only ``buckets``, the buckets holding partial rows, are read, and
-        without resolving them first: one aggregate, grouped by key, over
-        the batch rows and the raw rows of those buckets' base and delta
-        files takes the batch row, the key's latest image (``latest_by``
-        on ``_last_seq``, the read path's LWW rule) and drops the keys
-        the batch lacks. One shuffle, where an LWW resolve of the target
-        and a join against it took two or three. Each side travels as one
-        struct (``_s`` the batch row, ``_t`` the target image), so no
-        payload column name can collide with the aggregate's own."""
-        proj = [*key_cols, *all_payload, seq_col, op_col, BUCKET_COL]
+        """A partial batch's events folded into full images: one
+        ``lww_collapse_partial`` over the events and the raw base and
+        delta rows of ``buckets``, the buckets holding partial rows,
+        written as full-image events (``seq`` = ``_last_seq``, a delete
+        where ``_deleted``, NULL ``_partial``, which marks a row of
+        state). Each column takes the latest event that touched it, so a
+        key whose latest image is a tombstone has nothing to coalesce
+        with: a partial after a delete upserts only its own fields. The
+        collapse keeps only keys the batch has events for. One shuffle,
+        and the target is not resolved first."""
+        events = src.drop(BUCKET_COL).withColumn(
+            "_partial", F.expr("coalesce(_partial, false)")
+        )
         base, delta, where = self._bucket_files(snap, buckets)
-        if not base + delta:
-            return src.select(*proj)
-        tgt = self._read_files(snap, base + delta)
-        if where is not None:
-            tgt = tgt.where(where)
-        sdict = {f.name: f.dataType for f in src.schema.fields}
-        tdict = {f.name: f.dataType for f in tgt.schema.fields}
-        # the target image in the batch's types; columns the target
-        # lacks (evolved this batch) are null
-        image = [
-            (
-                F.lit(None).cast(sdict[c]) if c not in tdict
-                else F.col(c).cast(sdict[c]) if tdict[c] != sdict[c]
-                else F.col(c)
-            ).alias(c)
-            for c in all_payload
-        ]
-        s_cols = [*all_payload, seq_col, op_col, "_partial", BUCKET_COL]
-        rows = src.selectExpr(
-            *map(quote, key_cols), f"struct({', '.join(map(quote, s_cols))}) AS _s"
-        ).unionByName(
-            tgt.select(
-                *key_cols, F.struct(*image, "_deleted").alias("_t"), LAST_SEQ_COL
-            ),
-            allowMissingColumns=True,
-        )
-        upgrade = (
-            f"{_is_partial(op_col, '_s.')} AND _t IS NOT NULL "
-            "AND NOT coalesce(_t._deleted, false)"
-        )
-        return (
-            rows.groupBy(*key_cols)
-            # batch rows carry a null _t and _last_seq, which orders
-            # below every target row's: a key with no target row gets a
-            # null image
-            .agg(
-                F.expr("first(_s, true) AS _s"),
-                F.expr(f"{latest_by('_t', LAST_SEQ_COL)} AS _t"),
-            )
-            .where("_s IS NOT NULL")
-            .selectExpr(
+        if base + delta:
+            tgt = self._read_files(snap, base + delta)
+            if where is not None:
+                tgt = tgt.where(where)
+            stypes = {f.name: f.dataType for f in src.schema.fields}
+            ttypes = {f.name: f.dataType for f in tgt.schema.fields}
+            tgt = tgt.selectExpr(
                 *map(quote, key_cols),
-                *[
-                    f"CASE WHEN {upgrade} THEN coalesce(_s.{c}, _t.{c}) "
-                    f"ELSE _s.{c} END AS {c}"
-                    for c in map(quote, all_payload)
-                ],
-                *[f"_s.{c} AS {c}" for c in map(quote, (seq_col, op_col, BUCKET_COL))],
+                *[quote(c) for c in all_payload if c in ttypes],
+                f"{LAST_SEQ_COL} AS {quote(seq_col)}",
+                f"CASE WHEN _deleted THEN '{OP_DELETE}' ELSE '{OP_UPDATE}' END"
+                f" AS {quote(op_col)}",
+                "CAST(NULL AS boolean) AS _partial",
             )
-        )
+            # a column widened by this batch: the target in its type
+            for c in all_payload:
+                if c in ttypes and ttypes[c] != stypes[c]:
+                    tgt = tgt.withColumn(c, F.col(c).cast(stypes[c]))
+            # columns the target lacks (evolved this batch) read null
+            events = events.unionByName(tgt, allowMissingColumns=True)
+        return lww_collapse_partial(events, key_cols, seq_col, op_col=op_col)
 
     def _merge_mor(
         self, snap, src, batch_key, all_payload,

@@ -18,7 +18,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from . import metrics as M
-from .dedup import lww_collapse_partial, lww_latest
+from .dedup import lww_latest
 from .laketable import LakeTable, MergeStats, _widen_type, layout_width
 from .model import KEY_COLS
 
@@ -339,9 +339,10 @@ def apply_batch(
 
     ``partial_updates=True`` enables $set/UpdateFields semantics:
     ``meta['partial']='true'`` rows update only their non-null doc
-    fields (partial-aware intra-batch collapse + per-column coalescing
-    MERGE; see laketable.merge). Leave False on feeds that never emit
-    partials — it skips the heavier per-column collapse.
+    fields. The events then go to the merge uncollapsed, and it folds
+    them into their buckets' rows in one per-column collapse (see
+    LakeTable.merge). Leave False on feeds that never emit partials —
+    it skips the checkpoint, the state read and the per-column collapse.
 
     ``mode`` must be ``"mor"`` (``check_merge_mode``).
 
@@ -414,11 +415,9 @@ def apply_batch(
         # No separate event-id dedup pass: redelivered duplicates carry an
         # identical (key, seq), so the per-key LWW collapse already drops
         # them (tiebreak on event_id keeps it deterministic) — one shuffle
-        # instead of two.
-        if partial_updates:
-            prepared = lww_collapse_partial(flat, key_cols, "seq")
-        else:
-            prepared = lww_latest(flat, key_cols, "seq")
+        # instead of two. A partial batch goes to merge uncollapsed: it
+        # folds the events into their buckets' rows in one collapse.
+        prepared = flat if partial_updates else lww_latest(flat, key_cols, "seq")
 
         def _check(obs=obs_unseen):
             if int(obs.get["unseen"] or 0) > 0:

@@ -136,35 +136,25 @@ def test_read_changes_pruning_keeps_tombstones_and_stale_interleave(spark, tmp_p
     assert t.read_changes(v_mid).count() == pruned.count()
 
 
-def test_read_changes_pre_seq_tracking_base_raises(spark, tmp_path):
-    """ADVICE r02: a base snapshot that HAS data but carries no max_seq
-    must raise, not silently report the whole table as changes."""
+def test_read_changes_base_without_seqs_raises(spark, tmp_path):
+    """A merge of a batch whose seqs are all null commits rows with no
+    ``max_seq`` watermark. A poll from that snapshot must raise, not
+    silently report the whole table as changes."""
     import pytest
 
-    from replicator_spark import commitlog as cl
-
-    feed = _ordered_feed(spark, tmp_path)
     t = LakeTable(spark, str(tmp_path / "t"))
     t.create(REPOS_SCHEMA, num_buckets=4)
-    replay_feed(spark, feed, t, batches=[0], mode="mor", write_metrics=False)
-    snap = t._snap()
-    doctored = cl.Snapshot(
-        version=snap.version + 1,
-        parent=snap.version,
-        schema_json=snap.schema_json,
-        num_buckets=snap.num_buckets,
-        files=snap.files,
-        committed_batches=dict(snap.committed_batches),
-        props={k: v for k, v in snap.props.items() if k != "max_seq"},
-        key_cols=snap.key_cols,
-        ledger_floor=dict(snap.ledger_floor),
-        file_stats=dict(snap.file_stats),
+    batch = spark.createDataFrame(
+        [("r1", "p1", "c1", "py", "v1", None, "insert", "e1")],
+        "repo string, path string, commit string, lang string, "
+        "content string, seq long, op string, event_id string",
     )
-    cl.commit_snapshot(t.root, doctored)
+    st = t.merge(batch, "s-0")
+    assert st.applied == 1 and st.seq_hi is None
+    assert t._snap().props["max_seq"] is None
     with pytest.raises(ValueError, match="no max_seq"):
-        t.read_changes(doctored.version)
-    # explicit full resync stays available
-    assert t.read_changes(since_seq=-1).count() > 0
+        t.read_changes(st.version)
+    assert t.read().count() == 1
 
 
 def test_three_hop_chain_survives_snapshot_expiry(spark, tmp_path):

@@ -616,12 +616,14 @@ RAW_SCHEMA = (
 )
 
 
-def test_partial_merge_runs_at_most_five_jobs(spark, tmp_path, monkeypatch):
+def test_partial_merge_runs_at_most_four_jobs(spark, tmp_path, monkeypatch):
     """A partial-bearing mor batch onto a table with state: the buckets
     holding partials are observed on the batch's checkpoint (no
-    discovery collect), and one aggregate upgrades the partials against
-    those buckets' files — at most 5 Spark jobs for the whole apply
-    (8 when the target was resolved, then joined)."""
+    discovery collect), and one ``lww_collapse_partial`` folds the
+    uncollapsed events into those buckets' rows — at most 4 Spark jobs
+    for the whole apply (5 when the batch was collapsed first and
+    upgraded in a second aggregate, 8 when the target was resolved,
+    then joined)."""
     from pyspark.sql import types as T
 
     from replicator_spark.pipeline import apply_batch
@@ -667,7 +669,7 @@ def test_partial_merge_runs_at_most_five_jobs(spark, tmp_path, monkeypatch):
         ),
     )
     assert collects == []
-    assert len(jobs) <= 5, jobs
+    assert len(jobs) <= 4, jobs
     monkeypatch.undo()
     rows = {r["repo"]: (r["lang"], r["content"]) for r in t.read().collect()}
     assert rows["r0"] == ("py", "w0")  # partial: untouched lang kept
@@ -706,14 +708,16 @@ def test_empty_partial_batch_commits_cleanly(spark, tmp_path):
 
 def test_partial_upgrade_allows_any_payload_name(spark, tmp_path):
     """Payload fields may take any name the pipeline does not reserve,
-    including ones that look like the upgrade's own working columns:
-    the partial upgrade carries each side as one struct, so nothing
-    collides and the upgrade keeps every untouched field."""
+    including ones that look like a partial merge's own working
+    columns: the fold marks the table's rows with a NULL ``_partial``
+    (a reserved name), not a column of its own, and its aggregate
+    carries every column inside one struct, so nothing collides and
+    every untouched field is kept."""
     from pyspark.sql import types as T
 
     from replicator_spark.pipeline import apply_batch
 
-    names = ["_b", "_s", "_t", "_top", "content"]
+    names = ["_b", "_in_batch", "_s", "_t", "_top", "content"]
     payload = T.StructType([T.StructField(n, T.StringType()) for n in names])
     t = LakeTable(spark, str(tmp_path / "t"))
     t.create(REPOS_SCHEMA, num_buckets=2)
@@ -724,14 +728,14 @@ def test_partial_upgrade_allows_any_payload_name(spark, tmp_path):
             mode="mor", partial_updates=True, write_metrics=False,
         )
 
-    full = '{"_b":"b0","_s":"s0","_t":"t0","_top":"o0","content":"c0"}'
+    full = '{"_b":"b0","_in_batch":"i0","_s":"s0","_t":"t0","_top":"o0","content":"c0"}'
     apply([("e0", 1, "insert", ("r0", "p", "c"), full, {})], "s-0")
     apply(
         [("e1", 2, "update", ("r0", "p", "c"), '{"_t":"t1"}', {"partial": "true"})],
         "s-1",
     )
     (row,) = t.read().collect()
-    assert [row[n] for n in names] == ["b0", "s0", "t1", "o0", "c0"]
+    assert [row[n] for n in names] == ["b0", "i0", "s0", "t1", "o0", "c0"]
 
 
 def test_cow_mode_is_refused_before_any_work(spark, feed, tmp_path):

@@ -63,12 +63,14 @@ def test_collapse_delete_resets_columns(spark):
         spark,
         [
             _row(1, "insert", False, content="v1", lang="py"),
-            _row(2, "delete", False),
+            # a delete that carries its before image (binlog, pgoutput)
+            _row(2, "delete", False, content="v1", lang="py"),
             _row(3, "update", True, content="v3"),
         ],
     )
     out = lww_collapse_partial(df, KEYS).first()
-    # delete touched every column with null; only the later partial set content
+    # delete touched every column with null, whatever image it carried;
+    # only the later partial set content
     assert out["content"] == "v3" and out["lang"] is None
     assert out["op"] == "update" and out["_partial"] is False
 
@@ -213,7 +215,7 @@ def test_partial_update_with_type_widened_column(spark, tmp_path):
     t.compact()  # the long-typed rows now live in base files
     # batch 1: string-typed stars (widens the table) + a PARTIAL that
     # touches only stars for p1 — lang/content must survive from the
-    # long-typed base file via the upgrade join
+    # long-typed base file via the partial fold
     b1 = spark.createDataFrame(
         [row(3, "update", True, stars="five")], wide
     )

@@ -7,7 +7,8 @@ applied through the real pipeline (``replay_feed`` with
 one-event-at-a-time oracle on EVERY payload column.
 
 The oracle encodes the engine's documented contract (CLAUDE.md /
-dedup.lww_collapse_partial, laketable._upgrade_partials):
+dedup.lww_collapse_partial, which LakeTable.merge runs over a partial
+batch's events and its buckets' rows):
 
 * a full image replaces all columns (absent/None JSON fields become
   null — a full image CAN null a column);
@@ -17,7 +18,9 @@ dedup.lww_collapse_partial, laketable._upgrade_partials):
   tombstoned values are never resurrected;
 * per-key delivery is IN-ORDER across batches (batches here are
   seq-ranged, as the contract requires); intra-batch order is free and
-  redeliveries within a batch collapse exactly-once.
+  redeliveries within a batch collapse exactly-once;
+* a compaction at a drawn batch boundary changes nothing: later
+  partials fold into base-file images as they do into delta images.
 
 This is the randomized layer over the hand-pinned cases in
 test_partial_update.py and the driver's cdc_partial_update_merge
@@ -27,7 +30,7 @@ fixtures cannot enumerate.
 
 import json
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import types as T
 
@@ -148,7 +151,10 @@ def _oracle(rows):
     return state
 
 
-def _replay_and_compare(spark, tmp, events):
+def _replay_and_compare(spark, tmp, events, compact_after):
+    """Replay the feed, folding the table into base files after batch
+    ``compact_after``: later partials meet their keys' images in base
+    files, and in the deltas of the batches after it."""
     rows = _materialize(events)
     feed, root = f"{tmp}/feed", f"{tmp}/table"
     spark.createDataFrame(rows, FEED_SCHEMA).write.partitionBy(
@@ -156,14 +162,22 @@ def _replay_and_compare(spark, tmp, events):
     ).parquet(feed)
     table = LakeTable(spark, root)
     table.create(TABLE_SCHEMA, num_buckets=4)
-    replay_feed(
-        spark,
-        feed,
-        table,
-        payload_schema=PAYLOAD,
-        partial_updates=True,
-        write_metrics=False,
-    )
+    ids = sorted({r["batch_id"] for r in rows})
+
+    def replay(batches):
+        replay_feed(
+            spark,
+            feed,
+            table,
+            batches=batches,
+            payload_schema=PAYLOAD,
+            partial_updates=True,
+            write_metrics=False,
+        )
+
+    replay([b for b in ids if b <= compact_after])
+    table.compact()
+    replay([b for b in ids if b > compact_after])
     got = {
         (r["repo"], r["path"], r["commit"]): {c: r[c] for c in COLS}
         for r in table.read().collect()
@@ -171,15 +185,29 @@ def _replay_and_compare(spark, tmp, events):
     assert got == _oracle(rows)
 
 
+# a partial whose key's image sits in a base file (batch 0 is compacted
+# before batch 1 applies): drawn streams reach this case only sometimes
+BASE_FILE_TARGET = [
+    {"op": "upsert", "repo": "r0", "path": "a", "commit": "c1", "lang": "py",
+     "content": "x", "stars": 7, "touch": set(), "dup": False},
+    {"op": "partial", "repo": "r0", "path": "a", "commit": "c1", "lang": None,
+     "content": "zzz", "stars": None, "touch": {"content"}, "dup": False},
+]
+
+
 @settings(
     max_examples=6,
     deadline=None,
     suppress_health_check=[HealthCheck.too_slow, HealthCheck.function_scoped_fixture],
 )
-@given(events=st.lists(event_st, min_size=1, max_size=40))
+@given(
+    events=st.lists(event_st, min_size=1, max_size=40),
+    compact_after=st.integers(0, N_BATCHES - 2),
+)
+@example(events=BASE_FILE_TARGET, compact_after=0)
 def test_random_partial_streams_match_oracle_mor(
-    spark, tmp_path_factory, events
+    spark, tmp_path_factory, events, compact_after
 ):
     _replay_and_compare(
-        spark, str(tmp_path_factory.mktemp("pprop")), events
+        spark, str(tmp_path_factory.mktemp("pprop")), events, compact_after
     )
